@@ -100,13 +100,22 @@ def run_jvm(cp, args, work, out_dir, timeout):
     os.makedirs(os.path.join(work, "tmp"), exist_ok=True)
     os.makedirs(out_dir, exist_ok=True)
     cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + ["-Xmx3g", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
+           + ["-Xms2g", "-Xmx2g", f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}",
               "-Duser.timezone=UTC", "-cp", cp, MAIN]
            + args + ["--work", work, "--out", out_dir])
     err_path = os.path.join(out_dir, "stderr.log")
     with open(err_path, "w") as err:
         p = subprocess.Popen(cmd, stdout=subprocess.PIPE, stderr=err,
                              stdin=subprocess.DEVNULL, start_new_session=True, text=True)
+
+        def stop(signum, _frame):
+            # the JVM runs in its own session: take it (and any scaling
+            # leg it started) down with us
+            os.killpg(p.pid, signal.SIGKILL)
+            p.wait()
+            sys.exit(128 + signum)
+        for sig in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
+            signal.signal(sig, stop)
         try:
             stdout, _ = p.communicate(timeout=timeout)
         except subprocess.TimeoutExpired:

@@ -26,7 +26,7 @@ object Inputs extends Serializable {
     (r.getLong(0), r.getLong(1))
   }
 
-  // ---- crawl corpus (extract_crawl, resume_table) ---------------------
+  // ---- crawl corpus (extract_crawl, queries_table) --------------------
 
   /** First CorpusGen docId of a seed's range. Ranges of different seeds
     * are disjoint for any corpus under 10M docs, and every base is a
@@ -65,7 +65,7 @@ object Inputs extends Serializable {
     }
   }
 
-  // ---- documents (doc_queries) -------------------------------------------
+  // ---- documents (queries_table) -----------------------------------------
 
   // The documents fixture's shape: the q08-q11 / q35 vocabularies plus
   // neutral filler, 8-100 tokens per text. The same shape ScaleBench

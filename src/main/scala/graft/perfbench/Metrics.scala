@@ -14,6 +14,7 @@ object Metrics {
   val EndToEnd: Seq[M] = Seq(
     M("setup_s", "s", "lower"),
     M("norm_pass_s", "s", "lower"),
+    M("norm_cpu_s", "s", "lower"),
     M("live_heap_mb", "MB", "lower"))
 
   private def s(n: String) = M(n, "s", "lower")
@@ -29,7 +30,7 @@ object Metrics {
     M("spark.task_skew", "ratio", "lower"),
     s("jvm.gc_s"), s("jvm.cpu_s"),
     M("host.cycle_delivery_before", "ratio", "higher"),
-    M("host.cycle_delivery_after", "ratio", "higher"), M("host.delivery", "ratio", "higher"),
+    M("host.cycle_delivery_after", "ratio", "higher"), s("host.ref_s"),
     M("scaling_efficiency", "ratio", "higher"),
     M("scale.lo_items_per_s", "1/s", "higher"), M("scale.hi_items_per_s", "1/s", "higher"),
     s("scan_s"), bytes("scan_bytes")) ++

@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
   * one finished):
   *
   *   1. set-up: session start, the workload's inputs generated and
-  *      written three times, one untimed warm pass;
-  *   2. untraced (`--trace 0`): passes until `--seconds` have elapsed;
-  *      prints the end-to-end metrics;
+  *      written three times, one cold pass, then untimed warm passes;
+  *   2. untraced (`--trace 0`): passes until `--seconds` have elapsed,
+  *      each between two runs of the fixed [[Reference]] work; prints the
+  *      end-to-end metrics;
   *   3. traced (`--trace 1`): untraced passes, then traced passes with the
   *      benchmark's own listener and spans, then two pinned child JVMs
   *      (N and 4N cores) for the scaling legs; prints the per-layer
@@ -39,6 +40,26 @@ object PerfBench {
 
   def cpuS: Double = graft.CpuClock.ms / 1000.0
 
+  private val threadBean = java.lang.management.ManagementFactory.getThreadMXBean
+
+  /** CPU nanoseconds so far of the threads that run the program's work:
+    * the calling (driver) thread and Spark's task threads. JIT compiler,
+    * GC and listener threads are left out, and so is time the host gave
+    * to other tenants. */
+  def workThreadsCpuNs(): Map[Long, Long] = {
+    val me = Thread.currentThread().getId
+    threadBean.getThreadInfo(threadBean.getAllThreadIds, 0).iterator
+      .filter(t => t != null && (t.getThreadId == me ||
+        t.getThreadName.startsWith("Executor task launch worker")))
+      .map(t => t.getThreadId -> threadBean.getThreadCpuTime(t.getThreadId))
+      .filter(_._2 >= 0).toMap
+  }
+
+  /** Work-thread CPU seconds between two [[workThreadsCpuNs]] readings;
+    * a thread that started in between counts from zero. */
+  def workCpuS(before: Map[Long, Long], after: Map[Long, Long]): Double =
+    after.map { case (id, ns) => ns - before.getOrElse(id, 0L) }.filter(_ > 0).sum / 1e9
+
   def timed[T](f: => T): (T, Double) = {
     val t0 = System.nanoTime()
     val r = f
@@ -61,15 +82,23 @@ object PerfBench {
   def affinity: String = procStatus("Cpus_allowed_list")
 
   /** Heap in use right after a full collection: what the program keeps
-    * between passes. Taken after the pass's timed work; collected twice
-    * because Spark's cleaner releases broadcast and shuffle state only
-    * after the first collection finds it unreachable. */
+    * between passes. Taken once, after the timed passes, since a full
+    * collection between passes would slow the pass after it; collected
+    * twice because Spark's cleaner releases broadcast and shuffle state
+    * only after the first collection finds it unreachable. */
   def liveHeapMb(): Double = {
     System.gc()
     Thread.sleep(100)
     System.gc()
     java.lang.management.ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
+
+  private val jit = java.lang.management.ManagementFactory.getCompilationMXBean
+  /** Seconds the JIT compiler threads have spent compiling so far. */
+  def jitS: Double = jit.getTotalCompilationTime / 1000.0
+
+  def classesLoaded: Long =
+    java.lang.management.ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount
 
   def peakRssMb: Double =
     procStatus("VmHWM").stripSuffix("kB").trim.toDoubleOption.map(_ / 1024.0).getOrElse(0.0)
@@ -86,6 +115,11 @@ object PerfBench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
       .config("spark.ui.enabled", "false")
+      // a small status store, full after the warm-up: the live heap then
+      // does not depend on how many passes a run fitted in
+      .config("spark.ui.retainedJobs", "20")
+      .config("spark.ui.retainedStages", "20")
+      .config("spark.sql.ui.retainedExecutions", "20")
       .config("spark.local.dir", s"$work/spark-local")
       .config("spark.sql.warehouse.dir", s"$work/warehouse")
       .getOrCreate()
@@ -104,14 +138,18 @@ object PerfBench {
     kv.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
 
   final case class PassRec(wallS: Double, cpuS: Double, out: PassOut, spark: Option[SparkStats],
-      gcS: Double, jvmCpuS: Double, liveHeapMb: Double, delivery: Double = 0.0) {
-    /** Wall time on a host delivering the canonical cycle rate. */
-    def normS: Double = wallS * delivery
-  }
+      gcS: Double, jvmCpuS: Double, jitS: Double, classes: Long, refS: Double = 0.0)
+
+  /** A per-pass time scaled to a host that runs the reference work in
+    * its canonical time: the median over passes, over the median
+    * reference run. */
+  def norm(ps: Seq[PassRec])(f: PassRec => Double): Double =
+    median(ps.map(f)) / median(ps.map(_.refS)) * Reference.CanonicalS
 
   private def passJson(p: PassRec): String = obj(Seq(
     "wall_s" -> Metrics.num(p.wallS), "cpu_s" -> Metrics.num(p.cpuS),
-    "live_heap_mb" -> Metrics.num(p.liveHeapMb), "delivery" -> Metrics.num(p.delivery),
+    "jit_s" -> Metrics.num(p.jitS), "classes_loaded" -> p.classes.toString,
+    "ref_s" -> Metrics.num(p.refS),
     "attempted" -> p.out.attempted.toString, "failed" -> p.out.failed.toString,
     "notes" -> p.out.notes.map(q).mkString("[", ",", "]")) ++
     p.out.layers.toSeq.sortBy(_._1).map { case (k, v) => k -> Metrics.num(v) })
@@ -130,7 +168,10 @@ object PerfBench {
     * throughput and the CPUs it could actually use. */
   private def leg(o: Opts): Unit = {
     val spark = session(o.legCores, s"${o.work}/leg${o.legCores}")
-    val w = makeWorkload(o, spark)
+    val w = makeWorkload(o, spark) match {
+      case e: ExtractCrawl => e
+      case _ => throw new IllegalArgumentException(s"no scaling legs for ${o.workload}")
+    }
     w.prepare()
     def once(): (Double, Long) = {
       w.workS = 0; w.workCpuS = 0
@@ -150,65 +191,68 @@ object PerfBench {
     println("LEG_RESULT " + obj(Seq("cores" -> o.legCores.toString,
       "affinity" -> q(affinity), "available_processors" -> Runtime.getRuntime.availableProcessors.toString,
       "passes" -> runs.size.toString, "pass_s" -> Metrics.num(median(runs.map(_._1))),
-      "items_per_s" -> Metrics.num(w.items / median(runs.map(_._1))),
+      "items_per_s" -> Metrics.num(w.nDocs / median(runs.map(_._1))),
       "failed" -> runs.map(_._2).sum.toString)))
     spark.stop()
   }
 
   private def run(o: Opts): Unit = {
+    val runT0 = System.nanoTime()
     val nproc = Runtime.getRuntime.availableProcessors
     val (spark, sessionS) = timed(session(nproc, o.work))
     val w = makeWorkload(o, spark)
     val setupReps = (1 to 3).map(_ => timed(w.setup())._2)
     w.prepare()
+    val ref = new Reference(spark, s"${o.work}/ref")
+    ref.setup()
     var attempted, failed = 0L
 
     def runPass(trace: Option[TraceCtx]): PassRec = {
       w.workS = 0; w.workCpuS = 0
       val gc0 = graft.GcClock.ms
       val c0 = cpuS
+      val j0 = jitS
+      val k0 = classesLoaded
       val out = w.pass(trace)
       val stats = trace.map(_.listener.passStats())
       val gcS = (graft.GcClock.ms - gc0) / 1000.0
       val jvmCpu = cpuS - c0
+      val jit = jitS - j0
       w.release()
       attempted += out.attempted
       failed += out.failed
-      PassRec(w.workS, w.workCpuS, out, stats, gcS, jvmCpu, liveHeapMb())
+      PassRec(w.workS, w.workCpuS, out, stats, gcS, jvmCpu, jit, classesLoaded - k0)
     }
-    // timed passes, each bracketed by a delivery probe: a pass's delivery
-    // is the mean of the probes before and after it
+    // timed passes, each between two reference runs: a pass's reference
+    // time is the mean of the runs before and after it
     def passesFor(seconds: Double, min: Int)(mk: => PassRec): Seq[PassRec] = {
       val t0 = System.nanoTime()
       val b = Seq.newBuilder[PassRec]
-      var d = Delivery.measure(nproc)
+      var r = ref.run()
       var n = 0
       while (n < min || (System.nanoTime() - t0) / 1e9 < seconds) {
         val p = mk
-        val d2 = Delivery.measure(nproc)
-        b += p.copy(delivery = (d + d2) / 2)
-        d = d2
+        val r2 = ref.run()
+        b += p.copy(refS = (r + r2) / 2)
+        r = r2
         n += 1
       }
       b.result()
     }
 
     // the first pass pays lazy set-up and counts in setup_s; the rest of
-    // the warm-up only lets the JIT settle
+    // the warm-up lets the JIT and Spark's caches settle
     val warm = runPass(None)
     val setupS = sessionS + median(setupReps) + warm.wallS
-    val warmRest = Seq.fill(w.warmPasses - 1)(runPass(None))
-    Delivery.measure(nproc) // JIT the probe loop
+    val warmRest = Seq.fill(w.warmPasses - 1) { ref.run(); runPass(None) }
 
     val values = scala.collection.mutable.LinkedHashMap.empty[String, Double]
     var extraJson = Seq.empty[(String, String)]
     val timedPasses: Seq[PassRec] =
       if (!o.trace) {
-        val ps = passesFor(o.seconds, 2)(runPass(None))
-        // live heap after the first timed pass: Spark's status store grows
-        // with every job, so a later pass would read more with more passes
-        values ++= Seq("setup_s" -> setupS, "norm_pass_s" -> median(ps.map(_.normS)),
-          "live_heap_mb" -> ps.head.liveHeapMb)
+        val ps = passesFor(o.seconds, 3)(runPass(None))
+        values ++= Seq("setup_s" -> setupS, "norm_pass_s" -> norm(ps)(_.wallS),
+          "norm_cpu_s" -> norm(ps)(_.cpuS), "live_heap_mb" -> liveHeapMb())
         ps
       } else {
         val untraced = passesFor(o.seconds / 2.0, 2)(runPass(None))
@@ -235,11 +279,11 @@ object PerfBench {
         val layerKeys = tracedPs.flatMap(_.out.layers.keys).distinct
         values ++= Metrics.PerLayer.map(_.name -> 0.0)
         values ++= layerKeys.map(k => k -> med(_.out.layers.getOrElse(k, 0.0)))
-        val tracedN = med(_.normS)
-        val untracedN = median(untraced.map(_.normS))
+        val tracedN = norm(tracedPs)(_.wallS)
+        val untracedN = norm(untraced)(_.wallS)
         values ++= Seq(
           "trace.pass_s" -> med(_.wallS), "trace.untraced_pass_s" -> median(untraced.map(_.wallS)),
-          "host.delivery" -> median((untraced ++ tracedPs).map(_.delivery)),
+          "host.ref_s" -> median((untraced ++ tracedPs).map(_.refS)),
           "trace_overhead_share" -> (tracedN - untracedN) / untracedN,
           "setup.session_s" -> sessionS, "setup.inputs_s" -> median(setupReps),
           "setup.warm_s" -> warm.wallS,
@@ -252,7 +296,7 @@ object PerfBench {
           "jvm.gc_s" -> med(_.gcS), "jvm.cpu_s" -> med(_.jvmCpuS),
           "host.cycle_delivery_before" -> graft.CycleCanary.CanonicalMs.toDouble / canaryBefore,
           "host.cycle_delivery_after" -> graft.CycleCanary.CanonicalMs.toDouble / canaryAfter)
-        if (o.workload == "doc_queries") values("queries.driver_self_s") = driverSelf(tracer.all)
+        if (o.workload == "queries_table") values("queries.driver_self_s") = driverSelf(tracer.all)
         writeTrace(o, tracer.all)
         extraJson :+= "untraced_passes" -> untraced.map(passJson).mkString("[", ",", "]")
         extraJson :+= "canary_ms" -> s"[$canaryBefore,$canaryAfter]"
@@ -276,6 +320,11 @@ object PerfBench {
       "inputs" -> obj(w.inputFacts.toSeq.sortBy(_._1).map { case (k, v) => k -> q(v) }),
       "setup_inputs_s" -> setupReps.map(Metrics.num).mkString("[", ",", "]"),
       "session_s" -> Metrics.num(sessionS), "peak_rss_mb" -> Metrics.num(peakRssMb),
+      "run_s" -> Metrics.num((System.nanoTime() - runT0) / 1e9),
+      "code_cache_mb" -> { import scala.jdk.CollectionConverters._
+        java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala.filter(_.getName.startsWith("CodeHeap"))
+          .map(b => q(b.getName) + ":" + Metrics.num(b.getUsage.getUsed / 1048576.0)).mkString("{", ",", "}") },
+      "classes_loaded" -> java.lang.management.ManagementFactory.getClassLoadingMXBean.getTotalLoadedClassCount.toString,
       "warm_passes" -> (warm +: warmRest).map(passJson).mkString("[", ",", "]"),
       "passes" -> timedPasses.map(passJson).mkString("[", ",", "]")) ++ extraJson)
     Files.createDirectories(Paths.get(o.out))
@@ -353,30 +402,5 @@ object PerfBench {
       "scale.hi_items_per_s" -> hiIps),
       obj(Seq("lo" -> l("json"), "hi" -> h("json"), "wider_than_requested" -> flag.toString)),
       l("failed").toLong + h("failed").toLong)
-  }
-}
-
-/** Cycle delivery of the host right now: a fixed splitmix64 loop run on
-  * every core at once, against `CycleCanary`'s canonical single-thread
-  * rate. 1.0 is the canonical host; 0.7 means each core delivered 70% of
-  * it, as happens on a shared VM when neighbours are busy. Pass times
-  * multiplied by it are comparable across host windows. */
-object Delivery {
-  /** Mixes per thread: about 0.2 s at the canonical rate. */
-  val Iters: Long = 40000000L
-  @volatile private var sink = 0L
-
-  def measure(threads: Int): Double = {
-    val ts = Seq.fill(threads)(new Thread(() => {
-      var acc = 0L
-      var i = 0L
-      while (i < Iters) { acc ^= graft.util.SplitMix.finalizeMix(i + acc); i += 1 }
-      sink ^= acc
-    }))
-    val t0 = System.nanoTime()
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    val ms = (System.nanoTime() - t0) / 1e6
-    graft.CycleCanary.CanonicalMs.toDouble * Iters / graft.CycleCanary.Iters / ms
   }
 }

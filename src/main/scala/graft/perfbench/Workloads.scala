@@ -29,10 +29,10 @@ final case class PartTrace(taskId: Long, startNs: Long, endNs: Long, ns: Vector[
   * `prepare` computes the references the checks compare against, and
   * `pass` runs one unit of work end to end and checks its outputs. */
 abstract class Workload(val spark: SparkSession, val seed: Long, val dir: String) {
-  /** Items per pass (docs) for throughput of the scaling legs. */
-  def items: Long
-  /** Untimed passes before timing: enough that the JIT has settled and
-    * the timed passes no longer get faster (measured on a 4-CPU host). */
+  /** Passes before timing, the cold one included: enough that the JIT
+    * has settled and passes no longer get faster. On a 4-CPU host pass
+    * times and CPU kept falling for 6-10 passes (the JIT compiler threads
+    * compete with the tasks for the cores until then). */
   def warmPasses: Int
   /** Whether the traced run also measures N -> 4N scaling legs. */
   def scalingLegs: Boolean = false
@@ -46,15 +46,16 @@ abstract class Workload(val spark: SparkSession, val seed: Long, val dir: String
 
   protected val parts: Int = 4 * spark.sparkContext.defaultParallelism
 
-  /** Wall and CPU seconds of the pass's timed work: a pass times only
-    * what the workload's end-to-end metric covers, not its checks. */
+  /** Wall seconds and work-thread CPU seconds of the pass's timed work:
+    * a pass times only what the workload's end-to-end metrics cover, not
+    * its checks. */
   var workS, workCpuS = 0.0
   protected def work[T](f: => T): T = {
-    val c0 = PerfBench.cpuS
+    val c0 = PerfBench.workThreadsCpuNs()
     val t0 = System.nanoTime()
     try f finally {
       workS += (System.nanoTime() - t0) / 1e9
-      workCpuS += PerfBench.cpuS - c0
+      workCpuS += PerfBench.workCpuS(c0, PerfBench.workThreadsCpuNs())
     }
   }
   protected def timed[T](f: => T): (T, Double) = PerfBench.timed(f)
@@ -69,16 +70,15 @@ abstract class Workload(val spark: SparkSession, val seed: Long, val dir: String
 }
 
 object Workload {
-  val Names: Seq[String] = Seq("extract_crawl", "doc_queries", "resume_table")
+  val Names: Seq[String] = Seq("extract_crawl", "queries_table")
 
-  /** doc_queries' queries, in the order they run. */
+  /** queries_table's queries, in the order they run. */
   val DocQueries: Seq[String] = Seq("q08_token_stats", "q13_dedup_exact", "q14_minhash_sig",
     "q18_simhash", "q35_training_set")
 
   def apply(name: String, spark: SparkSession, seed: Long, dir: String): Workload = name match {
     case "extract_crawl" => new ExtractCrawl(spark, seed, dir)
-    case "doc_queries"   => new DocQueries(spark, seed, dir)
-    case "resume_table"  => new ResumeTable(spark, seed, dir)
+    case "queries_table" => new QueriesTable(spark, seed, dir)
     case other => throw new IllegalArgumentException(s"unknown workload $other")
   }
 
@@ -112,8 +112,7 @@ object Workload {
 final class ExtractCrawl(spark: SparkSession, seed: Long, dir: String)
     extends Workload(spark, seed, dir) {
   val nDocs: Long = 8000L
-  def items: Long = nDocs
-  val warmPasses = 4
+  val warmPasses = 6
   override val scalingLegs = true
   private val pagesPath = s"$dir/pages"
   private var golden: (Long, Long) = (0L, 0L)
@@ -221,6 +220,37 @@ final class ExtractCrawl(spark: SparkSession, seed: Long, dir: String)
   }
 }
 
+/** The engine workload: every pass runs the document queries
+  * ([[DocQueries]]), then drives a small crawl table through the
+  * resumable bucketed table ([[ResumeTable]]). Both are many small Spark
+  * jobs whose planning, scheduling, shuffles and commits outweigh the
+  * row work, unlike extract_crawl; one workload for both keeps every run
+  * long enough to be steady on a small host. */
+final class QueriesTable(spark: SparkSession, seed: Long, dir: String)
+    extends Workload(spark, seed, dir) {
+  val queries = new DocQueries(spark, seed, s"$dir/docs")
+  val table = new ResumeTable(spark, seed, s"$dir/table")
+  private val steps = Seq(queries, table)
+  val warmPasses = 6
+
+  def setup(): Unit = steps.foreach(_.setup())
+  override def prepare(): Unit = steps.foreach(_.prepare())
+  override def inputFacts: Map[String, String] =
+    queries.inputFacts.map { case (k, v) => s"queries.$k" -> v } ++
+      table.inputFacts.map { case (k, v) => s"table.$k" -> v }
+
+  def pass(trace: Option[TraceCtx]): PassOut = {
+    val outs = steps.map { p =>
+      p.workS = 0; p.workCpuS = 0
+      val out = p.pass(trace)
+      workS += p.workS; workCpuS += p.workCpuS
+      out
+    }
+    PassOut(outs.map(_.attempted).sum, outs.map(_.failed).sum, outs.flatMap(_.layers).toMap,
+      outs.flatMap(_.notes))
+  }
+}
+
 /** Document-analytics queries, token statistics through exact dedup,
   * MinHash and SimHash signatures to the training-set gate, on one
   * generated documents table. Each query is a few small Spark jobs, so
@@ -228,8 +258,7 @@ final class ExtractCrawl(spark: SparkSession, seed: Long, dir: String)
 final class DocQueries(spark: SparkSession, seed: Long, dir: String)
     extends Workload(spark, seed, dir) {
   val nDocs: Long = 1000L
-  def items: Long = nDocs
-  val warmPasses = 3
+  val warmPasses = 0 // runs as a step of QueriesTable
   private val fns = Queries.all.map(q => q.name -> q.fn).toMap
   private var refs: Map[String, (Long, Long)] = Map.empty
 
@@ -270,11 +299,10 @@ final class DocQueries(spark: SparkSession, seed: Long, dir: String)
   * killed after half its waves, then resumed to completion. */
 final class ResumeTable(spark: SparkSession, seed: Long, dir: String)
     extends Workload(spark, seed, dir) {
-  val nDocs: Long = 2000L
+  val nDocs: Long = 400L
   val nBuckets = 4
   val perWave = 2
-  def items: Long = nDocs
-  val warmPasses = 3
+  val warmPasses = 0 // runs as a step of QueriesTable
   private val pagesPath = s"$dir/pages"
   private var golden: (Long, Long) = (0L, 0L)
   private var inputBytes = 0L

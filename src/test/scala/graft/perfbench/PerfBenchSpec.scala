@@ -80,4 +80,12 @@ class PerfBenchSpec extends AnyFunSuite {
         Metrics.resultLine(correct = true, 1, 0, trace, names.drop(1).map(_ -> 1.0).toMap))
     }
   }
+
+  test("work-thread CPU: a thread started between readings counts from zero") {
+    val before = Map(1L -> 100L, 2L -> 50L)
+    val after = Map(1L -> 300L, 3L -> 40L) // thread 2 ended, thread 3 started
+    assert(PerfBench.workCpuS(before, after) == 240 / 1e9)
+    val me = PerfBench.workThreadsCpuNs()
+    assert(me.contains(Thread.currentThread().getId), "the calling thread is measured")
+  }
 }
