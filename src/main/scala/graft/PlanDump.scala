@@ -1,11 +1,18 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
 
-/** Regenerates PLANS.md: the physical plans of the load-bearing queries,
-  * with the plan properties that matter at 100 TB called out. Run:
+/** Plan evidence on sf0.001 (plan SHAPE is scale-independent). Two modes:
   *   sbt -batch "runMain graft.PlanDump"
+  *     regenerates PLANS.md: the physical plans of the load-bearing
+  *     queries, with the plan properties that matter at 100 TB called out;
+  *   sbt -batch "runMain graft.PlanDump <suffix> <query> ..."
+  *     writes `plans/<query>_<suffix>.txt` with the `.explain("formatted")`
+  *     output of each named query, so before/after plan-shape claims are
+  *     checkable without running Spark. Eager queries (q19/q40) localize
+  *     their results — their returned frame's plan is the localized scan.
   */
 object PlanDump {
 
@@ -37,12 +44,29 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
+    if (args.isEmpty) plansMd(spark, sf) else formatted(spark, sf, args.head, args.tail.toSeq)
+    spark.stop()
+  }
+
+  private def formatted(spark: SparkSession, sf: String, suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get("plans"))
+    names.foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sf)
+      val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
+      Files.writeString(Paths.get(s"plans/${name}_$suffix.txt"), txt)
+      println(s"PLAN_OK $name ${txt.length}")
+    }
+  }
+
+  private def plansMd(spark: SparkSession, sf: String): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the load-bearing queries\n\n")
     sb.append("Generated by `graft.PlanDump` on sf0.001 (plan SHAPE is scale-\n")
     sb.append("independent; AQE may re-plan exchanges at runtime). Key plan\n")
     sb.append("properties are asserted in QueriesSpec so regressions fail tests,\n")
-    sb.append("not reviews.\n")
+    sb.append("not reviews. Per-query `.explain(\"formatted\")` dumps for\n")
+    sb.append("before/after evidence: `graft.PlanDump <suffix> <query...>` writes\n")
+    sb.append("`plans/<query>_<suffix>.txt`.\n")
     Notes.keys.toSeq.sorted.foreach { name =>
       val q = graft.queries.Queries.all.find(_.name == name).get
       val df = q.fn(spark, sf)
@@ -62,6 +86,5 @@ object PlanDump {
     sb.append("\n```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("PLANS_OK " + sb.length)
-    spark.stop()
   }
 }

@@ -410,21 +410,37 @@ final class PdfDoc(data: Array[Byte]) {
         while (!inf.finished() && !inf.needsInput()) {
           val k = inf.inflate(buf)
           if (k == 0 && !inf.finished()) return out.toByteArray
+          if (out.size.toLong + k > PdfDoc.MaxInflatedBytes)
+            throw new PdfDoc.InflateLimitExceeded(bytes.length)
           out.write(buf, 0, k)
         }
         out.toByteArray
       } finally inf.end()
     }
-    try {
-      val r = run(nowrap = false)
-      if (r.nonEmpty) r else run(nowrap = true)
-    } catch { case _: Exception =>
-      try run(nowrap = true) catch { case _: Exception => Array.emptyByteArray }
-    }
+    // zlib first, raw deflate when zlib fails or yields nothing; a stream
+    // neither reads is empty. The output cap is the one failure that must
+    // NOT fall back: it ends the document as an ok=false row.
+    def attempt(nowrap: Boolean): Option[Array[Byte]] =
+      try Some(run(nowrap)) catch {
+        case e: PdfDoc.InflateLimitExceeded => throw e
+        case _: Exception => None
+      }
+    attempt(nowrap = false).filter(_.nonEmpty)
+      .orElse(attempt(nowrap = true)).getOrElse(Array.emptyByteArray)
   }
 }
 
 object PdfDoc {
+  /** Output cap of one FlateDecode stream, sized like Png.decode's 64 MiB
+    * pixel cap: a few KB of deflated zeros inflate to gigabytes, and one
+    * such page would otherwise OOM the task. */
+  val MaxInflatedBytes: Long = 64L << 20
+
+  /** A Flate stream inflated past [[MaxInflatedBytes]]: escapes the
+    * decode fallbacks so Extractor records the page as ok=false. */
+  final class InflateLimitExceeded(inputBytes: Int) extends RuntimeException(
+    s"FlateDecode stream of $inputBytes bytes inflates past $MaxInflatedBytes bytes")
+
   /** Magic sniff used by the pipeline to route binary page bodies:
     * reference analog is "is this file a PDF" by extension
     * (/root/reference/src/serials.py:46-63); here bytes start `%PDF-`. */

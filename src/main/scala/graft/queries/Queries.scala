@@ -167,13 +167,96 @@ object Queries {
     off
   }
 
-  /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
-    * (repeated bench sweeps) unpersists the previous generation, so at
-    * most one live copy per query key exists in the session. Spark does
-    * not share work between the two sides of a self-join — persisting the
-    * expensive projection (shingle/signature/bit tables) makes each side
-    * a cache read instead of a recompute, which at 100 TB is exactly the
-    * materialized signature table a dedup/ANN job writes once. */
+  /** [[mutantOffset]] with the verify-mode guard: the oracle SQL
+    * statically hardcodes `floor`, so a verify run outside that domain
+    * fails LOUDLY (the oracle would make the SAME collision mistake, so
+    * verification could not catch it); bench/scale corpora get the
+    * collision-free offset instead of a refused run. */
+  private def checkedOffset(query: String, floor: Long, maxId: Long): Long = {
+    val off = mutantOffset(floor, maxId)
+    if (auxDumpEnabled)
+      require(off == floor, s"$query oracle domain exceeded: offset=$off (static " +
+        s"oracle SQL assumes +$floor; verify runs need ids < $floor)")
+    off
+  }
+
+  // ---- candidate -> re-rank core (q15/q16/q24/q26/q34/q41) ------------
+
+  /** Tokenized documents plus one planted mutant per doc (first token
+    * dropped, id + the checked offset above max doc_id): the q15/q41
+    * near-dup input, so true pairs exist by construction. */
+  private def docsWithMutants(s: SparkSession, dir: String, query: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    val off = checkedOffset(query, 1000000L, docs.agg(max("doc_id")).head().getLong(0))
+    val base = docs.selectExpr("doc_id AS id", s"$SparkToks AS toks")
+    base.unionByName(base.selectExpr(s"id + $off AS id", "slice(toks, 2, size(toks)) AS toks"))
+  }
+
+  /** embeddings scan -> e3 quantization -> exact squared norm: the
+    * (`idAs`, qv, nrm) prefix every embedding query starts from.
+    * `augment` rewrites the quantized rows before the norm (q26 appends
+    * its perturbed copies there, so one norm pass covers both). Not
+    * persisted and not zero-norm guarded: each caller places its own
+    * persist and `nrm > 0` guard (q16 and q24 comments say where). */
+  private def quantized(s: SparkSession, dir: String, idAs: String,
+      augment: DataFrame => DataFrame = identity): DataFrame = {
+    GraftFunctions.registerAll(s)
+    augment(t(s, dir, "embeddings").selectExpr(s"vec_id AS $idAs", QuantSpark))
+      .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
+  }
+
+  /** Cosine from an exact integer dot product and two squared norms: one
+    * double division + sqrt, text shared by both dialects so Spark and
+    * the oracle evaluate the identical IEEE sequence. */
+  private def cosine(dot: String, na: String, nb: String): String =
+    s"CAST($dot AS DOUBLE) / (sqrt(CAST($na AS DOUBLE)) * sqrt(CAST($nb AS DOUBLE)))"
+
+  /** e6 fixed-point output of a cosine column `c` (both dialects). */
+  private val CosE6 = "CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6"
+
+  /** One embedding side of a candidate pair: id renamed to the join
+    * `key`, vector and norm tagged by `x` (qa/na or qb/nb). */
+  private def embSide(qq: DataFrame, id: String)(key: String, x: String): DataFrame =
+    qq.selectExpr(s"$id AS $key", s"qv AS q$x", s"nrm AS n$x")
+
+  /** Exact cosine `c` of side-joined pairs: native codegen'd integer dot
+    * (graft.functions.DotI64 — same exact math as the oracle's
+    * list_sum(list_transform(...))) over qa/qb, then [[cosine]]. */
+  private def scored(pairs: DataFrame, keys: String*): DataFrame =
+    pairs.withColumn("dot", GraftFunctions.dot_i64(col("qa"), col("qb")))
+      .selectExpr(keys :+ s"${cosine("dot", "na", "nb")} AS c": _*)
+
+  /** Each probe's `k` best-scored neighbors (c DESC, ties by neighbor
+    * id) with their rank and e6 cosine. */
+  private def topK(pairs: DataFrame, k: Int): DataFrame =
+    pairs
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy("vec_id").orderBy(col("c").desc, col("neighbor_id"))))
+      .filter(col("rnk") <= k)
+      .selectExpr("vec_id", "neighbor_id", "CAST(rnk AS BIGINT) AS rnk", CosE6)
+
+  /** Attach both sides' columns to candidate pairs for confirm or
+    * re-rank: one equi-join per (key, tag), IN THE GIVEN ORDER (q24's
+    * order is what keeps its top-k window free of exchanges); `side`
+    * projects the side table onto that key and tag. */
+  private def bothSides(cand: DataFrame, sides: (String, String)*)(
+      side: (String, String) => DataFrame): DataFrame =
+    sides.foldLeft(cand) { case (df, (key, x)) => df.join(side(key, x), Seq(key)) }
+
+  /** SRP-LSH candidate pairs (q24/q26): every (`a`, `b`) pair sharing a
+    * bucket in any table of `stack` and passing `keep`, deduplicated.
+    * `clusterOnA` runs the distinct on an `a`-only repartition, which
+    * also satisfies a downstream window or join keyed by `a`. */
+  private def srpCandidates(qq: DataFrame, stack: String, id: String, a: String, b: String,
+      keep: String, clusterOnA: Boolean = false): DataFrame = {
+    val sigs = qq.selectExpr(id, stack)
+    val pairs = sigs.selectExpr(s"$id AS $a", "tbl", "bucket")
+      .join(sigs.selectExpr(s"$id AS $b", "tbl AS tbl2", "bucket AS bucket2"),
+        expr(s"tbl = tbl2 AND bucket = bucket2 AND $keep"))
+      .select(a, b)
+    (if (clusterOnA) pairs.repartition(col(a)) else pairs).distinct()
+  }
+
   /** max(vec_id) of the embeddings table, one job per (session, dir) —
     * a fail-loud collision guard, not a result cache. WEAK-keyed on the
     * session itself (round-4 ADVICE: an identityHashCode key can collide
@@ -215,6 +298,13 @@ object Queries {
   private def embeddingsCount(s: SparkSession, dir: String): Long =
     sessionMemo(RowGuard, s, dir)(t(s, dir, "embeddings").count())
 
+  /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
+    * (repeated bench sweeps) unpersists the previous generation, so at
+    * most one live copy per query key exists in the session. Spark does
+    * not share work between the two sides of a self-join — persisting the
+    * expensive projection (shingle/signature/bit tables) makes each side
+    * a cache read instead of a recompute, which at 100 TB is exactly the
+    * materialized signature table a dedup/ANN job writes once. */
   private object SwapCache {
     private var last: Map[String, List[DataFrame]] = Map.empty
     def swap(key: String)(dfs: DataFrame*): Unit = synchronized {
@@ -770,24 +860,11 @@ object Queries {
     Q(
       "q15_lsh_near_dup",
       (s, dir) => Q15Result.get(s, dir) {
-        // planted mutant ids live at +offset — the smallest power of ten
-        // above max doc_id (min 1000000, the static value the oracle SQL
-        // hardcodes). Verify mode fails LOUDLY past that domain (the
-        // oracle would make the SAME collision mistake, so verification
-        // could not catch it); bench/scale corpora beyond 1M docs get a
-        // collision-free offset instead of a refused run (q26 pattern).
-        val maxId = t(s, dir, "documents")
-          .agg(max("doc_id")).head().getLong(0)
-        val mOff = mutantOffset(1000000L, maxId)
-        if (auxDumpEnabled)
-          require(mOff == 1000000L,
-            s"q15 oracle domain exceeded: offset=$mOff (static oracle SQL " +
-              "assumes +1000000; verify runs need doc ids < 1000000)")
+        val docs = docsWithMutants(s, dir, "q15")
         // release-first (SwapCache.release scaladoc): persisting a plan
         // identical to the previous generation's would dedup into the old
         // CacheManager entry that swap() then kills
         SwapCache.release("q15")
-        val base = t(s, dir, "documents").selectExpr("doc_id AS id", s"$SparkToks AS toks")
         // the shingle+hash pipeline feeds the band explode AND both sides
         // of the jaccard join — persist it once instead of recomputing the
         // scan+tokenize+md5 three times (at scale: a materialized
@@ -795,11 +872,10 @@ object Queries {
         // sz rides in the persisted projection: the confirm stage derives
         // the union size as sz_a + sz_b - overlap (exact — sh is an
         // array_distinct output), so the per-pair array_union pass is gone
-        val augCached = base.unionByName(
-              base.selectExpr(s"id + $mOff AS id", "slice(toks, 2, size(toks)) AS toks"))
-            .selectExpr("id", s"$sparkShingles AS sh")
-            .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val augCached = docs
+          .selectExpr("id", s"$sparkShingles AS sh")
+          .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz")
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         // exclude shingle-less docs (< 3 tokens) before banding: their
         // 0/0 Jaccard NaN-aborts the ANSI cast once >cap share a
         // degenerate bucket (round-6 review; oracle-mirrored). ABOVE the
@@ -855,9 +931,8 @@ object Queries {
         // the double arithmetic below is the same IEEE sequence as before
         // (10000.0 * ni / nu with integer-valued operands), so jaccard_e4
         // is bit-identical to the oracle's.
-        pairs
-          .join(aug.selectExpr("id AS id_a", "sh AS sh_a", "sz AS sz_a"), Seq("id_a"))
-          .join(aug.selectExpr("id AS id_b", "sh AS sh_b", "sz AS sz_b"), Seq("id_b"))
+        bothSides(pairs, "id_a" -> "a", "id_b" -> "b")((k, x) =>
+            aug.selectExpr(s"id AS $k", s"sh AS sh_$x", s"sz AS sz_$x"))
           .withColumn("ni", GraftFunctions.distinct_overlap(col("sh_a"), col("sh_b")))
           .selectExpr("id_a", "id_b",
             "CAST(FLOOR(10000.0 * ni / (sz_a + sz_b - ni) + 0.5) AS BIGINT) AS jaccard_e4")
@@ -894,37 +969,20 @@ object Queries {
     "q16_ann_topk",
     (s, dir) => {
       q16Guard(embeddingsCount(s, dir))
-      val qq = t(s, dir, "embeddings")
-        .selectExpr(
-          "vec_id",
-          QuantSpark)
-        .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
-        // zero-norm rows (all-zero / sub-quantization embeddings — a
-        // padding or failed-encode row in a real dump) have no cosine to
-        // anything: 0/0 = NaN and the ANSI cast to cos_e6 would abort
-        // the query (round-6 review). Excluded here and in the oracle;
-        // same guard in q24/q26/q34. Known, accepted: with no persist
-        // above it, pushdown duplicates quantize+dot into the scan filter
-        // (evaluates twice per row) — q16 is capped at 100k index rows
-        // and the BNLJ dominates, so a pushdown barrier would buy nothing
-        // here; q24/q26 place the same gate above a persist instead.
-        .filter("nrm > 0")
-      val probes = qq.filter(col("vec_id") < 100)
-        .selectExpr("vec_id", "qv AS qa", "nrm AS na")
-      val index = qq.selectExpr("vec_id AS neighbor_id", "qv AS qb", "nrm AS nb")
-      val scored = probes
-        .join(broadcast(index), col("vec_id") =!= col("neighbor_id"))
-        // native codegen'd integer dot product (graft.functions.DotI64) —
-        // same exact math as the oracle's list_sum(list_transform(...))
-        .withColumn("dot", GraftFunctions.dot_i64(col("qa"), col("qb")))
-        .selectExpr("vec_id", "neighbor_id",
-          "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS c")
-      scored
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c").desc, col("neighbor_id"))))
-        .filter(col("rnk") <= 5)
-        .selectExpr("vec_id", "neighbor_id", "CAST(rnk AS BIGINT) AS rnk",
-          "CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6")
+      // zero-norm rows (all-zero / sub-quantization embeddings — a
+      // padding or failed-encode row in a real dump) have no cosine to
+      // anything: 0/0 = NaN and the ANSI cast to cos_e6 would abort
+      // the query (round-6 review). Excluded here and in the oracle;
+      // same guard in q24/q26/q34. Known, accepted: with no persist
+      // above it, pushdown duplicates quantize+dot into the scan filter
+      // (evaluates twice per row) — q16 is capped at 100k index rows
+      // and the BNLJ dominates, so a pushdown barrier would buy nothing
+      // here; q24/q26 place the same gate above a persist instead.
+      val qq = quantized(s, dir, "vec_id").filter("nrm > 0")
+      val pairs = embSide(qq.filter(col("vec_id") < 100), "vec_id")("vec_id", "a")
+        .join(broadcast(embSide(qq, "vec_id")("neighbor_id", "b")),
+          col("vec_id") =!= col("neighbor_id"))
+      topK(scored(pairs, "vec_id", "neighbor_id"), 5)
     },
     Some(s"""WITH q AS (SELECT vec_id,
         $QuantDuck
@@ -937,10 +995,10 @@ object Queries {
           a.nrm AS na, b.nrm AS nb
         FROM qq a JOIN qq b ON a.vec_id < 100 AND a.vec_id <> b.vec_id),
       cosd AS (SELECT vec_id, neighbor_id,
-          CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS c
+          ${cosine("dot", "na", "nb")} AS c
         FROM pairs)
       SELECT vec_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk,
-        CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6
+        $CosE6
       FROM (SELECT vec_id, neighbor_id, c,
               row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, neighbor_id) AS rnk
             FROM cosd)
@@ -1200,35 +1258,27 @@ object Queries {
     Q(
       "q24_ann_lsh",
       (s, dir) => {
-        GraftFunctions.registerAll(s)
         // release-first (SwapCache.release scaladoc)
         SwapCache.release("q24")
         // persisted: the 32 hyperplane dot products per vector feed the
         // bucket self-join (both sides) AND the two re-rank joins — four
         // recomputes without the persist
-        val qqCached = t(s, dir, "embeddings")
-          .selectExpr(
-            "vec_id",
-            QuantSpark)
-          .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
+        val qqCached = quantized(s, dir, "vec_id")
           .selectExpr(Seq("vec_id", "qv", "nrm") ++ sTabs: _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         SwapCache.swap("q24")(qqCached)
-        // zero-norm guard (q16 scaladoc) ABOVE the persist: below it,
+        // zero-norm guard (q16 comment) ABOVE the persist: below it,
         // pushdown would re-evaluate the quantize+dot into the scan
         // filter (the q15 double-evaluation trap); here it reads the
         // cached nrm column
         val qq = qqCached.filter("nrm > 0")
-        val sigs = qq.selectExpr("vec_id", sStack)
         // distinct runs on a vec_id-only repartition (guide §2.4): that
         // partitioning satisfies both the (vec_id, neighbor_id) dedup
         // clustering AND the final window's vec_id clustering, so the
-        // re-rank window adds no exchange of its own
-        val cand = sigs.filter(col("vec_id") < 100)
-          .selectExpr("vec_id", "tbl", "bucket")
-          .join(sigs.selectExpr("vec_id AS neighbor_id", "tbl AS tbl2", "bucket AS bucket2"),
-            expr("tbl = tbl2 AND bucket = bucket2 AND vec_id <> neighbor_id"))
-          .select("vec_id", "neighbor_id").repartition(col("vec_id")).distinct()
+        // re-rank window adds no exchange of its own. The probe bound
+        // vec_id < 100 is pushed below the join onto the probe side.
+        val cand = srpCandidates(qq, sStack, "vec_id", "vec_id", "neighbor_id",
+          "vec_id < 100 AND vec_id <> neighbor_id", clusterOnA = true)
         // re-rank sides join WITHOUT a broadcast hint: the embedding table
         // is the corpus — at 100x it is a multi-GB build side, so the
         // correct shape is a plain shuffle equi-join on vec_id/neighbor_id
@@ -1241,18 +1291,8 @@ object Queries {
         // vec_id repartition when the joins broadcast, or by the final
         // vec_id-keyed shuffle join otherwise — so the window adds no
         // exchange
-        val scored = cand
-          .join(qq.selectExpr("vec_id AS neighbor_id", "qv AS qb", "nrm AS nb"), Seq("neighbor_id"))
-          .join(qq.selectExpr("vec_id", "qv AS qa", "nrm AS na"), Seq("vec_id"))
-          .withColumn("dot", GraftFunctions.dot_i64(col("qa"), col("qb")))
-          .selectExpr("vec_id", "neighbor_id",
-            "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS c")
-        scored
-          .withColumn("rnk", row_number().over(
-            Window.partitionBy("vec_id").orderBy(col("c").desc, col("neighbor_id"))))
-          .filter(col("rnk") <= 5)
-          .selectExpr("vec_id", "neighbor_id", "CAST(rnk AS BIGINT) AS rnk",
-            "CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6")
+        topK(scored(bothSides(cand, "neighbor_id" -> "b", "vec_id" -> "a")(embSide(qq, "vec_id")),
+          "vec_id", "neighbor_id"), 5)
       },
       Some(s"""WITH q AS (SELECT vec_id,
           $QuantDuck
@@ -1270,10 +1310,10 @@ object Queries {
             a.nrm AS na, b.nrm AS nb
           FROM cand c JOIN qq a ON a.vec_id = c.vec_id JOIN qq b ON b.vec_id = c.neighbor_id),
         cosd AS (SELECT vec_id, neighbor_id,
-            CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS c
+            ${cosine("dot", "na", "nb")} AS c
           FROM scored)
         SELECT vec_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk,
-          CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6
+          $CosE6
         FROM (SELECT vec_id, neighbor_id, c,
                 row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, neighbor_id) AS rnk
               FROM cosd)
@@ -1407,54 +1447,37 @@ object Queries {
     Q(
       "q26_embed_near_dup",
       (s, dir) => {
-        GraftFunctions.registerAll(s)
         // perturbed-copy ids live at +offset, where offset is the
         // smallest power of ten above max vec_id (min 100000), and the
         // SRP code length scales with the corpus (srpNearDupFor
         // scaladoc; 16 bits up to 16,384 vectors). The ORACLE's SQL
         // statically hardcodes +100000 and 16-bit tables — valid for
         // every oracle-checked sf dir (<= 2k vectors) — so verify mode
-        // fails LOUDLY below if a dir ever leaves that domain, instead
-        // of producing an unexplained wholesale hash mismatch; larger
+        // fails LOUDLY if a dir ever leaves that domain, instead of
+        // producing an unexplained wholesale hash mismatch; larger
         // corpora (ScaleBench x100 runs 200k vectors) execute only the
         // Spark side and get collision-free scale parameters instead of
         // a refused run. Both guards are memoized per (session, dir) —
         // a bench sweep must not pay a max()/count() job per repetition.
-        val maxVec = maxVecId(s, dir)
-        val offset = mutantOffset(100000L, maxVec)
+        val offset = checkedOffset("q26", 100000L, maxVecId(s, dir))
         val lsh = srpNearDupFor(2L * embeddingsCount(s, dir))
         if (auxDumpEnabled)
-          require(offset == 100000L && lsh.bitsPerTable == 16,
-            s"q26 oracle domain exceeded: offset=$offset bits=${lsh.bitsPerTable}" +
-              " — the static oracle SQL assumes +100000 / 16-bit codes;" +
-              " verify runs need a corpus of <= 16k vectors with ids < 100000")
+          require(lsh.bitsPerTable == 16,
+            s"q26 oracle domain exceeded: bits=${lsh.bitsPerTable} — the static " +
+              "oracle SQL assumes 16-bit codes; verify runs need <= 16k vectors")
         // release-first (SwapCache.release scaladoc)
         SwapCache.release("q26")
-        val base = t(s, dir, "embeddings")
-          .selectExpr(
-            "vec_id AS id",
-            QuantSpark)
-        val aug = base.unionByName(
-          base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv"))
         // persisted for the same reason as q24's qq (4 consumers)
-        val qqCached = aug
-          .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
+        val qqCached = quantized(s, dir, "id", base => base.unionByName(
+            base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv")))
           .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         SwapCache.swap("q26")(qqCached)
         // zero-norm guard above the persist (q24 comment)
         val qq = qqCached.filter("nrm > 0")
-        val sigs = qq.selectExpr("id", lsh.sStack)
-        val cand = sigs.selectExpr("id AS id_a", "tbl", "bucket")
-          .join(sigs.selectExpr("id AS id_b", "tbl AS tbl2", "bucket AS bucket2"),
-            expr("tbl = tbl2 AND bucket = bucket2 AND id_a < id_b"))
-          .select("id_a", "id_b").distinct()
-        cand
-          .join(qq.selectExpr("id AS id_a", "qv AS qa", "nrm AS na"), Seq("id_a"))
-          .join(qq.selectExpr("id AS id_b", "qv AS qb", "nrm AS nb"), Seq("id_b"))
-          .withColumn("dot", GraftFunctions.dot_i64(col("qa"), col("qb")))
-          .selectExpr("id_a", "id_b",
-            "CAST(FLOOR(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) AS cos_e6")
+        val cand = srpCandidates(qq, lsh.sStack, "id", "id_a", "id_b", "id_a < id_b")
+        scored(bothSides(cand, "id_a" -> "a", "id_b" -> "b")(embSide(qq, "id")), "id_a", "id_b")
+          .selectExpr("id_a", "id_b", CosE6)
           .filter("cos_e6 >= 995000")
       },
       Some(s"""WITH q AS (SELECT vec_id AS id,
@@ -1474,9 +1497,9 @@ object Queries {
             a.nrm AS na, b.nrm AS nb
           FROM cand c JOIN qq a ON a.id = c.id_a JOIN qq b ON b.id = c.id_b)
         SELECT id_a, id_b,
-          CAST(FLOOR(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) AS cos_e6
+          CAST(FLOOR(${cosine("dot", "na", "nb")} * 1000000.0 + 0.5) AS BIGINT) AS cos_e6
         FROM scored
-        WHERE CAST(FLOOR(CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) * 1000000.0 + 0.5) AS BIGINT) >= 995000"""))
+        WHERE CAST(FLOOR(${cosine("dot", "na", "nb")} * 1000000.0 + 0.5) AS BIGINT) >= 995000"""))
   }
 
   /** Rolling-hash (Karp-Rabin) winnowing fingerprints (MOSS algorithm —
@@ -1772,15 +1795,10 @@ object Queries {
   private val q34 = Q(
     "q34_ann_ivf",
     (s, dir) => {
-      GraftFunctions.registerAll(s)
       val k = 16
-      val qq = t(s, dir, "embeddings")
-        .selectExpr(
-          "vec_id",
-          QuantSpark)
-        .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
-        .filter("nrm > 0") // zero-norm guard (q16 scaladoc) — a zero
-        // CENTROID would NaN every row's assignment expression
+      // zero-norm guard (q16 comment) — a zero CENTROID would NaN every
+      // row's assignment expression
+      val qq = quantized(s, dir, "vec_id").filter("nrm > 0")
       // bounded driver collect: exactly k centroid rows
       val centroids = qq.filter(col("vec_id") < k)
         .selectExpr("vec_id", "qv", "nrm").collect()
@@ -1793,8 +1811,7 @@ object Queries {
       // the same one the oracle computes.
       val cellStructs = centroids.map { case (cid, cv, cnrm) =>
         val lits = cv.map(v => s"${v}L").mkString("array(", ", ", ")")
-        s"named_struct('negc', -(CAST(dot_i64(qv, $lits) AS DOUBLE) / " +
-          s"(sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(${cnrm}L AS DOUBLE)))), 'cid', ${cid}L)"
+        s"named_struct('negc', -(${cosine(s"dot_i64(qv, $lits)", "nrm", s"${cnrm}L")}), 'cid', ${cid}L)"
       }.mkString(", ")
       // assign is deliberately NOT persisted although two consumers read
       // it: the probes side carries vec_id < 100, which Catalyst pushes
@@ -1810,24 +1827,15 @@ object Queries {
       val probes = assign.filter(col("vec_id") < 100)
         .selectExpr("vec_id", "explode(transform(top2, c -> c.cid)) AS cid",
           "qv AS qa", "nrm AS na")
-      probes
-        .join(cells, Seq("cid"))
-        .filter(col("vec_id") =!= col("neighbor_id"))
-        .withColumn("dot", GraftFunctions.dot_i64(col("qa"), col("qb")))
-        .selectExpr("vec_id", "neighbor_id",
-          "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE))) AS c")
-        // ONE exchange for dedup + re-rank (guide §2.4): partitioning by
-        // vec_id alone satisfies the (vec_id, neighbor_id) clustering the
-        // dedup agg needs AND the window's vec_id clustering, so the
-        // former agg exchange on (vec_id, neighbor_id) + window exchange
-        // on vec_id collapse into this single repartition
+      // ONE exchange for dedup + re-rank (guide §2.4): partitioning by
+      // vec_id alone satisfies the (vec_id, neighbor_id) clustering the
+      // dedup agg needs AND the window's vec_id clustering, so the
+      // former agg exchange on (vec_id, neighbor_id) + window exchange
+      // on vec_id collapse into this single repartition
+      topK(scored(probes.join(cells, Seq("cid")).filter(col("vec_id") =!= col("neighbor_id")),
+          "vec_id", "neighbor_id")
         .repartition(col("vec_id"))
-        .groupBy("vec_id", "neighbor_id").agg(max("c").as("c")) // probe hit via both cells -> once
-        .withColumn("rnk", row_number().over(
-          Window.partitionBy("vec_id").orderBy(col("c").desc, col("neighbor_id"))))
-        .filter(col("rnk") <= 5)
-        .selectExpr("vec_id", "neighbor_id", "CAST(rnk AS BIGINT) AS rnk",
-          "CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6")
+        .groupBy("vec_id", "neighbor_id").agg(max("c").as("c")), 5) // probe hit via both cells -> once
     },
     Some(s"""WITH q AS (SELECT vec_id,
         $QuantDuck
@@ -1837,9 +1845,9 @@ object Queries {
         WHERE nrm > 0),
       cent AS (SELECT vec_id AS cid, qv AS cv, nrm AS cnrm FROM qq WHERE vec_id < 16),
       assign AS (SELECT vec_id, cid, qv, nrm,
-          CAST(dotc AS DOUBLE) / (sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(cnrm AS DOUBLE))) AS cosc,
+          ${cosine("dotc", "nrm", "cnrm")} AS cosc,
           row_number() OVER (PARTITION BY vec_id ORDER BY
-            CAST(dotc AS DOUBLE) / (sqrt(CAST(nrm AS DOUBLE)) * sqrt(CAST(cnrm AS DOUBLE))) DESC, cid) AS rnk_c
+            ${cosine("dotc", "nrm", "cnrm")} DESC, cid) AS rnk_c
         FROM (SELECT a.vec_id, c.cid, a.qv, a.nrm, c.cnrm,
             CAST(list_sum(list_transform(generate_series(1, 64), i -> a.qv[i]*c.cv[i])) AS BIGINT) AS dotc
           FROM qq a CROSS JOIN cent c)),
@@ -1851,7 +1859,7 @@ object Queries {
         FROM probes p JOIN cells cl ON p.cid = cl.cid AND p.vec_id <> cl.neighbor_id
         GROUP BY p.vec_id, cl.neighbor_id)
       SELECT vec_id, neighbor_id, CAST(rnk AS BIGINT) AS rnk,
-        CAST(FLOOR(c*1000000.0 + 0.5) AS BIGINT) AS cos_e6
+        $CosE6
       FROM (SELECT vec_id, neighbor_id, c,
               row_number() OVER (PARTITION BY vec_id ORDER BY c DESC, neighbor_id) AS rnk
             FROM scored)
@@ -2200,24 +2208,13 @@ object Queries {
     Q(
       "q41_jaccard_join",
       (s, dir) => {
-        // scaled mutant-id offset + loud verify-mode guard (q15/q26
-        // pattern: oracle SQL statically assumes +1000000)
-        val maxId = t(s, dir, "documents")
-          .agg(max("doc_id")).head().getLong(0)
-        val mOff = mutantOffset(1000000L, maxId)
-        if (auxDumpEnabled)
-          require(mOff == 1000000L,
-            s"q41 oracle domain exceeded: offset=$mOff (static oracle SQL " +
-              "assumes +1000000; verify runs need doc ids < 1000000)")
+        val docs = docsWithMutants(s, dir, "q41")
         // release-first (SwapCache.release scaladoc)
         SwapCache.release("q41")
-        val base = t(s, dir, "documents")
-          .selectExpr("doc_id AS id", s"$SparkToks AS toks")
         // grams feeds the posting explode (freq, prefix, gram-id table);
         // prefix feeds both sides of the candidate self-join; gsi feeds
         // both confirm sides
-        val grams = base.unionByName(
-            base.selectExpr(s"id + $mOff AS id", "slice(toks, 2, size(toks)) AS toks"))
+        val grams = docs
           .selectExpr("id", s"$sparkBigrams AS gs")
           .withColumn("sz", expr("size(gs)"))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2273,9 +2270,8 @@ object Queries {
         // (exact — gs is distinct and gid bijective). The exact RATIONAL
         // tau gate and the e4 arithmetic are unchanged in value: ni/nu
         // are the same integers, only now computed as longs.
-        candObserved
-          .join(gsi.selectExpr("id AS id_a", "gsi AS gs_a", "sz AS sz_a"), Seq("id_a"))
-          .join(gsi.selectExpr("id AS id_b", "gsi AS gs_b", "sz AS sz_b"), Seq("id_b"))
+        bothSides(candObserved, "id_a" -> "a", "id_b" -> "b")((k, x) =>
+            gsi.selectExpr(s"id AS $k", s"gsi AS gs_$x", s"sz AS sz_$x"))
           .withColumn("ni", GraftFunctions.sorted_overlap_i64(col("gs_a"), col("gs_b")))
           .selectExpr("id_a", "id_b", "ni", "CAST(sz_a + sz_b AS BIGINT) - ni AS nu")
           .filter("10 * ni >= 9 * nu")

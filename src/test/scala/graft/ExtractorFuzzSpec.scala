@@ -35,6 +35,26 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("a Flate bomb past the inflate cap becomes an ok=false row, not an OOM") {
+    // ~65 KB of deflated zeros that inflate 1 MiB past the cap: without
+    // the cap this inflates in full and the page extracts as empty text
+    val deflated = new java.io.ByteArrayOutputStream()
+    val zos = new java.util.zip.DeflaterOutputStream(deflated)
+    val zeros = new Array[Byte](1 << 16)
+    (0L until (graft.pdf.PdfDoc.MaxInflatedBytes >> 16) + 16).foreach(_ => zos.write(zeros))
+    zos.close()
+    val stream = deflated.toByteArray
+    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+    val head = "%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
+      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" +
+      "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n" +
+      s"4 0 obj\n<< /Length ${stream.length} /Filter /FlateDecode >>\nstream\n"
+    val tail = "\nendstream\nendobj\ntrailer\n<< /Root 1 0 R >>\n%%EOF\n"
+    val doc = Extractor.extract(page(head.getBytes(latin1) ++ stream ++ tail.getBytes(latin1)))
+    assert(!doc.ok, s"bomb extracted as ok (kind=${doc.kind}, ${doc.extracted_text.length} chars)")
+    assert(doc.error.startsWith("InflateLimitExceeded"), doc.error)
+  }
+
   test("malformed HTML (unclosed tags, nulls, deep nesting) never throws") {
     val cases = Seq(
       "<html><div><div><div>" + "<p>" * 2000 + "text",

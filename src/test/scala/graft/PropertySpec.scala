@@ -54,7 +54,10 @@ object PropertySpec extends Properties("graft") {
 
   private val doiGen = for {
     reg <- Gen.chooseNum(1000, 99999)
-    suf <- Gen.nonEmptyListOf(Gen.alphaNumChar).map(_.mkString).suchThat(_.length < 30)
+    // suffix length 1-29 is drawn, not filtered: a suchThat on length
+    // discards most large-size draws, and ScalaCheck gives up past 5x
+    n <- Gen.chooseNum(1, 29)
+    suf <- Gen.listOfN(n, Gen.alphaNumChar).map(_.mkString)
   } yield s"10.$reg/$suf"
 
   property("identifier extraction idempotent on its own output") =

@@ -1,8 +1,10 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.Exchange
 import graft.queries.Queries
 import graft.textops.TextOps
 
@@ -389,6 +391,32 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // WindowGroupLimit top-k optimization
     val windowOps = plan.split("\n").count(_.contains("Window "))
     assert(windowOps <= 1, s"q34 has $windowOps Window operators (want only the re-rank):\n$plan")
+  }
+
+  // Exchange (shuffle + broadcast) nodes in the pre-AQE physical plan:
+  // `sparkPlan` holds none until EnsureRequirements runs, so this reads
+  // AQE's initialPlan (sparkPlan after EnsureRequirements, before any
+  // runtime re-planning), descending into each persisted intermediate's
+  // own initial plan so a cached stage's exchanges count too
+  private def exchangeCount(p: SparkPlan): Int = p match {
+    case a: AdaptiveSparkPlanExec => exchangeCount(a.initialPlan)
+    case m: InMemoryTableScanExec => exchangeCount(m.relation.cachedPlan)
+    case e: Exchange => 1 + e.children.map(exchangeCount).sum
+    case other => other.children.map(exchangeCount).sum
+  }
+
+  test("near-dup/ANN queries keep their pre-AQE Exchange counts") {
+    // ROADMAP item 4's "no query's Exchange count rises": the shared
+    // candidate->re-rank core must not add a shuffle to any of the six
+    // queries it serves. Fresh caches first: planning over a materialized
+    // InMemoryRelation uses its real size, not the estimate
+    Queries.invalidateResultCaches()
+    Queries.releaseSwapCaches()
+    // the counts from before the shared core existed
+    val want = Map("q15_lsh_near_dup" -> 10, "q16_ann_topk" -> 2, "q24_ann_lsh" -> 4,
+      "q26_embed_near_dup" -> 4, "q34_ann_ivf" -> 2, "q41_jaccard_join" -> 20)
+    val got = want.keys.map(n => n -> exchangeCount(run(n).queryExecution.executedPlan)).toMap
+    assert(got == want)
   }
 
   test("q16 guard refuses a corpus-scale brute-force broadcast") {
