@@ -81,7 +81,11 @@ final class PdfDoc(data: Array[Byte]) {
           out += (((num, 0), lex.parseObj()))
         } catch { case _: Exception => () }
       }
-    } catch { case _: Exception => () }
+    } catch {
+      // a bomb inside an object stream ends the document like any other
+      case e: PdfDoc.InflateLimitExceeded => throw e
+      case _: Exception => ()
+    }
     out.result()
   }
 

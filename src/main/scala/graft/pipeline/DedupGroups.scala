@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import scala.util.{Success, Try}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Turn near-duplicate PAIRS (from LSH/SimHash/embedding passes) into
@@ -20,37 +23,14 @@ object DedupGroups {
     *                 chains of length 2^10)
     */
   def connectedComponents(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
     val edges = pairs.toDF("a", "b")
       .union(pairs.toDF("b", "a").select(col("a"), col("b")))
       .distinct()
       .persist()
-    // size the HOP shuffles from the edge count, not the session core
-    // count (guide §2: derive partitioning from input size — the q40
-    // state-shard rule). Every per-hop job (neighbor join + groupBy,
-    // jump join, checkpoint materialization, convergence probe) runs
-    // 2-4x per iteration over data bounded by |edges|; at 32 session
-    // partitions a few-hundred-edge graph pays ~100 near-empty tasks
-    // per hop (measured at sf0.1: 26.5 s of process CPU for ~1.2k
-    // directed edges — almost all task/scheduler overhead). ~100k edge
-    // rows per partition before adding partitions, clamped to the
-    // session's configured parallelism so a 100 TB edge set still fans
-    // out fully. The count() is one job over the just-persisted tiny
-    // projection — the same bounded-metadata cost class as q15's
-    // max(doc_id) guard. Conf is restored after the loop; the labels
-    // returned to callers are localCheckpoint'd RDD-backed frames, so
-    // downstream consumers are unaffected by the temporary setting.
-    val nEdges = edges.count()
-    val saved = spark.conf.get("spark.sql.shuffle.partitions")
-    val hopParts = math.max(2L, math.min(
-      saved.toLong, nEdges / 100000L + 1L)).toInt
     var labels = edges.select(col("a").as("id")).distinct()
       .withColumn("rep", col("id"))
     var converged = false
     var i = 0
-    try {
-    spark.conf.set("spark.sql.shuffle.partitions", hopParts)
     while (!converged && i < maxIters) {
       // each vertex takes min(own label, neighbors' labels); `prev`
       // (the incoming label) rides along so the convergence probe below
@@ -96,7 +76,6 @@ object DedupGroups {
       } else labels = hop.select(col("id"), col("rep"))
       i += 1
     }
-    } finally spark.conf.set("spark.sql.shuffle.partitions", saved)
     edges.unpersist()
     // fail-loud on an exhausted hop budget (the file's q15/q16/q26 guard
     // convention): the final probe at i == maxIters - 1 already measured
@@ -111,24 +90,19 @@ object DedupGroups {
   }
 
   /** Moved-row count of one hop: read the observation the checkpoint job
-    * just populated; if the listener bus has not delivered it within ~2 s
+    * just populated; if the listener bus has not delivered it within 2 s
     * (observation results are async — the q41CandidateCount caveat), fall
     * back to the explicit scan of the checkpointed blocks. The fallback
     * preserves exactness: the observation is an optimization of the probe,
     * never its only source of truth. */
   private def movedCount(
-      hop: DataFrame, obs: org.apache.spark.sql.Observation): Long = {
-    val fut = obs.future
-    var left = 20
-    while (!fut.isCompleted && left > 0) { Thread.sleep(100); left -= 1 }
-    fut.value match {
-      case Some(scala.util.Success(row)) =>
-        row.getLong(row.fieldIndex("moved"))
+      hop: DataFrame, obs: org.apache.spark.sql.Observation): Long =
+    Try(Await.result(obs.future, 2.seconds)) match {
+      case Success(row) => row.getLong(row.fieldIndex("moved"))
       case _ =>
         System.err.println("[cc] observation not delivered — fallback probe")
         hop.filter(col("rep") =!= col("prev")).limit(1).count()
     }
-  }
 
   /** Group summary: representative, exact member count, members (bounded).
     *

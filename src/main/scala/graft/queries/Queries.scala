@@ -1,5 +1,8 @@
 package graft.queries
 
+import scala.concurrent.Await
+import scala.concurrent.duration.DurationInt
+import scala.util.Try
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -257,46 +260,37 @@ object Queries {
     (if (clusterOnA) pairs.repartition(col(a)) else pairs).distinct()
   }
 
-  /** max(vec_id) of the embeddings table, one job per (session, dir) —
-    * a fail-loud collision guard, not a result cache. WEAK-keyed on the
-    * session itself (round-4 ADVICE: an identityHashCode key can collide
-    * with a retained entry from a dead session, silently extending the
-    * 'immutable within a session' assumption across sessions, and the
-    * size-triggered clear() raced computeIfAbsent): a weak key never pins
-    * a stopped SparkSession, dies with it, and needs no bound or clear.
-    * The memoized job runs under the map lock — acceptable: it is one
-    * tiny metadata job per (session, dir), computed once per session
-    * life. The dir's embeddings table is assumed immutable within a
-    * session: rewriting it mid-session and re-running q26 would reuse
-    * the stale guard (documented trade-off — the guard exists to catch
-    * FIXTURE id-space collisions, a property of the written table, not
-    * of time). */
-  private val VecGuard =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
-  private def sessionMemo(
-      guard: java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]],
-      s: SparkSession, dir: String)(compute: => Long): Long = {
+  /** (row count, max(vec_id)) of the embeddings table, one job per
+    * (session, dir): q16's brute-force guard reads the count, q26's
+    * collision guard and SRP sizing read both (max is -1 on an empty
+    * table). A bench sweep must not pay a metadata job per repetition.
+    * WEAK-keyed on the session itself (round-4 ADVICE: an
+    * identityHashCode key can collide with a retained entry from a dead
+    * session, silently extending the 'immutable within a session'
+    * assumption across sessions, and the size-triggered clear() raced
+    * computeIfAbsent): a weak key never pins a stopped SparkSession,
+    * dies with it, and needs no bound or clear. The dir's embeddings
+    * table is assumed immutable within a session: rewriting it
+    * mid-session would reuse the stale stats (documented trade-off — the
+    * guards catch FIXTURE properties of the written table, not of time). */
+  private val EmbStats =
+    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, (Long, Long)]]()
+  private def embStats(s: SparkSession, dir: String): (Long, Long) = {
     // two-level locking: the global map lock is held only for the inner-
     // map lookup; the Spark job runs under the SESSION's lock, so
-    // concurrent sessions compute their guards in parallel (only same-
-    // session same-guard calls serialize, which is the memo contract)
-    val m = guard.synchronized {
-      guard.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
+    // concurrent sessions compute their stats in parallel (only same-
+    // session calls serialize, which is the memo contract)
+    val m = EmbStats.synchronized {
+      EmbStats.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
     }
-    m.synchronized { m.getOrElseUpdate(dir, compute) }
+    m.synchronized {
+      m.getOrElseUpdate(dir, {
+        val r = t(s, dir, "embeddings")
+          .agg(count(lit(1)), coalesce(max("vec_id"), lit(-1L))).head()
+        (r.getLong(0), r.getLong(1))
+      })
+    }
   }
-  private def maxVecId(s: SparkSession, dir: String): Long =
-    sessionMemo(VecGuard, s, dir)(
-      t(s, dir, "embeddings").agg(max("vec_id")).head().getLong(0))
-
-  /** embeddings row count for q16's brute-force guard — memoized per
-    * (session, dir) under the SAME contract as VecGuard (a bench sweep
-    * must not pay a count() job per repetition; the table is assumed
-    * immutable within a session). */
-  private val RowGuard =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
-  private def embeddingsCount(s: SparkSession, dir: String): Long =
-    sessionMemo(RowGuard, s, dir)(t(s, dir, "embeddings").count())
 
   /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
     * (repeated bench sweeps) unpersists the previous generation, so at
@@ -356,21 +350,12 @@ object Queries {
 
   /** Candidate-pair count observed by the latest COMPLETED q41 action;
     * -1 when q41 never ran or the async metric has not been delivered
-    * within ~2s (observation results ride the listener bus). */
-  private[graft] def q41CandidateCount: Long = {
-    val obs = q41LastObs.get
-    if (obs == null) -1L
-    else {
-      val fut = obs.future
-      var left = 20
-      while (!fut.isCompleted && left > 0) { Thread.sleep(100); left -= 1 }
-      fut.value match {
-        case Some(scala.util.Success(row)) =>
-          scala.util.Try(row.getLong(row.fieldIndex("n"))).getOrElse(-1L)
-        case _ => -1L
-      }
-    }
-  }
+    * within 2 s (observation results ride the listener bus). */
+  private[graft] def q41CandidateCount: Long =
+    Option(q41LastObs.get)
+      .flatMap(obs => Try(Await.result(obs.future, 2.seconds)).toOption)
+      .flatMap(row => Try(row.getLong(row.fieldIndex("n"))).toOption)
+      .getOrElse(-1L)
 
   /** Cache of q15's CONFIRMED-PAIR result, keyed by (session, sf dir):
     * q25's connected components consume exactly these edges, so a bench /
@@ -968,7 +953,7 @@ object Queries {
   private val q16 = Q(
     "q16_ann_topk",
     (s, dir) => {
-      q16Guard(embeddingsCount(s, dir))
+      q16Guard(embStats(s, dir)._1)
       // zero-norm rows (all-zero / sub-quantization embeddings — a
       // padding or failed-encode row in a real dump) have no cosine to
       // anything: 0/0 = NaN and the ANSI cast to cos_e6 would abort
@@ -1457,10 +1442,10 @@ object Queries {
         // producing an unexplained wholesale hash mismatch; larger
         // corpora (ScaleBench x100 runs 200k vectors) execute only the
         // Spark side and get collision-free scale parameters instead of
-        // a refused run. Both guards are memoized per (session, dir) —
-        // a bench sweep must not pay a max()/count() job per repetition.
-        val offset = checkedOffset("q26", 100000L, maxVecId(s, dir))
-        val lsh = srpNearDupFor(2L * embeddingsCount(s, dir))
+        // a refused run. Both guards read one memoized embStats job.
+        val (rows, maxVecId) = embStats(s, dir)
+        val offset = checkedOffset("q26", 100000L, maxVecId)
+        val lsh = srpNearDupFor(2L * rows)
         if (auxDumpEnabled)
           require(lsh.bitsPerTable == 16,
             s"q26 oracle domain exceeded: bits=${lsh.bitsPerTable} — the static " +
@@ -2117,27 +2102,24 @@ object Queries {
         pages.write.mode("append").parquet(inDir)
         pages.write.mode("append").parquet(inDir) // planted exact duplicates
         // state-store shard count sized to the stream, not to the session
-        // core count (guide §2: derive partitioning from input size): the
-        // dedup state holds one entry per in-watermark url, and each
-        // shard is a per-batch commit (provider load + delta file +
-        // maintenance) whose fixed cost dominates when shards hold a few
-        // rows — 32 shards for a 400-row drain measured 2.4 s vs 1.3-1.5 s
-        // at the derived count. ~100k state rows per shard before adding
-        // shards; a 100 TB ingest derives thousands of shards from the
-        // same rule. The conf is restored after the drain (the partition
-        // count is latched into the NEW checkpoint at first batch, so a
-        // fresh-checkpoint run like this one is free to choose it).
-        val saved = s.conf.get("spark.sql.shuffle.partitions")
-        val stateParts = math.max(2L, math.min(
-          s.sparkContext.defaultParallelism.toLong, 2L * nDocs / 100000L + 1L)).toInt
-        try {
-          s.conf.set("spark.sql.shuffle.partitions", stateParts)
-          graft.streaming.StreamingExtract.run(s, inDir,
-            base.resolve("out").toString, base.resolve("ck").toString,
-            CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
-            availableNow = true, dedup = true)
-            .awaitTermination()
-        } finally s.conf.set("spark.sql.shuffle.partitions", saved)
+        // core count: the dedup state holds one entry per in-watermark
+        // url, and each shard is a per-batch commit whose fixed cost
+        // dominates when shards hold a few rows (32 shards for a 400-row
+        // drain measured 2.4 s vs 1.3-1.5 s at the derived count).
+        // Streaming has no AQE and latches the count into the checkpoint
+        // at the first batch, so it is set on a child session (same
+        // SparkContext and SparkConf defaults) and the shared session's
+        // conf is never written. Spark never unregisters a session's
+        // stream listener, so each drain leaves two idle listeners on the
+        // shared bus (one is the started stream's, as for any stream).
+        val drain = s.newSession()
+        drain.conf.set("spark.sql.shuffle.partitions", math.max(2L, math.min(
+          s.sparkContext.defaultParallelism.toLong, 2L * nDocs / 100000L + 1L)))
+        graft.streaming.StreamingExtract.run(drain, inDir,
+          base.resolve("out").toString, base.resolve("ck").toString,
+          CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
+          availableNow = true, dedup = true)
+          .awaitTermination()
         auxDump(s.read.parquet(inDir).select("url"), "q40_in")
         val sinkRows = s.read.parquet(base.resolve("out").toString)
           .select("url", "kind", "total_word_count", "ok")

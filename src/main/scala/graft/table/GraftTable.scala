@@ -277,16 +277,7 @@ object GraftTable {
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
       val wavePaths = wave.map(b => s"$root/data/bucket=$b")
         .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
-      // the agg's reduce side has AT MOST wave.size groups at ANY scale
-      // (bucket is the only key and this read sees only this wave's
-      // buckets), and the map side combines per task before the wire —
-      // shuffle partitions beyond the group count are permanently empty
-      // tasks, so cap the exchange at the wave width (guide §2: derive
-      // partitioning from the data, not the session; conf restored below)
-      val savedParts = spark.conf.get("spark.sql.shuffle.partitions")
-      val metrics = try {
-        spark.conf.set("spark.sql.shuffle.partitions",
-          math.max(1, math.min(savedParts.toInt, wave.size)))
+      val metrics =
         (if (wavePaths.isEmpty)
           spark.emptyDataset[ScoredDocWithBucket].toDF.select(col("bucket"), col("doc.*"))
         else spark.read.option("basePath", s"$root/data").parquet(wavePaths: _*))
@@ -301,7 +292,6 @@ object GraftTable {
         .withColumn("ts", lit(ts))
         .as[LineageRow]
         .collect()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", savedParts)
       // buckets with zero rows still need a lineage row or they'd re-run
       // forever on data that simply has no pages in them
       val seen = metrics.map(_.bucket).toSet

@@ -40,11 +40,10 @@ class DedupGroupsSpec extends AnyFunSuite with SparkTestBase {
     assert(labels == Set(0L), s"chain did not contract: $labels")
   }
 
-  // round-8 optimization pin: the hop loop derives its shuffle-partition
-  // count from the edge count and carries the convergence probe inside
-  // the checkpoint job as a CollectMetrics observation. Neither may
-  // change the labels, and the session conf must come back restored even
-  // when the loop ran several hops at the derived width.
+  // round-8 pin: the hop loop carries the convergence probe inside the
+  // checkpoint job as a CollectMetrics observation and runs at the
+  // session's width. Under an odd session width the labels stay exact
+  // and the session conf is left untouched.
   test("r8: derived hop partitioning restores session conf, labels exact") {
     import spark.implicits._
     val key = "spark.sql.shuffle.partitions"

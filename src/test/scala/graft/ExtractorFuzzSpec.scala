@@ -45,14 +45,26 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     zos.close()
     val stream = deflated.toByteArray
     val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
-    val head = "%PDF-1.4\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
+    def bytes(s: String) = s.getBytes(latin1)
+    def streamObj(num: Int, dict: String, body: Array[Byte]) =
+      bytes(s"$num 0 obj\n<< $dict /Length ${body.length} >>\nstream\n") ++ body ++
+        bytes("\nendstream\nendobj\n")
+    val pages = bytes("%PDF-1.5\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
       "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" +
-      "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n" +
-      s"4 0 obj\n<< /Length ${stream.length} /Filter /FlateDecode >>\nstream\n"
-    val tail = "\nendstream\nendobj\ntrailer\n<< /Root 1 0 R >>\n%%EOF\n"
-    val doc = Extractor.extract(page(head.getBytes(latin1) ++ stream ++ tail.getBytes(latin1)))
-    assert(!doc.ok, s"bomb extracted as ok (kind=${doc.kind}, ${doc.extracted_text.length} chars)")
-    assert(doc.error.startsWith("InflateLimitExceeded"), doc.error)
+      "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
+    val trailer = bytes("trailer\n<< /Root 1 0 R >>\n%%EOF\n")
+    // the bomb as the page's content stream, and as an object stream
+    // beside a readable page (which alone would extract as ok)
+    val inputs = Seq(
+      "content stream" -> (pages ++ streamObj(4, "/Filter /FlateDecode", stream) ++ trailer),
+      "object stream" -> (pages ++ streamObj(4, "", bytes("BT (hello) Tj ET")) ++
+        streamObj(5, "/Type /ObjStm /N 1 /First 4 /Filter /FlateDecode", stream) ++ trailer))
+    inputs.foreach { case (where, pdf) =>
+      val doc = Extractor.extract(page(pdf))
+      assert(!doc.ok,
+        s"bomb in $where extracted as ok (kind=${doc.kind}, ${doc.extracted_text.length} chars)")
+      assert(doc.error.startsWith("InflateLimitExceeded"), s"$where: ${doc.error}")
+    }
   }
 
   test("malformed HTML (unclosed tags, nulls, deep nesting) never throws") {

@@ -294,12 +294,9 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     assert(total.contains(80L), s"last snapshot total_docs=$total, want 80")
   }
 
-  // round-8 optimization pin: the per-wave lineage-metrics aggregation
-  // caps its shuffle width at the wave size (the agg can never have more
-  // groups than the wave has buckets). The cap must not leak into the
-  // session conf, and the lineage values must be byte-identical to the
-  // uncapped shape — runResumable under a deliberately odd session
-  // partition count still produces the exact per-bucket rollup.
+  // round-8 pin: runResumable under a deliberately odd session partition
+  // count still produces the exact per-bucket lineage rollup and leaves
+  // the session conf untouched.
   test("r8: wave-capped metrics agg restores conf, lineage exact") {
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)

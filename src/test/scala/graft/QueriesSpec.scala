@@ -109,6 +109,39 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getAs[String]("kind")).toSet == Set("html", "pdf"))
   }
 
+  test("q19/q25/q40 on parallel threads never write the session conf and match serial runs") {
+    // the three queries that once saved/overwrote/restored
+    // spark.sql.shuffle.partitions: two overlapping restores could leave
+    // the shared session at a stale width. A sampler watches the conf
+    // through the serial runs and the parallel ones.
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    val own = spark.conf.get(key)
+    val names = Seq("q19_resume_lineage", "q25_dedup_groups", "q40_stream_extract")
+    def rows(name: String) = run(name).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val sampling = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sampler = new Thread(() =>
+      while (sampling.get) {
+        seen.add(spark.conf.get(key))
+        java.util.concurrent.locks.LockSupport.parkNanos(200000L)
+      })
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    val (serial, parallel) = try {
+      sampler.start()
+      val serial = names.map(n => n -> rows(n)).toMap
+      val futures = names.map(n => n -> pool.submit(() => rows(n)))
+      (serial, futures.map { case (n, f) =>
+        n -> f.get(10, java.util.concurrent.TimeUnit.MINUTES) }.toMap)
+    } finally {
+      sampling.set(false)
+      sampler.join()
+      pool.shutdownNow()
+    }
+    assert(seen.asScala.toSet == Set(own), s"saw ${seen.asScala.toSeq.sorted}, want $own")
+    names.foreach(n => assert(parallel(n) == serial(n), s"$n differs from its serial run"))
+  }
+
   test("q42 byte-weighted routing is result-invisible on the heavy-tail corpus") {
     // the invariant the oracle's WHERE guard asserts, pinned here too so
     // a violation fails fast in sbt (not only as a driver row mismatch)
