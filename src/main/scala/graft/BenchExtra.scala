@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Optimization-round measurement harness (guide §1.4) — NOT the driver
   * metric. Times each named query with the noop sink (computes every
   * column of every row, discards the result) in the same session shape
-  * as Bench's query suite (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions=cpus, 4 MB scan splits), with SwapCache released
+  * as Bench's query suite (local[$SPARK_GRAFT_CPUS], default the host's
+  * CPU count; shuffle.partitions=cpus, 4 MB scan splits), with SwapCache released
   * between queries exactly like the suite loop. Two timed runs per
   * query: run1 = the Bench-comparable cold invocation (generation
   * rebuild included), run2 = warm repeat (separates fixed plan/job
@@ -24,7 +24,8 @@ object BenchExtra {
   def main(args: Array[String]): Unit = {
     graft.queries.Queries.auxDumpEnabled = false
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

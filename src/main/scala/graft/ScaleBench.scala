@@ -116,7 +116,8 @@ object ScaleBench {
     // timing harness: no verification aux dumps in the timed legs (none
     // of the Suite queries dump today, but the gate keeps that true)
     Queries.auxDumpEnabled = false
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

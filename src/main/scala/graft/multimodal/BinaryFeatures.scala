@@ -75,17 +75,20 @@ object BinaryFeatures {
     math.floor(h * 10000.0 + 0.5).toLong
   }
 
+  /** Frames sampled per payload (and stub embedding dimensions). */
+  private val Frames = 8
+
   /** Evenly spaced sample offsets — the video "frame sample" analog. */
-  def frameOffsets(nBytes: Long, k: Int = 8): Seq[Long] =
-    if (nBytes <= 0) Nil else (0 until k).map(i => i * nBytes / k)
+  def frameOffsets(nBytes: Long): Seq[Long] =
+    if (nBytes <= 0) Nil else (0 until Frames).map(i => i * nBytes / Frames)
 
   /** STUB: stands in for a real media decoder + feature extractor.
     * Deterministic 8-dim fake "embedding" mixed from sampled bytes, so
     * downstream similarity plumbing has stable inputs. Replace with a
     * real decoder behind the same signature outside this sandbox. */
-  def stubDecode(bytes: Array[Byte], k: Int = 8): Seq[Long] = {
-    if (bytes == null || bytes.isEmpty) return Seq.fill(k)(0L)
-    frameOffsets(bytes.length.toLong, k).map { off =>
+  def stubDecode(bytes: Array[Byte]): Seq[Long] = {
+    if (bytes == null || bytes.isEmpty) return Seq.fill(Frames)(0L)
+    frameOffsets(bytes.length.toLong).map { off =>
       var h = 0xcbf29ce484222325L
       var i = off.toInt
       val end = math.min(bytes.length, off.toInt + 64)

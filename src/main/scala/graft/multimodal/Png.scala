@@ -1,9 +1,12 @@
 package graft.multimodal
 
+import graft.util.Inflate
+
 /** From-scratch PNG baseline codec (round-6 verdict #5: make q20's
   * multimodal column REAL — the only missing primitive was a decoder, and
-  * PNG's compression is the same zlib `Inflater` the PDF stack's
-  * FlateDecode already uses; no codec jars needed).
+  * PNG's compression is the same zlib stream the PDF stack's
+  * FlateDecode inflates, through the same `graft.util.Inflate`; no codec
+  * jars needed).
   *
   * Decoder scope (everything else returns None, never throws):
   *   - bit depth 8, interlace 0 (non-Adam7), compression 0, filter
@@ -12,8 +15,8 @@ package graft.multimodal
   *     4 (gray+alpha), 6 (RGBA);
   *   - per-chunk CRC32 verification (java.util.zip.CRC32);
   *   - all five scanline filters (None/Sub/Up/Average/Paeth);
-  *   - a decompression-bomb guard: decoded pixel bytes are capped
-  *     (default 64 MiB) BEFORE inflation, from header fields alone.
+  *   - a decompression-bomb guard: decoded pixel bytes are capped at
+  *     `Inflate.MaxBytes` BEFORE inflation, from header fields alone.
   *
   * The encoder exists for deterministic test/corpus generation: it writes
   * the same baseline profile, optionally cycling the filter type per row
@@ -63,11 +66,11 @@ object Png {
     * bad signature, unsupported profile, CRC mismatch, truncated or
     * oversized IDAT, palette index out of range. Never throws (the
     * extractor's never-throw contract). */
-  def decode(bytes: Array[Byte], maxPixelBytes: Long = 64L << 20): Option[Decoded] =
-    try decodeInner(bytes, maxPixelBytes)
+  def decode(bytes: Array[Byte]): Option[Decoded] =
+    try decodeInner(bytes)
     catch { case _: Throwable => None }
 
-  private def decodeInner(bytes: Array[Byte], maxPixelBytes: Long): Option[Decoded] = {
+  private def decodeInner(bytes: Array[Byte]): Option[Decoded] = {
     if (bytes == null || bytes.length < Signature.length + 25) return None
     var i = 0
     while (i < Signature.length) {
@@ -122,31 +125,13 @@ object Png {
     val outCh = if (colorType == 3) 3 else rawCh
     // bomb guard BEFORE inflating: the decoded size is fully determined
     // by header fields, so a 1 KB bomb claiming 1 GB dies here
-    if (width.toLong * height * outCh > maxPixelBytes) return None
+    if (width.toLong * height * outCh > Inflate.MaxBytes) return None
     val rowBytes = width.toLong * rawCh
     val rawLen = (height.toLong * (rowBytes + 1)).toInt
-    val raw = new Array[Byte](rawLen)
-    val inf = new java.util.zip.Inflater()
-    try {
-      inf.setInput(idat.toByteArray)
-      var got = 0
-      while (got < rawLen && !inf.finished()) {
-        val n = inf.inflate(raw, got, rawLen - got)
-        // ANY zero-progress iteration is a failure, not just needsInput
-        // (round-7 ADVICE): output space is always > 0 inside this loop,
-        // so n == 0 without finished() means the stream is truncated OR
-        // stalled — e.g. a zlib header with the FDICT preset-dictionary
-        // flag makes inflate() return 0 with needsInput() false forever,
-        // which spun this loop into an executor-task hang on adversarial
-        // crawl bytes (never-throw/never-hang contract)
-        if (n == 0) return None
-        got += n
-      }
-      if (got != rawLen) return None
-      // a conforming stream ends exactly here; trailing pixels would mean
-      // the header lied about the dims
-      if (!inf.finished() && inf.inflate(new Array[Byte](1)) > 0) return None
-    } finally inf.end()
+    // exactly rawLen bytes: a short, stalled or longer stream is None
+    // (past the limit Inflate throws, and decode maps that to None)
+    val raw = Inflate(idat.toByteArray, limit = rawLen)
+    if (raw.length != rawLen) return None
     // unfilter in place into the output layout
     val bpp = rawCh
     val stride = rowBytes.toInt

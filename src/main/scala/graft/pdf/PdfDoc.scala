@@ -1,7 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
-import java.util.zip.Inflater
+import graft.util.Inflate
 
 /** Document-level PDF reader: object table, page tree, metadata, stream
   * decoding. Robustness-first: objects are located by scanning for
@@ -83,7 +83,7 @@ final class PdfDoc(data: Array[Byte]) {
       }
     } catch {
       // a bomb inside an object stream ends the document like any other
-      case e: PdfDoc.InflateLimitExceeded => throw e
+      case e: Inflate.InflateLimitExceeded => throw e
       case _: Exception => ()
     }
     out.result()
@@ -401,32 +401,13 @@ final class PdfDoc(data: Array[Byte]) {
     }
   }
 
+  // zlib first, raw deflate when zlib fails or yields nothing; a stream
+  // neither reads is empty. The output cap is the one failure that must
+  // NOT fall back: it ends the document as an ok=false row.
   private def inflate(bytes: Array[Byte]): Array[Byte] = {
-    def run(nowrap: Boolean): Array[Byte] = {
-      val inf = new Inflater(nowrap)
-      // finally: the stalemate early-return and DataFormatException paths
-      // must also release the native zlib state — leaking one Inflater per
-      // bad stream is native memory pressure the heap never sees
-      try {
-        inf.setInput(bytes)
-        val out = new java.io.ByteArrayOutputStream(bytes.length * 4)
-        val buf = new Array[Byte](8192)
-        while (!inf.finished() && !inf.needsInput()) {
-          val k = inf.inflate(buf)
-          if (k == 0 && !inf.finished()) return out.toByteArray
-          if (out.size.toLong + k > PdfDoc.MaxInflatedBytes)
-            throw new PdfDoc.InflateLimitExceeded(bytes.length)
-          out.write(buf, 0, k)
-        }
-        out.toByteArray
-      } finally inf.end()
-    }
-    // zlib first, raw deflate when zlib fails or yields nothing; a stream
-    // neither reads is empty. The output cap is the one failure that must
-    // NOT fall back: it ends the document as an ok=false row.
     def attempt(nowrap: Boolean): Option[Array[Byte]] =
-      try Some(run(nowrap)) catch {
-        case e: PdfDoc.InflateLimitExceeded => throw e
+      try Some(Inflate(bytes, nowrap)) catch {
+        case e: Inflate.InflateLimitExceeded => throw e
         case _: Exception => None
       }
     attempt(nowrap = false).filter(_.nonEmpty)
@@ -435,16 +416,6 @@ final class PdfDoc(data: Array[Byte]) {
 }
 
 object PdfDoc {
-  /** Output cap of one FlateDecode stream, sized like Png.decode's 64 MiB
-    * pixel cap: a few KB of deflated zeros inflate to gigabytes, and one
-    * such page would otherwise OOM the task. */
-  val MaxInflatedBytes: Long = 64L << 20
-
-  /** A Flate stream inflated past [[MaxInflatedBytes]]: escapes the
-    * decode fallbacks so Extractor records the page as ok=false. */
-  final class InflateLimitExceeded(inputBytes: Int) extends RuntimeException(
-    s"FlateDecode stream of $inputBytes bytes inflates past $MaxInflatedBytes bytes")
-
   /** Magic sniff used by the pipeline to route binary page bodies:
     * reference analog is "is this file a PDF" by extension
     * (/root/reference/src/serials.py:46-63); here bytes start `%PDF-`. */

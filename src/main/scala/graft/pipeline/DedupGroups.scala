@@ -18,11 +18,15 @@ import org.apache.spark.sql.functions._
   */
 object DedupGroups {
 
-  /** @param pairs two columns, (id_a, id_b), undirected edges
-    * @param maxIters hop bound (duplicate clusters are shallow; 10 covers
-    *                 chains of length 2^10)
-    */
-  def connectedComponents(pairs: DataFrame, maxIters: Int = 10): DataFrame = {
+  /** Hop budget: duplicate clusters are shallow, and with path halving
+    * 10 hops cover chains of length 2^10. */
+  private val MaxIters = 10
+
+  /** Members listed per group by [[groups]]. */
+  private val MemberCap = 100
+
+  /** @param pairs two columns, (id_a, id_b), undirected edges */
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     val edges = pairs.toDF("a", "b")
       .union(pairs.toDF("b", "a").select(col("a"), col("b")))
       .distinct()
@@ -31,7 +35,7 @@ object DedupGroups {
       .withColumn("rep", col("id"))
     var converged = false
     var i = 0
-    while (!converged && i < maxIters) {
+    while (!converged && i < MaxIters) {
       // each vertex takes min(own label, neighbors' labels); `prev`
       // (the incoming label) rides along so the convergence probe below
       // is a scan of THIS checkpoint's cached partitions — the former
@@ -78,14 +82,14 @@ object DedupGroups {
     }
     edges.unpersist()
     // fail-loud on an exhausted hop budget (the file's q15/q16/q26 guard
-    // convention): the final probe at i == maxIters - 1 already measured
+    // convention): the final probe at i == MaxIters - 1 already measured
     // whether labels moved — returning unconverged labels would silently
-    // SPLIT a deep component (e.g. a mirror-farm chain beyond 2^maxIters)
+    // SPLIT a deep component (e.g. a mirror-farm chain beyond 2^MaxIters)
     // into several keep/drop groups, corrupting the dedup decision
     require(converged,
-      s"connectedComponents did not converge within $maxIters hops — a " +
-        "component's diameter exceeds the hop budget (with path halving, " +
-        s"depth > ~2^$maxIters); raise maxIters for this graph")
+      s"connectedComponents did not converge within its fixed budget of $MaxIters " +
+        "hops — a component's diameter exceeds it (with path halving, " +
+        s"depth > ~2^$MaxIters)")
     labels
   }
 
@@ -106,7 +110,7 @@ object DedupGroups {
 
   /** Group summary: representative, exact member count, members (bounded).
     *
-    * The members list is capped at `memberCap` ids BEFORE aggregation:
+    * The members list is capped at `MemberCap` ids BEFORE aggregation:
     * rows beyond the cap are dropped by a rank filter, so the
     * collect_list buffer itself is bounded — slicing after collect_list
     * would still materialize a mirror-farm mega-cluster's millions of
@@ -114,7 +118,7 @@ object DedupGroups {
     * does not). n_members stays the exact full count. The scale-safe
     * primary output of a dedup pass remains the (id, rep) label table
     * from connectedComponents; `members` is the bounded summary view. */
-  def groups(pairs: DataFrame, memberCap: Int = 100): DataFrame = {
+  def groups(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val labels = connectedComponents(pairs)
     // ONE aggregation over the window's existing rep-partitioning instead
@@ -129,7 +133,7 @@ object DedupGroups {
       .groupBy("rep")
       .agg(
         count(lit(1)).as("n_members"),
-        sort_array(collect_list(when(col("rnk") <= memberCap, col("id"))))
+        sort_array(collect_list(when(col("rnk") <= MemberCap, col("id"))))
           .as("members"))
   }
 }

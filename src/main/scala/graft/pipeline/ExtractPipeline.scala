@@ -11,11 +11,10 @@ import graft.corpus.CorpusGen
   *   score vs broadcast word sets -> (write | join goldens)
   *
   * Scale notes (100 TB / 1000 executors):
-  *  - the repartition key is `xxhash64(url, salt)` — urls are unique, so
+  *  - the repartition key is `xxhash64(url, 0)` — urls are unique, so
   *    the parse stage is uniformly balanced even when one domain holds
   *    30% of rows (the skew lives in the *input partitioning*, not the
-  *    key space we shuffle on). The salt decorrelates repeated runs from
-  *    any pre-existing layout of the source files.
+  *    key space we shuffle on).
   *  - word sets are broadcast once (the reference re-reads them from disk
   *    per document, /root/reference/src/docscraper.py:146-147).
   *  - parsing is per-row pure; no shuffle after the single repartition,
@@ -67,17 +66,18 @@ object ExtractPipeline {
       "citation_spans", "target_hits", "bycatch_hits", "total_words")
   }
 
+  /** `pages` as they are for `numPartitions = 0` (parse on the scan
+    * splits), else repartitioned on the salted url hash. */
+  private def routed(pages: Dataset[PageRecord], numPartitions: Int): Dataset[PageRecord] =
+    if (numPartitions > 0) pages.repartition(numPartitions, xxhash64(col("url"), lit(0L)))
+    else pages
+
   /** Parse stage. `numPartitions = 0` parses on the scan splits (see
-    * extractAndScore); `> 0` forces the salted url-hash repartition.
-    * `salt` varies per attempt so retries re-balance. */
-  def extract(pages: Dataset[PageRecord], numPartitions: Int, salt: Long = 0L): Dataset[ExtractedDoc] = {
+    * extractAndScore); `> 0` forces the salted url-hash repartition. */
+  def extract(pages: Dataset[PageRecord], numPartitions: Int): Dataset[ExtractedDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    val routed =
-      if (numPartitions > 0)
-        pages.repartition(numPartitions, xxhash64(col("url"), lit(salt)))
-      else pages
-    routed.mapPartitions(_.map(Extractor.extract))
+    routed(pages, numPartitions).mapPartitions(_.map(Extractor.extract))
   }
 
   /** Parse + score stage in ONE partition pass.
@@ -96,17 +96,12 @@ object ExtractPipeline {
       pages: Dataset[PageRecord],
       numPartitions: Int,
       targetWords: Set[String],
-      bycatchWords: Set[String],
-      salt: Long = 0L): Dataset[ScoredDoc] = {
+      bycatchWords: Set[String]): Dataset[ScoredDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
     val bcTarget = spark.sparkContext.broadcast(targetWords)
     val bcBycatch = spark.sparkContext.broadcast(bycatchWords)
-    val routed =
-      if (numPartitions > 0)
-        pages.repartition(numPartitions, xxhash64(col("url"), lit(salt)))
-      else pages
-    routed.mapPartitions { it =>
+    routed(pages, numPartitions).mapPartitions { it =>
       val t = bcTarget.value
       val b = bcBycatch.value
       it.map(p => Extractor.score(Extractor.extract(p), t, b))
@@ -207,10 +202,7 @@ object ExtractPipeline {
     * metadata columns (Iceberg column stats give sum/max for free) and
     * the pass collapses to a metadata read; the routing itself is the
     * same single shuffle the count-salted path pays. */
-  def byteWeightedRoute(
-      pages: Dataset[PageRecord],
-      numPartitions: Int,
-      salt: Long = 0L): Dataset[PageRecord] = {
+  def byteWeightedRoute(pages: Dataset[PageRecord], numPartitions: Int): Dataset[PageRecord] = {
     val spark = pages.sparkSession
     import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions
@@ -256,7 +248,7 @@ object ExtractPipeline {
     // start at t=0 and overlap every light wave — LPT scheduling. With
     // heavy bins LAST, a straggler page launches in the final wave and
     // its whole parse time lands on the job's tail.
-    val lightIdx = pmod(xxhash64(col("url"), lit(salt)), lit(pLight)).cast("int")
+    val lightIdx = pmod(xxhash64(col("url"), lit(0L)), lit(pLight)).cast("int")
     val lightRoute = element_at(
       typedLit(pre.slice(nBins, nBins + pLight).toSeq), lightIdx + lit(1))
     val route =
@@ -271,19 +263,6 @@ object ExtractPipeline {
       .drop("__bw_route")
       .as[PageRecord]
   }
-
-  /** [[extractAndScore]] over byte-weighted routing — the straggler-bound
-    * variant of the salted path for corpora with a power-law page-size
-    * tail. Identical per-document results (PipelineSpec byte-identity);
-    * only the placement differs. */
-  def extractAndScoreByteWeighted(
-      pages: Dataset[PageRecord],
-      numPartitions: Int,
-      targetWords: Set[String],
-      bycatchWords: Set[String],
-      salt: Long = 0L): Dataset[ScoredDoc] =
-    extractAndScore(byteWeightedRoute(pages, numPartitions, salt), 0,
-      targetWords, bycatchWords)
 
   /** Byte-identical verification: extracted vs golden per url.
     * Returns (url, kind, matched) — the north rule's correctness gate.

@@ -1020,15 +1020,11 @@ object Queries {
       // salted route's skew defense is exercised by the bench skew legs
       // and PipelineSpec, and extraction is per-row, so the verdict
       // rollup is identical either way.
-      val extractedDf = ExtractPipeline
+      val e = auxTable(s, ExtractPipeline
         .extract(ExtractPipeline.pages(s, n), numPartitions = 0)
-        .toDF().select("url", "kind", "extracted_text")
-      val goldensDf = ExtractPipeline.goldens(s, n).select("url", "extracted_text")
-      val (e, g) =
-        if (auxDumpEnabled)
-          (auxTable(s, extractedDf, "q17_extracted"),
-            auxTable(s, goldensDf, "q17_goldens"))
-        else (extractedDf, goldensDf)
+        .toDF().select("url", "kind", "extracted_text"), "q17_extracted")
+      val g = auxTable(s, ExtractPipeline.goldens(s, n)
+        .select("url", "extracted_text"), "q17_goldens")
       val verdicts = ExtractPipeline.verifyAgainstGoldens(e, g)
       verdicts.groupBy("kind").agg(
         count(lit(1)).as("n_docs"),
@@ -1395,7 +1391,7 @@ object Queries {
     "q25_dedup_groups",
     (s, dir) => {
       val pairs = q15.fn(s, dir).select("id_a", "id_b")
-      graft.pipeline.DedupGroups.groups(pairs, memberCap = 100)
+      graft.pipeline.DedupGroups.groups(pairs)
         .selectExpr("rep", "n_members",
           "concat_ws(',', transform(members, x -> CAST(x AS STRING))) AS members_csv")
     },
@@ -2117,8 +2113,7 @@ object Queries {
           s.sparkContext.defaultParallelism.toLong, 2L * nDocs / 100000L + 1L)))
         graft.streaming.StreamingExtract.run(drain, inDir,
           base.resolve("out").toString, base.resolve("ck").toString,
-          CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
-          availableNow = true, dedup = true)
+          CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, dedup = true)
           .awaitTermination()
         auxDump(s.read.parquet(inDir).select("url"), "q40_in")
         val sinkRows = s.read.parquet(base.resolve("out").toString)
@@ -2336,8 +2331,8 @@ object Queries {
         ExtractPipeline.extractAndScore(pages, 32, target, bycatch).toDF()),
         "q42_plain")
       val routed = auxTable(s, dumpCols(
-        ExtractPipeline.extractAndScoreByteWeighted(pages, 32, target, bycatch)
-          .toDF()),
+        ExtractPipeline.extractAndScore(ExtractPipeline.byteWeightedRoute(pages, 32), 0,
+          target, bycatch).toDF()),
         "q42_routed")
       val same = Seq("extracted_text", "title", "doi", "matching_terms",
         "bycatch_terms", "total_word_count", "wordscore_str", "spans_str",

@@ -44,9 +44,9 @@ object StreamingExtract {
       bycatchWords: Set[String]): Dataset[ScoredDoc] =
     graft.pipeline.ExtractPipeline.extractAndScore(pages, 0, targetWords, bycatchWords)
 
-  /** Run to a parquet sink with checkpointed exactly-once file tracking.
-    * `availableNow = true` drains everything currently in the directory
-    * and stops (used by tests and backfills); false runs continuously. */
+  /** Drain everything currently in `inDir` to a parquet sink and stop
+    * (an AvailableNow trigger), with checkpointed exactly-once file
+    * tracking. */
   def run(
       spark: SparkSession,
       inDir: String,
@@ -54,17 +54,16 @@ object StreamingExtract {
       checkpointDir: String,
       targetWords: Set[String],
       bycatchWords: Set[String],
-      availableNow: Boolean = true,
       dedup: Boolean = false,
       dedupDelay: String = "1 hour"): StreamingQuery = {
     val src = pagesStream(spark, inDir)
     val scored = scoredStream(
       if (dedup) dedupStream(src, dedupDelay) else src, targetWords, bycatchWords)
-    val writer = scored.toDF().writeStream
+    scored.toDF().writeStream
       .format("parquet")
       .option("path", outDir)
       .option("checkpointLocation", checkpointDir)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
+      .trigger(Trigger.AvailableNow())
       .start()
   }
 

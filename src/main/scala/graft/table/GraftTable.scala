@@ -3,7 +3,9 @@ package graft.table
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ScoredDoc, LineageRow}
-import graft.pipeline.{ExtractPipeline, Extractor}
+import graft.pipeline.Extractor
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.hadoop.fs.{FileSystem, Path}
 
 /** Iceberg-style table layer, emulated (no Iceberg jar offline —
   * SURVEY.md §7.3 documents the deviation): hash-bucketed parquet layout
@@ -44,36 +46,40 @@ object GraftTable {
     * the table root — java.io.File is only correct on the local FS and
     * would silently report "nothing committed" on HDFS/S3, restarting a
     * 100 TB run from scratch and appending duplicates. */
-  private def fs(spark: SparkSession, root: String): org.apache.hadoop.fs.FileSystem =
-    new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs(spark: SparkSession, root: String): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Read a (small) FS file fully as UTF-8 — manifest/meta JSON reads. */
-  private def readUtf8(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
+  /** Read a (small) FS file fully as UTF-8: table meta, staging marker,
+    * snapshot manifests. */
+  private def readUtf8(hfs: FileSystem, p: Path): String = {
     val in = hfs.open(p)
-    try {
-      val bos = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      var n = in.read(buf)
-      while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
-      bos.toString("UTF-8")
-    } finally in.close()
+    try new String(in.readAllBytes(), UTF_8) finally in.close()
   }
 
+  /** Create or overwrite a (small) FS file with `text` as UTF-8. */
+  private def writeUtf8(hfs: FileSystem, p: Path, text: String): Unit = {
+    val out = hfs.create(p, true)
+    try out.write(text.getBytes(UTF_8)) finally out.close()
+  }
+
+  /** The `"files"` list of a snapshot manifest; None for a snapshot that
+    * predates the files manifest. */
+  private def snapshotFiles(json: String): Option[Seq[String]] =
+    "\"files\": \\[([^\\]]*)\\]".r.findFirstMatchIn(json).map(_.group(1)
+      .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
+
   def completedBuckets(spark: SparkSession, root: String): Set[Int] =
-    completedLineage(spark, root).keySet
+    completedLineage(fs(spark, root), spark, root).keySet
 
   /** (bucket -> committed n_docs) from the durable lineage rows — the
     * resume gate AND the cumulative-doc base the snapshot manifests
     * record (a snapshot claiming committed docs but listing zero files is
     * data loss, and the claim must survive resumes whose earlier waves
     * this run never saw). */
-  private def completedLineage(spark: SparkSession, root: String): Map[Int, Long] = {
+  private def completedLineage(
+      hfs: FileSystem, spark: SparkSession, root: String): Map[Int, Long] = {
     val lineagePath = s"$root/lineage"
-    val hfs = fs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(lineagePath)
+    val p = new Path(lineagePath)
     // a crash during the very FIRST lineage write can leave the directory
     // existing with only committer droppings (_temporary) and no data
     // file; that is "nothing committed", not a wedged table — reading it
@@ -111,24 +117,21 @@ object GraftTable {
     // them: resuming with a different nBuckets would silently duplicate
     // (re-append already-committed urls) and/or skip data, so the bucket
     // count is pinned in a table-meta file at creation and enforced here
-    val hfsMeta = fs(spark, root)
-    val metaPath = new org.apache.hadoop.fs.Path(s"$root/manifest/table-meta.json")
-    if (hfsMeta.exists(metaPath)) {
-      val metaJson = readUtf8(hfsMeta, metaPath)
+    val hfs = fs(spark, root)
+    val metaPath = new Path(s"$root/manifest/table-meta.json")
+    if (hfs.exists(metaPath)) {
+      val metaJson = readUtf8(hfs, metaPath)
       val stored = "\"n_buckets\": (\\d+)".r.findFirstMatchIn(metaJson).map(_.group(1).toInt)
       require(stored.contains(nBuckets),
         s"resume with nBuckets=$nBuckets, but this table was created with " +
         s"nBuckets=${stored.getOrElse("unknown")} — completed-bucket ids would be " +
         "reinterpreted under a different modulus (silent duplicates/skips)")
     } else {
-      hfsMeta.mkdirs(metaPath.getParent)
-      val out = hfsMeta.create(metaPath, true)
-      try out.write(s"""{"n_buckets": $nBuckets}""".getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      hfs.mkdirs(metaPath.getParent)
+      writeUtf8(hfs, metaPath, s"""{"n_buckets": $nBuckets}""")
     }
 
-    val doneLineage = completedLineage(spark, root)
+    val doneLineage = completedLineage(hfs, spark, root)
     val done = doneLineage.keySet
     // docs already committed by EARLIER runs: the snapshot manifests
     // record the cumulative total so time travel can tell "legally empty"
@@ -143,9 +146,8 @@ object GraftTable {
     // is such an orphan — delete it first, making the wave re-run
     // idempotent instead of append-duplicating. This is the wave
     // "commit": lineage row present = data valid; absent = data garbage.
-    val hfs = fs(spark, root)
     remaining.foreach { b =>
-      val p = new org.apache.hadoop.fs.Path(s"$root/data/bucket=$b")
+      val p = new Path(s"$root/data/bucket=$b")
       if (hfs.exists(p)) hfs.delete(p, true)
     }
 
@@ -173,7 +175,7 @@ object GraftTable {
     // the north rule names) and staging becomes a no-op to skip.
     val stagedRoot = s"$root/staged"
     if (stageInput) {
-      val marker = new org.apache.hadoop.fs.Path(s"$stagedRoot/_GRAFT_STAGED")
+      val marker = new Path(s"$stagedRoot/_GRAFT_STAGED")
       // the marker carries an input FINGERPRINT (row count — round-5
       // ADVICE): a bare marker committed the staged projection forever,
       // so a resume invoked with a changed/extended `pages` input
@@ -185,15 +187,10 @@ object GraftTable {
       // unstaged path's O(waves x input). A same-count in-place mutation
       // is still undetected — input immutability at equal cardinality
       // stays a documented contract of the staged path.
-      val markerOk = hfs.exists(marker) && {
-        val in = hfs.open(marker)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        txt.toLongOption.contains(pages.count())
-      }
+      val markerOk = hfs.exists(marker) &&
+        readUtf8(hfs, marker).trim.toLongOption.contains(pages.count())
       if (!markerOk) {
-        val stagedPath = new org.apache.hadoop.fs.Path(stagedRoot)
+        val stagedPath = new Path(stagedRoot)
         if (hfs.exists(stagedPath)) hfs.delete(stagedPath, true)
         withBucket.write.partitionBy("bucket").parquet(stagedRoot)
         // no second input pass here: rows written == input rows, and the
@@ -203,10 +200,7 @@ object GraftTable {
         // which for the empty case is the cheap job it looks like.
         val stagedCount = scala.util.Try(spark.read.parquet(stagedRoot).count())
           .getOrElse(pages.count())
-        val out = hfs.create(marker, true)
-        try out.write(stagedCount.toString.getBytes(
-          java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
+        writeUtf8(hfs, marker, stagedCount.toString)
       }
     }
     def waveInput(wave: Seq[Int]): Dataset[PageRecordWithBucket] =
@@ -215,7 +209,7 @@ object GraftTable {
           .as[PageRecordWithBucket]
       else {
         val dirs = wave.map(b => s"$stagedRoot/bucket=$b")
-          .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
+          .filter(p => hfs.exists(new Path(p)))
         if (dirs.isEmpty) spark.emptyDataset[PageRecordWithBucket]
         else spark.read.option("basePath", stagedRoot).parquet(dirs: _*)
           .select("bucket", "url", "warc_ts", "html", "text", "lang")
@@ -276,7 +270,7 @@ object GraftTable {
       val waveMs = System.currentTimeMillis() - waveT0
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
       val wavePaths = wave.map(b => s"$root/data/bucket=$b")
-        .filter(p => hfs.exists(new org.apache.hadoop.fs.Path(p)))
+        .filter(p => hfs.exists(new Path(p)))
       val metrics =
         (if (wavePaths.isEmpty)
           spark.emptyDataset[ScoredDocWithBucket].toDF.select(col("bucket"), col("doc.*"))
@@ -343,10 +337,9 @@ object GraftTable {
 
   /** Data files of the given buckets, one listStatus per bucket. */
   private def listBucketFiles(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      root: String, buckets: Iterable[Int]): Vector[String] =
+      hfs: FileSystem, root: String, buckets: Iterable[Int]): Vector[String] =
     buckets.toVector.sorted.flatMap { b =>
-      val bp = new org.apache.hadoop.fs.Path(s"$root/data/bucket=$b")
+      val bp = new Path(s"$root/data/bucket=$b")
       if (!hfs.exists(bp)) Vector.empty
       else hfs.listStatus(bp).toVector
         .map(st => st.getPath.getName)
@@ -355,9 +348,8 @@ object GraftTable {
     }
 
   /** Existing snapshot ids under root/manifest (empty when none). */
-  private def snapshotIds(
-      hfs: org.apache.hadoop.fs.FileSystem, root: String): Seq[Int] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/manifest")
+  private def snapshotIds(hfs: FileSystem, root: String): Seq[Int] = {
+    val dir = new Path(s"$root/manifest")
     if (!hfs.exists(dir)) Seq.empty
     else hfs.listStatus(dir).toSeq.flatMap(st =>
       "snapshot-(\\d+)\\.json".r.findFirstMatchIn(st.getPath.getName)
@@ -365,25 +357,16 @@ object GraftTable {
   }
 
   /** Latest snapshot id + its cumulative file manifest, if any. */
-  private def latestSnapshot(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      root: String): Option[(Int, Set[String])] =
+  private def latestSnapshot(hfs: FileSystem, root: String): Option[(Int, Set[String])] =
     snapshotIds(hfs, root).maxOption.map { id =>
-      val json = readUtf8(hfs,
-        new org.apache.hadoop.fs.Path(s"$root/manifest/snapshot-$id.json"))
-      val files = "\"files\": \\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-        .map(_.group(1).split(",").toSeq
-          .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSet)
-        .getOrElse(Set.empty[String])
-      (id, files)
+      val json = readUtf8(hfs, new Path(s"$root/manifest/snapshot-$id.json"))
+      (id, snapshotFiles(json).getOrElse(Nil).toSet)
     }
 
   private def writeSnapshot(
-      hfs: org.apache.hadoop.fs.FileSystem,
-      root: String, waveIdx: Int, buckets: Seq[Int], counts: Seq[(Int, Long)],
+      hfs: FileSystem, root: String, waveIdx: Int, buckets: Seq[Int], counts: Seq[(Int, Long)],
       cumulativeFiles: Seq[String], cumulativeDocs: Long): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(s"$root/manifest")
-    hfs.mkdirs(dir)
+    hfs.mkdirs(new Path(s"$root/manifest"))
     // max(id)+1, NOT count+1: with create(overwrite=true), a missing
     // earlier snapshot (operator deletion, retention cleanup) would make
     // count+1 silently clobber the newest existing snapshot and corrupt
@@ -402,10 +385,7 @@ object GraftTable {
          |"total_docs": $cumulativeDocs,
          |"files": [${files.map(f => s""""$f"""").mkString(",")}],
          |"schema_id": 1}""".stripMargin
-    val out = hfs.create(
-      new org.apache.hadoop.fs.Path(s"$root/manifest/snapshot-${existing + 1}.json"), true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeUtf8(hfs, new Path(s"$root/manifest/snapshot-${existing + 1}.json"), json)
   }
 
   /** Time travel: read the table AS OF `snapshot-<id>.json` — exactly the
@@ -414,16 +394,14 @@ object GraftTable {
     * in SURVEY.md §7.3). basePath keeps the bucket partition column. */
   def readSnapshot(spark: SparkSession, root: String, snapshotId: Int): DataFrame = {
     val hfs = fs(spark, root)
-    val p = new org.apache.hadoop.fs.Path(s"$root/manifest/snapshot-$snapshotId.json")
+    val p = new Path(s"$root/manifest/snapshot-$snapshotId.json")
     require(hfs.exists(p), s"no snapshot-$snapshotId under $root/manifest")
     val json = readUtf8(hfs, p)
-    val files = "\"files\": \\[([^\\]]*)\\]".r.findFirstMatchIn(json)
-      .map(_.group(1)).getOrElse(
-        throw new IllegalStateException(
-          s"snapshot-$snapshotId predates the files manifest (written by an " +
-          "older GraftTable version) — time travel needs the cumulative " +
-          "file list; re-run the pipeline to produce upgraded snapshots"))
-      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty)
+    val files = snapshotFiles(json).getOrElse(
+      throw new IllegalStateException(
+        s"snapshot-$snapshotId predates the files manifest (written by an " +
+        "older GraftTable version) — time travel needs the cumulative " +
+        "file list; re-run the pipeline to produce upgraded snapshots"))
     if (files.isEmpty) {
       // distinguish the legal zero-page snapshot from masked data loss:
       // writeSnapshot skips committed bucket dirs that are MISSING at
@@ -456,7 +434,7 @@ object GraftTable {
         .select(col("doc.*"), col("bucket"))
     } else
       spark.read.option("basePath", s"$root/data")
-        .parquet(files.toSeq.map(f => s"$root/data/$f"): _*)
+        .parquet(files.map(f => s"$root/data/$f"): _*)
   }
 }
 

@@ -25,7 +25,7 @@ class BinaryFeaturesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("frame offsets are evenly spaced and in-range") {
-    val offs = BinaryFeatures.frameOffsets(1000, 8)
+    val offs = BinaryFeatures.frameOffsets(1000)
     assert(offs == Seq(0L, 125L, 250L, 375L, 500L, 625L, 750L, 875L))
     assert(BinaryFeatures.frameOffsets(0) == Nil)
   }

@@ -35,7 +35,7 @@ class DedupGroupsSpec extends AnyFunSuite with SparkTestBase {
     import spark.implicits._
     val n = 60
     val pairs = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
-    val labels = DedupGroups.connectedComponents(pairs, maxIters = 10)
+    val labels = DedupGroups.connectedComponents(pairs)
       .collect().map(r => r.getLong(1)).toSet
     assert(labels == Set(0L), s"chain did not contract: $labels")
   }

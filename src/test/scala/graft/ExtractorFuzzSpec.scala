@@ -22,15 +22,49 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     }
   }
 
+  // a one-page PDF whose page content is object 4, for hand-built streams
+  private val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
+  private def bytes(s: String) = s.getBytes(latin1)
+  private def streamObj(num: Int, dict: String, body: Array[Byte]) =
+    bytes(s"$num 0 obj\n<< $dict /Length ${body.length} >>\nstream\n") ++ body ++
+      bytes("\nendstream\nendobj\n")
+  private val pages = bytes("%PDF-1.5\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
+    "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" +
+    "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
+  private val trailer = bytes("trailer\n<< /Root 1 0 R >>\n%%EOF\n")
+
+  /** A Flate content stream whose zlib header carries the FDICT
+    * preset-dictionary flag (the PDF side of PngSpec's FDICT case):
+    * Inflater.inflate() returns 0 with needsInput() false forever. Set
+    * FDICT (bit 5 of FLG) on a valid stream and refix FCHECK so
+    * (CMF*256+FLG) % 31 == 0. */
+  private def fdictPdf: Array[Byte] = {
+    val deflated = new java.io.ByteArrayOutputStream()
+    val zos = new java.util.zip.DeflaterOutputStream(deflated)
+    zos.write(bytes("BT /F1 12 Tf 72 720 Td (hello world) Tj ET"))
+    zos.close()
+    val stream = deflated.toByteArray
+    val cmf = stream(0) & 0xff
+    val flg = ((stream(1) & 0xff) | 0x20) & 0xe0
+    stream(1) = (flg | (31 - (cmf * 256 + flg) % 31) % 31).toByte
+    pages ++ streamObj(4, "/Filter /FlateDecode", stream) ++ trailer
+  }
+
   test("adversarial PDF-magic payloads degrade to err rows, not exceptions") {
     val cases = Seq[Array[Byte]](
       "%PDF-".getBytes,
       "%PDF-1.7\n%%EOF".getBytes,
       ("%PDF-1.4\n1 0 obj\n<< /Type /Catalog >>\nendobj\n" +
         "xref\n0 1\ntrailer\n<< /Root 1 0 R >>\nstartxref\n999999\n%%EOF").getBytes,
-      "%PDF-1.4\n1 0 obj\n<< /Length 99999 >>\nstream\n ".getBytes)
+      "%PDF-1.4\n1 0 obj\n<< /Length 99999 >>\nstream\n ".getBytes,
+      fdictPdf)
+    // a stalled inflate loop HANGS instead of failing, so each case runs
+    // on a bounded future
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
     cases.foreach { b =>
-      val doc = Extractor.extract(page(b))
+      val doc = Await.result(Future(Extractor.extract(page(b))), 10.seconds)
       assert(!doc.ok || doc.kind == "pdf") // degraded or parsed, never thrown
     }
   }
@@ -41,18 +75,9 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     val deflated = new java.io.ByteArrayOutputStream()
     val zos = new java.util.zip.DeflaterOutputStream(deflated)
     val zeros = new Array[Byte](1 << 16)
-    (0L until (graft.pdf.PdfDoc.MaxInflatedBytes >> 16) + 16).foreach(_ => zos.write(zeros))
+    (0L until (graft.util.Inflate.MaxBytes >> 16) + 16).foreach(_ => zos.write(zeros))
     zos.close()
     val stream = deflated.toByteArray
-    val latin1 = java.nio.charset.StandardCharsets.ISO_8859_1
-    def bytes(s: String) = s.getBytes(latin1)
-    def streamObj(num: Int, dict: String, body: Array[Byte]) =
-      bytes(s"$num 0 obj\n<< $dict /Length ${body.length} >>\nstream\n") ++ body ++
-        bytes("\nendstream\nendobj\n")
-    val pages = bytes("%PDF-1.5\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
-      "2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n" +
-      "3 0 obj\n<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n")
-    val trailer = bytes("trailer\n<< /Root 1 0 R >>\n%%EOF\n")
     // the bomb as the page's content stream, and as an object stream
     // beside a readable page (which alone would extract as ok)
     val inputs = Seq(

@@ -88,6 +88,25 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("Inflater is constructed only in graft/util/Inflate.scala (source lint)") {
+    // two hand-written inflate loops drifted apart before (the FDICT stall
+    // guard landed in one, the output cap in the other); a third loop
+    // must go through the shared bounded helper instead
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"lint source root not found at ${root.getAbsolutePath} — " +
+      "the forked test JVM's working directory moved off the repo root")
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      Option(d.listFiles).toSeq.flatten.flatMap(f =>
+        if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala")))
+    val owner = new java.io.File(root, "graft/util/Inflate.scala")
+    val constructs = scalaFiles(root).filter { f =>
+      scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
+        _.getLines().exists(_.contains("Inflater(")))
+    }
+    assert(constructs.map(_.getCanonicalPath) == Seq(owner.getCanonicalPath),
+      s"Inflater constructed outside ${owner.getPath}: ${constructs.mkString(", ")}")
+  }
+
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {
     spark.catalog.clearCache()
     val persisting = Seq("q15_lsh_near_dup", "q24_ann_lsh",

@@ -102,7 +102,7 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val b = CorpusGen.BycatchWords.toSet
     val base = ExtractPipeline.extractAndScore(pages, 8, t, b)
       .collect().map(s => s.url -> s).toMap
-    val bw = ExtractPipeline.extractAndScoreByteWeighted(pages, 8, t, b)
+    val bw = ExtractPipeline.extractAndScore(ExtractPipeline.byteWeightedRoute(pages, 8), 0, t, b)
       .collect().map(s => s.url -> s).toMap
     assert(bw.keySet == base.keySet)
     base.foreach { case (url, s) =>

@@ -137,7 +137,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
       def runOnce(): Unit = {
         val q = StreamingExtract.run(spark, in, out, ck,
           CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
-          availableNow = true, dedup = true, dedupDelay = delay)
+          dedup = true, dedupDelay = delay)
         q.awaitTermination()
       }
       // ingestion run 1: the dup's first crawl at 08:00 + pages at 12:00
