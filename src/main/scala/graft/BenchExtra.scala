@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * metric. Times each named query with the noop sink (computes every
   * column of every row, discards the result) in the same session shape
   * as Bench's query suite (local[$SPARK_GRAFT_CPUS], default the host's
-  * CPU count; shuffle.partitions=cpus, 4 MB scan splits), with SwapCache released
+  * CPU count; shuffle.partitions=cpus, 4 MB scan splits), with held frames released
   * between queries exactly like the suite loop. Two timed runs per
   * query: run1 = the Bench-comparable cold invocation (generation
   * rebuild included), run2 = warm repeat (separates fixed plan/job
@@ -52,8 +52,8 @@ object BenchExtra {
       val cold = noop(name)
       val cpuCold = CpuClock.ms - cpu0
       val warm = noop(name)
-      // mirror the Bench suite loop: swap caches released between
-      // queries, Q15Result deliberately retained (q25 composes on it —
+      // mirror the Bench suite loop: held frames released between
+      // queries, q15's pairs result deliberately retained (q25 composes on it —
       // q15's warm run is therefore a result-cache read, expected ~0)
       graft.queries.Queries.releaseSwapCaches()
       s""""$name":{"cold_sec":${fmt(cold)},"warm_sec":${fmt(warm)},"cold_cpu_ms":$cpuCold}"""

@@ -168,11 +168,11 @@ object ScaleBench {
             -1L
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        // drop this query's SwapCache generation before the next query
+        // drop this query's held frames before the next query
         // is timed (Bench's suite-loop discipline): at x100 q15's
         // persisted aug+sigs tables are GBs, and holding them under
         // q25/q26 measures eviction pressure, not the next query.
-        // Q15Result (the pairs table q25 consumes) survives — releasing
+        // q15's pairs result (the table q25 consumes) survives — releasing
         // it would re-run the whole LSH pipeline inside q25's CC hops.
         Queries.releaseSwapCaches()
         (name, sec, rows)
@@ -186,7 +186,7 @@ object ScaleBench {
     // cached confirmed pairs). x200 = 1M docs — double the deep ladder's
     // largest tier, so the composition is also the largest single corpus
     // in the evidence. Per-stage wall/gc/cpu/rows published; between
-    // stages the swap caches release as in the suite loop (Q15Result
+    // stages the held frames release as in the suite loop (q15's pairs
     // deliberately survives into q25 — that IS the composition).
     val composed: Option[Seq[(String, Double, Long, Long, Long)]] = if (deep) {
       val dir = s"$root/x200"

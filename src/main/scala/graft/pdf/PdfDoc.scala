@@ -57,12 +57,7 @@ final class PdfDoc(data: Array[Byte]) {
     // this runs INSIDE the `objectsOrdered` initializer, so resolution
     // must go through `top`, never this.objects (still null here) —
     // /Filter, /N and /First are all legal as indirect references
-    def resolveTop(o: PObj, depth: Int = 0): PObj = o match {
-      case PRef(num, gen) =>
-        if (depth >= 64) PNull
-        else top.get((num, gen)).map(resolveTop(_, depth + 1)).getOrElse(PNull)
-      case other => other
-    }
+    def resolveTop(o: PObj): PObj = resolveIn(top, o)
     val dict = st.dict
     val out = Vector.newBuilder[((Int, Int), PObj)]
     try {
@@ -175,12 +170,13 @@ final class PdfDoc(data: Array[Byte]) {
     * to construct, seen in corrupt files) degrades to PNull instead of a
     * StackOverflowError — an Error would escape the pipeline's exception
     * handling and kill the task. */
-  def resolve(o: PObj): PObj = resolveBounded(o, 0)
+  def resolve(o: PObj): PObj = resolveIn(objects, o)
 
-  private def resolveBounded(o: PObj, depth: Int): PObj = o match {
+  /** [[resolve]] against the object table `objs`, at most 64 hops deep. */
+  private def resolveIn(objs: Map[(Int, Int), PObj], o: PObj, depth: Int = 0): PObj = o match {
     case PRef(num, gen) =>
       if (depth >= 64) PNull
-      else objects.get((num, gen)).map(resolveBounded(_, depth + 1)).getOrElse(PNull)
+      else objs.get((num, gen)).map(resolveIn(objs, _, depth + 1)).getOrElse(PNull)
     case other => other
   }
 

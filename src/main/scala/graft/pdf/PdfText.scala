@@ -197,21 +197,26 @@ object PdfText {
     out.toList
   }
 
+  /** pdfplumber's default x/y tolerances: a char gap wider than XTol
+    * starts a new word, a baseline step taller than YTol a new line. */
+  private val XTol = 1.0
+  private val YTol = 3.0
+
   /** pdfplumber-shaped extract_text over positioned chars. */
-  def assemble(chars: List[PChar], xTol: Double = 1.0, yTol: Double = 3.0): String = {
+  def assemble(chars: List[PChar]): String = {
     if (chars.isEmpty) return ""
     // group into lines by top-down y with tolerance, CHAINED off the
     // previous char like pdfplumber's cluster_objects/cluster_list (a new
     // cluster starts when the gap from the PREVIOUS sorted value exceeds
     // the tolerance — anchoring at the line's first char instead would
-    // split a drifting baseline, e.g. y = 100/102.5/105 with yTol 3, that
+    // split a drifting baseline, e.g. y = 100/102.5/105 with YTol 3, that
     // pdfplumber chains into one line)
     val sorted = chars.sortBy(c => (c.y, c.x0))
     val lines = mutable.ListBuffer.empty[mutable.ListBuffer[PChar]]
     var curLine: mutable.ListBuffer[PChar] = null
     var prevY = Double.NaN
     sorted.foreach { ch =>
-      if (curLine == null || ch.y - prevY > yTol) {
+      if (curLine == null || ch.y - prevY > YTol) {
         curLine = mutable.ListBuffer(ch)
         lines += curLine
       } else curLine += ch
@@ -227,7 +232,7 @@ object PdfText {
         if (ch.c == ' ') {
           if (cur.nonEmpty) { words += cur.toString; cur.clear() }
         } else {
-          if (cur.nonEmpty && gap > xTol) { words += cur.toString; cur.clear() }
+          if (cur.nonEmpty && gap > XTol) { words += cur.toString; cur.clear() }
           cur.append(ch.c)
         }
         prevX1 = ch.x1

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ExtractedDoc, TermCount, DownloadReceipt}
 import graft.sources.Sources
+import graft.util.Held
 
 /** The reference's seven CLI modes (`SCISCRAPERS`,
   * /root/reference/src/factories.py:95-103) as one composition function
@@ -25,23 +26,13 @@ import graft.sources.Sources
   */
 object Modes {
 
-  /** Frames persisted by [[finish]] whose lifecycle the caller now owns.
-    * finish cannot unpersist eagerly itself — the caller's downstream
-    * action still reads the cache, and unpersisting before it would
-    * re-execute the whole mode pipeline (repeating side effects behind an
-    * online fetch seam). This queue is the HANDLE the round-3 advice
-    * asked for: call [[releaseCaches]] once the mode's outputs are
-    * consumed (the CLI does so after its export).
-    *
-    * The queue is BOUNDED (64 entries): when a 65th mode run registers
-    * its cache, the oldest entry is unpersisted and dropped, so a
-    * service that loops over modes without ever releasing retains at
-    * most 64 generations of plans/closures instead of growing forever.
-    * 64 concurrent in-flight mode runs on one session is far past any
-    * realistic tenancy; entry 1 is stale by the time entry 65 exists. */
-  private val MaxLiveCaches = 64
-  private val liveCaches =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  /** Key of the frames [[finish]] persists in `Held.frames`. finish
+    * cannot unpersist eagerly itself — the caller's downstream action
+    * still reads the cache, and unpersisting before it would re-execute
+    * the whole mode pipeline (repeating side effects behind an online
+    * fetch seam). Call [[releaseCaches]] once the mode's outputs are
+    * consumed (the CLI does so after its export). */
+  private val CacheKey = "modes"
 
   /** Unpersist every frame [[finish]] cached since the last release.
     * Safe to call any time after the caller's final action on the mode
@@ -55,13 +46,7 @@ object Modes {
     * pre-action cache would be dropped and its pipeline — including any
     * online fetch seam — would re-execute); rely on the weak-reference +
     * ContextCleaner path there, or scope a session per run. */
-  def releaseCaches(): Unit = {
-    var df = liveCaches.poll()
-    while (df != null) {
-      scala.util.Try(df.unpersist(false))
-      df = liveCaches.poll()
-    }
-  }
+  def releaseCaches(): Unit = Held.frames.release(CacheKey)
 
   /** Snapshot-join hint seam (round-5 review): the modes default to
     * broadcasting caller-supplied snapshot tables — right for the
@@ -78,27 +63,10 @@ object Modes {
     * persisted first — otherwise every mode would execute its whole
     * pipeline twice (once for the probe, once for the caller's action),
     * doubling work and, worse, repeating side effects behind an online
-    * fetch seam. The persist is registered in [[liveCaches]]; call
+    * fetch seam. The persist is held in `Held.frames`; call
     * [[releaseCaches]] when the mode's outputs are consumed. */
   def finish(df: DataFrame): DataFrame = {
-    val cached = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    liveCaches.add(cached)
-    while (liveCaches.size > MaxLiveCaches) {
-      val oldest = liveCaches.poll()
-      if (oldest != null) {
-        // loud, not silent (round-4 ADVICE): evicting a generation a
-        // concurrent mode run has not yet actioned forces that run to
-        // silently re-execute its whole pipeline — including any online
-        // fetch seam. Overflow means >MaxLiveCaches un-released runs:
-        // a tenancy misuse that must surface in the logs.
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"Modes.finish cache queue overflow (>$MaxLiveCaches un-released " +
-            "mode runs): evicting the oldest cached frame; a concurrent " +
-            "run still holding it will re-execute its pipeline. Call " +
-            "Modes.releaseCaches() after consuming each mode's outputs.")
-        scala.util.Try(oldest.unpersist(false))
-      }
-    }
+    val cached = Held.frames.keep(CacheKey, df)
     Casting.dataframeCasting(Stagers.dropAllEmptyColumns(cached))
   }
 

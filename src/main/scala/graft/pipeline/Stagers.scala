@@ -62,14 +62,10 @@ object Stagers {
   /** Explode an array column carrying a parent column — the reference
     * needs stager+loop+positional-join for this
     * (/root/reference/src/stagers.py:55-125, src/fetch.py:138-160); in
-    * Spark it is one Generate operator that keeps parent columns. */
-  def explodeWithSource(
-      df: DataFrame,
-      parentCol: String,
-      arrayCol: String,
-      parentAs: String = "source_titles",
-      elemAs: String = "citation"): DataFrame =
-    df.select(col(parentCol).as(parentAs), explode_outer(col(arrayCol)).as(elemAs))
+    * Spark it is one Generate operator that keeps parent columns, named
+    * `source_titles` and `citation` as in the reference's output. */
+  def explodeWithSource(df: DataFrame, parentCol: String, arrayCol: String): DataFrame =
+    df.select(col(parentCol).as("source_titles"), explode_outer(col(arrayCol)).as("citation"))
 
   /** Clean cells holding Python dict literals: cells starting "{" are
     * parsed (never eval'd) and replaced by str(dict.get(key, "")); others

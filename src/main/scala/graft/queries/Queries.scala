@@ -10,6 +10,7 @@ import graft.pipeline.ExtractPipeline
 import graft.corpus.CorpusGen
 import graft.functions.GraftFunctions
 import graft.table.GraftTable
+import graft.util.Held
 
 /** The engine's query suite — one entry per operator family from
   * SURVEY.md §2 plus the large-scale training-data-pipeline operations
@@ -292,50 +293,23 @@ object Queries {
     }
   }
 
-  /** Bounded per-query cache of persisted INTERMEDIATES: a re-invocation
-    * (repeated bench sweeps) unpersists the previous generation, so at
-    * most one live copy per query key exists in the session. Spark does
-    * not share work between the two sides of a self-join — persisting the
-    * expensive projection (shingle/signature/bit tables) makes each side
-    * a cache read instead of a recompute, which at 100 TB is exactly the
-    * materialized signature table a dedup/ANN job writes once. */
-  private object SwapCache {
-    private var last: Map[String, List[DataFrame]] = Map.empty
-    def swap(key: String)(dfs: DataFrame*): Unit = synchronized {
-      last.getOrElse(key, Nil).foreach(d => scala.util.Try(d.unpersist(false)))
-      last = last.updated(key, dfs.toList)
-    }
-    /** MUST be called BEFORE the new generation's persist() calls, not
-      * after: a re-invocation on the same dir builds plans IDENTICAL to
-      * the cached generation's, so CacheManager dedups the new persist
-      * into the OLD entry ("Asked to cache already cached data") — and a
-      * swap() after the fact then uncaches that shared entry BY PLAN,
-      * leaving the new generation completely uncached and every consumer
-      * recomputing the full chain (measured: q41 re-runs went 4.4 s ->
-      * 40 s). Release-first keeps each generation's cache entries
-      * disjoint; the re-build cost between generations is paid, which is
-      * the swap contract anyway. */
-    def release(key: String): Unit = swap(key)()
-    def releaseAll(blocking: Boolean): Unit = synchronized {
-      last.values.flatten.foreach(d => scala.util.Try(d.unpersist(blocking)))
-      last = Map.empty
-    }
-  }
-
-  /** Drop every live SwapCache generation (q15/q24/q26/q41 signature /
-    * prefix intermediates). Bench calls this BETWEEN suite queries so the
-    * parent JVM never holds four generations of MEMORY_AND_DISK blocks at
-    * once — the round-5 driver run's q41 ran 15x slow under exactly that
-    * accumulated eviction/spill pressure. BLOCKING unpersist (round-6
-    * review): the in-query release-first path stays async by design, but
-    * a harness release exists to put eviction work OUTSIDE the next
-    * query's timed window — a fire-and-forget unpersist would let block
-    * removal overlap the next t0 and defeat the point. Q15Result (the
-    * confirmed-pairs RESULT cache q25 consumes) is deliberately NOT
-    * dropped here: it is a few hundred rows, and dropping it would
-    * re-run the whole LSH pipeline inside q25's every CC hop (the
-    * round-1 46%-of-wall pathology). */
-  private[graft] def releaseSwapCaches(): Unit = SwapCache.releaseAll(blocking = true)
+  /** Drop every frame held in `Held.frames`: the persisted
+    * intermediates of the near-dup/ANN queries (one generation per query
+    * key: a re-invocation releases its previous generation first, so at
+    * most one live copy per query exists) and the `Modes.finish` outputs.
+    * Bench calls this BETWEEN suite queries so the parent JVM never holds
+    * four generations of MEMORY_AND_DISK blocks at once — the round-5
+    * driver run's q41 ran 15x slow under exactly that accumulated
+    * eviction/spill pressure. BLOCKING unpersist (round-6 review): the
+    * in-query release-first path stays async by design, but a harness
+    * release exists to put eviction work OUTSIDE the next query's timed
+    * window — a fire-and-forget unpersist would let block removal overlap
+    * the next t0 and defeat the point. q15's confirmed pairs (the RESULT
+    * q25 consumes, held in `Held.results`) are deliberately NOT dropped
+    * here: they are a few hundred rows, and dropping them would re-run
+    * the whole LSH pipeline inside q25's every CC hop (the round-1
+    * 46%-of-wall pathology). */
+  private[graft] def releaseSwapCaches(): Unit = Held.frames.releaseAll()
 
   /** Observation handle of the LATEST q41 invocation: the candidate-pair
     * count (post-distinct, pre-confirm) flows through a CollectMetrics
@@ -357,54 +331,47 @@ object Queries {
       .flatMap(row => Try(row.getLong(row.fieldIndex("n"))).toOption)
       .getOrElse(-1L)
 
-  /** Cache of q15's CONFIRMED-PAIR result, keyed by (session, sf dir):
-    * q25's connected components consume exactly these edges, so a bench /
-    * verify sweep that runs q15 then q25 must not pay the whole LSH
-    * pipeline twice (round-1 finding: q25 recomputed q15 inside itself and
-    * alone was 46% of suite wall time). At 100 TB this is the materialized
+  /** Hit rule for q15's CONFIRMED-PAIR result, keyed by (session, sf
+    * dir); the frame itself is held in `Held.results`. q25's connected
+    * components consume exactly these edges, so a bench / verify sweep
+    * that runs q15 then q25 must not pay the whole LSH pipeline twice
+    * (round-1 finding: q25 recomputed q15 inside itself and alone was 46%
+    * of suite wall time). At 100 TB this is the materialized
     * `near_dup_pairs` table a dedup job writes once and every downstream
     * pass re-reads. */
   private object Q15Result {
-    private var cached: Option[(SparkSession, String, DataFrame)] = None
+    private val Key = "q15"
+    private var owner: Option[(SparkSession, String)] = None
     def get(s: SparkSession, dir: String)(build: => DataFrame): DataFrame = synchronized {
-      // drop an entry whose session is STOPPED before matching: the
-      // single cached tuple strongly pins the dead session's plan graph
-      // (a weak key cannot help here — the DataFrame itself references
-      // its session), so the bound is "one entry, evicted at the next
-      // q15/q25 call from anywhere" and this check enforces it even when
-      // the next caller is a different session + different dir
-      cached = cached.filter { case (ss, _, df) =>
-        val alive = !ss.sparkContext.isStopped
-        if (!alive) scala.util.Try(df.unpersist(false))
-        alive
+      // drop an entry whose session is STOPPED before matching: the held
+      // frame strongly pins the dead session's plan graph (a weak key
+      // cannot help here — the DataFrame itself references its session),
+      // so the bound is "one entry, evicted at the next q15/q25 call from
+      // anywhere" and this check enforces it even when the next caller is
+      // a different session + different dir
+      if (owner.exists(_._1.sparkContext.isStopped)) {
+        Held.results.release(Key)
+        owner = None
       }
-      cached match {
+      peek(s, dir) match {
         // storageLevel re-check (round-3 verdict "what's wrong" #2): a
         // `spark.catalog.clearCache()` between q15 and q25 unpersists the
         // pairs but leaves this hit valid, and q25 would then silently
         // recompute the whole LSH pipeline inside every CC hop join (the
         // round-1 46%-of-wall pathology). A hit only counts if the plan
         // is still actually persisted.
-        case Some((ss, d, df)) if (ss eq s) && d == dir &&
-            df.storageLevel != org.apache.spark.storage.StorageLevel.NONE => df
+        case Some(df) if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE => df
         case _ =>
-          cached.foreach(c => scala.util.Try(c._3.unpersist(false)))
-          val df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          cached = Some((s, dir, df))
+          val df = Held.results.renew(Key).keep(build)
+          owner = Some((s, dir))
           df
       }
     }
-    /** TEST HOOK: the raw cached frame for (s, dir) WITHOUT the
-      * storage-level re-check, so specs can assert persistence state. */
+    /** The held frame for (s, dir) WITHOUT the storage-level re-check, so
+      * specs can assert persistence state. */
     def peek(s: SparkSession, dir: String): Option[DataFrame] = synchronized {
-      cached.collect { case (ss, d, df) if (ss eq s) && d == dir => df }
-    }
-    /** Drop the cached result (unpersisting it), so the next q15/q25
-      * invocation is a genuinely fresh build. Harness hook — see
-      * [[invalidateResultCaches]]. */
-    def invalidate(): Unit = synchronized {
-      cached.foreach(c => scala.util.Try(c._3.unpersist(true)))
-      cached = None
+      owner.filter { case (ss, d) => (ss eq s) && d == dir }
+        .flatMap(_ => Held.results(Key).headOption)
     }
   }
 
@@ -412,13 +379,13 @@ object Queries {
     Q15Result.peek(s, dir)
 
   /** Drop RESULT caches that deliberately survive [[releaseSwapCaches]]
-    * (Q15Result — the materialized near-dup-pairs table q25 composes on).
+    * (q15's confirmed pairs, the near-dup-pairs table q25 composes on).
     * The anomaly-retry harness must call this before re-running q15/q25:
     * without it the "fresh invocation" reads the cached pairs back in
     * milliseconds and a genuine engine regression gets misclassified as a
     * transient host window (round-7 review; the memory rule is "a timing
     * harness must warm on a DIFFERENT dir or it measures a cache read"). */
-  private[graft] def invalidateResultCaches(): Unit = Q15Result.invalidate()
+  private[graft] def invalidateResultCaches(): Unit = Held.results.releaseAll()
 
   // =====================================================================
   // Relational core (scan/filter/join/agg/window) — SURVEY.md §2.1–2.5
@@ -846,10 +813,7 @@ object Queries {
       "q15_lsh_near_dup",
       (s, dir) => Q15Result.get(s, dir) {
         val docs = docsWithMutants(s, dir, "q15")
-        // release-first (SwapCache.release scaladoc): persisting a plan
-        // identical to the previous generation's would dedup into the old
-        // CacheManager entry that swap() then kills
-        SwapCache.release("q15")
+        val held = Held.frames.renew("q15")
         // the shingle+hash pipeline feeds the band explode AND both sides
         // of the jaccard join — persist it once instead of recomputing the
         // scan+tokenize+md5 three times (at scale: a materialized
@@ -857,10 +821,9 @@ object Queries {
         // sz rides in the persisted projection: the confirm stage derives
         // the union size as sz_a + sz_b - overlap (exact — sh is an
         // array_distinct output), so the per-pair array_union pass is gone
-        val augCached = docs
+        val augCached = held.keep(docs
           .selectExpr("id", s"$sparkShingles AS sh")
-          .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .selectExpr("id", "sh", "CAST(size(sh) AS BIGINT) AS sz"))
         // exclude shingle-less docs (< 3 tokens) before banding: their
         // 0/0 Jaccard NaN-aborts the ANSI cast once >cap share a
         // degenerate bucket (round-6 review; oracle-mirrored). ABOVE the
@@ -880,16 +843,14 @@ object Queries {
         // pair sources read the windowed projection.
         val w = org.apache.spark.sql.expressions.Window.partitionBy("b", "bucket")
         val wSub = org.apache.spark.sql.expressions.Window.partitionBy("b", "bucket", "sec")
-        val sigs = aug
+        val sigs = held.keep(aug
           .select(col("id"), GraftFunctions.minhash_bands(col("sh")).as("buckets"))
           .selectExpr("id", "buckets", "posexplode_outer(buckets) AS (b, bucket)")
           .selectExpr("id", "b", "bucket",
             "element_at(buckets, CAST((b + 1) % 4 AS INT) + 1) AS sec")
           .withColumn("n", count(lit(1)).over(w))
           .withColumn("rep", min("id").over(w))
-          .withColumn("m", count(lit(1)).over(wSub))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q15")(augCached, sigs)
+          .withColumn("m", count(lit(1)).over(wSub)))
         val small = sigs.filter(s"n <= $BucketCap")
         val s1 = small.selectExpr("id AS id_a", "b AS b_a", "bucket AS bucket_a")
         val s2 = small.selectExpr("id AS id_b", "b AS b_b", "bucket AS bucket_b")
@@ -1239,15 +1200,11 @@ object Queries {
     Q(
       "q24_ann_lsh",
       (s, dir) => {
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q24")
         // persisted: the 32 hyperplane dot products per vector feed the
         // bucket self-join (both sides) AND the two re-rank joins — four
         // recomputes without the persist
-        val qqCached = quantized(s, dir, "vec_id")
-          .selectExpr(Seq("vec_id", "qv", "nrm") ++ sTabs: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q24")(qqCached)
+        val qqCached = Held.frames.renew("q24").keep(quantized(s, dir, "vec_id")
+          .selectExpr(Seq("vec_id", "qv", "nrm") ++ sTabs: _*))
         // zero-norm guard (q16 comment) ABOVE the persist: below it,
         // pushdown would re-evaluate the quantize+dot into the scan
         // filter (the q15 double-evaluation trap); here it reads the
@@ -1446,14 +1403,10 @@ object Queries {
           require(lsh.bitsPerTable == 16,
             s"q26 oracle domain exceeded: bits=${lsh.bitsPerTable} — the static " +
               "oracle SQL assumes 16-bit codes; verify runs need <= 16k vectors")
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q26")
         // persisted for the same reason as q24's qq (4 consumers)
-        val qqCached = quantized(s, dir, "id", base => base.unionByName(
-            base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv")))
-          .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q26")(qqCached)
+        val qqCached = Held.frames.renew("q26").keep(quantized(s, dir, "id", base =>
+            base.unionByName(base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv")))
+          .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*))
         // zero-norm guard above the persist (q24 comment)
         val qq = qqCached.filter("nrm > 0")
         val cand = srpCandidates(qq, lsh.sStack, "id", "id_a", "id_b", "id_a < id_b")
@@ -2186,15 +2139,13 @@ object Queries {
       "q41_jaccard_join",
       (s, dir) => {
         val docs = docsWithMutants(s, dir, "q41")
-        // release-first (SwapCache.release scaladoc)
-        SwapCache.release("q41")
+        val held = Held.frames.renew("q41")
         // grams feeds the posting explode (freq, prefix, gram-id table);
         // prefix feeds both sides of the candidate self-join; gsi feeds
         // both confirm sides
-        val grams = docs
+        val grams = held.keep(docs
           .selectExpr("id", s"$sparkBigrams AS gs")
-          .withColumn("sz", expr("size(gs)"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("sz", expr("size(gs)")))
         val posting = grams.selectExpr("id", "sz", "explode(gs) AS g")
         val freq = posting.groupBy("g").agg(count(lit(1)).as("df"))
         // dense integer gram ids, assigned in the global (df, g) prefix
@@ -2208,20 +2159,17 @@ object Queries {
         val ranked = posting.join(dict.select("g", "gid"), Seq("g"))
         val wDoc = org.apache.spark.sql.expressions.Window
           .partitionBy("id").orderBy("gid")
-        val prefix = ranked
+        val prefix = held.keep(ranked
           .withColumn("rn", row_number().over(wDoc))
           .filter("rn <= sz - ((9 * sz + 9) DIV 10) + 1")
-          .select("id", "sz", "gid", "rn")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select("id", "sz", "gid", "rn"))
         // per-doc gram-id SETS as sorted long arrays: the confirm stage's
         // input, 5x narrower than the string arrays and merge-walkable
         // (SortedOverlapI64 scaladoc). gid<->gram is a bijection, so the
         // overlap/union counts are exactly the string-set ones.
-        val gsi = ranked.groupBy("id")
+        val gsi = held.keep(ranked.groupBy("id")
           .agg(max("sz").as("sz"),
-            sort_array(collect_list(col("gid").cast("long"))).as("gsi"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        SwapCache.swap("q41")(grams, prefix, gsi)
+            sort_array(collect_list(col("gid").cast("long"))).as("gsi")))
         // candidate join with PPJoin's length + positional filters:
         // overlap bound alpha = ceil(9*(szA+szB)/19)
         val cand = prefix.selectExpr("id AS id_a", "sz AS sz_a", "gid", "rn AS rn_a")
@@ -2315,8 +2263,6 @@ object Queries {
           // chr(1) separator: spans are human text, so the control char
           // cannot occur and concatenation stays boundary-unambiguous
           "array_join(citation_spans, chr(1)) AS spans_str", "n_bytes")
-      // release-first (SwapCache.release scaladoc)
-      SwapCache.release("q42")
       // the synthesized heavy-tail corpus feeds THREE actions (the plain
       // extract, byteWeightedRoute's per-url cost stats pass, and the
       // routed extract) — unpersisted, each one re-runs the full
@@ -2324,9 +2270,7 @@ object Queries {
       // persist only when reused AND recompute is expensive; both hold
       // here). ~25-40 MB at the fixture size; at scale this is the
       // pre-existing pages table both variants would read anyway.
-      val pages = ExtractPipeline.heavyTailPages(s, n, 32)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      SwapCache.swap("q42")(pages.toDF())
+      val pages = Held.frames.renew("q42").keep(ExtractPipeline.heavyTailPages(s, n, 32))
       val plain = auxTable(s, dumpCols(
         ExtractPipeline.extractAndScore(pages, 32, target, bycatch).toDF()),
         "q42_plain")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.model.{PageRecord, ScoredDoc}
-import graft.pipeline.Extractor
+import graft.pipeline.ExtractPipeline
 
 /** Structured Streaming front-end for the engine: the same extraction
   * semantics as the batch pipeline, run continuously over newly-landed
@@ -31,19 +31,6 @@ object StreamingExtract {
       .as[PageRecord]
   }
 
-  /** Extract+score on the stream — literally the batch pipeline's
-    * scan-split path applied to a streaming Dataset (one implementation,
-    * two execution modes: a re-implemented copy here drifted from the
-    * batch wiring by design pressure alone — round-5 review). The
-    * numPartitions=0 path adds no repartition, so it is streaming-legal;
-    * word-set broadcasts happen once per query and are reused across
-    * micro-batches. */
-  def scoredStream(
-      pages: Dataset[PageRecord],
-      targetWords: Set[String],
-      bycatchWords: Set[String]): Dataset[ScoredDoc] =
-    graft.pipeline.ExtractPipeline.extractAndScore(pages, 0, targetWords, bycatchWords)
-
   /** Drain everything currently in `inDir` to a parquet sink and stop
     * (an AvailableNow trigger), with checkpointed exactly-once file
     * tracking. */
@@ -57,8 +44,13 @@ object StreamingExtract {
       dedup: Boolean = false,
       dedupDelay: String = "1 hour"): StreamingQuery = {
     val src = pagesStream(spark, inDir)
-    val scored = scoredStream(
-      if (dedup) dedupStream(src, dedupDelay) else src, targetWords, bycatchWords)
+    // the batch pipeline's scan-split path on a streaming Dataset (one
+    // implementation, two execution modes: a re-implemented copy here
+    // once drifted from the batch wiring). numPartitions=0 adds no
+    // repartition, so it is streaming-legal; the word-set broadcasts
+    // happen once per query and are reused across micro-batches.
+    val scored = ExtractPipeline.extractAndScore(
+      if (dedup) dedupStream(src, dedupDelay) else src, 0, targetWords, bycatchWords)
     scored.toDF().writeStream
       .format("parquet")
       .option("path", outDir)

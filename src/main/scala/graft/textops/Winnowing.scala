@@ -19,6 +19,10 @@ object Winnowing {
 
   private val Base = 0x100000001b3L // FNV prime as the Karp-Rabin base
 
+  /** k-gram length (k) and winnowing window (w) of every fingerprint. */
+  private val K = 5
+  private val W = 4
+
   /** Karp-Rabin rolling hashes of all k-grams of `s` (length n-k+1). */
   def rollingHashes(s: String, k: Int): Array[Long] = {
     val n = s.length
@@ -45,10 +49,10 @@ object Winnowing {
     * de-duplicated on consecutive windows selecting the same position.
     * Ties take the RIGHTMOST minimal hash in the window (robust
     * winnowing). */
-  def fingerprints(s: String, k: Int = 5, w: Int = 4): Array[(Int, Long)] = {
-    val hs = rollingHashes(s, k)
+  def fingerprints(s: String): Array[(Int, Long)] = {
+    val hs = rollingHashes(s, K)
     if (hs.isEmpty) return Array.empty
-    if (hs.length <= w) {
+    if (hs.length <= W) {
       // single short window: its minimum is the whole fingerprint
       var best = 0
       var i = 1
@@ -58,10 +62,10 @@ object Winnowing {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
     var lastPicked = -1
     var start = 0
-    while (start + w <= hs.length) {
+    while (start + W <= hs.length) {
       var best = start
       var i = start + 1
-      while (i < start + w) { if (hs(i) <= hs(best)) best = i; i += 1 }
+      while (i < start + W) { if (hs(i) <= hs(best)) best = i; i += 1 }
       // robust winnowing (paper §5): if the previous pick is still inside
       // the window and TIES the minimum, keep it — without this retention
       // a constant run emits one fingerprint per slide (rightmost min
@@ -78,15 +82,15 @@ object Winnowing {
   }
 
   /** Fingerprint hash set (the dedup join key set). */
-  def fingerprintSet(s: String, k: Int = 5, w: Int = 4): Set[Long] =
-    fingerprints(s, k, w).map(_._2).toSet
+  def fingerprintSet(s: String): Set[Long] =
+    fingerprints(s).map(_._2).toSet
 
   /** Containment score: |fp(a) ∩ fp(b)| / |fp(a)| — the winnowing overlap
     * measure used for near-dup / clone detection. */
-  def containment(a: String, b: String, k: Int = 5, w: Int = 4): Double = {
-    val fa = fingerprintSet(a, k, w)
+  def containment(a: String, b: String): Double = {
+    val fa = fingerprintSet(a)
     if (fa.isEmpty) return 0.0
-    val fb = fingerprintSet(b, k, w)
+    val fb = fingerprintSet(b)
     fa.count(fb.contains).toDouble / fa.size
   }
 }

@@ -66,45 +66,39 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  test("every persist in Queries.scala has a registered cache owner (source lint)") {
-    val src = new java.io.File("src/main/scala/graft/queries/Queries.scala")
-    assert(src.exists, s"lint source not found at ${src.getAbsolutePath} — " +
-      "the forked test JVM's working directory moved off the repo root")
-    val lines = scala.util.Using.resource(
-      scala.io.Source.fromFile(src, "UTF-8"))(_.getLines().toVector)
-    val persistIdx = lines.zipWithIndex.collect {
-      case (l, i) if l.contains(".persist(") => i
-    }
-    assert(persistIdx.nonEmpty, "expected persisted intermediates in Queries.scala")
-    persistIdx.foreach { i =>
-      // the owner registration FOLLOWS the persist (possibly after the
-      // comment blocks documenting the other persisted frames of the same
-      // query) — look 30 lines ahead, 5 behind
-      val window = lines.slice(math.max(0, i - 5),
-        math.min(lines.length, i + 30)).mkString("\n")
-      assert(window.contains("SwapCache.swap") || window.contains("cached ="),
-        s"persist at Queries.scala:${i + 1} has no SwapCache/Q15Result owner " +
-          "within 30 lines — an unowned persist leaks a cache generation per sweep")
-    }
-  }
-
-  test("Inflater is constructed only in graft/util/Inflate.scala (source lint)") {
-    // two hand-written inflate loops drifted apart before (the FDICT stall
-    // guard landed in one, the output cap in the other); a third loop
-    // must go through the shared bounded helper instead
+  /** Files under src/main/scala whose source contains `needle`. */
+  private def mainFilesContaining(needle: String): Set[String] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"lint source root not found at ${root.getAbsolutePath} — " +
       "the forked test JVM's working directory moved off the repo root")
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    val owner = new java.io.File(root, "graft/util/Inflate.scala")
-    val constructs = scalaFiles(root).filter { f =>
+    scalaFiles(root).filter { f =>
       scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
-        _.getLines().exists(_.contains("Inflater(")))
-    }
-    assert(constructs.map(_.getCanonicalPath) == Seq(owner.getCanonicalPath),
-      s"Inflater constructed outside ${owner.getPath}: ${constructs.mkString(", ")}")
+        _.getLines().exists(_.contains(needle)))
+    }.map(f => root.toPath.relativize(f.toPath).toString).toSet
+  }
+
+  test("every persist in Queries.scala has a registered cache owner (source lint)") {
+    // a frame that outlives the call that built it is persisted only by
+    // graft.util.Held, which unpersists it on release; the two other
+    // files persist and unpersist within one method
+    val owners = Set("graft/util/Held.scala", "graft/pipeline/DedupGroups.scala",
+      "graft/pipeline/ExtractPipeline.scala")
+    val persisting = mainFilesContaining(".persist(")
+    assert(persisting == owners,
+      s"files calling .persist( are ${persisting.toSeq.sorted.mkString(", ")}; " +
+        s"want exactly ${owners.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("Inflater is constructed only in graft/util/Inflate.scala (source lint)") {
+    // two hand-written inflate loops drifted apart before (the FDICT stall
+    // guard landed in one, the output cap in the other); a third loop
+    // must go through the shared bounded helper instead
+    val constructs = mainFilesContaining("Inflater(")
+    assert(constructs == Set("graft/util/Inflate.scala"),
+      s"Inflater constructed outside graft/util/Inflate.scala: ${constructs.mkString(", ")}")
   }
 
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {
@@ -117,7 +111,7 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     val n1 = spark.sparkContext.getPersistentRDDs.size
     runAll()
     val n2 = spark.sparkContext.getPersistentRDDs.size
-    // SwapCache swaps generations and Q15Result reuses its hit, so a
+    // Held.renew swaps generations and Q15Result reuses its hit, so a
     // second sweep must not add blocks; growth means a persist lost its
     // owner (each unowned persist leaks one generation per sweep)
     assert(n2 <= n1, s"persisted RDDs grew $n1 -> $n2 across a repeat sweep")
@@ -129,6 +123,6 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     // release-first order in the query bodies is what this pins)
     assert(n2 > 0,
       "second sweep left ZERO persisted RDDs — a swap-after-persist killed " +
-        "the shared CacheManager entry (see SwapCache.release scaladoc)")
+        "the shared CacheManager entry (see Held.renew scaladoc)")
   }
 }

@@ -98,6 +98,20 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(Queries.q15CachedPairs(spark, sf).isDefined)
   }
 
+  test("releaseSwapCaches drops every frame a query persisted, q39's mode frame included") {
+    // q39 runs Modes.fastscore, whose finish() persists its input; the
+    // harness's between-query release must drop that frame too. Compared
+    // against the RDDs persisted before the run: earlier suites leave
+    // localCheckpoint RDDs (DedupGroups) that only the ContextCleaner
+    // drops, whenever a GC happens to collect them
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(run("q39_mode_fastscore").count() > 0)
+    Queries.releaseSwapCaches()
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs survive releaseSwapCaches: $leaked")
+  }
+
   test("q40 streaming rollup deduplicates the planted duplicate pages") {
     // q40 writes every page TWICE; the watermarked dedup must halve it,
     // and the rollup totals are the sbt-side pin for the rows-only

@@ -96,8 +96,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("stream-static enrichment joins each micro-batch against the snapshot") {
     val in = s"$tmp/enrich_in"
     ExtractPipeline.pages(spark, 90, 3).write.parquet(in)
-    val scored = StreamingExtract.scoredStream(
-      StreamingExtract.pagesStream(spark, in),
+    val scored = ExtractPipeline.extractAndScore(
+      StreamingExtract.pagesStream(spark, in), 0,
       CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet)
     val snap = graft.pipeline.Enrichment.dimensionsSnapshot(spark, 90)
     val q = StreamingExtract.enrichStream(scored, snap)

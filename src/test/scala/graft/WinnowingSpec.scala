@@ -18,12 +18,11 @@ class WinnowingSpec extends AnyFunSuite {
   }
 
   test("guarantee: shared runs >= w+k-1 chars share a fingerprint") {
-    val k = 5; val w = 4
     val shared = "a long enough common substring here"
     val a = "prefix one " + shared + " suffix alpha"
     val b = "other start padding " + shared + " different tail"
-    val fa = Winnowing.fingerprintSet(a, k, w)
-    val fb = Winnowing.fingerprintSet(b, k, w)
+    val fa = Winnowing.fingerprintSet(a)
+    val fb = Winnowing.fingerprintSet(b)
     assert(fa.intersect(fb).nonEmpty)
   }
 
@@ -36,7 +35,7 @@ class WinnowingSpec extends AnyFunSuite {
 
   test("fingerprint density is ~2/(w+1), robust to position shift") {
     val text = ("lorem ipsum dolor sit amet consectetur adipiscing elit sed do " * 20)
-    val fp = Winnowing.fingerprints(text, 5, 4)
+    val fp = Winnowing.fingerprints(text)
     val density = fp.length.toDouble / (text.length - 5 + 1)
     assert(density < 0.6 && density > 0.1, s"density $density")
     // shifting the document does not change the selected hash VALUES much
@@ -56,23 +55,23 @@ class WinnowingSpec extends AnyFunSuite {
   }
 
   test("edge cases: short strings, empty") {
-    assert(Winnowing.fingerprints("", 5, 4).isEmpty)
-    assert(Winnowing.fingerprints("abc", 5, 4).isEmpty)
-    assert(Winnowing.fingerprints("abcde", 5, 4).length == 1)
+    assert(Winnowing.fingerprints("").isEmpty)
+    assert(Winnowing.fingerprints("abc").isEmpty)
+    assert(Winnowing.fingerprints("abcde").length == 1)
   }
 
   test("robust tie retention: constant/repetitive text stays ~1/w density") {
     // every k-gram hash is equal; without previous-pick retention the
     // rightmost-min moves each slide and emission becomes one per position
     val n = 2000
-    val fps = Winnowing.fingerprints("a" * n, 5, 4)
+    val fps = Winnowing.fingerprints("a" * n)
     val windows = n - 5 + 1 - 4 + 1
     assert(fps.length <= windows / 4 + 2, s"${fps.length} fps for $windows windows")
     // spammy repetition: a short phrase repeated also stays sparse
     // (denominator = true window count n-k+1-w+1, same as above)
     val spam = "buy now " * 300
     val spamWindows = spam.length - 5 + 1 - 4 + 1
-    val d = Winnowing.fingerprints(spam, 5, 4).length.toDouble / spamWindows
+    val d = Winnowing.fingerprints(spam).length.toDouble / spamWindows
     assert(d < 0.6, s"density $d on repetitive text")
   }
 }
