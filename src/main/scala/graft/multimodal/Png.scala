@@ -1,6 +1,6 @@
 package graft.multimodal
 
-import graft.util.Inflate
+import graft.util.{Deflate, Inflate, PngFilter}
 
 /** From-scratch PNG baseline codec (round-6 verdict #5: make q20's
   * multimodal column REAL — the only missing primitive was a decoder, and
@@ -14,13 +14,17 @@ import graft.util.Inflate
   *   - color types 0 (gray), 2 (RGB), 3 (palette, expanded to RGB),
   *     4 (gray+alpha), 6 (RGBA);
   *   - per-chunk CRC32 verification (java.util.zip.CRC32);
-  *   - all five scanline filters (None/Sub/Up/Average/Paeth);
+  *   - all five scanline filters (None/Sub/Up/Average/Paeth), undone by
+  *     the row-filter core `graft.util.PngFilter` that the PDF PNG
+  *     predictors share;
   *   - a decompression-bomb guard: decoded pixel bytes are capped at
   *     `Inflate.MaxBytes` BEFORE inflation, from header fields alone.
   *
   * The encoder exists for deterministic test/corpus generation: it writes
   * the same baseline profile, optionally cycling the filter type per row
-  * so round-trip tests exercise every unfilter path.
+  * so round-trip tests exercise every unfilter path. Rows are filtered by
+  * `PngFilter.filterRow` and IDAT is compressed by `graft.util.Deflate`,
+  * the zlib writer the PDF writer shares.
   *
   * PNG spec: https://www.w3.org/TR/png-3/ (public). Format constants
   * (signature, chunk layout, filter algebra) are from the spec, not any
@@ -50,16 +54,6 @@ object Png {
     case 4 => 2 // gray + alpha
     case 6 => 4 // rgba
     case _ => -1
-  }
-
-  /** Paeth predictor (PNG spec §9.4): nearest of a/b/c to a+b-c with the
-    * spec's tie order a, b, c. */
-  private def paeth(a: Int, b: Int, c: Int): Int = {
-    val p = a + b - c
-    val pa = math.abs(p - a)
-    val pb = math.abs(p - b)
-    val pc = math.abs(p - c)
-    if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
   /** Decode `bytes` as a baseline PNG. None on ANY structural problem —
@@ -132,34 +126,11 @@ object Png {
     // (past the limit Inflate throws, and decode maps that to None)
     val raw = Inflate(idat.toByteArray, limit = rawLen)
     if (raw.length != rawLen) return None
-    // unfilter in place into the output layout
-    val bpp = rawCh
+    // a filter type above 4 is invalid in PNG; the shared unfilter would
+    // pass its row through (the PDF rule), so reject it first
     val stride = rowBytes.toInt
-    val flat = new Array[Byte](height * stride)
-    var y = 0
-    while (y < height) {
-      val filter = raw(y * (stride + 1)) & 0xff
-      if (filter > 4) return None
-      val src = y * (stride + 1) + 1
-      val dst = y * stride
-      var x = 0
-      while (x < stride) {
-        val a = if (x >= bpp) flat(dst + x - bpp) & 0xff else 0
-        val b = if (y > 0) flat(dst - stride + x) & 0xff else 0
-        val c = if (x >= bpp && y > 0) flat(dst - stride + x - bpp) & 0xff else 0
-        val v = raw(src + x) & 0xff
-        val out = filter match {
-          case 0 => v
-          case 1 => v + a
-          case 2 => v + b
-          case 3 => v + ((a + b) >> 1)
-          case 4 => v + paeth(a, b, c)
-        }
-        flat(dst + x) = out.toByte
-        x += 1
-      }
-      y += 1
-    }
+    if ((0 until height).exists(y => (raw(y * (stride + 1)) & 0xff) > 4)) return None
+    val flat = PngFilter.unfilter(raw, height, stride, bpp = rawCh)
     if (colorType == 3) {
       // palette expansion to RGB
       val nEntries = palette.length / 3
@@ -194,43 +165,6 @@ object Png {
     crc.update(t)
     crc.update(data)
     w32(crc.getValue)
-  }
-
-  private def deflate(raw: Array[Byte]): Array[Byte] = {
-    val d = new java.util.zip.Deflater(java.util.zip.Deflater.BEST_SPEED)
-    try {
-      d.setInput(raw)
-      d.finish()
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](8192)
-      while (!d.finished()) out.write(buf, 0, d.deflate(buf))
-      out.toByteArray
-    } finally d.end()
-  }
-
-  /** Apply filter `f` to row `y` (the encoder-side transform the decoder
-    * inverts). */
-  private def filterRow(flat: Array[Byte], y: Int, stride: Int, bpp: Int, f: Int): Array[Byte] = {
-    val row = new Array[Byte](stride + 1)
-    row(0) = f.toByte
-    val dst = y * stride
-    var x = 0
-    while (x < stride) {
-      val v = flat(dst + x) & 0xff
-      val a = if (x >= bpp) flat(dst + x - bpp) & 0xff else 0
-      val b = if (y > 0) flat(dst - stride + x) & 0xff else 0
-      val c = if (x >= bpp && y > 0) flat(dst - stride + x - bpp) & 0xff else 0
-      val enc = f match {
-        case 0 => v
-        case 1 => v - a
-        case 2 => v - b
-        case 3 => v - ((a + b) >> 1)
-        case 4 => v - paeth(a, b, c)
-      }
-      row(x + 1) = enc.toByte
-      x += 1
-    }
-    row
   }
 
   /** Encode a baseline PNG. `channels` 1/2/3/4 -> color type 0/4/2/6.
@@ -280,11 +214,11 @@ object Png {
     var y = 0
     while (y < height) {
       val f = if (filterType >= 0) filterType % 5 else y % 5
-      val row = filterRow(flat, y, stride, rawCh, f)
+      val row = PngFilter.filterRow(flat, y, stride, rawCh, f)
       raw.write(row, 0, row.length)
       y += 1
     }
-    chunk(out, "IDAT", deflate(raw.toByteArray))
+    chunk(out, "IDAT", Deflate(raw.toByteArray, java.util.zip.Deflater.BEST_SPEED))
     chunk(out, "IEND", Array.empty[Byte])
     out.toByteArray
   }

@@ -1,7 +1,7 @@
 package graft.pdf
 
 import scala.collection.mutable
-import graft.util.Inflate
+import graft.util.{Inflate, PngFilter}
 
 /** Document-level PDF reader: object table, page tree, metadata, stream
   * decoding. Robustness-first: objects are located by scanning for
@@ -329,8 +329,9 @@ final class PdfDoc(data: Array[Byte]) {
     * XRef streams are near-always FlateDecode + PNG Predictor 12; without
     * undoing the predictor the inflated bytes are row-filter-coded garbage
     * and every object in the stream is silently dropped. PNG predictors
-    * (>= 10) carry a per-row filter byte; TIFF predictor 2 is horizontal
-    * differencing. */
+    * (>= 10) carry a per-row filter byte, undone by the row-filter core
+    * the PNG codec shares (`PngFilter.unfilter`); TIFF predictor 2 is
+    * horizontal differencing. */
   private def applyPredictor(
       data: Array[Byte], parm: Option[PDict], res: PObj => PObj): Array[Byte] = {
     def intOf(key: String, dflt: Int): Int =
@@ -357,44 +358,7 @@ final class PdfDoc(data: Array[Byte]) {
         r += rowLen
       }
       out
-    } else {
-      // PNG row filters 0-4 (None/Sub/Up/Average/Paeth)
-      def paeth(a: Int, b: Int, c: Int): Int = {
-        val p = a + b - c
-        val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
-        if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
-      }
-      val stride = rowLen + 1
-      val nRows = data.length / stride
-      val out = new Array[Byte](nRows * rowLen)
-      val prev = new Array[Byte](rowLen)
-      var r = 0
-      while (r < nRows) {
-        val ft = data(r * stride) & 0xff
-        val src = r * stride + 1
-        val dst = r * rowLen
-        var i = 0
-        while (i < rowLen) {
-          val raw = data(src + i) & 0xff
-          val left = if (i >= bpp) out(dst + i - bpp) & 0xff else 0
-          val up = prev(i) & 0xff
-          val upLeft = if (i >= bpp) prev(i - bpp) & 0xff else 0
-          val v = ft match {
-            case 0 => raw
-            case 1 => raw + left
-            case 2 => raw + up
-            case 3 => raw + ((left + up) / 2)
-            case 4 => raw + paeth(left, up, upLeft)
-            case _ => raw
-          }
-          out(dst + i) = v.toByte
-          i += 1
-        }
-        System.arraycopy(out, dst, prev, 0, rowLen)
-        r += 1
-      }
-      out
-    }
+    } else PngFilter.unfilter(data, data.length / (rowLen + 1), rowLen, bpp)
   }
 
   // zlib first, raw deflate when zlib fails or yields nothing; a stream

@@ -3,6 +3,7 @@ package graft.pdf
 import java.io.ByteArrayOutputStream
 import java.nio.charset.StandardCharsets.ISO_8859_1
 import java.util.zip.Deflater
+import graft.util.Deflate
 
 /** Minimal deterministic PDF writer for the synthetic corpus.
   *
@@ -105,7 +106,7 @@ object PdfWriter {
       mark(num)
       val raw = contentStream(page).getBytes(ISO_8859_1)
       val (body, filter) =
-        if (compress) (deflate(raw), " /Filter /FlateDecode")
+        if (compress) (Deflate(raw, Deflater.DEFAULT_COMPRESSION), " /Filter /FlateDecode")
         else (raw, "")
       w(s"$num 0 obj\n<< /Length ${body.length}$filter >>\nstream\n")
       out.write(body)
@@ -128,20 +129,6 @@ object PdfWriter {
       infoObj.map(n => s" /Info $n 0 R").getOrElse("") + " >>\n")
     w(s"startxref\n$xrefPos\n%%EOF\n")
 
-    out.toByteArray
-  }
-
-  private def deflate(bytes: Array[Byte]): Array[Byte] = {
-    val d = new Deflater(Deflater.DEFAULT_COMPRESSION, /*nowrap=*/ false)
-    d.setInput(bytes)
-    d.finish()
-    val out = new ByteArrayOutputStream(bytes.length)
-    val buf = new Array[Byte](8192)
-    while (!d.finished()) {
-      val k = d.deflate(buf)
-      out.write(buf, 0, k)
-    }
-    d.end()
     out.toByteArray
   }
 

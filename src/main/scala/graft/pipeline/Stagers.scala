@@ -34,8 +34,8 @@ object Stagers {
 
   /** NA fill on string columns — the reference's `fillna("N/A")`
     * (/root/reference/src/serials.py:89-106). */
-  def fillNA(df: DataFrame, columns: Seq[String], value: String = "N/A"): DataFrame =
-    columns.foldLeft(df)((d, c) => d.withColumn(c, coalesce(col(c), lit(value))))
+  def fillNA(df: DataFrame, columns: Seq[String]): DataFrame =
+    columns.foldLeft(df)((d, c) => d.withColumn(c, coalesce(col(c), lit("N/A"))))
 
   /** Positional (row-index) join — the reference's pandas RangeIndex join
     * (/root/reference/src/fetch.py:128-136). ONLY for reproducing the

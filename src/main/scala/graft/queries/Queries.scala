@@ -147,13 +147,13 @@ object Queries {
     * OR-ed tables miss with p ~ 0.003). Every oracle-checked sf dir
     * (<= 2k vectors) resolves to EXACTLY 16 bits, where the Spark
     * fragments are byte-identical to the static 16-bit SQL the oracle
-    * re-derives; instances are memoized (the weight tables hash a few
-    * thousand MD5s). */
-  private val srpCache = new java.util.concurrent.ConcurrentHashMap[Int, SrpLsh]()
+    * re-derives. Built per call, not memoized: the 16-bit tables hash
+    * 8,192 MD5s in ~7 ms warm, against q26's ~2.5 s warm at sf0.01
+    * (4-CPU host). */
   private def srpNearDupFor(nAugRows: Long): SrpLsh = {
     var bits = 16
     while ((1L << bits) < 2L * nAugRows && bits < 40) bits += 1
-    srpCache.computeIfAbsent(bits, b => new SrpLsh(8, b))
+    new SrpLsh(8, bits)
   }
 
   /** Smallest power of ten above both `floor` and `maxId` — the

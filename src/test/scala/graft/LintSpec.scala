@@ -1,6 +1,8 @@
 package graft
 
+import scala.collection.immutable.ListMap
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.EqualTo
 import graft.queries.Queries
 
@@ -23,17 +25,23 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
   // GraftTableSpec owns its join/shuffle discipline
   private val eagerlyLocalized = Set("q19_resume_lineage")
 
-  test("no analyzed plan contains a trivially-true self-equality (join aliasing lint)") {
-    // the oracled queries cover every join in the suite; the non-SQL
-    // ops (q17/q27-core/q40) run whole pipelines eagerly and join nothing
-    // the oracled set doesn't
+  // the oracled queries cover every join in the suite; the non-SQL ops
+  // (q17/q27-core/q40) run whole pipelines eagerly and join nothing the
+  // oracled set doesn't. Each frame is built once for both plan lints:
+  // building one runs its query body's eager work (q17's dumps, q20,
+  // q29, q40's streaming drain, q42)
+  private lazy val frames: ListMap[String, DataFrame] =
     Queries.all.filter(_.oracle.isDefined)
-      .filterNot(q => eagerlyLocalized.contains(q.name)).foreach { q =>
-      val plan = q.fn(spark, sf).queryExecution.analyzed
+      .filterNot(q => eagerlyLocalized.contains(q.name))
+      .map(q => q.name -> q.fn(spark, sf)).to(ListMap)
+
+  test("no analyzed plan contains a trivially-true self-equality (join aliasing lint)") {
+    frames.foreach { case (name, df) =>
+      val plan = df.queryExecution.analyzed
       plan.foreach { node =>
         node.expressions.foreach(_.foreach {
           case e @ EqualTo(l, r) if l.semanticEquals(r) =>
-            fail(s"${q.name}: trivially-true predicate $e in:\n$node")
+            fail(s"$name: trivially-true predicate $e in:\n$node")
           case _ => ()
         })
       }
@@ -48,13 +56,12 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     // PLANS.md audits this manually each round; this lint pins it.
     // Skip q37 (needs its aux fixture written) — it is a binaryFile scan
     // with no joins; the generated-input queries plan fine from sf0.001.
-    val exempt = Set("q16_ann_topk", "q37_pdf_dir_scan") ++ eagerlyLocalized
-    Queries.all.filter(_.oracle.isDefined)
-      .filterNot(q => exempt.contains(q.name)).foreach { q =>
+    val exempt = Set("q16_ann_topk", "q37_pdf_dir_scan")
+    frames.filterNot { case (name, _) => exempt.contains(name) }.foreach { case (name, df) =>
       // executedPlan under AQE prints Initial AND Final sections via
       // toString on the wrapper; use the spark plan tree directly and
       // walk node names instead of string-matching the full dump
-      val plan = q.fn(spark, sf).queryExecution.executedPlan
+      val plan = df.queryExecution.executedPlan
       var bad = List.empty[String]
       plan.foreach { node =>
         val n = node.getClass.getSimpleName
@@ -62,7 +69,7 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
           bad ::= n
       }
       assert(bad.isEmpty,
-        s"${q.name}: scale-killer join operators ${bad.mkString(",")} in the physical plan")
+        s"$name: scale-killer join operators ${bad.mkString(",")} in the physical plan")
     }
   }
 
@@ -99,6 +106,15 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     val constructs = mainFilesContaining("Inflater(")
     assert(constructs == Set("graft/util/Inflate.scala"),
       s"Inflater constructed outside graft/util/Inflate.scala: ${constructs.mkString(", ")}")
+  }
+
+  test("Deflater is constructed only in graft/util/Deflate.scala (source lint)") {
+    // the PDF writer and the PNG encoder each carried a deflate loop, one
+    // of them without end() on failure; new zlib writers go through the
+    // shared helper
+    val constructs = mainFilesContaining("Deflater(")
+    assert(constructs == Set("graft/util/Deflate.scala"),
+      s"Deflater constructed outside graft/util/Deflate.scala: ${constructs.mkString(", ")}")
   }
 
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {

@@ -104,6 +104,27 @@ class PdfSpec extends AnyFunSuite {
     assert(PdfText.extractText(bytes) == "pred")
   }
 
+  test("PNG predictor: a row with an unknown filter byte passes through unchanged") {
+    // /Predictor 12, 4 columns: row 1 None, row 2 filter byte 5 (not a
+    // PNG filter: its bytes are copied raw), row 3 Up — predicted from
+    // row 2's raw bytes
+    val abcd = "ABCD".getBytes("US-ASCII")
+    val filtered = Array[Byte](0) ++ abcd ++ Array[Byte](5, 1, 2, 3, 4, 2, 10, 10, 10, 10)
+    val zos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.DeflaterOutputStream(zos)
+    z.write(filtered); z.close()
+    val payload = new String(zos.toByteArray, "ISO-8859-1")
+    val bytes = (s"%PDF-1.5\n1 0 obj << /Length ${payload.length} /Filter /FlateDecode " +
+      s"/DecodeParms << /Predictor 12 /Columns 4 >> >> stream\n$payload\nendstream endobj\n" +
+      "%%EOF").getBytes("ISO-8859-1")
+    val doc = new PdfDoc(bytes)
+    val st = doc.objects((1, 0)) match {
+      case st: graft.pdf.PStream => st
+      case other => fail(s"object 1 is not a stream: $other")
+    }
+    assert(doc.decodeStream(st).toSeq == (abcd ++ Array[Byte](1, 2, 3, 4, 11, 12, 13, 14)).toSeq)
+  }
+
   test("outline items are not mistaken for the Info dict") {
     // no trailer /Info; an outline (bookmark) dict also carries /Title but
     // has tree-link keys — the fallback must skip it

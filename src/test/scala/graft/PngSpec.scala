@@ -125,6 +125,36 @@ class PngSpec extends AnyFunSuite {
     assert((System.nanoTime() - t0) < 1e9, "bomb guard must reject without inflating")
   }
 
+  test("a filter byte above 4 is rejected even when the CRC is valid") {
+    // 3x3 gray, rows stored unfiltered; PNG allows filter types 0-4 only,
+    // while the shared unfilter passes an unknown type's row through (the
+    // PDF predictor rule), so the decoder must reject it before unfiltering
+    def png(rowFilters: Seq[Int]): Array[Byte] = {
+      val raw = rowFilters.zipWithIndex.flatMap { case (f, y) =>
+        f.toByte +: Seq.tabulate(3)(x => (10 * y + x).toByte)
+      }.toArray
+      val zos = new java.io.ByteArrayOutputStream()
+      val z = new java.util.zip.DeflaterOutputStream(zos)
+      z.write(raw); z.close()
+      val out = new java.io.ByteArrayOutputStream()
+      def chunk(typ: String, data: Array[Byte]): Unit = {
+        val len = java.nio.ByteBuffer.allocate(4).putInt(data.length).array()
+        val body = typ.getBytes("US-ASCII") ++ data
+        val crc = new java.util.zip.CRC32(); crc.update(body)
+        out.write(len); out.write(body)
+        out.write(java.nio.ByteBuffer.allocate(4).putInt(crc.getValue.toInt).array())
+      }
+      out.write(Array(0x89, 0x50, 0x4E, 0x47, 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte))
+      chunk("IHDR", Array[Byte](0, 0, 0, 3, 0, 0, 0, 3, 8, 0, 0, 0, 0))
+      chunk("IDAT", zos.toByteArray)
+      chunk("IEND", Array.empty[Byte])
+      out.toByteArray
+    }
+    val d = Png.decode(png(Seq(0, 0, 0))).getOrElse(fail("unfiltered rows must decode"))
+    assert(d.pixels.toSeq == Seq(0, 1, 2, 10, 11, 12, 20, 21, 22).map(_.toByte))
+    assert(Png.decode(png(Seq(0, 5, 0))).isEmpty, "filter byte 5 in row 2 must fail decode")
+  }
+
   test("q20 corpus pngs: deterministic, all five profiles decode, 17th truncates") {
     val a = graft.corpus.CorpusGen.genPngPage(5)
     val b = graft.corpus.CorpusGen.genPngPage(5)
