@@ -14,33 +14,62 @@ import org.apache.spark.sql.graftshim.Shim
   * would (SURVEY.md §4.3 option, promoted here).
   */
 
-/** float -> IEEE binary16 -> float quantization, reproducing the
-  * reference's np.float16 export downcast
-  * (/root/reference/src/config.py:124-128). */
-case class HalfFloat(child: Expression) extends UnaryExpression {
+/** The shape all six native functions share. Each is a case class over a
+  * unary or binary base, and its companion object holds the kernel
+  * `compute`. The base owns the input type check, which names the SQL
+  * function and what it needs (an array type matches whatever its
+  * containsNull), and the codegen: one null-safe static call
+  * `graft.functions.<ClassName>.compute(<children>)`. It is Serializable
+  * because the bases take arguments: Java deserialization needs the
+  * first non-serializable superclass to have a no-arg constructor. */
+sealed trait NativeFunction extends Expression with Serializable {
+  protected def sqlName: String
+  protected def needs: String
+  protected def accepts: Seq[DataType]
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == FloatType || child.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"half_float needs float or double, got ${child.dataType}")
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val got = children.map(_.dataType)
+    def anyNulls(t: DataType) = t match {
+      case ArrayType(e, _) => ArrayType(e)
+      case other => other
+    }
+    if (got.forall(t => accepts.contains(anyNulls(t)))) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(s"$sqlName needs $needs, got ${got.mkString(", ")}")
+  }
+
+  protected def kernel(args: String*): String =
+    s"${getClass.getName}.compute(${args.mkString(", ")});"
+}
+
+abstract class NativeUnary(protected val sqlName: String, protected val needs: String,
+    protected val accepts: DataType*) extends UnaryExpression with NativeFunction {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c => s"${ev.value} = ${kernel(c)}")
+}
+
+abstract class NativeBinary(protected val sqlName: String, protected val needs: String,
+    protected val accepts: DataType*) extends BinaryExpression with NativeFunction {
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) => s"${ev.value} = ${kernel(a, b)}")
+}
+
+/** float -> IEEE binary16 -> float quantization, reproducing the
+  * reference's np.float16 export downcast. A float input is widened to
+  * double (exact) and rounded once, like a double input. */
+case class HalfFloat(child: Expression)
+    extends NativeUnary("half_float", "float or double", FloatType, DoubleType) {
 
   override def dataType: DataType = FloatType
 
-  override def nullSafeEval(v: Any): Any = v match {
-    case f: java.lang.Float  => graft.textops.Float16.quantize(f.floatValue())
-    case d: java.lang.Double => graft.textops.Float16.quantize(d.doubleValue())
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      child.dataType match {
-        case DoubleType => s"graft.textops.Float16.quantize((double)$c)"
-        case _          => s"graft.textops.Float16.quantize((float)$c)"
-      })
+  override def nullSafeEval(v: Any): Any =
+    HalfFloat.compute(v.asInstanceOf[Number].doubleValue)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
+}
+
+object HalfFloat {
+  def compute(x: Double): Float = graft.textops.Float16.quantize(x)
 }
 
 /** 64-bit SimHash over whitespace tokens: per-token 64-bit mix, signed
@@ -48,21 +77,13 @@ case class HalfFloat(child: Expression) extends UnaryExpression {
   * (public; used for web-scale near-dup detection). Implemented natively
   * so dedup sweeps stay codegen'd at 100 TB.
   */
-case class SimHash64(child: Expression) extends UnaryExpression {
+case class SimHash64(child: Expression)
+    extends NativeUnary("simhash64", "a string column", StringType) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash64 needs a string column, got ${child.dataType}")
-
   override def nullSafeEval(v: Any): Any =
     SimHash64.compute(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.SimHash64.compute($c)")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -127,26 +148,13 @@ object SimHash64 {
   * per-element overhead IS the query cost. Arrays shorter than the other
   * side contribute only their overlap; null elements count as 0.
   */
-case class DotI64(left: Expression, right: Expression) extends BinaryExpression {
+case class DotI64(left: Expression, right: Expression)
+    extends NativeBinary("dot_i64", "two array<bigint> columns", ArrayType(LongType)) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dot_i64 needs two array<bigint> columns, got ${left.dataType}, ${right.dataType}")
-  }
-
   override def nullSafeEval(l: Any, r: Any): Any =
     DotI64.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.DotI64.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -182,22 +190,13 @@ object DotI64 {
   * (md5(null) = null, array_min ignores nulls); an empty or all-null
   * array yields four NULL buckets (concat of a null min).
   */
-case class MinHashBands(child: Expression) extends UnaryExpression {
+case class MinHashBands(child: Expression)
+    extends NativeUnary("minhash_bands", "an array<string> column", ArrayType(StringType)) {
 
   override def dataType: DataType = ArrayType(StringType, containsNull = true)
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"minhash_bands needs an array<string> column, got $t")
-  }
-
   override def nullSafeEval(v: Any): Any =
     MinHashBands.compute(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.MinHashBands.compute($c);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -264,26 +263,13 @@ object MinHashBands {
   * ≈ 716k at sf0.1 that double pass WAS the query's CPU; union size is
   * now derived as |A| + |B| - overlap, exact for distinct arrays.
   */
-case class DistinctOverlap(left: Expression, right: Expression) extends BinaryExpression {
+case class DistinctOverlap(left: Expression, right: Expression)
+    extends NativeBinary("distinct_overlap", "two array<string> columns", ArrayType(StringType)) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"distinct_overlap needs two array<string> columns, got ${left.dataType}, ${right.dataType}")
-  }
-
   override def nullSafeEval(l: Any, r: Any): Any =
     DistinctOverlap.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.DistinctOverlap.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -328,26 +314,13 @@ object DistinctOverlap {
   * string arrays. Null elements (sort_array places them first) are
   * skipped; they cannot occur at the call sites.
   */
-case class SortedOverlapI64(left: Expression, right: Expression) extends BinaryExpression {
+case class SortedOverlapI64(left: Expression, right: Expression)
+    extends NativeBinary("sorted_overlap_i64", "two array<bigint> columns", ArrayType(LongType)) {
 
   override def dataType: DataType = LongType
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(t: DataType) = t match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sorted_overlap_i64 needs two array<bigint> columns, got ${left.dataType}, ${right.dataType}")
-  }
-
   override def nullSafeEval(l: Any, r: Any): Any =
     SortedOverlapI64.compute(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.SortedOverlapI64.compute($a, $b);")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
@@ -389,11 +362,9 @@ object GraftFunctions {
   def dot_i64(a: Column, b: Column): Column =
     Shim.column(DotI64(Shim.expression(a), Shim.expression(b)))
 
-  /** Register for SQL use: half_float(x), simhash64(s), dot_i64(a, b). */
   /** Wrong-arity SQL calls must fail analysis with a named message, not a
-    * raw NoSuchElementException from exprs.head. */
-  private[functions] def requireArity(
-      name: String, exprs: Seq[_], n: Int): Unit =
+    * raw IndexOutOfBoundsException from the builder. */
+  private def requireArity(name: String, exprs: Seq[_], n: Int): Unit =
     if (exprs.length != n)
       throw new IllegalArgumentException(
         s"$name expects $n argument(s), got ${exprs.length}")
@@ -403,21 +374,19 @@ object GraftFunctions {
     * ([[GraftExtensions]]) — so a function added here is structurally
     * incapable of existing on only one path (the round-4 review caught
     * minhash_bands registered per-session but missing from the
-    * extensions table). */
-  private[functions] val registry: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("half_float", classOf[HalfFloat],
-      (exprs: Seq[Expression]) => { requireArity("half_float", exprs, 1); HalfFloat(exprs.head) }),
-    ("simhash64", classOf[SimHash64],
-      (exprs: Seq[Expression]) => { requireArity("simhash64", exprs, 1); SimHash64(exprs.head) }),
-    ("dot_i64", classOf[DotI64],
-      (exprs: Seq[Expression]) => { requireArity("dot_i64", exprs, 2); DotI64(exprs(0), exprs(1)) }),
-    ("minhash_bands", classOf[MinHashBands],
-      (exprs: Seq[Expression]) => { requireArity("minhash_bands", exprs, 1); MinHashBands(exprs.head) }),
-    ("distinct_overlap", classOf[DistinctOverlap],
-      (exprs: Seq[Expression]) => { requireArity("distinct_overlap", exprs, 2); DistinctOverlap(exprs(0), exprs(1)) }),
-    ("sorted_overlap_i64", classOf[SortedOverlapI64],
-      (exprs: Seq[Expression]) => { requireArity("sorted_overlap_i64", exprs, 2); SortedOverlapI64(exprs(0), exprs(1)) }),
-  )
+    * extensions table). Each entry names its SQL function once, with its
+    * arity; the arity check wraps every builder. */
+  private[functions] val registry: Seq[(String, Class[_], Seq[Expression] => Expression)] =
+    Seq[(String, Int, Class[_], Seq[Expression] => Expression)](
+      ("half_float", 1, classOf[HalfFloat], e => HalfFloat(e(0))),
+      ("simhash64", 1, classOf[SimHash64], e => SimHash64(e(0))),
+      ("dot_i64", 2, classOf[DotI64], e => DotI64(e(0), e(1))),
+      ("minhash_bands", 1, classOf[MinHashBands], e => MinHashBands(e(0))),
+      ("distinct_overlap", 2, classOf[DistinctOverlap], e => DistinctOverlap(e(0), e(1))),
+      ("sorted_overlap_i64", 2, classOf[SortedOverlapI64], e => SortedOverlapI64(e(0), e(1))),
+    ).map { case (name, arity, clazz, build) =>
+      (name, clazz, (exprs: Seq[Expression]) => { requireArity(name, exprs, arity); build(exprs) })
+    }
 
   def registerAll(spark: SparkSession): Unit =
     registry.foreach { case (name, _, builder) =>

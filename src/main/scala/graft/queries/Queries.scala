@@ -249,16 +249,16 @@ object Queries {
 
   /** SRP-LSH candidate pairs (q24/q26): every (`a`, `b`) pair sharing a
     * bucket in any table of `stack` and passing `keep`, deduplicated.
-    * `clusterOnA` runs the distinct on an `a`-only repartition, which
-    * also satisfies a downstream window or join keyed by `a`. */
+    * The distinct runs on an `a`-only repartition, which also satisfies
+    * a downstream window or join keyed by `a`. */
   private def srpCandidates(qq: DataFrame, stack: String, id: String, a: String, b: String,
-      keep: String, clusterOnA: Boolean = false): DataFrame = {
+      keep: String): DataFrame = {
     val sigs = qq.selectExpr(id, stack)
     val pairs = sigs.selectExpr(s"$id AS $a", "tbl", "bucket")
       .join(sigs.selectExpr(s"$id AS $b", "tbl AS tbl2", "bucket AS bucket2"),
         expr(s"tbl = tbl2 AND bucket = bucket2 AND $keep"))
       .select(a, b)
-    (if (clusterOnA) pairs.repartition(col(a)) else pairs).distinct()
+    pairs.repartition(col(a)).distinct()
   }
 
   /** (row count, max(vec_id)) of the embeddings table, one job per
@@ -1216,7 +1216,7 @@ object Queries {
         // re-rank window adds no exchange of its own. The probe bound
         // vec_id < 100 is pushed below the join onto the probe side.
         val cand = srpCandidates(qq, sStack, "vec_id", "vec_id", "neighbor_id",
-          "vec_id < 100 AND vec_id <> neighbor_id", clusterOnA = true)
+          "vec_id < 100 AND vec_id <> neighbor_id")
         // re-rank sides join WITHOUT a broadcast hint: the embedding table
         // is the corpus — at 100x it is a multi-GB build side, so the
         // correct shape is a plain shuffle equi-join on vec_id/neighbor_id

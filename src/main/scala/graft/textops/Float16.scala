@@ -6,56 +6,12 @@ package graft.textops
   * The reference downcasts `wordscore` to np.float16 on export
   * (/root/reference/src/config.py:124-128, applied at
   * /root/reference/src/fetch.py:224-227). Spark has no HalfType, so we
-  * quantize: float32 -> half (round-to-nearest-even) -> float32.
-  * JDK 17 lacks Float.floatToFloat16 (added in JDK 20), so both
-  * directions are implemented here.
+  * quantize: value -> half (round-to-nearest-even) -> float32. JDK 17
+  * lacks Float.floatToFloat16 (added in JDK 20), so the rounding is
+  * [[doubleToHalfBits]]. A float input is widened to double, which is
+  * exact, and then rounded once by that same routine.
   */
 object Float16 {
-
-  /** float32 -> binary16 bits, round-to-nearest-even (IEEE 754 default,
-    * matches numpy). */
-  def floatToHalfBits(f: Float): Short = {
-    val bits = java.lang.Float.floatToRawIntBits(f)
-    val sign = (bits >>> 16) & 0x8000
-    val absBits = bits & 0x7fffffff
-
-    if (absBits >= 0x7f800000) {
-      // Inf / NaN
-      val mant = if (absBits > 0x7f800000) 0x0200 else 0 // quiet NaN keeps a bit
-      return (sign | 0x7c00 | mant | ((bits >>> 13) & 0x03ff)).toShort
-    }
-    // Round via magic: add the implicit rounding increment in float32 space.
-    // exponent of float32 unbiased
-    val e = (absBits >>> 23) - 127
-    if (e >= 16) return (sign | 0x7c00).toShort // overflow -> Inf
-    if (e >= -14) {
-      // normal half
-      var mant = absBits & 0x007fffff
-      mant |= 0x00800000 // implicit leading 1
-      val shift = 13 // 23 -> 10 mantissa bits
-      val halfMant = mant >>> shift
-      val rem = mant & ((1 << shift) - 1)
-      val halfExp = e + 15
-      var h = (halfExp << 10) | (halfMant & 0x03ff)
-      // round to nearest even
-      val halfway = 1 << (shift - 1)
-      if (rem > halfway || (rem == halfway && (h & 1) == 1)) h += 1
-      (sign | h).toShort // mantissa overflow carries into exponent correctly
-    } else if (e >= -25) {
-      // subnormal half
-      var mant = (absBits & 0x007fffff) | 0x00800000
-      val shift = 13 + (-14 - e) // extra shift for subnormals
-      if (shift > 31) return sign.toShort
-      val halfMant = mant >>> shift
-      val rem = mant & ((1 << shift) - 1)
-      var h = halfMant
-      val halfway = 1 << (shift - 1)
-      if (rem > halfway || (rem == halfway && (h & 1) == 1)) h += 1
-      (sign | h).toShort
-    } else {
-      sign.toShort // underflow -> signed zero
-    }
-  }
 
   /** binary16 bits -> float32 (exact). */
   def halfBitsToFloat(h: Short): Float = {
@@ -95,7 +51,7 @@ object Float16 {
     val absBits = bits & 0x7fffffffffffffffL
 
     if (absBits >= 0x7ff0000000000000L) {
-      // Inf / NaN (quiet NaN keeps a payload bit, like the float path)
+      // Inf / NaN (a NaN keeps the quiet bit and its top payload bits)
       val mant = if (absBits > 0x7ff0000000000000L) 0x0200 else 0
       return (sign | 0x7c00 | mant | ((bits >>> 42) & 0x03ff).toInt).toShort
     }
@@ -125,9 +81,9 @@ object Float16 {
   }
 
   /** The quantization used on export: value as float16 re-widened. */
-  def quantize(f: Float): Float = halfBitsToFloat(floatToHalfBits(f))
+  def quantize(f: Float): Float = quantize(f.toDouble)
 
-  /** Double input takes the single-rounding path (numpy parity) — NOT
-    * d.toFloat then the float path, which double-rounds at ties. */
+  /** One rounding from double (numpy parity) — NOT d.toFloat first,
+    * which double-rounds at ties. */
   def quantize(d: Double): Float = halfBitsToFloat(doubleToHalfBits(d))
 }

@@ -21,7 +21,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
         .master("local[2]")
         .withExtensions(new graft.functions.GraftExtensions())
         .getOrCreate()
-      // ALL FOUR registered expressions — the extensions path iterates
+      // ALL SIX registered expressions — the extensions path iterates
       // the same registry as registerAll, so a function missing here is
       // a registry bug, not a copy-table drift (the round-4 review found
       // minhash_bands absent from the old hand-written table)
@@ -29,17 +29,25 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
         """SELECT half_float(0.7425D) AS h,
                   simhash64('the quick brown fox') AS s,
                   dot_i64(array(1L, 2L, 3L), array(4L, 5L, 6L)) AS d,
-                  minhash_bands(array('ab', 'cd')) AS m""").head()
+                  minhash_bands(array('ab', 'cd')) AS m,
+                  distinct_overlap(array('a', 'b', 'c'), array('b', 'c', 'd')) AS o,
+                  sorted_overlap_i64(array(1L, 3L, 5L), array(3L, 4L, 5L)) AS so""").head()
       assert(row.getFloat(0) == graft.textops.Float16.quantize(0.7425))
       assert(row.getLong(1) == graft.functions.SimHash64.compute("the quick brown fox"))
       assert(row.getLong(2) == 32L)
       assert(row.getSeq[String](3).length == 4) // 4 r=2 band buckets
+      assert(row.getLong(4) == 2L)
+      assert(row.getLong(5) == 2L)
       // wrong arity fails analysis with a NAMED message, not a raw
-      // NoSuchElementException from exprs.head
-      val e = intercept[Exception] { s2.sql("SELECT dot_i64(array(1L))").head() }
+      // exception from the builder; one binary and one unary call, as the
+      // check is shared by every registry entry
       def messages(t: Throwable): Seq[String] =
         if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains("dot_i64 expects 2")), messages(e).mkString("; "))
+      Seq("SELECT dot_i64(array(1L))" -> "dot_i64 expects 2",
+          "SELECT simhash64('a', 'b')" -> "simhash64 expects 1").foreach { case (q, want) =>
+        val e = intercept[Exception] { s2.sql(q).head() }
+        assert(messages(e).exists(_.contains(want)), messages(e).mkString("; "))
+      }
     } finally {
       prevDefault.foreach(SparkSession.setDefaultSession)
       prevActive.foreach(SparkSession.setActiveSession)

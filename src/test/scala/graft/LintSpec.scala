@@ -4,6 +4,9 @@ import scala.collection.immutable.ListMap
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.EqualTo
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import graft.queries.Queries
 
 /** Regression armor for the two bug classes this project actually hit
@@ -57,17 +60,27 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     // Skip q37 (needs its aux fixture written) — it is a binaryFile scan
     // with no joins; the generated-input queries plan fine from sf0.001.
     val exempt = Set("q16_ann_topk", "q37_pdf_dir_scan")
+    // under AQE the executed plan is an AdaptiveSparkPlanExec LEAF, so a
+    // plain foreach never reaches a join: walk AQE's initial plan and the
+    // plans behind cached relations instead (QueriesSpec's exchangeCount
+    // descent), and match node names rather than the string dump
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.initialPlan)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def scaleKillers(df: DataFrame): Seq[String] =
+      nodes(df.queryExecution.executedPlan).map(_.getClass.getSimpleName)
+        .filter(n => n.contains("BroadcastNestedLoopJoin") || n.contains("CartesianProduct"))
+    // controls: the walk sees a plain cross join, and q16's exemption is
+    // a live one (its brute-force baseline still plans a nested loop)
+    val cross = scaleKillers(spark.range(5).crossJoin(spark.range(5)))
+    assert(cross.nonEmpty, "the plan walk missed a crossJoin's nested-loop join")
+    val q16 = scaleKillers(frames("q16_ann_topk"))
+    assert(q16.exists(_.contains("BroadcastNestedLoopJoin")),
+      s"q16's exemption is stale: its plan shows ${q16.mkString(",")}")
     frames.filterNot { case (name, _) => exempt.contains(name) }.foreach { case (name, df) =>
-      // executedPlan under AQE prints Initial AND Final sections via
-      // toString on the wrapper; use the spark plan tree directly and
-      // walk node names instead of string-matching the full dump
-      val plan = df.queryExecution.executedPlan
-      var bad = List.empty[String]
-      plan.foreach { node =>
-        val n = node.getClass.getSimpleName
-        if (n.contains("BroadcastNestedLoopJoin") || n.contains("CartesianProduct"))
-          bad ::= n
-      }
+      val bad = scaleKillers(df)
       assert(bad.isEmpty,
         s"$name: scale-killer join operators ${bad.mkString(",")} in the physical plan")
     }

@@ -95,6 +95,23 @@ class TextOpsSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     assert(Float16.quantize(0.1f) == 0.0999755859375f) // np.float16(0.1)
     assert(Float16.quantize(65504f) == 65504f) // fp16 max
     assert(Float16.quantize(65520f).isPosInfinity) // overflow rounds to inf
+    // (float32 input bits, expected binary16 bits), compared bit for bit:
+    // ties, signed zero and NaN payloads through the float overload
+    val cases: Seq[(Int, Int)] = Seq(
+      (0x3f801000, 0x3c00), // 1 + 2^-11: tie, rounds to even (down to 1.0)
+      (0x3f803000, 0x3c02), // 1 + 3*2^-11: tie, rounds to even (up)
+      (0x33c00000, 0x0002), // 3*2^-25 = 1.5 min subnormals: tie, up to even
+      (0x34200000, 0x0002), // 5*2^-25 = 2.5 min subnormals: tie, down to even
+      (0x80000000, 0x8000), // -0.0 keeps its sign
+      (0x7fc12345, 0x7e09), // quiet NaN keeps its top payload bits
+      (0xffc00001, 0xfe00), // negative quiet NaN, payload below half precision
+    )
+    cases.foreach { case (in, half) =>
+      val got = java.lang.Float.floatToRawIntBits(
+        Float16.quantize(java.lang.Float.intBitsToFloat(in)))
+      val want = java.lang.Float.floatToRawIntBits(Float16.halfBitsToFloat(half.toShort))
+      assert(got == want, f"quantize(0x$in%08x): got bits 0x$got%08x, want 0x$want%08x")
+    }
   }
 
   test("double -> float16 single-rounds like numpy (no float32 double-rounding)") {
