@@ -49,54 +49,16 @@ object Boilerplate {
   def extract(html: String): Extraction = extract(HtmlParser.parse(html))
 
   def extract(root: HElem): Extraction = {
-    val main = mainContainer(root)
-    val mainText = main.map(blockTexts(_).mkString("\n")).getOrElse("")
-    // ONE pre-order pass feeds every field heuristic below (title,
-    // abstract, doi, citations) — semantics identical to the per-field
-    // find* methods, which each re-traversed the tree. This is the hot
-    // path of the whole engine: it runs per page of the corpus.
-    var firstH1: HElem = null
-    var firstTitleTag: HElem = null
-    var firstAbstract: HElem = null
-    var doiMetaSeen = false
-    var doiMetaContent: Option[String] = None
-    var firstDoiMarker: HElem = null
-    val cites = mutable.ListBuffer.empty[HElem]
-    val it = root.descendants
-    while (it.hasNext) {
-      val e = it.next()
-      if (firstH1 == null && e.tag == "h1") firstH1 = e
-      if (firstTitleTag == null && e.tag == "title") firstTitleTag = e
-      val cls = e.attrs.getOrElse("class", "")
-      val idv = e.attrs.getOrElse("id", "")
-      val hasMarker = cls.length != 0 || idv.length != 0
-      val markerSp = if (hasMarker) (cls + " " + idv).toLowerCase(java.util.Locale.ROOT) else " "
-      if (firstAbstract == null && hasMarker && markerSp.contains("abstract") && BlockTags.contains(e.tag))
-        firstAbstract = e
-      if (!doiMetaSeen && e.tag == "meta" &&
-          e.attr("name").exists(n => n.equalsIgnoreCase("citation_doi") || n.equalsIgnoreCase("dc.identifier"))) {
-        doiMetaSeen = true
-        doiMetaContent = e.attr("content")
-      }
-      // findDoi's marker is class+id WITHOUT a separator (kept verbatim)
-      if (firstDoiMarker == null && hasMarker &&
-          (cls + idv).toLowerCase(java.util.Locale.ROOT).contains("doi"))
-        firstDoiMarker = e
-      // substring pre-check ("ref" also covers "reference") before the
-      // word-exact split — most elements carry no class/id at all
-      if (e.tag == "cite" ||
-          (hasMarker && (markerSp.contains("ref") || markerSp.contains("citation")) &&
-            MarkerSplit.split(markerSp).exists(w => w == "ref" || w == "citation" || w == "reference")))
-        cites += e
-    }
+    val w = new Walk(root)
+    val mainText = Option(w.best).map(blockTexts(_).mkString("\n")).getOrElse("")
 
     // contentText (not normalizedText) everywhere a structured field is
     // built from a subtree: an inline <script>/<style> inside an h1 or a
     // citation block must not leak code into the field — the same rule
     // mainText already follows via block emission
-    val title = Option(firstH1).map(contentText).filter(_.nonEmpty)
-      .orElse(Option(firstTitleTag).map(contentText).filter(_.nonEmpty))
-    val abstractText = Option(firstAbstract).map { e =>
+    val title = Option(w.firstH1).map(contentText).filter(_.nonEmpty)
+      .orElse(Option(w.firstTitleTag).map(contentText).filter(_.nonEmpty))
+    val abstractText = Option(w.firstAbstract).map { e =>
       val texts = blockTexts(e)
       val body = texts match {
         case h :: rest if h.equalsIgnoreCase("abstract") => rest
@@ -104,10 +66,10 @@ object Boilerplate {
       }
       body.mkString("\n")
     }.filter(_.nonEmpty)
-    val doi = doiMetaContent.flatMap(Identifiers.extract)
-      .orElse(Option(firstDoiMarker).flatMap(e => Identifiers.extract(contentText(e))))
+    val doi = w.doiMetaContent.flatMap(Identifiers.extract)
+      .orElse(Option(w.firstDoiMarker).flatMap(e => Identifiers.extract(contentText(e))))
       .orElse(Identifiers.extract(mainText))
-    val citations = leafMost(cites.toList)
+    val citations = leafMost(w.cites.toList)
       .map(contentText).filter(_.nonEmpty)
 
     Extraction(
@@ -124,23 +86,78 @@ object Boilerplate {
     * to the tight main block whenever real boilerplate exists).
     * Ties break toward the deeper (tighter) container.
     */
-  def mainContainer(root: HElem): Option[HElem] = {
-    // candidates are gathered during the single bottom-up pass (no
-    // per-element stats map, no second traversal); preIdx preserves the
-    // original pre-order maxBy tie behavior exactly: max (leafScore,
-    // depth), first-in-pre-order among full ties
-    var best: HElem = null
-    var bestScore = 0.0
-    var bestDepth = -1
-    var bestPre = Int.MaxValue
-    var preCounter = 0
+  def mainContainer(root: HElem): Option[HElem] = Option(new Walk(root).best)
 
-    def compute(e: HElem, depth: Int, inLink: Boolean): Stats = {
+  /** The one tree walk behind `extract`, run by the constructor. Bottom up
+    * it gathers the classifier's stats and keeps the best container (no
+    * per-element stats map, no second traversal). In the same pre-order
+    * over every element below `root`, DropTags subtrees included (they
+    * add no stats), it picks each structured field's candidates exactly
+    * as the standalone find* heuristics do: the first h1, title, abstract
+    * block, DOI meta and DOI marker, and every citation candidate. */
+  private final class Walk(root: HElem) {
+    // preIdx preserves the original pre-order maxBy tie behavior exactly:
+    // max (leafScore, depth), first-in-pre-order among full ties
+    var best: HElem = null
+    private var bestScore = 0.0
+    private var bestDepth = -1
+    private var bestPre = Int.MaxValue
+    private var preCounter = 0
+
+    var firstH1: HElem = null
+    var firstTitleTag: HElem = null
+    var firstAbstract: HElem = null
+    private var doiMetaSeen = false
+    var doiMetaContent: Option[String] = None
+    var firstDoiMarker: HElem = null
+    val cites = mutable.ListBuffer.empty[HElem]
+
+    compute(root, 0, inLink = false)
+
+    private def pick(e: HElem): Unit = {
+      val tag = e.tag
+      if (firstH1 == null && tag == "h1") firstH1 = e
+      if (firstTitleTag == null && tag == "title") firstTitleTag = e
+      if (!doiMetaSeen && tag == "meta" &&
+          e.attr("name").exists(n => n.equalsIgnoreCase("citation_doi") || n.equalsIgnoreCase("dc.identifier"))) {
+        doiMetaSeen = true
+        doiMetaContent = e.attr("content")
+      }
+      val cls = e.attrs.getOrElse("class", "")
+      val idv = e.attrs.getOrElse("id", "")
+      if (cls.isEmpty && idv.isEmpty) {
+        if (tag == "cite") cites += e
+      } else {
+        // the find* heuristics read the class and id joined by " " (no
+        // marker word spans the separator) and, for the DOI marker,
+        // joined with no separator, so "d" + "oi" is a hit there
+        val lc = cls.toLowerCase(java.util.Locale.ROOT)
+        val li = idv.toLowerCase(java.util.Locale.ROOT)
+        if (firstAbstract == null && (lc.contains("abstract") || li.contains("abstract")) &&
+            BlockTags.contains(tag))
+          firstAbstract = e
+        if (firstDoiMarker == null &&
+            (if (li.isEmpty) lc else if (lc.isEmpty) li else lc + li).contains("doi"))
+          firstDoiMarker = e
+        if (tag == "cite" || citeMarker(lc) || citeMarker(li)) cites += e
+      }
+    }
+
+    private def pickAll(e: HElem): Unit = {
+      pick(e)
+      e.children.foreach { case c: HElem => pickAll(c); case _ => () }
+    }
+
+    private def compute(e: HElem, depth: Int, inLink: Boolean): Stats = {
       val preIdx = preCounter
       preCounter += 1
+      if (e ne root) pick(e)
       val s = new Stats
       s.depth = depth
-      if (DropTags.contains(e.tag)) return s
+      if (DropTags.contains(e.tag)) {
+        e.children.foreach { case c: HElem => pickAll(c); case _ => () }
+        return s
+      }
       e.children.foreach {
         case t: HText =>
           val len = normLen(t.data)
@@ -176,9 +193,14 @@ object Boilerplate {
       }
       s
     }
-    compute(root, 0, inLink = false)
-    Option(best)
   }
+
+  /** A lowercased class or id naming a citation: one of its [\s_-]-split
+    * words is "ref", "citation" or "reference" (the substring test first:
+    * "ref" also covers "reference"). */
+  private def citeMarker(m: String): Boolean =
+    (m.contains("ref") || m.contains("citation")) &&
+      MarkerSplit.split(m).exists(w => w == "ref" || w == "citation" || w == "reference")
 
   /** Normalized text of an element SKIPPING DropTags subtrees — the leaf
     * emission form: a leaf block polluted by an inline script/style must

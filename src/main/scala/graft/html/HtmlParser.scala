@@ -91,21 +91,27 @@ object HtmlParser {
     }
     var i = 0
     val n = html.length
-    val text = new StringBuilder
+    val text = new java.lang.StringBuilder
 
     def flushText(): Unit = {
-      if (text.nonEmpty) {
+      if (text.length > 0) {
         stack.top.append(new HText(Entities.decode(text.toString)))
-        text.clear()
+        text.setLength(0)
       }
     }
 
     while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<' && i + 1 < n) {
-        val c1 = html.charAt(i + 1)
+      val c1 = if (html.charAt(i) == '<' && i + 1 < n) html.charAt(i + 1) else ' '
+      if (c1 != '!' && c1 != '/' && !c1.isLetter) {
+        // a text run, copied in bulk up to the next '<' (a '<' that starts
+        // no tag is text too)
+        val lt = html.indexOf('<', i + 1)
+        val stop = if (lt < 0) n else lt
+        text.append(html, i, stop)
+        i = stop
+      } else {
+        flushText()
         if (c1 == '!') {
-          flushText()
           if (html.startsWith("<!--", i)) {
             val end = html.indexOf("-->", i + 4)
             val stop = if (end < 0) n else end
@@ -116,7 +122,6 @@ object HtmlParser {
             i = if (end < 0) n else end + 1
           }
         } else if (c1 == '/') {
-          flushText()
           val end = html.indexOf('>', i)
           val stop = if (end < 0) n else end
           // per HTML5, end-tag attributes and a trailing slash are parsed
@@ -131,8 +136,7 @@ object HtmlParser {
             if (stack.size > 1) popS()
           }
           i = if (end < 0) n else end + 1
-        } else if (c1.isLetter) {
-          flushText()
+        } else {
           val (elem, selfClosed, after) = parseTag(html, i)
           i = after
           val tag = elem.tag
@@ -197,11 +201,7 @@ object HtmlParser {
             // pages) children attach to the current top instead of
             // nesting deeper, so downstream recursive walks stay bounded
           }
-        } else {
-          text.append(c); i += 1
         }
-      } else {
-        text.append(c); i += 1
       }
     }
     flushText()
@@ -209,14 +209,18 @@ object HtmlParser {
   }
 
   /** Parse one open tag starting at `<`; returns (element, selfClosed,
-    * index after '>'). */
+    * index after '>'). A repeated attribute is dropped: the first value
+    * wins, as in HTML5 tree construction (and lexbor, behind the
+    * reference's selectolax). */
   private def parseTag(html: String, start: Int): (HElem, Boolean, Int) = {
     var i = start + 1
     val n = html.length
     val tagStart = i
     while (i < n && (html.charAt(i).isLetterOrDigit || html.charAt(i) == '-')) i += 1
     val tag = html.substring(tagStart, i).toLowerCase(java.util.Locale.ROOT)
-    val attrs = mutable.LinkedHashMap.empty[String, String]
+    var attrs = Map.empty[String, String]
+    def put(name: String, value: String): Unit =
+      if (!attrs.contains(name)) attrs = attrs.updated(name, value)
     var selfClosed = false
     var done = false
     while (i < n && !done) {
@@ -239,21 +243,21 @@ object HtmlParser {
               val q = html.charAt(i); i += 1
               val vStart = i
               while (i < n && html.charAt(i) != q) i += 1
-              attrs.update(name, Entities.decode(html.substring(vStart, i)))
+              put(name, Entities.decode(html.substring(vStart, i)))
               if (i < n) i += 1
             } else {
               val vStart = i
               while (i < n && !html.charAt(i).isWhitespace && html.charAt(i) != '>') i += 1
-              attrs.update(name, Entities.decode(html.substring(vStart, i)))
+              put(name, Entities.decode(html.substring(vStart, i)))
             }
           } else if (name.nonEmpty) {
-            attrs.update(name, "")
+            put(name, "")
           } else {
             i += 1 // defensive: avoid infinite loop on malformed input
           }
       }
     }
-    (HElem(tag, attrs.toMap), selfClosed, i)
+    (HElem(tag, attrs), selfClosed, i)
   }
 }
 

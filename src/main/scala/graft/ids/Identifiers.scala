@@ -93,22 +93,40 @@ object Identifiers {
     }
   }
 
-  /** Try each DOI pattern, then each arXiv pattern, over the casefolded
-    * text; first hit is standardized (doi_regex.py:70-82). DOI patterns
-    * standardize group(1); arXiv patterns standardize the WHOLE match
-    * (group 0), reproducing the reference's branch at :78-79.
-    */
-  /** Case-insensitive substring scan without folding the haystack. */
-  private def containsIgnoreCase(hay: String, needle: String): Boolean = {
-    val last = hay.length - needle.length
+  /** Whether `hay` contains any of `needles` under
+    * `regionMatches(true, …)`, in one pass without folding the haystack.
+    * Each needle is non-empty and starts with an ASCII char, which an
+    * ASCII hay char case-matches only if the two are equal up to ASCII
+    * case; so regionMatches runs only there and at non-ASCII chars, where
+    * folds like 'ı'/'İ' → 'i' still apply. */
+  private[graft] def containsIgnoreCase(hay: String, needles: Array[String]): Boolean = {
+    def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+    val firsts = needles.map { nd =>
+      require(nd.nonEmpty && nd.charAt(0) < 0x80, s"needle must start with an ASCII char: '$nd'")
+      asciiLower(nd.charAt(0))
+    }
     var i = 0
-    while (i <= last) {
-      if (hay.regionMatches(true, i, needle, 0, needle.length)) return true
+    while (i < hay.length) {
+      val c = hay.charAt(i)
+      val lc = asciiLower(c)
+      var k = 0
+      while (k < needles.length) {
+        if ((c >= 0x80 || lc == firsts(k)) &&
+            hay.regionMatches(true, i, needles(k), 0, needles(k).length)) return true
+        k += 1
+      }
       i += 1
     }
     false
   }
 
+  private val ArxivLiterals = Array("arxiv", ".pdf")
+
+  /** Try each DOI pattern, then each arXiv pattern, over the casefolded
+    * text; first hit is standardized (doi_regex.py:70-82). DOI patterns
+    * standardize group(1); arXiv patterns standardize the WHOLE match
+    * (group 0), reproducing the reference's branch at :78-79.
+    */
   def extract(text: String): Option[String] = {
     // necessary-condition prescans (semantics-preserving) run on the RAW
     // text: every DOI pattern contains the case-invariant literal `10.`,
@@ -119,8 +137,7 @@ object Identifiers {
     // differ on ligatures/sharp-s (U+FB01 etc.), which do not occur in
     // well-formed identifiers (divergence documented, accepted).
     val mightDoi = text.contains("10.")
-    val mightArxiv = containsIgnoreCase(text, "arxiv") ||
-      containsIgnoreCase(text, ".pdf") || anchoredIdShape(text)
+    val mightArxiv = containsIgnoreCase(text, ArxivLiterals) || anchoredIdShape(text)
     if (!mightDoi && !mightArxiv) return None
     val folded = text.toLowerCase(java.util.Locale.ROOT)
     if (mightDoi) {

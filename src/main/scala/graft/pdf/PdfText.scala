@@ -202,45 +202,57 @@ object PdfText {
   private val XTol = 1.0
   private val YTol = 3.0
 
+  /** Stable (y, x0) order of the line grouping, and the x0 order of a
+    * line: java.lang.Double.compare on the primitive fields, which is
+    * what Ordering[Double] does, so NaN sorts after every number and
+    * -0.0 before 0.0. */
+  private val ByYX: java.util.Comparator[PChar] = (a, b) => {
+    val c = java.lang.Double.compare(a.y, b.y)
+    if (c != 0) c else java.lang.Double.compare(a.x0, b.x0)
+  }
+  private val ByX: java.util.Comparator[PChar] = (a, b) => java.lang.Double.compare(a.x0, b.x0)
+
   /** pdfplumber-shaped extract_text over positioned chars. */
   def assemble(chars: List[PChar]): String = {
-    if (chars.isEmpty) return ""
     // group into lines by top-down y with tolerance, CHAINED off the
     // previous char like pdfplumber's cluster_objects/cluster_list (a new
     // cluster starts when the gap from the PREVIOUS sorted value exceeds
     // the tolerance — anchoring at the line's first char instead would
     // split a drifting baseline, e.g. y = 100/102.5/105 with YTol 3, that
-    // pdfplumber chains into one line)
-    val sorted = chars.sortBy(c => (c.y, c.x0))
-    val lines = mutable.ListBuffer.empty[mutable.ListBuffer[PChar]]
-    var curLine: mutable.ListBuffer[PChar] = null
-    var prevY = Double.NaN
-    sorted.foreach { ch =>
-      if (curLine == null || ch.y - prevY > YTol) {
-        curLine = mutable.ListBuffer(ch)
-        lines += curLine
-      } else curLine += ch
-      prevY = ch.y
-    }
-    val lineTexts = lines.map { line =>
-      val ordered = line.sortBy(_.x0)
-      val words = mutable.ListBuffer.empty[String]
-      val cur = new StringBuilder
+    // pdfplumber chains into one line). Both sorts are TimSort, so stable.
+    val cs = chars.toArray
+    java.util.Arrays.sort(cs, ByYX)
+    val out = new java.lang.StringBuilder
+    var start = 0
+    while (start < cs.length) {
+      var end = start + 1
+      while (end < cs.length && !(cs(end).y - cs(end - 1).y > YTol)) end += 1
+      java.util.Arrays.sort(cs, start, end, ByX)
+      // words are maximal runs of non-space chars with no gap over XTol;
+      // they join with " ", and non-empty lines with "\n"
+      val lineStart = out.length
+      var inWord = false
       var prevX1 = Double.NaN
-      ordered.foreach { ch =>
-        val gap = if (prevX1.isNaN) 0.0 else ch.x0 - prevX1
-        if (ch.c == ' ') {
-          if (cur.nonEmpty) { words += cur.toString; cur.clear() }
-        } else {
-          if (cur.nonEmpty && gap > XTol) { words += cur.toString; cur.clear() }
-          cur.append(ch.c)
+      var k = start
+      while (k < end) {
+        val ch = cs(k)
+        if (ch.c == ' ') inWord = false
+        else {
+          // a NaN x0 or x1 makes the gap NaN, which never splits
+          if (inWord && ch.x0 - prevX1 > XTol) inWord = false
+          if (!inWord) {
+            if (out.length > lineStart) out.append(' ')
+            else if (lineStart > 0) out.append('\n')
+            inWord = true
+          }
+          out.append(ch.c)
         }
         prevX1 = ch.x1
+        k += 1
       }
-      if (cur.nonEmpty) words += cur.toString
-      words.mkString(" ")
+      start = end
     }
-    lineTexts.filter(_.nonEmpty).mkString("\n")
+    out.toString
   }
 
   /** Full-document text: pages joined with " "

@@ -87,8 +87,54 @@ class CorpusExtractionSpec extends AnyFunSuite {
     }
   }
 
+  test("every scored field is pinned: SHA-256 over score(extract(_)) for docIds 0-4999") {
+    // the goldens pin text, title, abstract, doi and citations; this digest
+    // also pins top-3 terms, parentheticals, counts and wordscore, and the
+    // 50x-tiled heavy doc every 97th id covers the parsers' large inputs
+    assert(CorpusExtractionSpec.scoredDigest(0L until 5000L) ==
+      "d23fea2d427b4a981e162643351349e20381a21fc85246233b54c7fa4d75681f")
+  }
+
   test("skew fixture: hot domain holds ~30% of rows") {
     val hot = (0L until 1000L).count(id => CorpusGen.domainId(id) == 0)
     assert(hot == 300)
+  }
+}
+
+object CorpusExtractionSpec {
+
+  /** SHA-256 over every field of `Extractor.score(Extractor.extract(_))`
+    * for the given docIds, in order. Each id with id % 97 == 96 is the
+    * 50x-tiled heavy doc instead of the plain one. */
+  def scoredDigest(ids: Iterable[Long]): String =
+    pagesDigest(ids.iterator.map { id =>
+      if (id % 97 == 96) CorpusGen.genHeavyPage(id, 50) else CorpusGen.genDoc(id)._1
+    })
+
+  /** SHA-256 over every `ScoredDoc` field of each page, in order. */
+  def pagesDigest(pages: Iterator[graft.model.PageRecord]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val buf = java.nio.ByteBuffer.allocate(8)
+    def long(v: Long): Unit = { buf.clear(); buf.putLong(v); md.update(buf.array, 0, 8) }
+    def str(s: String): Unit = {
+      val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      long(b.length.toLong); md.update(b)
+    }
+    def strs(xs: Seq[String]): Unit = { long(xs.length.toLong); xs.foreach(str) }
+    def terms(xs: Seq[graft.model.TermCount]): Unit = {
+      long(xs.length.toLong); xs.foreach { t => str(t.term); long(t.count.toLong) }
+    }
+    val target = CorpusGen.TargetWords.toSet
+    val bycatch = CorpusGen.BycatchWords.toSet
+    pages.foreach { page =>
+      val d = Extractor.score(Extractor.extract(page), target, bycatch)
+      str(d.url); str(d.kind); str(d.extracted_text); str(d.title); str(d.abstract_text)
+      str(d.doi); strs(d.citation_spans)
+      long(d.matching_terms.toLong); long(d.bycatch_terms.toLong); long(d.total_word_count.toLong)
+      long(java.lang.Float.floatToRawIntBits(d.wordscore).toLong)
+      terms(d.target_terms_top_3); terms(d.bycatch_terms_top_3); strs(d.paper_parentheticals)
+      long(d.n_bytes); long(if (d.ok) 1L else 0L); str(d.error)
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
   }
 }

@@ -52,6 +52,60 @@ class HtmlSpec extends AnyFunSuite {
     assert(ex.citationSpans == Boilerplate.findCitations(dom))
   }
 
+  test("fused extract finds fields inside dropped subtrees and case-folded markers") {
+    // DropTags subtrees add nothing to the classifier's stats but are
+    // still searched for fields, in document order, like the find* walks
+    val body = "<main><p>" + "Body text that is long enough to be the main content block. " * 2 +
+      "</p></main>"
+    val pages = Seq(
+      "form h1" -> s"<form><h1>Form Title</h1></form><h1>Later</h1>$body",
+      "svg cite" -> s"$body<svg><cite>Svg, A. (2001). Cited inside svg.</cite></svg><p><cite>Plain cite</cite></p>",
+      "button doi" -> s"""$body<button class="doi">doi:10.5555/button.1</button>""",
+      "noscript abstract" ->
+        s"""<noscript><div class="abstract"><p>Abstract</p><p>Hidden abstract text.</p></div></noscript>$body""",
+      "upper-case markers" -> (s"""<DIV ID="ABSTRACT-Box"><P>Upper abstract.</P></DIV>$body""" +
+        """<SPAN CLASS="Ref">Upper ref.</SPAN><LI ID="Citation_2">Upper citation.</LI>""" +
+        """<DIV CLASS="D" ID="OI">10.7777/split.marker</DIV>"""),
+      "non-ASCII markers" -> (s"""<section class="Résumé İABSTRACT"><p>Dotted abstract.</p></section>$body""" +
+        """<span id="ΣREF-ref">Greek ref.</span><b class="ĐOI" id="dOİ">10.8888/dotted.marker</b>"""))
+    pages.foreach { case (name, html) =>
+      val root = HtmlParser.parse(html)
+      val ex = Boilerplate.extract(root)
+      assert(ex.title == Boilerplate.findTitle(root), s"title drift: $name")
+      assert(ex.abstractText == Boilerplate.findAbstract(root), s"abstract drift: $name")
+      assert(ex.doi == Boilerplate.findDoi(root, ex.mainText), s"doi drift: $name")
+      assert(ex.citationSpans == Boilerplate.findCitations(root), s"citations drift: $name")
+    }
+    def ex(name: String) = Boilerplate.extract(HtmlParser.parse(pages.toMap.apply(name)))
+    assert(ex("form h1").title.contains("Form Title"))
+    assert(ex("svg cite").citationSpans == List("Svg, A. (2001). Cited inside svg.", "Plain cite"))
+    assert(ex("button doi").doi.contains("10.5555/button.1"))
+    assert(ex("noscript abstract").abstractText.contains("Hidden abstract text."))
+    val upper = ex("upper-case markers")
+    assert(upper.abstractText.contains("Upper abstract."))
+    assert(upper.citationSpans == List("Upper ref.", "Upper citation."))
+    assert(upper.doi.contains("10.7777/split.marker"))
+    val nonAscii = ex("non-ASCII markers")
+    assert(nonAscii.abstractText.contains("Dotted abstract."))
+    assert(nonAscii.citationSpans == List("Greek ref."))
+    // "dOİ" lowercases to "doi" plus a combining dot, so it is a DOI marker
+    assert(nonAscii.doi.contains("10.8888/dotted.marker"))
+  }
+
+  test("a repeated attribute keeps its first value") {
+    val d = HtmlParser.parse(
+      """<div class="x" class="abstract" id="a" id="b"><p>Not an abstract.</p></div>""" +
+        """<p data-k=1 data-k='2' data-k>v</p>""")
+    val div = Selectors.cssFirst(d, "div").get
+    assert(div.attrs == Map("class" -> "x", "id" -> "a"))
+    assert(Selectors.cssFirst(d, "div.x#a").isDefined)
+    assert(Selectors.cssFirst(d, "div.abstract").isEmpty && Selectors.cssFirst(d, "#b").isEmpty)
+    assert(Selectors.css(d, "p").toList.last.attr("data-k").contains("1"))
+    // the field heuristics read the first class, so this is no abstract block
+    assert(Boilerplate.extract(d).abstractText.isEmpty)
+    assert(Boilerplate.findAbstract(d).isEmpty)
+  }
+
   test("full HTML4 named entity set decodes") {
     val d = HtmlParser.parse(
       "<body><p>caf&eacute; &Uuml;ber r&eacute;sum&eacute; &alpha;&beta; &euro;9 &frac12; &deg;C &Omega;</p></body>")

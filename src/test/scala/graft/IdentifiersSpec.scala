@@ -99,6 +99,43 @@ class IdentifiersSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     assert(Identifiers.extract(id) == Some(id))
   }
 
+  test("case-insensitive prescan equals a regionMatches scan at every index (seeded property)") {
+    def definition(hay: String, needle: String): Boolean =
+      (0 to hay.length - needle.length).exists(i => hay.regionMatches(true, i, needle, 0, needle.length))
+    // mixed-case fragments of the arXiv literals plus the non-ASCII chars
+    // that case-fold onto ASCII letters: dotless i and dotted I onto 'i',
+    // the Kelvin sign onto 'k', long s onto 's'. The extra needles start
+    // with those letters, so a non-ASCII char can begin a match.
+    val alphabet = Vector("a", "A", "r", "R", "x", "X", "i", "I", "v", "V", "ar", "Xi", "xiV",
+      "aRx", "ARXIV", "arxi", "p", "P", "d", "D", "f", "F", ".", ".p", ".Pd", "pDF", ".PDF",
+      "k", "K", "s", "S", "\u0131", "\u0130", "\u212A", "\u017F", "0", "7", " ")
+    val needles = Vector("arxiv", ".pdf", "iv", "kp", "s.")
+    val rnd = new scala.util.Random(8)
+    (1 to 20000).foreach { _ =>
+      val hay = Vector.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
+      val a = needles(rnd.nextInt(needles.length))
+      val b = needles(rnd.nextInt(needles.length))
+      assert(Identifiers.containsIgnoreCase(hay, Array(a)) == definition(hay, a), s"$a in $hay")
+      assert(Identifiers.containsIgnoreCase(hay, Array(a, b)) ==
+        (definition(hay, a) || definition(hay, b)), s"$a or $b in $hay")
+    }
+    // the folds the prescan must keep: dotless and dotted I match 'i'
+    assert(Identifiers.containsIgnoreCase("arx\u0131v", Array("arxiv")))
+    assert(Identifiers.containsIgnoreCase("ARX\u0130V", Array("arxiv")))
+    assert(Identifiers.containsIgnoreCase("\u0130v", Array("iv")))
+  }
+
+  test("extract: arXiv prescan hits at index 0, at the last index, after a non-ASCII char") {
+    assert(Identifiers.extract("arXiv:2101.01234") == Some("2101.01234"))
+    assert(Identifiers.extract("see 2101.01234v2.pdf") == Some("2101.01234"))
+    assert(Identifiers.extract("\u00e9t\u00e9 ARXIV:1901.12345") == Some("1901.12345"))
+    assert(Identifiers.extract("\u0130 2101.01234.PDF") == Some("2101.01234"))
+    // the prescan matches the dotless i, but the arXiv pattern runs over
+    // the lowercased text, where it stays dotless
+    assert(Identifiers.extract("arX\u0131v:2101.01234") == None)
+    assert(Identifiers.extract("no literal 2101.01234 here") == None)
+  }
+
   test("standardize is idempotent on its own output (seeded property)") {
     val rnd = new scala.util.Random(7)
     (1 to 500).foreach { _ =>

@@ -180,6 +180,32 @@ class PdfSpec extends AnyFunSuite {
     assert(PdfText.extractText(bytes) == lines.mkString("\n"))
   }
 
+  test("assemble on hand-built chars: line chaining, stable ties, XTol gaps, spaces, NaN y") {
+    import PdfText.{PChar, assemble}
+    def ch(c: Char, x0: Double, y: Double, w: Double = 5.0) = PChar(c, x0, x0 + w, y, 10.0)
+    assert(assemble(Nil) == "")
+    // a drifting baseline chains off the PREVIOUS char's y: 100 / 102.5 /
+    // 105 is one line, read left to right; 108.5 (3.5 below 105) starts
+    // the next
+    assert(assemble(List(ch('c', 10, 105), ch('a', 0, 102.5), ch('b', 5, 100), ch('d', 0, 108.5))) ==
+      "abc\nd")
+    // equal (y, x0) keeps content-stream order; equal x0 within a line
+    // keeps the (y, x0) order
+    assert(assemble(List(ch('x', 0, 50), ch('y', 0, 50), ch('z', 5, 50))) == "xyz")
+    assert(assemble(List(ch('y', 0, 50), ch('x', 0, 50), ch('z', 5, 50))) == "yxz")
+    assert(assemble(List(ch('q', 0, 51), ch('p', 0, 50))) == "pq")
+    // a gap of exactly XTol (1.0) joins a word, 1.5 splits it
+    assert(assemble(List(ch('a', 0, 10), ch('b', 6, 10), ch('c', 12.5, 10))) == "ab c")
+    // space chars end words; runs of them and leading/trailing ones collapse
+    assert(assemble(List(ch(' ', -5, 10), ch('a', 0, 10), ch(' ', 5, 10), ch(' ', 10, 10),
+      ch('b', 15, 10), ch(' ', 20, 10))) == "a b")
+    // a line of only spaces is dropped with its separator
+    assert(assemble(List(ch(' ', 0, 10), ch('a', 0, 50))) == "a")
+    // NaN sorts after every y and never exceeds YTol, so it joins the last line
+    assert(assemble(List(ch('n', 20, Double.NaN), ch('a', 5, 10), ch('b', 0, 20))) == "a\nb n")
+    assert(assemble(List(ch('x', 5, Double.NaN), ch('y', 0, Double.NaN))) == "yx")
+  }
+
   test("reference fixture PDF: full real-world extraction (stretch goal)") {
     val f = new java.io.File("/root/reference/tests/test_dirs/test_pdf_1.pdf")
     // assume (canceled, visible) rather than a silent green pass when the
