@@ -170,7 +170,7 @@ object Main {
         // (online: plug an HTTP GET into Modes.download's pageForDoi)
         Modes.download(spark, args.file,
           doi => CorpusGen.buttonPage(
-            java.lang.Long.parseLong(Downloads.md5hex8(doi), 16)),
+            java.lang.Long.parseLong(graft.pipeline.Downloads.md5hex(doi).take(8), 16)),
           "https://sci-hub.example.org/", today)
       case "images" =>
         Modes.images(spark, args.file, snapshot(spark, args, "figures"), today)
@@ -180,13 +180,6 @@ object Main {
         Modes.google(spark, args.file, snapshot(spark, args, "scholar"),
           args.pubType, args.nArticles)
     }
-  }
-
-  private object Downloads {
-    /** First 8 hex chars of md5 — a compact deterministic DOI->id map for
-      * the demo page synthesizer. */
-    def md5hex8(s: String): String =
-      graft.pipeline.Downloads.md5hex(s).take(8)
   }
 
   /** The full main path minus session LIFECYCLE: argv parse -> mode

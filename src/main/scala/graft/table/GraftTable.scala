@@ -1,11 +1,13 @@
 package graft.table
 
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ScoredDoc, LineageRow}
 import graft.pipeline.Extractor
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Iceberg-style table layer, emulated (no Iceberg jar offline —
   * SURVEY.md §7.3 documents the deviation): hash-bucketed parquet layout
@@ -35,9 +37,9 @@ object GraftTable {
       processed: Int,
       docs: Long,
       wallMs: Long,
-      docsOk: Long = 0L,
-      docsErr: Long = 0L,
-      bytesIn: Long = 0L)
+      docsOk: Long,
+      docsErr: Long,
+      bytesIn: Long)
 
   def bucketOf(urlCol: org.apache.spark.sql.Column, nBuckets: Int): org.apache.spark.sql.Column =
     pmod(xxhash64(urlCol), lit(nBuckets)).cast("int")
@@ -225,11 +227,9 @@ object GraftTable {
     val errAcc = spark.sparkContext.longAccumulator("graft.docs_err")
     val bytesAcc = spark.sparkContext.longAccumulator("graft.bytes_in")
 
-    var processed = 0
-    var totalDocs = 0L
-    var totalOk = 0L
-    var totalErr = 0L
-    var totalBytes = 0L
+    // this run's lineage rows, one per processed bucket: the report and
+    // the snapshots' cumulative doc count are summed from them
+    var runLineage = Vector.empty[LineageRow]
     var waveIdx = 0
     // cumulative data-file list for the snapshot manifests, carried
     // forward INCREMENTALLY: committed buckets are immutable (orphan
@@ -243,10 +243,8 @@ object GraftTable {
       if (waveIdx >= failAfterWaves)
         throw new RuntimeException(s"injected failure after $failAfterWaves waves")
       val waveT0 = System.currentTimeMillis()
-      val waveSet = wave.toSet
-      val waveRows = waveInput(wave)
 
-      val scored = waveRows
+      val scored = waveInput(wave)
         .repartition(tasksPerWave, col("bucket"), xxhash64(col("url"), lit(attempt.toLong)))
         .mapPartitions { it =>
           val t = bcTarget.value
@@ -261,49 +259,40 @@ object GraftTable {
         }
         .select(col("bucket"), col("doc.*"))
 
-      scored.write.mode(SaveMode.Append).partitionBy("bucket")
-        .parquet(s"$root/data")
-
-      // lineage metrics from the data just written (map-side combine agg).
-      // Read ONLY this wave's partition directories — re-scanning the whole
-      // table per wave would be O(waves^2) I/O over a long run.
+      // the lineage counts ride inside the write job as a CollectMetrics
+      // observation (the q41 / DedupGroups.movedCount pattern): three
+      // aggregates per wave bucket, so a bucket with no rows observes 0
+      // and still gets its lineage row (else it would re-run forever).
+      // They are exact under task retry: a failed attempt's metrics are
+      // dropped, and each write task's are merged once, from its first
+      // successful attempt.
+      val obs = Observation()
+      val perBucket = wave.flatMap { k =>
+        val in = col("bucket") === k
+        Seq(count(when(in, 1)).as(s"n_docs_$k"),
+          count(when(in && col("ok"), 1)).as(s"n_ok_$k"),
+          coalesce(sum(when(in, col("n_bytes"))), lit(0L)).as(s"bytes_in_$k"))
+      }
+      scored.observe(obs, perBucket.head, perBucket.tail: _*)
+        .write.mode(SaveMode.Append).partitionBy("bucket").parquet(s"$root/data")
+      // the write has returned, so the observation is on its way over the
+      // listener bus; a run that cannot commit lineage fails loudly, and
+      // the wave's data stays an orphan that the next resume deletes
+      val m = Await.result(obs.future, 5.minutes)
       val waveMs = System.currentTimeMillis() - waveT0
       val ts = new java.sql.Timestamp(System.currentTimeMillis())
-      val wavePaths = wave.map(b => s"$root/data/bucket=$b")
-        .filter(p => hfs.exists(new Path(p)))
-      val metrics =
-        (if (wavePaths.isEmpty)
-          spark.emptyDataset[ScoredDocWithBucket].toDF.select(col("bucket"), col("doc.*"))
-        else spark.read.option("basePath", s"$root/data").parquet(wavePaths: _*))
-        .groupBy("bucket")
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("ok"), 1L).otherwise(0L)).as("n_ok"),
-          sum(when(col("ok"), 0L).otherwise(1L)).as("n_err"),
-          sum("n_bytes").as("bytes_in"))
-        .withColumn("wall_ms", lit(waveMs))
-        .withColumn("attempt", lit(attempt))
-        .withColumn("ts", lit(ts))
-        .as[LineageRow]
-        .collect()
-      // buckets with zero rows still need a lineage row or they'd re-run
-      // forever on data that simply has no pages in them
-      val seen = metrics.map(_.bucket).toSet
-      val empty = waveSet.diff(seen).toSeq
-        .map(b => LineageRow(b, 0, 0, 0, 0, waveMs, attempt, ts))
-      val lineage = (metrics.toSeq ++ empty).toDS()
-      lineage.coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/lineage")
+      val lineage = wave.map { k =>
+        val n = m.getAs[Long](s"n_docs_$k")
+        val ok = m.getAs[Long](s"n_ok_$k")
+        LineageRow(k, n, ok, n - ok, m.getAs[Long](s"bytes_in_$k"), waveMs, attempt, ts)
+      }
+      lineage.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/lineage")
 
+      runLineage ++= lineage
       manifestFiles = manifestFiles ++ listBucketFiles(hfs, root, wave)
-      val waveDocsSum = metrics.map(_.n_docs).sum
       writeSnapshot(hfs, root, waveIdx, wave,
-        metrics.map(m => (m.bucket, m.n_docs)), manifestFiles,
-        cumulativeDocs = doneDocs + totalDocs + waveDocsSum)
-      processed += wave.size
-      totalDocs += waveDocsSum
-      totalOk += metrics.map(_.n_ok).sum
-      totalErr += metrics.map(_.n_err).sum
-      totalBytes += metrics.map(_.bytes_in).sum
+        lineage.filter(_.n_docs > 0).map(r => (r.bucket, r.n_docs)), manifestFiles,
+        cumulativeDocs = doneDocs + runLineage.map(_.n_docs).sum)
       waveIdx += 1
     }
 
@@ -318,11 +307,12 @@ object GraftTable {
     // manifestFiles already holds the full cumulative list at this point
     // (done buckets listed at entry + every wave this run); write a
     // catch-up snapshot whenever the latest manifest disagrees with it.
-    if (doneLineage.nonEmpty || processed > 0) {
+    val runDocs = runLineage.map(_.n_docs).sum
+    if (doneLineage.nonEmpty || runLineage.nonEmpty) {
       val latest = latestSnapshot(hfs, root)
       if (!latest.map(_._2).contains(manifestFiles.toSet))
         writeSnapshot(hfs, root, waveIdx, Seq.empty, Seq.empty,
-          manifestFiles, cumulativeDocs = doneDocs + totalDocs)
+          manifestFiles, cumulativeDocs = doneDocs + runDocs)
     }
 
     // report counts come from the DURABLE lineage rows, not the live
@@ -330,9 +320,9 @@ object GraftTable {
     // accumulators incremented inside a transformation, and the report is
     // documented to mirror the lineage table exactly. The accumulators
     // remain strictly live progress indicators (the tqdm analog).
-    RunReport(nBuckets, done.size, processed, totalDocs,
-      System.currentTimeMillis() - t0,
-      docsOk = totalOk, docsErr = totalErr, bytesIn = totalBytes)
+    RunReport(nBuckets, done.size, runLineage.size, runDocs,
+      System.currentTimeMillis() - t0, runLineage.map(_.n_ok).sum,
+      runLineage.map(_.n_err).sum, runLineage.map(_.bytes_in).sum)
   }
 
   /** Data files of the given buckets, one listStatus per bucket. */

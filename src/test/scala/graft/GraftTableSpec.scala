@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ExtractPipeline
 import graft.corpus.CorpusGen
 import graft.table.GraftTable
+import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 
 /** Snapshot (time-travel) semantics of the Iceberg-emulation layer
   * (SURVEY.md §7.3): each wave's manifest records the cumulative data
@@ -294,9 +295,10 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     assert(total.contains(80L), s"last snapshot total_docs=$total, want 80")
   }
 
-  // round-8 pin: runResumable under a deliberately odd session partition
-  // count still produces the exact per-bucket lineage rollup and leaves
-  // the session conf untouched.
+  // runResumable under a deliberately odd session partition count (13
+  // against 4 write tasks per wave) still commits exactly one lineage row
+  // per bucket, with the committed per-bucket doc counts, and leaves the
+  // session conf untouched.
   test("r8: wave-capped metrics agg restores conf, lineage exact") {
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
@@ -322,5 +324,68 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
         .filterNot(fromData.contains).map(_ -> 0L).toMap)
       graft.util.Fs.deleteRecursively(new java.io.File(root))
     } finally spark.conf.set(key, saved)
+  }
+
+  test("lineage is exact when write tasks fail mid-partition and retry") {
+    // the lineage counts are observed inside the write job; a retried
+    // task must not count its failed attempt's rows. A child JVM at
+    // local[4,2] fails the first attempt of every data-file create, after
+    // the attempt has already pulled (and the observation counted) rows.
+    val root = java.nio.file.Files.createTempDirectory("graft_tbl_retry").toString
+    // the child gets this JVM's module opens (build.sbt's javaOptions)
+    val opens = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.toArray.map(_.toString).filter(_.startsWith("--add-opens"))
+    val cmd = Seq(System.getProperty("java.home") + "/bin/java") ++ opens ++ Seq(
+      "-Xmx1g", "-cp", System.getProperty("java.class.path"),
+      "graft.RetryLineageRun", root)
+    val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
+    val out = new String(proc.getInputStream.readAllBytes(), "UTF-8")
+    assert(proc.waitFor() == 0, s"child run failed:\n${out.takeRight(4000)}")
+    val failed = "failed_attempts=(\\d+)".r.findFirstMatchIn(out).map(_.group(1).toInt)
+    assert(failed.exists(_ > 0), s"no task attempt failed, the test is vacuous:\n${out.takeRight(4000)}")
+
+    // (n_docs, n_ok, n_err, bytes_in) per bucket, from the lineage and
+    // re-derived from the committed data files
+    val fromLineage = spark.read.parquet(s"$root/lineage")
+      .select("bucket", "n_docs", "n_ok", "n_err", "bytes_in").collect()
+      .map(r => r.getInt(0) -> (1 to 4).map(r.getLong)).toMap
+    val fromData = spark.read.parquet(s"$root/data").groupBy("bucket")
+      .agg(count(lit(1)), count(when(col("ok"), 1)), count(when(!col("ok"), 1)),
+        sum("n_bytes"))
+      .collect().map(r => r.getInt(0) -> (1 to 4).map(r.getLong)).toMap
+    assert(fromData.values.map(_.head).sum == 120L)
+    assert(fromLineage == fromData ++ (0 until 6).filterNot(fromData.contains)
+      .map(_ -> Seq(0L, 0L, 0L, 0L)).toMap)
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
+  }
+
+  test("a wave runs three jobs: the shuffle, the data write, the lineage append") {
+    // the lineage counts are observed inside the data write, so a wave
+    // has no read-back job. A fresh table has no lineage to read at entry
+    // and its empty completed-bucket set broadcasts without a job, so a
+    // run of 4 waves is exactly 12 jobs (24 when every wave read its
+    // buckets back: footer schema, shuffle, collect)
+    val group = s"graft-table-jobs-${System.nanoTime}"
+    // each job's stage names, for the failure message
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(e.stageInfos.map(_.name).mkString(" + "))
+    }
+    val root = java.nio.file.Files.createTempDirectory("graft_tbl_jobs").toString
+    val pages = ExtractPipeline.pages(spark, 80, 2)
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "runResumable job pin")
+      try GraftTable.runResumable(spark, pages, root, nBuckets = 8, bucketsPerWave = 2,
+        CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, tasksPerWave = 2)
+      finally sc.clearJobGroup()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.size == 12,
+      s"runResumable ran ${jobs.size} jobs for 4 waves:\n${jobs.toArray.mkString("\n")}")
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 }
