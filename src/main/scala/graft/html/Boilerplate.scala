@@ -208,14 +208,17 @@ object Boilerplate {
     * HElem.normalizedText. */
   private def contentText(e: HElem): String = {
     val sb = new java.lang.StringBuilder
-    def walk(n: HNode): Unit = n match {
-      case t: HText  => sb.append(t.data).append(' ')
-      case el: HElem => if (!DropTags.contains(el.tag)) el.children.foreach(walk)
-      case _         => ()
-    }
-    e.children.foreach(walk)
-    HElem.collapseWs(sb)
+    appendContent(e, sb)
+    sb.toString
   }
+
+  /** Append `el`'s text nodes, collapsed, skipping DropTags subtrees. */
+  private def appendContent(el: HElem, sb: java.lang.StringBuilder): Unit =
+    el.children.foreach {
+      case t: HText => HElem.appendCollapsed(sb, t.data)
+      case c: HElem => if (!DropTags.contains(c.tag)) appendContent(c, sb)
+      case _        => ()
+    }
 
   /** Document-order normalized texts of the blocks inside a container
     * (the paragraphs of the main content). A block with no block children
@@ -225,12 +228,6 @@ object Boilerplate {
     * interstitial prose is never silently dropped. */
   def blockTexts(container: HElem): List[String] = {
     val out = mutable.ListBuffer.empty[String]
-    def appendInline(el: HElem, sb: java.lang.StringBuilder): Unit =
-      el.children.foreach {
-        case t: HText  => sb.append(t.data).append(' ')
-        case c: HElem  => if (!DropTags.contains(c.tag)) appendInline(c, sb)
-        case _         => ()
-      }
     def walk(e: HElem): Unit = {
       if (DropTags.contains(e.tag)) return
       val hasBlockChild = e.elemChildren.exists(c => BlockTags.contains(c.tag))
@@ -240,17 +237,16 @@ object Boilerplate {
       } else {
         val sb = new java.lang.StringBuilder
         def flushRun(): Unit = {
-          val t = HElem.collapseWs(sb)
-          if (t.nonEmpty) out += t
+          if (sb.length > 0) out += sb.toString
           sb.setLength(0)
         }
         e.children.foreach {
-          case t: HText => sb.append(t.data).append(' ')
+          case t: HText => HElem.appendCollapsed(sb, t.data)
           case c: HElem if DropTags.contains(c.tag) => ()
           case c: HElem if BlockTags.contains(c.tag) ||
               c.elemChildren.exists(b => BlockTags.contains(b.tag)) =>
             flushRun(); walk(c)
-          case c: HElem => appendInline(c, sb)
+          case c: HElem => appendContent(c, sb)
           case _ => ()
         }
         flushRun()

@@ -1,6 +1,7 @@
 package graft.html
 
 import scala.collection.mutable
+import graft.textops.TextOps
 
 /** Minimal DOM for the from-scratch HTML engine (no jsoup offline; the
   * north rule mandates a from-scratch DOM + heuristics).
@@ -66,11 +67,12 @@ final class HElem(
   }
 
   /** Concatenated descendant text, selectolax-style: with strip=true each
-    * text node is stripped before concatenation; otherwise raw. */
+    * text node is stripped as Python's `str.strip()` does (NBSP and NEL
+    * included) before concatenation; otherwise raw. */
   def text(strip: Boolean = false): String = {
     val sb = new StringBuilder
     def walk(n: HNode): Unit = n match {
-      case t: HText => sb.append(if (strip) t.data.strip() else t.data)
+      case t: HText => sb.append(if (strip) TextOps.pyStrip(t.data) else t.data)
       case e: HElem => e.children.foreach(walk)
       case _        => ()
     }
@@ -80,43 +82,46 @@ final class HElem(
 
   /** Own + descendant text with runs of whitespace collapsed to single
     * spaces and trimmed — the normalized form the extraction pipeline
-    * emits per block. Hand-rolled collapse, byte-identical to
-    * `split("\\s+").filter(_.nonEmpty).mkString(" ")` (Java regex \s is
-    * exactly [ \t\n\x0B\f\r]) without the per-call Pattern compile —
-    * this runs once per block of every page in the corpus. */
+    * emits per block. */
   def normalizedText: String = {
     val sb = new java.lang.StringBuilder
     def walk(n: HNode): Unit = n match {
-      case t: HText => sb.append(t.data).append(' ')
+      case t: HText => HElem.appendCollapsed(sb, t.data)
       case e: HElem => e.children.foreach(walk)
       case _        => ()
     }
     children.foreach(walk)
-    HElem.collapseWs(sb)
+    sb.toString
   }
 }
 
 object HElem {
   private[html] val Ws = java.util.regex.Pattern.compile("\\s+")
 
-  /** Collapse runs of Java-regex \s chars to single spaces and trim both
-    * ends — byte-identical to split("\\s+").filter(_.nonEmpty)
-    * .mkString(" ") without the per-call Pattern compile. */
-  private[html] def collapseWs(sb: CharSequence): String = {
-    val out = new java.lang.StringBuilder(sb.length)
-    var pendingSpace = false
+  @inline private def isWs(c: Char): Boolean =
+    c <= ' ' && (c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r')
+
+  /** Append one text node to a whitespace-collapsed builder, preceded by
+    * one space unless the builder is empty. Whitespace is Java regex
+    * `\s`, `[ \t\n\x0B\f\r]`, and a node boundary counts as
+    * whitespace, so the pending space carries across nodes: appending
+    * nodes one by one gives `split("\\s+").filter(_.nonEmpty)
+    * .mkString(" ")` of the nodes joined by spaces. Text between two
+    * non-whitespace chars that holds only single spaces is already
+    * collapsed, so each such segment is copied in bulk (a clean node
+    * whole). */
+  private[html] def appendCollapsed(out: java.lang.StringBuilder, s: String): Unit = {
+    val n = s.length
     var i = 0
-    while (i < sb.length) {
-      val c = sb.charAt(i)
-      val ws = c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
-      if (ws) { if (out.length > 0) pendingSpace = true }
-      else {
-        if (pendingSpace) { out.append(' '); pendingSpace = false }
-        out.append(c)
-      }
-      i += 1
+    while (i < n && isWs(s.charAt(i))) i += 1
+    while (i < n) {
+      val start = i
+      while (i < n && (!isWs(s.charAt(i)) ||
+          (s.charAt(i) == ' ' && i + 1 < n && !isWs(s.charAt(i + 1))))) i += 1
+      if (out.length > 0) out.append(' ')
+      if (start == 0 && i == n) out.append(s) else out.append(s, start, i)
+      while (i < n && isWs(s.charAt(i))) i += 1
     }
-    out.toString
   }
 
   def apply(tag: String, attrs: Map[String, String] = Map.empty): HElem =

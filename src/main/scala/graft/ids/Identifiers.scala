@@ -98,20 +98,28 @@ object Identifiers {
     * Each needle is non-empty and starts with an ASCII char, which an
     * ASCII hay char case-matches only if the two are equal up to ASCII
     * case; so regionMatches runs only there and at non-ASCII chars, where
-    * folds like 'ı'/'İ' → 'i' still apply. */
+    * folds like 'ı'/'İ' → 'i' still apply. At an ASCII hay char the next
+    * hay char must also pass the same test against an ASCII second needle
+    * char: be non-ASCII, or equal to it up to ASCII case. */
   private[graft] def containsIgnoreCase(hay: String, needles: Array[String]): Boolean = {
-    def asciiLower(c: Char): Char = if (c >= 'A' && c <= 'Z') (c + 32).toChar else c
+    def asciiLower(c: Char): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
     val firsts = needles.map { nd =>
       require(nd.nonEmpty && nd.charAt(0) < 0x80, s"needle must start with an ASCII char: '$nd'")
       asciiLower(nd.charAt(0))
     }
+    // -1: no second-char test (a one-char needle, or a non-ASCII second
+    // char, which an ASCII hay char can fold onto)
+    val seconds = needles.map(nd => if (nd.length > 1 && nd.charAt(1) < 0x80) asciiLower(nd.charAt(1)) else -1)
+    val n = hay.length
+    def mayMatchAt(j: Int, want: Int): Boolean =
+      want < 0 || (j < n && { val d = hay.charAt(j); d >= 0x80 || asciiLower(d) == want })
     var i = 0
-    while (i < hay.length) {
+    while (i < n) {
       val c = hay.charAt(i)
       val lc = asciiLower(c)
       var k = 0
       while (k < needles.length) {
-        if ((c >= 0x80 || lc == firsts(k)) &&
+        if ((c >= 0x80 || (lc == firsts(k) && mayMatchAt(i + 1, seconds(k)))) &&
             hay.regionMatches(true, i, needles(k), 0, needles(k).length)) return true
         k += 1
       }

@@ -130,6 +130,25 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("hostile text extracts and scores in bounded time") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration._
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val target = graft.corpus.CorpusGen.TargetWords.toSet
+    val bycatch = graft.corpus.CorpusGen.BycatchWords.toSet
+    // "(=" x 32k: a backtracking \(.*=.*\) search is cubic in this line
+    // (4 KB already takes seconds); a 1 MB text of one token
+    val cases = Seq(
+      "(= paragraph" -> ("<html><body><p>" + "(=" * 32768 + "</p></body></html>"),
+      "1 MB token" -> ("<html><body><p>" + "x" * (1 << 20) + "</p></body></html>"))
+    cases.foreach { case (what, html) =>
+      val doc = Await.result(Future(
+        Extractor.score(Extractor.extract(page(html.getBytes("UTF-8"))), target, bycatch)), 10.seconds)
+      assert(doc.ok, s"$what: ${doc.error}")
+      assert(doc.total_word_count == 1 && doc.paper_parentheticals.isEmpty, what)
+    }
+  }
+
   test("null and empty payloads") {
     assert(!Extractor.extract(page(null)).extracted_text.nonEmpty)
     val empty = Extractor.extract(page(Array.emptyByteArray))

@@ -220,6 +220,39 @@ class HtmlSpec extends AnyFunSuite {
   test("text(strip) concatenates stripped text nodes, selectolax-style") {
     val h1 = Selectors.cssFirst(dom, "h1").get
     assert(h1.text(strip = true) == "A Study of Things")
+    // Python's str.strip() also removes NBSP, NEL, U+2007 and U+202F,
+    // which Java's String.strip() keeps
+    val d = HtmlParser.parse("<h1>\u00a0A Study\u0085<b>\u2007of\u202f</b> Things\u00a0</h1>")
+    assert(Selectors.cssFirst(d, "h1").get.text(strip = true) == "A StudyofThings")
+  }
+
+  test("normalizedText equals the regex collapse of the space-joined text nodes (seeded property)") {
+    import graft.html.{HElem, HText}
+    // the reference collapse: every text node followed by a space, then
+    // runs of Java regex \s collapsed and the ends trimmed
+    def collapse(nodes: Seq[String]): String =
+      nodes.map(_ + " ").mkString.split("\\s+").filter(_.nonEmpty).mkString(" ")
+    val frags = Vector("a", "Bc", "d e", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\r\n",
+      "\u00a0", "\u0085", "\u2028", "\u3000", "x\ty", "", "z ")
+    val rnd = new scala.util.Random(10)
+    (1 to 5000).foreach { _ =>
+      val texts = Seq.newBuilder[String]
+      def build(depth: Int): HElem = {
+        val e = HElem("span")
+        (0 until rnd.nextInt(4)).foreach { _ =>
+          if (depth < 3 && rnd.nextInt(3) == 0) e.append(build(depth + 1))
+          else {
+            val t = Vector.fill(rnd.nextInt(4))(frags(rnd.nextInt(frags.length))).mkString
+            texts += t
+            e.append(new HText(t))
+          }
+        }
+        e
+      }
+      val root = build(0)
+      val nodes = texts.result()
+      assert(root.normalizedText == collapse(nodes), nodes.map(_.map(_.toInt)).toString)
+    }
   }
 
   test("boilerplate classifier picks main over nav/footer/body") {

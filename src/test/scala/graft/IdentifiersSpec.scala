@@ -109,7 +109,9 @@ class IdentifiersSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     val alphabet = Vector("a", "A", "r", "R", "x", "X", "i", "I", "v", "V", "ar", "Xi", "xiV",
       "aRx", "ARXIV", "arxi", "p", "P", "d", "D", "f", "F", ".", ".p", ".Pd", "pDF", ".PDF",
       "k", "K", "s", "S", "\u0131", "\u0130", "\u212A", "\u017F", "0", "7", " ")
-    val needles = Vector("arxiv", ".pdf", "iv", "kp", "s.")
+    // "ai", "ak" and "as": a second needle char that a non-ASCII hay char
+    // (dotless i, dotted I, Kelvin sign, long s) folds onto
+    val needles = Vector("arxiv", ".pdf", "iv", "kp", "s.", "ai", "ak", "as")
     val rnd = new scala.util.Random(8)
     (1 to 20000).foreach { _ =>
       val hay = Vector.fill(rnd.nextInt(12))(alphabet(rnd.nextInt(alphabet.length))).mkString
@@ -123,6 +125,10 @@ class IdentifiersSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     assert(Identifiers.containsIgnoreCase("arx\u0131v", Array("arxiv")))
     assert(Identifiers.containsIgnoreCase("ARX\u0130V", Array("arxiv")))
     assert(Identifiers.containsIgnoreCase("\u0130v", Array("iv")))
+    // and past the second-char test: a non-ASCII second hay char
+    Seq("a\u0131" -> "ai", "A\u0130" -> "ai", "a\u212A" -> "ak", "A\u017F" -> "as").foreach {
+      case (hay, nd) => assert(Identifiers.containsIgnoreCase(hay, Array(nd)), s"$nd in $hay")
+    }
   }
 
   test("extract: arXiv prescan hits at index 0, at the last index, after a non-ASCII char") {

@@ -80,6 +80,62 @@ class TextOpsSpec extends AnyFunSuite with TableDrivenPropertyChecks {
     assert(TextOps.parentheticals("(a=\nb)") == Nil) // \n still blocks
   }
 
+  test("parentheticals: one linear scan on lines a backtracking search takes cubic time on") {
+    val line = "(=" * 20000
+    assert(TextOps.parentheticals(line) == Nil)
+    assert(TextOps.parentheticals(line + ")") == List(line + ")"))
+    assert(TextOps.parentheticals(") (a=b) (c") == List("(a=b)"))
+    assert(TextOps.parentheticals("a=b) (c") == Nil)
+  }
+
+  test("wordScore equals tokenize + matchTerms x 2 + the regex findall (seeded property)") {
+    import java.util.regex.Pattern
+    // the pattern parentheticals transcribes, kept here as its oracle
+    val paren = Pattern.compile("\\(.*=.*\\)", Pattern.UNIX_LINES)
+    def findall(text: String): List[String] = {
+      val m = paren.matcher(text)
+      val out = List.newBuilder[String]
+      while (m.find()) out += m.group(0)
+      out.result()
+    }
+    // "shared" is in both sets, "" (a run of spaces) in the target set,
+    // and "i\u0307ki" is what toLowerCase makes of "\u0130KI"
+    val target = Set("alpha", "beta", "shared", "", "i\u0307ki", "\u03bf\u03b4\u03bf\u03c2", "gamma")
+    val bycatch = Set("delta", "shared", "eps", "alphabet", "x=y")
+    val frags = Vector("alpha", "ALPHA", "Beta", "beta", "shared", "SHARED", "delta", "Eps",
+      "alphabet", "gamma", "\u0130KI", "\u0130ki", "\u039f\u0394\u039f\u03a3", "x=y", "X=Y", "word",
+      " ", "  ", "\u00a0", "\u0085", "\u2007", "\u202f", "\t", "(", ")", "=", "\r", "\n",
+      "\u2028", "\u2029", "\ud83d\ude00", "\ud800", "\udc00")
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq(target -> bycatch, bycatch -> target, Set.empty[String] -> bycatch,
+      target -> Set("alpha", "ALPHA", "word"))
+    val tables = pairs.map { case (t, b) => (t, b, new TextOps.TermTable(t, b)) }
+    (1 to 20000).foreach { _ =>
+      val text = Vector.fill(rnd.nextInt(30))(frags(rnd.nextInt(frags.length))).mkString
+      val (t, b, table) = tables(rnd.nextInt(tables.length))
+      val tokens = TextOps.tokenize(text)
+      val want = TextOps.WordScore(tokens.length, TextOps.matchTerms(tokens, t),
+        TextOps.matchTerms(tokens, b), findall(text))
+      assert(TextOps.wordScore(text, table) == want, text.map(_.toInt).mkString(","))
+    }
+  }
+
+  test("Extractor.score scores against the word sets it is given, call after call") {
+    import graft.model.ExtractedDoc
+    import graft.pipeline.Extractor
+    val doc = ExtractedDoc("u", "html", "Alpha beta beta gamma (n=1)", "", "", "", Nil, 0L,
+      ok = true, error = "")
+    val a = Set("alpha", "beta")
+    val b = Set("gamma")
+    Seq((a, b), (b, a), (a, b), (Set("alpha", "beta"), Set("gamma"))).foreach { case (t, c) =>
+      val s = Extractor.score(doc, t, c)
+      val tokens = TextOps.tokenize(doc.extracted_text)
+      assert(s.matching_terms == TextOps.matchTerms(tokens, t).termCount)
+      assert(s.bycatch_terms == TextOps.matchTerms(tokens, c).termCount)
+      assert(s.total_word_count == 5 && s.paper_parentheticals == List("(n=1)"))
+    }
+  }
+
   test("word-set load strips, lowers, dedups") {
     val set = TextOps.loadWordSet(Iterator(" Design\n", "design", "FMRI ", ""))
     assert(set == Set("design", "fmri", ""))
