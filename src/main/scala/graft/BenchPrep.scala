@@ -10,7 +10,7 @@ object BenchPrep {
     val dir = args(0)
     val n = args(1).toLong
     val heavy = args.length > 2 && args(2) == "heavy"
-    val spark = SparkSession.builder().master("local[32]")
+    val spark = SparkSession.builder().master("local[*]")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val pages =

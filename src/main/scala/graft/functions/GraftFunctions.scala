@@ -136,9 +136,6 @@ object SimHash64 {
   /** String convenience overload (tests, driver-side probes). */
   def compute(text: String): Long =
     compute(org.apache.spark.unsafe.types.UTF8String.fromString(text))
-
-  /** Hamming distance between two simhashes (for near-dup thresholds). */
-  def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
 }
 
 /** Integer dot product over two ArrayType(LongType) columns — the ANN

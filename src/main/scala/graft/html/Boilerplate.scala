@@ -26,7 +26,7 @@ object Boilerplate {
       doi: Option[String],
       citationSpans: List[String])
 
-  private val BlockTags = Set(
+  private[html] val BlockTags = Set(
     "p", "div", "article", "main", "section", "h1", "h2", "h3", "h4", "h5",
     "h6", "li", "ul", "ol", "blockquote", "pre", "td", "th", "table", "tr",
     "header", "footer", "nav", "aside", "body", "figcaption", "dd", "dt")
@@ -80,22 +80,20 @@ object Boilerplate {
       citationSpans = citations)
   }
 
-  /** The density classifier: pick the container maximizing signed leaf
-    * score (content leaves add len*(1-linkDensity); boilerplate leaves
-    * subtract their length, so enclosing everything — e.g. body — loses
-    * to the tight main block whenever real boilerplate exists).
-    * Ties break toward the deeper (tighter) container.
-    */
-  def mainContainer(root: HElem): Option[HElem] = Option(new Walk(root).best)
-
   /** The one tree walk behind `extract`, run by the constructor. Bottom up
     * it gathers the classifier's stats and keeps the best container (no
-    * per-element stats map, no second traversal). In the same pre-order
-    * over every element below `root`, DropTags subtrees included (they
-    * add no stats), it picks each structured field's candidates exactly
-    * as the standalone find* heuristics do: the first h1, title, abstract
-    * block, DOI meta and DOI marker, and every citation candidate. */
-  private final class Walk(root: HElem) {
+    * per-element stats map, no second traversal). The density classifier
+    * picks the container maximizing signed leaf score (content leaves add
+    * len*(1-linkDensity); boilerplate leaves subtract their length, so
+    * enclosing everything — e.g. body — loses to the tight main block
+    * whenever real boilerplate exists); ties break toward the deeper
+    * (tighter) container. In the same pre-order over every element below
+    * `root`, DropTags subtrees included (they add no stats), it picks each
+    * structured field's candidates exactly as the reference find*
+    * heuristics in the tests do (HtmlSpec pins the two together): the
+    * first h1, title, abstract block, DOI meta and DOI marker, and every
+    * citation candidate. */
+  private[html] final class Walk(root: HElem) {
     // preIdx preserves the original pre-order maxBy tie behavior exactly:
     // max (leafScore, depth), first-in-pre-order among full ties
     var best: HElem = null
@@ -202,11 +200,13 @@ object Boilerplate {
     (m.contains("ref") || m.contains("citation")) &&
       MarkerSplit.split(m).exists(w => w == "ref" || w == "citation" || w == "reference")
 
+  private[html] val MarkerSplit = java.util.regex.Pattern.compile("[\\s_-]")
+
   /** Normalized text of an element SKIPPING DropTags subtrees — the leaf
     * emission form: a leaf block polluted by an inline script/style must
     * not leak code into the extracted text. Same whitespace collapse as
     * HElem.normalizedText. */
-  private def contentText(e: HElem): String = {
+  private[html] def contentText(e: HElem): String = {
     val sb = new java.lang.StringBuilder
     appendContent(e, sb)
     sb.toString
@@ -270,56 +270,6 @@ object Boilerplate {
     if (lastWs && count > 0) count - 1 else count
   }
 
-  // --- structured-field heuristics ---------------------------------------
-
-  def findTitle(root: HElem): Option[String] = {
-    Selectors.cssFirst(root, "h1").map(contentText).filter(_.nonEmpty)
-      .orElse(Selectors.cssFirst(root, "title").map(contentText).filter(_.nonEmpty))
-  }
-
-  def findAbstract(root: HElem): Option[String] = {
-    root.descendants.find { e =>
-      val marker = (e.attrs.getOrElse("class", "") + " " + e.attrs.getOrElse("id", ""))
-        .toLowerCase(java.util.Locale.ROOT)
-      marker.contains("abstract") && BlockTags.contains(e.tag)
-    }.map { e =>
-      val texts = blockTexts(e)
-      // skip a leading "Abstract" heading block if present
-      val body = texts match {
-        case h :: rest if h.equalsIgnoreCase("abstract") => rest
-        case other => other
-      }
-      body.mkString("\n")
-    }.filter(_.nonEmpty)
-  }
-
-  def findDoi(root: HElem, mainText: String): Option[String] = {
-    val meta = root.descendants.find(e =>
-      e.tag == "meta" &&
-        e.attr("name").exists(n => n.equalsIgnoreCase("citation_doi") || n.equalsIgnoreCase("dc.identifier")))
-      .flatMap(_.attr("content"))
-    meta.flatMap(c => Identifiers.extract(c))
-      .orElse {
-        root.descendants.find { e =>
-          (e.attrs.getOrElse("class", "") + e.attrs.getOrElse("id", ""))
-            .toLowerCase(java.util.Locale.ROOT).contains("doi")
-        }.flatMap(e => Identifiers.extract(contentText(e)))
-      }
-      .orElse(Identifiers.extract(mainText))
-  }
-
-  private val MarkerSplit = java.util.regex.Pattern.compile("[\\s_-]")
-
-  def findCitations(root: HElem): List[String] = {
-    val viaClass = root.descendants.filter { e =>
-      val marker = (e.attrs.getOrElse("class", "") + " " + e.attrs.getOrElse("id", ""))
-        .toLowerCase(java.util.Locale.ROOT)
-      e.tag == "cite" || MarkerSplit.split(marker).exists(w => w == "ref" || w == "citation" || w == "reference")
-    }.toList
-    // keep only leaf-most citation nodes (avoid container duplication)
-    leafMost(viaClass).map(contentText).filter(_.nonEmpty)
-  }
-
   /** Drop candidates that are ancestors of other candidates, in
     * O(candidates x depth): each candidate walks its parent chain ONCE
     * and marks any candidate-ancestor it meets. The previous all-pairs
@@ -327,7 +277,7 @@ object Boilerplate {
     * citation-dense 2000-candidate references page, on the per-page hot
     * path. Identity sets on purpose: distinct DOM nodes can be
     * structurally equal. */
-  private def leafMost(candidates: List[HElem]): List[HElem] = {
+  private[html] def leafMost(candidates: List[HElem]): List[HElem] = {
     val inSet = java.util.Collections.newSetFromMap(
       new java.util.IdentityHashMap[HElem, java.lang.Boolean]())
     candidates.foreach(inSet.add)

@@ -1,13 +1,12 @@
 package graft.html
 
 import scala.collection.mutable
-import graft.textops.TextOps
 
 /** Minimal DOM for the from-scratch HTML engine (no jsoup offline; the
   * north rule mandates a from-scratch DOM + heuristics).
   *
-  * Capability target: the selector-and-text surface the reference uses —
-  * `css_first("h3.gs_rt").text(strip=True)`, attribute reads, descendant
+  * Capability target: the selector surface the reference uses —
+  * `css_first("h3.gs_rt")`, attribute reads, descendant
   * scans (/root/reference/src/webscrapers.py:129-151, :408-417;
   * /root/reference/src/downloaders.py:215-230) — plus whole-tree traversal
   * for the boilerplate classifier.
@@ -64,20 +63,6 @@ final class HElem(
     }
     def hasNext: Boolean = nextElem != null
     def next(): HElem = { val e = nextElem; nextElem = advance(); e }
-  }
-
-  /** Concatenated descendant text, selectolax-style: with strip=true each
-    * text node is stripped as Python's `str.strip()` does (NBSP and NEL
-    * included) before concatenation; otherwise raw. */
-  def text(strip: Boolean = false): String = {
-    val sb = new StringBuilder
-    def walk(n: HNode): Unit = n match {
-      case t: HText => sb.append(if (strip) TextOps.pyStrip(t.data) else t.data)
-      case e: HElem => e.children.foreach(walk)
-      case _        => ()
-    }
-    children.foreach(walk)
-    sb.toString
   }
 
   /** Own + descendant text with runs of whitespace collapsed to single

@@ -13,18 +13,6 @@ final case class FreqDistAndCount(
 
 object TextOps {
 
-  /** Python-semantics tokenizer: `preprint.strip().lower().split(" ")`.
-    *
-    * Single-space split keeps empty tokens from runs of spaces and keeps
-    * tokens containing newlines/tabs; an empty input yields one empty token
-    * (Python `"".split(" ") == [""]`).
-    * Reference: /root/reference/src/docscraper.py:176-186.
-    * Scoring runs `wordScore`; this and `matchTerms` are the
-    * transcriptions that TextOpsSpec pins it to.
-    */
-  def tokenize(preprint: String): Array[String] =
-    pyStrip(preprint).toLowerCase(java.util.Locale.ROOT).split(" ", -1)
-
   /** Python str.strip() whitespace set: Java's Character.isWhitespace
     * EXCLUDES the non-breaking spaces (U+00A0/U+2007/U+202F) and NEL
     * (U+0085) that Python strips — and NBSP-led text is common in HTML
@@ -40,27 +28,6 @@ object TextOps {
     while (a < b && isPySpace(s.charAt(a))) a += 1
     while (b > a && isPySpace(s.charAt(b - 1))) b -= 1
     if (a == 0 && b == s.length) s else s.substring(a, b)
-  }
-
-  /** Count tokens found in `wordSet`; return top-3 by count with Python
-    * `Counter.most_common(3)` tie-breaking (first-insertion order wins on
-    * equal counts — stable sort over first-occurrence order).
-    *
-    * Reference: /root/reference/src/docscraper.py:55-94 (docstring example
-    * at :66-81 pins the tie-break).
-    */
-  def matchTerms(target: Iterable[String], wordSet: Set[String]): FreqDistAndCount = {
-    val counts = mutable.LinkedHashMap.empty[String, Int]
-    val it = target.iterator
-    while (it.hasNext) {
-      val w = it.next()
-      if (wordSet.contains(w)) counts.update(w, counts.getOrElse(w, 0) + 1)
-    }
-    // Scala's sortBy is a stable (timsort) sort: equal counts keep the
-    // LinkedHashMap insertion (= first occurrence) order, matching
-    // Counter.most_common.
-    val top3 = counts.toList.sortBy(-_._2).take(3)
-    FreqDistAndCount(top3.map(_._2).sum, top3)
   }
 
   /** Weighted relevance likelihood in [0,1].
@@ -161,12 +128,15 @@ object TextOps {
       bycatch: FreqDistAndCount,
       parentheticals: List[String])
 
-  /** `tokenize`, `matchTerms` against each set and `parentheticals` in
-    * one kernel. The text is stripped and lowercased once, then walked
-    * once: each `' '`-separated token is hashed in place and looked up in
-    * `table`, with no token array and no substring per token. Hits are
-    * counted in first-occurrence order, and each set's top 3 is a stable
-    * selection over that order, so ties break as in `matchTerms`. */
+  /** The reference's tokenize (`strip().lower().split(" ")`), its term
+    * match against each set (`Counter.most_common(3)`) and
+    * `parentheticals` in one kernel. The text is stripped and lowercased
+    * once, then walked once: each `' '`-separated token is hashed in place
+    * and looked up in `table`, with no token array and no substring per
+    * token. Hits are counted in first-occurrence order, and each set's top
+    * 3 is a stable selection over that order, so equal counts keep
+    * first-occurrence order as `most_common` does. TextOpsSpec pins this
+    * to the step-by-step transcriptions in `TextOpsOracle`. */
   def wordScore(text: String, table: TermTable): WordScore = {
     val s = pyStrip(text).toLowerCase(java.util.Locale.ROOT)
     val counts = new Array[Int](table.words.length)

@@ -84,13 +84,4 @@ object Winnowing {
   /** Fingerprint hash set (the dedup join key set). */
   def fingerprintSet(s: String): Set[Long] =
     fingerprints(s).map(_._2).toSet
-
-  /** Containment score: |fp(a) ∩ fp(b)| / |fp(a)| — the winnowing overlap
-    * measure used for near-dup / clone detection. */
-  def containment(a: String, b: String): Double = {
-    val fa = fingerprintSet(a)
-    if (fa.isEmpty) return 0.0
-    val fb = fingerprintSet(b)
-    fa.count(fb.contains).toDouble / fa.size
-  }
 }

@@ -1,6 +1,7 @@
 package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
@@ -15,11 +16,15 @@ object Shim {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Registers `name` only when the session's function registry lacks
+    * it, so a repeat call (each embedding query registers on entry)
+    * leaves the first registration in place instead of replacing it. */
   def registerFunction(
       spark: SparkSession,
       name: String,
       builder: Seq[Expression] => Expression): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    if (!registry.functionExists(FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "built-in")
   }
 }

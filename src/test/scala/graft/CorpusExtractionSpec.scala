@@ -75,10 +75,10 @@ class CorpusExtractionSpec extends AnyFunSuite {
   test("scoring facts: raw hit counts in goldens bound the top-3 sums") {
     (0L until N).foreach { id =>
       val (page, golden) = CorpusGen.genDoc(id)
-      val tokens = graft.textops.TextOps.tokenize(page.text)
+      val tokens = graft.textops.TextOpsOracle.tokenize(page.text)
       assert(tokens.length == golden.total_words, s"doc $id token count")
-      val t = graft.textops.TextOps.matchTerms(tokens, CorpusGen.TargetWords.toSet)
-      val b = graft.textops.TextOps.matchTerms(tokens, CorpusGen.BycatchWords.toSet)
+      val t = graft.textops.TextOpsOracle.matchTerms(tokens, CorpusGen.TargetWords.toSet)
+      val b = graft.textops.TextOpsOracle.matchTerms(tokens, CorpusGen.BycatchWords.toSet)
       assert(t.termCount <= golden.target_hits, s"doc $id target top3 > raw")
       assert(b.termCount <= golden.bycatch_hits, s"doc $id bycatch top3 > raw")
       // wordscore from the top-3 sums is in range and deterministic

@@ -54,6 +54,26 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  test("registerAll registers each function once per session") {
+    // every embedding query calls registerAll on entry; a repeat call must
+    // keep the first registration rather than replace it
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val s = spark.newSession()
+    val registry = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState.functionRegistry
+    val names = Seq("half_float", "simhash64", "dot_i64", "minhash_bands",
+      "distinct_overlap", "sorted_overlap_i64")
+    graft.functions.GraftFunctions.registerAll(s)
+    val first = names.map(n => registry.lookupFunction(FunctionIdentifier(n)))
+    assert(first.forall(_.isDefined), first)
+    graft.functions.GraftFunctions.registerAll(s)
+    names.zip(first).foreach { case (n, info) =>
+      assert(registry.lookupFunction(FunctionIdentifier(n)).exists(_ eq info.get),
+        s"$n was registered again")
+    }
+    assert(s.sql("SELECT dot_i64(array(1L, 2L), array(3L, 4L))").head().getLong(0) == 11L)
+  }
+
   test("distinct_overlap equals size(array_intersect) on distinct arrays (incl. null/empty edges)") {
     // the r8 confirm-stage expression: its contract is exact equality
     // with size(array_intersect(a, b)) for distinct-element arrays,

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.html.{HtmlParser, Selectors, Boilerplate}
+import graft.html.{HtmlParser, Selectors, Boilerplate, HtmlOracle}
 
 class HtmlSpec extends AnyFunSuite {
 
@@ -42,14 +42,14 @@ class HtmlSpec extends AnyFunSuite {
         java.nio.charset.StandardCharsets.UTF_8)
       val root = HtmlParser.parse(html)
       val ex = Boilerplate.extract(root)
-      assert(ex.title == Boilerplate.findTitle(root), s"title drift doc $id")
-      assert(ex.abstractText == Boilerplate.findAbstract(root), s"abstract drift doc $id")
-      assert(ex.doi == Boilerplate.findDoi(root, ex.mainText), s"doi drift doc $id")
-      assert(ex.citationSpans == Boilerplate.findCitations(root), s"citations drift doc $id")
+      assert(ex.title == HtmlOracle.findTitle(root), s"title drift doc $id")
+      assert(ex.abstractText == HtmlOracle.findAbstract(root), s"abstract drift doc $id")
+      assert(ex.doi == HtmlOracle.findDoi(root, ex.mainText), s"doi drift doc $id")
+      assert(ex.citationSpans == HtmlOracle.findCitations(root), s"citations drift doc $id")
     }
     val ex = Boilerplate.extract(dom)
-    assert(ex.title == Boilerplate.findTitle(dom))
-    assert(ex.citationSpans == Boilerplate.findCitations(dom))
+    assert(ex.title == HtmlOracle.findTitle(dom))
+    assert(ex.citationSpans == HtmlOracle.findCitations(dom))
   }
 
   test("fused extract finds fields inside dropped subtrees and case-folded markers") {
@@ -71,10 +71,10 @@ class HtmlSpec extends AnyFunSuite {
     pages.foreach { case (name, html) =>
       val root = HtmlParser.parse(html)
       val ex = Boilerplate.extract(root)
-      assert(ex.title == Boilerplate.findTitle(root), s"title drift: $name")
-      assert(ex.abstractText == Boilerplate.findAbstract(root), s"abstract drift: $name")
-      assert(ex.doi == Boilerplate.findDoi(root, ex.mainText), s"doi drift: $name")
-      assert(ex.citationSpans == Boilerplate.findCitations(root), s"citations drift: $name")
+      assert(ex.title == HtmlOracle.findTitle(root), s"title drift: $name")
+      assert(ex.abstractText == HtmlOracle.findAbstract(root), s"abstract drift: $name")
+      assert(ex.doi == HtmlOracle.findDoi(root, ex.mainText), s"doi drift: $name")
+      assert(ex.citationSpans == HtmlOracle.findCitations(root), s"citations drift: $name")
     }
     def ex(name: String) = Boilerplate.extract(HtmlParser.parse(pages.toMap.apply(name)))
     assert(ex("form h1").title.contains("Form Title"))
@@ -103,7 +103,7 @@ class HtmlSpec extends AnyFunSuite {
     assert(Selectors.css(d, "p").toList.last.attr("data-k").contains("1"))
     // the field heuristics read the first class, so this is no abstract block
     assert(Boilerplate.extract(d).abstractText.isEmpty)
-    assert(Boilerplate.findAbstract(d).isEmpty)
+    assert(HtmlOracle.findAbstract(d).isEmpty)
   }
 
   test("full HTML4 named entity set decodes") {
@@ -126,9 +126,9 @@ class HtmlSpec extends AnyFunSuite {
   test("title is RCDATA: entities decode; script/style stay raw") {
     val d = HtmlParser.parse(
       "<html><head><title>Fish &amp; Chips &#8211; Review</title></head><body><p>x</p></body></html>")
-    assert(Boilerplate.findTitle(d).contains("Fish & Chips – Review"))
+    assert(HtmlOracle.findTitle(d).contains("Fish & Chips – Review"))
     val s = HtmlParser.parse("<body><script>a &amp; b</script><p>t</p></body>")
-    assert(Selectors.cssFirst(s, "script").get.text() == "a &amp; b")
+    assert(HtmlOracle.text(Selectors.cssFirst(s, "script").get) == "a &amp; b")
   }
 
   test("rawtext close-tag must be a real closer (no prefix match)") {
@@ -137,7 +137,7 @@ class HtmlSpec extends AnyFunSuite {
     val ex = Boilerplate.extract(d)
     assert(!ex.mainText.contains("scriptend"))
     val t = HtmlParser.parse("<head><title>a</titleX>b</title></head><body><p>c</p></body>")
-    assert(Boilerplate.findTitle(t).contains("a</titleX>b"))
+    assert(HtmlOracle.findTitle(t).contains("a</titleX>b"))
   }
 
   test("self-closing syntax is ignored on HTML non-void elements, honored in foreign content") {
@@ -147,7 +147,7 @@ class HtmlSpec extends AnyFunSuite {
     // honoring it dropped XHTML-styled titles into body)
     val d = HtmlParser.parse(
       "<html><head><title/>Actual Title</title></head><body><p>x</p></body></html>")
-    assert(Boilerplate.findTitle(d).contains("Actual Title"))
+    assert(HtmlOracle.findTitle(d).contains("Actual Title"))
     // '<script/>' is RAWTEXT until a real closer — markup after it must
     // not leak into extracted text
     val s = HtmlParser.parse(
@@ -162,24 +162,24 @@ class HtmlSpec extends AnyFunSuite {
     val f = HtmlParser.parse(
       "<body><svg><path d='M0 0'/></svg><p>after the svg a long enough " +
         "paragraph of real words that the classifier keeps as main text</p></body>")
-    assert(Selectors.cssFirst(f, "path").get.text() == "")
+    assert(HtmlOracle.text(Selectors.cssFirst(f, "path").get) == "")
     assert(Boilerplate.extract(f).mainText.contains("after the svg"))
     // HTML INTEGRATION POINTS: inside svg's foreignObject content is
     // HTML again, so '<p/>' there is ignored and owns the caption text
     val ip = HtmlParser.parse(
       "<body><svg><foreignObject><p/>caption text here</p></foreignObject></svg></body>")
-    assert(Selectors.cssFirst(ip, "p").get.text() == "caption text here")
+    assert(HtmlOracle.text(Selectors.cssFirst(ip, "p").get) == "caption text here")
     // MathML TEXT integration points (mi/mo/mn/ms/mtext, round-6 ADVICE):
     // content under <math><mi> is HTML again, so '<b/>' does NOT
     // self-close and owns the following text — lexbor parity
     val mi = HtmlParser.parse(
       "<body><math><mi><b/>bold inside mi</b></mi></math></body>")
-    assert(Selectors.cssFirst(mi, "b").get.text() == "bold inside mi")
+    assert(HtmlOracle.text(Selectors.cssFirst(mi, "b").get) == "bold inside mi")
     // ...while a non-integration-point MathML element stays foreign:
     // '<b/>' under <math><mrow> really closes and swallows nothing
     val mrow = HtmlParser.parse(
       "<body><math><mrow><b/>sibling text</mrow></math></body>")
-    assert(Selectors.cssFirst(mrow, "b").get.text() == "")
+    assert(HtmlOracle.text(Selectors.cssFirst(mrow, "b").get) == "")
   }
 
   test("pathologically deep nesting degrades gracefully, never kills the task") {
@@ -219,11 +219,11 @@ class HtmlSpec extends AnyFunSuite {
 
   test("text(strip) concatenates stripped text nodes, selectolax-style") {
     val h1 = Selectors.cssFirst(dom, "h1").get
-    assert(h1.text(strip = true) == "A Study of Things")
+    assert(HtmlOracle.text(h1, strip = true) == "A Study of Things")
     // Python's str.strip() also removes NBSP, NEL, U+2007 and U+202F,
     // which Java's String.strip() keeps
     val d = HtmlParser.parse("<h1>\u00a0A Study\u0085<b>\u2007of\u202f</b> Things\u00a0</h1>")
-    assert(Selectors.cssFirst(d, "h1").get.text(strip = true) == "A StudyofThings")
+    assert(HtmlOracle.text(Selectors.cssFirst(d, "h1").get, strip = true) == "A StudyofThings")
   }
 
   test("normalizedText equals the regex collapse of the space-joined text nodes (seeded property)") {
@@ -256,7 +256,7 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("boilerplate classifier picks main over nav/footer/body") {
-    val main = Boilerplate.mainContainer(dom)
+    val main = HtmlOracle.mainContainer(dom)
     assert(main.isDefined)
     assert(main.get.tag == "main")
   }

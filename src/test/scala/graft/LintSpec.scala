@@ -130,6 +130,16 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
       s"Deflater constructed outside graft/util/Deflate.scala: ${constructs.mkString(", ")}")
   }
 
+  test("src/main holds no test-only reference oracle (source lint)") {
+    // the reference transcriptions that the fused kernels replaced live in
+    // src/test next to the specs that pin the kernels to them
+    val needles = Seq("tokenize(", "matchTerms(", "findTitle(", "findAbstract(",
+      "findDoi(", "findCitations(")
+    val found = needles.map(n => n -> mainFilesContaining(n)).filter(_._2.nonEmpty)
+    assert(found.isEmpty, found.map { case (n, fs) =>
+      s"$n in ${fs.toSeq.sorted.mkString(", ")}" }.mkString("; "))
+  }
+
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {
     spark.catalog.clearCache()
     val persisting = Seq("q15_lsh_near_dup", "q24_ann_lsh",

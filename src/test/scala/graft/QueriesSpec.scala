@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
 import graft.queries.Queries
-import graft.textops.TextOps
+import graft.textops.TextOpsOracle
 
 /** Executes every SparkEntry query against the smallest fixture and pins
   * (a) non-empty results, (b) value-level spot checks against pure-Scala
@@ -235,7 +235,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(got.length == docs.size)
     got.foreach { r =>
       val text = docs(r.getLong(0))
-      val toks = TextOps.tokenize(text)
+      val toks = TextOpsOracle.tokenize(text)
       val m = toks.count(target.contains)
       val b = toks.count(bycatch.contains)
       val t = toks.length
@@ -344,7 +344,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // chance pairs alike
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> TextOps.tokenize(r.getString(1)).toVector)
+      .map(r => r.getLong(0) -> TextOpsOracle.tokenize(r.getString(1)).toVector)
     def bigrams(toks: Vector[String]): Set[String] =
       if (toks.length < 2) Set.empty
       else toks.sliding(2).map(_.mkString(" ")).toSet

@@ -44,75 +44,6 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(out).select("url").distinct().count() == 160)
   }
 
-  test("watermarked hourly windows equal the batch rollup after drain") {
-    val in = s"$tmp/events_in"
-    // watermarks need TIMESTAMP (LTZ); the fixture parquet reads as NTZ
-    val events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-      .withColumn("ts", col("ts").cast("timestamp"))
-    events.write.parquet(in)
-    val stream = spark.readStream.schema(events.schema).parquet(in)
-    val windowed = StreamingExtract.eventWindows(stream)
-    val q = windowed.writeStream.format("memory").queryName("win_t")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("win_t")
-    // batch reference computation of the same rollup (windows whose state
-    // was closed by the watermark — with AvailableNow + append mode the
-    // final watermark passes the max ts, closing all but the tail window)
-    val want = events
-      .groupBy(expr("date_trunc('hour', ts)").as("window_start"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(expr("FLOOR(value*100.0 + 0.5)")).as("sum_value_e2"))
-    val maxTs = events.agg(max("ts")).head().getTimestamp(0)
-    val horizon = new java.sql.Timestamp(maxTs.getTime - 3 * 3600 * 1000L)
-    val wantClosed = want.filter(col("window_start") <= lit(horizon))
-    val mismatches = wantClosed.join(got,
-        Seq("window_start", "event_type", "n_events", "sum_value_e2"), "left_anti")
-    assert(mismatches.count() == 0,
-      s"closed windows missing from streaming output")
-    assert(got.count() >= wantClosed.count())
-  }
-
-  test("flatMapGroupsWithState crawl ledger aggregates per domain") {
-    val in = s"$tmp/ledger_in"
-    ExtractPipeline.pages(spark, 200, 4).write.parquet(in)
-    val ledger = graft.streaming.DomainState.crawlLedger(
-      StreamingExtract.pagesStream(spark, in))
-    val q = ledger.writeStream.format("memory").queryName("ledger_t")
-      .outputMode("update").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("ledger_t")
-      .groupBy("domain")
-      .agg(max("n_docs").as("n_docs"), max("n_bytes").as("n_bytes"))
-    val byDomain = got.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    // the hot domain holds 30% of docIds (CorpusGen skew fixture)
-    assert(byDomain("d0.example.org") == 60L, s"hot: ${byDomain.get("d0.example.org")}")
-    assert(byDomain.values.sum == 200L)
-    // bytes tracked
-    assert(got.agg(sum("n_bytes")).head().getLong(0) > 0)
-  }
-
-  test("stream-static enrichment joins each micro-batch against the snapshot") {
-    val in = s"$tmp/enrich_in"
-    ExtractPipeline.pages(spark, 90, 3).write.parquet(in)
-    val scored = ExtractPipeline.extractAndScore(
-      StreamingExtract.pagesStream(spark, in), 0,
-      CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet)
-    val snap = graft.pipeline.Enrichment.dimensionsSnapshot(spark, 90)
-    val q = StreamingExtract.enrichStream(scored, snap)
-      .writeStream.format("memory").queryName("enrich_t")
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.table("enrich_t")
-    assert(got.count() == 90)
-    // docs with a DOI in the snapshot got their fields; misses stay null
-    val hits = got.filter(col("internal_id").isNotNull)
-    val wantHits = got.filter(col("doi") =!= "").count()
-    assert(hits.count() == wantHits, s"${hits.count()} joined of $wantHits doi docs")
-    assert(got.filter(col("doi") === "" && col("journal_title").isNotNull).count() == 0)
-  }
-
   test("dedupStream delay bounds BOTH guarantees: late uniques drop, stale dups leak") {
     // the documented correctness/state trade-off, pinned across two
     // availableNow ingestion runs over one checkpoint (the incremental
