@@ -132,10 +132,6 @@ object SimHash64 {
     while (b < 64) { if (votes(b) > 0) out |= (1L << b); b += 1 }
     out
   }
-
-  /** String convenience overload (tests, driver-side probes). */
-  def compute(text: String): Long =
-    compute(org.apache.spark.unsafe.types.UTF8String.fromString(text))
 }
 
 /** Integer dot product over two ArrayType(LongType) columns — the ANN

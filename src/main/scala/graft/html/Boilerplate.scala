@@ -2,6 +2,7 @@ package graft.html
 
 import scala.collection.mutable
 import graft.ids.Identifiers
+import HtmlDom._
 
 /** Text-density boilerplate classification + structured-field DOM
   * heuristics — the "main-content extraction" core mandated by the north
@@ -26,51 +27,33 @@ object Boilerplate {
       doi: Option[String],
       citationSpans: List[String])
 
-  private[html] val BlockTags = Set(
-    "p", "div", "article", "main", "section", "h1", "h2", "h3", "h4", "h5",
-    "h6", "li", "ul", "ol", "blockquote", "pre", "td", "th", "table", "tr",
-    "header", "footer", "nav", "aside", "body", "figcaption", "dd", "dt")
-
-  private val DropTags = Set(
-    "script", "style", "noscript", "template", "iframe", "svg", "form",
-    "button", "select", "option")
-
-  private val ContainerTags = Set(
-    "main", "article", "section", "div", "body", "td", "blockquote")
-
-  /** Per-element aggregate stats, computed in one bottom-up pass. */
-  private final class Stats {
-    var textChars: Int = 0
-    var linkChars: Int = 0
-    var leafScore: Double = 0.0 // signed content score of leaf blocks below
-    var depth: Int = 0
-  }
-
   def extract(html: String): Extraction = extract(HtmlParser.parse(html))
 
-  def extract(root: HElem): Extraction = {
-    val w = new Walk(root)
-    val mainText = Option(w.best).map(blockTexts(_).mkString("\n")).getOrElse("")
+  def extract(dom: HtmlDom): Extraction = {
+    val w = new Walk(dom)
+    val mainText = if (w.best < 0) "" else blockTexts(dom, w.best).mkString("\n")
 
-    // contentText (not normalizedText) everywhere a structured field is
-    // built from a subtree: an inline <script>/<style> inside an h1 or a
+    // contentText (not the raw subtree text) everywhere a structured field
+    // is built from a subtree: an inline <script>/<style> inside an h1 or a
     // citation block must not leak code into the field — the same rule
     // mainText already follows via block emission
-    val title = Option(w.firstH1).map(contentText).filter(_.nonEmpty)
-      .orElse(Option(w.firstTitleTag).map(contentText).filter(_.nonEmpty))
-    val abstractText = Option(w.firstAbstract).map { e =>
-      val texts = blockTexts(e)
-      val body = texts match {
-        case h :: rest if h.equalsIgnoreCase("abstract") => rest
-        case other => other
+    def fieldText(x: Int): Option[String] =
+      if (x < 0) None else Some(contentText(dom, x)).filter(_.nonEmpty)
+    val title = fieldText(w.firstH1).orElse(fieldText(w.firstTitleTag))
+    val abstractText =
+      if (w.firstAbstract < 0) None
+      else {
+        val body = blockTexts(dom, w.firstAbstract) match {
+          case h :: rest if h.equalsIgnoreCase("abstract") => rest
+          case other => other
+        }
+        Some(body.mkString("\n")).filter(_.nonEmpty)
       }
-      body.mkString("\n")
-    }.filter(_.nonEmpty)
     val doi = w.doiMetaContent.flatMap(Identifiers.extract)
-      .orElse(Option(w.firstDoiMarker).flatMap(e => Identifiers.extract(contentText(e))))
+      .orElse(if (w.firstDoiMarker < 0) None else Identifiers.extract(contentText(dom, w.firstDoiMarker)))
       .orElse(Identifiers.extract(mainText))
-    val citations = leafMost(w.cites.toList)
-      .map(contentText).filter(_.nonEmpty)
+    val citations = leafMost(dom, w.cites.result())
+      .map(contentText(dom, _)).filter(_.nonEmpty)
 
     Extraction(
       mainText = mainText,
@@ -80,116 +63,149 @@ object Boilerplate {
       citationSpans = citations)
   }
 
-  /** The one tree walk behind `extract`, run by the constructor. Bottom up
-    * it gathers the classifier's stats and keeps the best container (no
-    * per-element stats map, no second traversal). The density classifier
-    * picks the container maximizing signed leaf score (content leaves add
+  /** The one tree walk behind `extract`, run by the constructor. In one
+    * forward pass over the pre-order arena it gathers the classifier's
+    * stats bottom up (a node's stats are final when the walk leaves its
+    * subtree) and keeps the best container. The density classifier picks
+    * the container maximizing signed leaf score (content leaves add
     * len*(1-linkDensity); boilerplate leaves subtract their length, so
     * enclosing everything — e.g. body — loses to the tight main block
     * whenever real boilerplate exists); ties break toward the deeper
-    * (tighter) container. In the same pre-order over every element below
-    * `root`, DropTags subtrees included (they add no stats), it picks each
-    * structured field's candidates exactly as the reference find*
-    * heuristics in the tests do (HtmlSpec pins the two together): the
-    * first h1, title, abstract block, DOI meta and DOI marker, and every
-    * citation candidate. */
-  private[html] final class Walk(root: HElem) {
-    // preIdx preserves the original pre-order maxBy tie behavior exactly:
-    // max (leafScore, depth), first-in-pre-order among full ties
-    var best: HElem = null
+    * (tighter) container, then the earlier one. In the same pre-order over
+    * every element below the root, Drop subtrees included (they add no
+    * stats), it picks each structured field's candidates exactly as the
+    * reference find* heuristics in the tests do (HtmlSpec pins the two
+    * together): the first h1, title, abstract block, DOI meta and DOI
+    * marker, and every citation candidate. */
+  private[html] final class Walk(dom: HtmlDom) {
+    var best: Int = -1
     private var bestScore = 0.0
     private var bestDepth = -1
-    private var bestPre = Int.MaxValue
-    private var preCounter = 0
 
-    var firstH1: HElem = null
-    var firstTitleTag: HElem = null
-    var firstAbstract: HElem = null
+    var firstH1: Int = -1
+    var firstTitleTag: Int = -1
+    var firstAbstract: Int = -1
     private var doiMetaSeen = false
     var doiMetaContent: Option[String] = None
-    var firstDoiMarker: HElem = null
-    val cites = mutable.ListBuffer.empty[HElem]
+    var firstDoiMarker: Int = -1
+    val cites = mutable.ArrayBuilder.make[Int]
 
-    compute(root, 0, inLink = false)
+    // per open element (level = depth): its node and the stats so far
+    private var node = new Array[Int](64)
+    private var textChars = new Array[Int](64)
+    private var linkChars = new Array[Int](64)
+    private var leafScore = new Array[Double](64)
+    private var blockChild = new Array[Boolean](64)
+    private var inLink = new Array[Boolean](64)
 
-    private def pick(e: HElem): Unit = {
-      val tag = e.tag
-      if (firstH1 == null && tag == "h1") firstH1 = e
-      if (firstTitleTag == null && tag == "title") firstTitleTag = e
-      if (!doiMetaSeen && tag == "meta" &&
-          e.attr("name").exists(n => n.equalsIgnoreCase("citation_doi") || n.equalsIgnoreCase("dc.identifier"))) {
-        doiMetaSeen = true
-        doiMetaContent = e.attr("content")
+    run()
+
+    private def run(): Unit = {
+      val tags = dom.tags
+      val n = dom.size
+      var top = 0
+      node(0) = 0 // the root
+      var x = 1
+      while (x < n) {
+        val p = dom.parents(x)
+        while (node(top) != p) { finish(top); top -= 1 }
+        val t = tags(x)
+        if (t == Text) {
+          val len = dom.lens(x)
+          textChars(top) += len
+          if (inLink(top)) linkChars(top) += len
+          x += 1
+        } else {
+          pick(x, t)
+          val fl = flags(t)
+          if ((fl & Block) != 0) blockChild(top) = true
+          if ((fl & Drop) != 0) {
+            val end = dom.ends(x)
+            var y = x + 1
+            while (y < end) { if (tags(y) != Text) pick(y, tags(y)); y += 1 }
+            x = end
+          } else {
+            top += 1
+            if (top == node.length) grow()
+            node(top) = x
+            textChars(top) = 0; linkChars(top) = 0; leafScore(top) = 0.0
+            blockChild(top) = false
+            inLink(top) = inLink(top - 1) || t == A
+            x += 1
+          }
+        }
       }
-      val cls = e.attrs.getOrElse("class", "")
-      val idv = e.attrs.getOrElse("id", "")
+      while (top > 0) { finish(top); top -= 1 }
+    }
+
+    private def grow(): Unit = {
+      val c = node.length * 2
+      node = java.util.Arrays.copyOf(node, c)
+      textChars = java.util.Arrays.copyOf(textChars, c)
+      linkChars = java.util.Arrays.copyOf(linkChars, c)
+      leafScore = java.util.Arrays.copyOf(leafScore, c)
+      blockChild = java.util.Arrays.copyOf(blockChild, c)
+      inLink = java.util.Arrays.copyOf(inLink, c)
+    }
+
+    /** Close the element at `level`: score it as a leaf block (a block
+      * none of whose element children are blocks, the unit the classifier
+      * scores), offer it as a container, and add its stats to its parent
+      * in child order (the order of the float sum is part of the result). */
+    private def finish(level: Int): Unit = {
+      val e = node(level)
+      val fl = flags(dom.tags(e))
+      val tc = textChars(level)
+      if ((fl & Block) != 0 && !blockChild(level) && tc > 0) {
+        val linkDensity = linkChars(level).toDouble / tc
+        leafScore(level) +=
+          (if (tc >= 25 && linkDensity <= 0.30) tc * (1.0 - linkDensity) else -tc.toDouble)
+      }
+      val score = leafScore(level)
+      if ((fl & Container) != 0 && score > 0 &&
+          (best < 0 || score > bestScore ||
+            (score == bestScore && (level > bestDepth || (level == bestDepth && e < best))))) {
+        best = e; bestScore = score; bestDepth = level
+      }
+      textChars(level - 1) += tc
+      linkChars(level - 1) += linkChars(level)
+      leafScore(level - 1) += score
+    }
+
+    private def pick(e: Int, tag: Int): Unit = {
+      if (firstH1 < 0 && tag == H1) firstH1 = e
+      if (firstTitleTag < 0 && tag == Title) firstTitleTag = e
+      if (!doiMetaSeen && tag == Meta) {
+        val name = dom.attrIndex(e, NameAttr)
+        if (name >= 0) {
+          val v = dom.attrValue(name)
+          if (v.equalsIgnoreCase("citation_doi") || v.equalsIgnoreCase("dc.identifier")) {
+            doiMetaSeen = true
+            val content = dom.attrIndex(e, Content)
+            doiMetaContent = if (content < 0) None else Some(dom.attrValue(content))
+          }
+        }
+      }
+      val ca = dom.attrIndex(e, Class)
+      val ia = dom.attrIndex(e, Id)
+      val cls = if (ca < 0) "" else dom.attrValue(ca)
+      val idv = if (ia < 0) "" else dom.attrValue(ia)
       if (cls.isEmpty && idv.isEmpty) {
-        if (tag == "cite") cites += e
+        if (tag == Cite) cites += e
       } else {
         // the find* heuristics read the class and id joined by " " (no
         // marker word spans the separator) and, for the DOI marker,
         // joined with no separator, so "d" + "oi" is a hit there
         val lc = cls.toLowerCase(java.util.Locale.ROOT)
         val li = idv.toLowerCase(java.util.Locale.ROOT)
-        if (firstAbstract == null && (lc.contains("abstract") || li.contains("abstract")) &&
-            BlockTags.contains(tag))
+        if (firstAbstract < 0 && (lc.contains("abstract") || li.contains("abstract")) &&
+            (flags(tag) & Block) != 0)
           firstAbstract = e
-        if (firstDoiMarker == null &&
+        if (firstDoiMarker < 0 &&
             (if (li.isEmpty) lc else if (lc.isEmpty) li else lc + li).contains("doi"))
           firstDoiMarker = e
-        if (tag == "cite" || citeMarker(lc) || citeMarker(li)) cites += e
+        if (tag == Cite || citeMarker(lc) || citeMarker(li)) cites += e
       }
-    }
-
-    private def pickAll(e: HElem): Unit = {
-      pick(e)
-      e.children.foreach { case c: HElem => pickAll(c); case _ => () }
-    }
-
-    private def compute(e: HElem, depth: Int, inLink: Boolean): Stats = {
-      val preIdx = preCounter
-      preCounter += 1
-      if (e ne root) pick(e)
-      val s = new Stats
-      s.depth = depth
-      if (DropTags.contains(e.tag)) {
-        e.children.foreach { case c: HElem => pickAll(c); case _ => () }
-        return s
-      }
-      e.children.foreach {
-        case t: HText =>
-          val len = normLen(t.data)
-          s.textChars += len
-          if (inLink) s.linkChars += len
-        case c: HElem =>
-          val cs = compute(c, depth + 1, inLink || c.tag == "a")
-          s.textChars += cs.textChars
-          s.linkChars += cs.linkChars
-          s.leafScore += cs.leafScore
-        case _ => ()
-      }
-      // leaf block: a block element none of whose element children are
-      // themselves blocks — the unit the classifier scores
-      val isLeafBlock = BlockTags.contains(e.tag) &&
-        !e.elemChildren.exists(c => BlockTags.contains(c.tag)) &&
-        s.textChars > 0
-      if (isLeafBlock) {
-        val linkDensity =
-          if (s.textChars == 0) 0.0 else s.linkChars.toDouble / s.textChars
-        s.leafScore +=
-          (if (s.textChars >= 25 && linkDensity <= 0.30)
-             s.textChars * (1.0 - linkDensity)
-           else -s.textChars.toDouble)
-      }
-      if ((e ne root) && ContainerTags.contains(e.tag) && s.leafScore > 0) {
-        val better = s.leafScore > bestScore ||
-          (s.leafScore == bestScore &&
-            (s.depth > bestDepth || (s.depth == bestDepth && preIdx < bestPre)))
-        if (best == null || better) {
-          best = e; bestScore = s.leafScore; bestDepth = s.depth; bestPre = preIdx
-        }
-      }
-      s
     }
   }
 
@@ -202,91 +218,77 @@ object Boilerplate {
 
   private[html] val MarkerSplit = java.util.regex.Pattern.compile("[\\s_-]")
 
-  /** Normalized text of an element SKIPPING DropTags subtrees — the leaf
-    * emission form: a leaf block polluted by an inline script/style must
-    * not leak code into the extracted text. Same whitespace collapse as
-    * HElem.normalizedText. */
-  private[html] def contentText(e: HElem): String = {
+  /** Whitespace-collapsed text of an element's subtree SKIPPING Drop
+    * subtrees — the leaf emission form: a leaf block polluted by an inline
+    * script/style must not leak code into the extracted text. */
+  private[html] def contentText(dom: HtmlDom, e: Int): String = {
     val sb = new java.lang.StringBuilder
-    appendContent(e, sb)
+    appendContent(dom, e, sb)
     sb.toString
   }
 
-  /** Append `el`'s text nodes, collapsed, skipping DropTags subtrees. */
-  private def appendContent(el: HElem, sb: java.lang.StringBuilder): Unit =
-    el.children.foreach {
-      case t: HText => HElem.appendCollapsed(sb, t.data)
-      case c: HElem => if (!DropTags.contains(c.tag)) appendContent(c, sb)
-      case _        => ()
+  /** Append the text nodes below `e`, collapsed, skipping Drop subtrees. */
+  private def appendContent(dom: HtmlDom, e: Int, sb: java.lang.StringBuilder): Unit = {
+    val end = dom.ends(e)
+    var x = e + 1
+    while (x < end) {
+      val t = dom.tags(x)
+      if (t == Text) { appendCollapsed(sb, dom.buf, dom.froms(x), dom.tos(x)); x += 1 }
+      else if ((flags(t) & Drop) != 0) x = dom.ends(x)
+      else x += 1
     }
+  }
+
+  private def hasBlockChild(dom: HtmlDom, e: Int): Boolean = {
+    val end = dom.ends(e)
+    var c = e + 1
+    while (c < end) {
+      if ((flags(dom.tags(c)) & Block) != 0) return true
+      c = dom.ends(c)
+    }
+    false
+  }
 
   /** Document-order normalized texts of the blocks inside a container
     * (the paragraphs of the main content). A block with no block children
     * emits whole; a block that ALSO has direct text or inline children
     * around its block children (mixed content — the norm on real pages)
     * emits each inline run as its own block in document order, so
-    * interstitial prose is never silently dropped. */
-  def blockTexts(container: HElem): List[String] = {
+    * interstitial prose is never silently dropped. One builder serves the
+    * whole walk: every block and run starts from an emptied builder. */
+  def blockTexts(dom: HtmlDom, container: Int): List[String] = {
     val out = mutable.ListBuffer.empty[String]
-    def walk(e: HElem): Unit = {
-      if (DropTags.contains(e.tag)) return
-      val hasBlockChild = e.elemChildren.exists(c => BlockTags.contains(c.tag))
-      if (!hasBlockChild) {
-        val t = contentText(e)
-        if (t.nonEmpty) out += t
-      } else {
-        val sb = new java.lang.StringBuilder
-        def flushRun(): Unit = {
-          if (sb.length > 0) out += sb.toString
-          sb.setLength(0)
+    val sb = new java.lang.StringBuilder
+    def flush(): Unit = {
+      if (sb.length > 0) out += sb.toString
+      sb.setLength(0)
+    }
+    def walk(e: Int): Unit = {
+      if ((flags(dom.tags(e)) & Drop) != 0) return
+      if (!hasBlockChild(dom, e)) appendContent(dom, e, sb)
+      else {
+        val end = dom.ends(e)
+        var c = e + 1
+        while (c < end) {
+          val fl = flags(dom.tags(c))
+          if (dom.tags(c) == Text) appendCollapsed(sb, dom.buf, dom.froms(c), dom.tos(c))
+          else if ((fl & Drop) != 0) ()
+          else if ((fl & Block) != 0 || hasBlockChild(dom, c)) { flush(); walk(c) }
+          else appendContent(dom, c, sb)
+          c = dom.ends(c)
         }
-        e.children.foreach {
-          case t: HText => HElem.appendCollapsed(sb, t.data)
-          case c: HElem if DropTags.contains(c.tag) => ()
-          case c: HElem if BlockTags.contains(c.tag) ||
-              c.elemChildren.exists(b => BlockTags.contains(b.tag)) =>
-            flushRun(); walk(c)
-          case c: HElem => appendContent(c, sb)
-          case _ => ()
-        }
-        flushRun()
       }
+      flush()
     }
     walk(container)
     out.toList
   }
 
-  private def normLen(s: String): Int = {
-    // length of whitespace-collapsed text
-    var count = 0
-    var lastWs = true
-    var i = 0
-    while (i < s.length) {
-      val ws = s.charAt(i).isWhitespace
-      if (!ws) { count += 1; lastWs = false }
-      else if (!lastWs) { count += 1; lastWs = true }
-      i += 1
-    }
-    if (lastWs && count > 0) count - 1 else count
-  }
-
-  /** Drop candidates that are ancestors of other candidates, in
-    * O(candidates x depth): each candidate walks its parent chain ONCE
-    * and marks any candidate-ancestor it meets. The previous all-pairs
-    * isAncestor filter was O(c^2 x depth) — ~4M chain walks for one
-    * citation-dense 2000-candidate references page, on the per-page hot
-    * path. Identity sets on purpose: distinct DOM nodes can be
-    * structurally equal. */
-  private[html] def leafMost(candidates: List[HElem]): List[HElem] = {
-    val inSet = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[HElem, java.lang.Boolean]())
-    candidates.foreach(inSet.add)
-    val drop = java.util.Collections.newSetFromMap(
-      new java.util.IdentityHashMap[HElem, java.lang.Boolean]())
-    candidates.foreach { e =>
-      var p = e.parent
-      while (p != null) { if (inSet.contains(p)) { drop.add(p): Unit }; p = p.parent }
-    }
-    candidates.filterNot(drop.contains)
-  }
+  /** The candidates (in document order) that contain no other candidate:
+    * in the pre-order arena a candidate contains another exactly when the
+    * next candidate falls inside its subtree range. */
+  private[html] def leafMost(dom: HtmlDom, candidates: Array[Int]): List[Int] =
+    candidates.indices.filter { k =>
+      k + 1 == candidates.length || candidates(k + 1) >= dom.ends(candidates(k))
+    }.map(candidates(_)).toList
 }

@@ -13,13 +13,7 @@ object Selectors {
       tag: Option[String],
       id: Option[String],
       classes: Set[String],
-      nthChild: Option[Int]) {
-    def matches(e: HElem): Boolean =
-      tag.forall(_ == e.tag) &&
-        id.forall(i => e.id.contains(i)) &&
-        classes.subsetOf(e.classes) &&
-        nthChild.forall(_ == e.nthChildIndex)
-  }
+      nthChild: Option[Int])
 
   sealed trait Combinator
   case object Descendant extends Combinator
@@ -82,40 +76,80 @@ object Selectors {
   }
 
   /** All matches in document order. */
-  def css(root: HElem, selector: String): Iterator[HElem] = {
-    val sel = compile(selector)
-    root.descendants.filter(e => matchesChain(e, sel))
+  def css(dom: HtmlDom, selector: String): Iterator[Int] = {
+    val chain = new Chain(dom, compile(selector))
+    Iterator.range(1, dom.size).filter(x => !dom.isText(x) && chain.matches(x))
   }
 
-  def cssFirst(root: HElem, selector: String): Option[HElem] = {
-    val it = css(root, selector)
+  def cssFirst(dom: HtmlDom, selector: String): Option[Int] = {
+    val it = css(dom, selector)
     if (it.hasNext) Some(it.next()) else None
   }
 
-  /** Match by walking ancestors right-to-left through the chain. */
-  private def matchesChain(e: HElem, sel: Selector): Boolean = {
-    val simples = (sel.head :: sel.rest.map(_._2)).toArray
-    val combs = sel.rest.map(_._1).toArray // combs(i) links simples(i) -> simples(i+1)
-    if (!simples.last.matches(e)) return false
+  private final val AnyTag = Int.MinValue
 
-    // recursive ancestor search over the remaining chain
-    def up(node: HElem, idx: Int): Boolean = {
+  /** A selector compiled against one page: its simple selectors in an
+    * array, each tag resolved to the page's name id once, so a match
+    * walks ancestors right-to-left through the chain without rebuilding
+    * anything per element. */
+  private final class Chain(dom: HtmlDom, sel: Selector) {
+    private val simples = (sel.head :: sel.rest.map(_._2)).toArray
+    private val combs = sel.rest.map(_._1).toArray // combs(i) links simples(i) -> simples(i+1)
+    private val tagIds = simples.map(_.tag.fold(AnyTag)(dom.nameId))
+
+    def matches(x: Int): Boolean = matchesSimple(simples.length - 1, x) && up(x, combs.length - 1)
+
+    private def matchesSimple(k: Int, x: Int): Boolean = {
+      val s = simples(k)
+      (tagIds(k) == AnyTag || dom.tags(x) == tagIds(k)) &&
+        s.id.forall { i => val a = dom.attrIndex(x, HtmlDom.Id); a >= 0 && dom.attrValue(a) == i } &&
+        s.classes.forall(hasClass(x, _)) &&
+        s.nthChild.forall(_ == nthChildIndex(x))
+    }
+
+    /** Whether `cls` is one of the element's class tokens (the class
+      * attribute split on runs of regex `\s`). */
+    private def hasClass(x: Int, cls: String): Boolean = {
+      val a = dom.attrIndex(x, HtmlDom.Class)
+      if (a < 0 || cls.isEmpty) return false
+      val cs = dom.buf
+      val end = dom.attrTos(a)
+      var i = dom.attrFroms(a)
+      while (i < end) {
+        while (i < end && HtmlDom.isWs(cs(i))) i += 1
+        val start = i
+        while (i < end && !HtmlDom.isWs(cs(i))) i += 1
+        if (i - start == cls.length) {
+          var k = 0
+          while (k < cls.length && cs(start + k) == cls.charAt(k)) k += 1
+          if (k == cls.length) return true
+        }
+      }
+      false
+    }
+
+    /** 1-based position among the parent's ELEMENT children. */
+    private def nthChildIndex(x: Int): Int = {
+      var c = dom.parents(x) + 1
+      var k = 1
+      while (c != x) { if (!dom.isText(c)) k += 1; c = dom.ends(c) }
+      k
+    }
+
+    private def up(node: Int, idx: Int): Boolean = {
       if (idx < 0) return true
-      val comb = combs(idx)
-      val want = simples(idx)
-      comb match {
+      combs(idx) match {
         case Child =>
-          val p = node.parent
-          p != null && p.tag != "#root" && want.matches(p) && up(p, idx - 1)
+          val p = dom.parents(node)
+          p > 0 && matchesSimple(idx, p) && up(p, idx - 1)
         case Descendant =>
-          var p = node.parent
-          while (p != null && p.tag != "#root") {
-            if (want.matches(p) && up(p, idx - 1)) return true
-            p = p.parent
+          var p = dom.parents(node)
+          while (p > 0) {
+            if (matchesSimple(idx, p) && up(p, idx - 1)) return true
+            p = dom.parents(p)
           }
           false
       }
     }
-    up(e, combs.length - 1)
   }
 }

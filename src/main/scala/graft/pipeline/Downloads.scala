@@ -29,9 +29,9 @@ object Downloads {
     * the q36 driver query and Modes.download both compose it, so the q36
     * oracle keeps covering the mode path. */
   def resolveButton(html: String, baseUrl: String): (String, String) = {
-    val onclick = graft.html.Selectors
-      .cssFirst(graft.html.HtmlParser.parse(html), "#buttons button:nth-child(1)")
-      .flatMap(_.attr("onclick")).getOrElse("")
+    val dom = graft.html.HtmlParser.parse(html)
+    val onclick = graft.html.Selectors.cssFirst(dom, "#buttons button:nth-child(1)")
+      .flatMap(dom.attr(_, "onclick")).getOrElse("")
     (onclick, cleanLink(onclick, baseUrl))
   }
 

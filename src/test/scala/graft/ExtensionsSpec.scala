@@ -33,7 +33,7 @@ class ExtensionsSpec extends AnyFunSuite with SparkTestBase {
                   distinct_overlap(array('a', 'b', 'c'), array('b', 'c', 'd')) AS o,
                   sorted_overlap_i64(array(1L, 3L, 5L), array(3L, 4L, 5L)) AS so""").head()
       assert(row.getFloat(0) == graft.textops.Float16.quantize(0.7425))
-      assert(row.getLong(1) == graft.functions.SimHash64.compute("the quick brown fox"))
+      assert(row.getLong(1) == graft.functions.SimHashText("the quick brown fox"))
       assert(row.getLong(2) == 32L)
       assert(row.getSeq[String](3).length == 4) // 4 r=2 band buckets
       assert(row.getLong(4) == 2L)

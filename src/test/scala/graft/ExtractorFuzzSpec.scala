@@ -111,21 +111,9 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     // sequences of exactly these constructs must never underflow the
     // stack or throw
     val rng = new scala.util.Random(7)
-    val tags = Vector("ul", "ol", "li", "dl", "dt", "dd", "table", "tr",
-      "td", "th", "p", "div", "span", "main")
     (0 until 300).foreach { caseIdx =>
-      val sb = new StringBuilder
-      (0 until 40).foreach { _ =>
-        val t = tags(rng.nextInt(tags.length))
-        rng.nextInt(5) match {
-          case 0 => sb.append(s"<$t>word ")
-          case 1 => sb.append(s"</$t>")
-          case 2 => sb.append(s"""</$t class="x">""")
-          case 3 => sb.append(s"<$t>")
-          case _ => sb.append("text ")
-        }
-      }
-      val doc = Extractor.extract(page(sb.toString.getBytes("UTF-8")))
+      val soup = graft.html.TagSoup.stackSoup(rng)
+      val doc = Extractor.extract(page(soup.getBytes("UTF-8")))
       assert(doc.kind == "html" || !doc.ok, s"case $caseIdx")
     }
   }

@@ -1,9 +1,47 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.html.{HtmlParser, Selectors, Boilerplate, HtmlOracle}
+import graft.html.{Boilerplate, HElem, HText, HtmlDom, HtmlOracle, HtmlParser, PointerBoilerplate,
+  PointerParser, Selectors, TagSoup}
 
 class HtmlSpec extends AnyFunSuite {
+
+  /** One node of a tree's canonical form, in document order: depth, tag
+    * (or "#text"), attributes in source order, text. Comments are not
+    * part of it: the arena does not store them. */
+  private type Token = (Int, String, Seq[(String, String)], String)
+
+  private def canonical(dom: HtmlDom): Vector[Token] = {
+    val depth = new Array[Int](dom.size)
+    (1 until dom.size).map { x =>
+      depth(x) = depth(HtmlOracle.parent(dom, x)) + 1
+      if (dom.isText(x)) (depth(x), "#text", Nil, HtmlOracle.text(dom, x))
+      else (depth(x), HtmlOracle.tagName(dom, x), HtmlOracle.attrs(dom, x), "")
+    }.toVector
+  }
+
+  private def canonical(root: HElem): Vector[Token] = {
+    val out = Vector.newBuilder[Token]
+    def walk(e: HElem, depth: Int): Unit = e.children.foreach {
+      case t: HText => out += ((depth, "#text", Nil, t.data))
+      case c: HElem => out += ((depth, c.tag, c.attrs.toSeq, "")); walk(c, depth + 1)
+      case _ => ()
+    }
+    walk(root, 1)
+    out.result()
+  }
+
+  /** Parse with the arena parser and check it against the pointer-DOM
+    * oracle: the same tree and the same five extraction fields. Every
+    * fixture page of this spec goes through here. */
+  private def parse(html: String): HtmlDom = {
+    val dom = HtmlParser.parse(html)
+    val root = PointerParser.parse(html)
+    assert(canonical(dom) == canonical(root), s"tree drift on: ${html.take(300)}")
+    assert(Boilerplate.extract(dom) == PointerBoilerplate.extract(root),
+      s"extraction drift on: ${html.take(300)}")
+    dom
+  }
 
   val page = """<!DOCTYPE html>
 <html><head><title>The Page Title</title>
@@ -31,7 +69,7 @@ class HtmlSpec extends AnyFunSuite {
 <footer><p><a href="/tos">Terms</a> | <a href="/privacy">Privacy</a></p></footer>
 </body></html>"""
 
-  lazy val dom = HtmlParser.parse(page)
+  lazy val dom = parse(page)
 
   test("fused single-pass extract equals the standalone field heuristics") {
     // extract() computes all fields in one traversal for speed; the find*
@@ -40,7 +78,7 @@ class HtmlSpec extends AnyFunSuite {
     (0L until 200L).filterNot(graft.corpus.CorpusGen.isPdfDoc).foreach { id =>
       val html = new String(graft.corpus.CorpusGen.genDoc(id)._1.html,
         java.nio.charset.StandardCharsets.UTF_8)
-      val root = HtmlParser.parse(html)
+      val root = parse(html)
       val ex = Boilerplate.extract(root)
       assert(ex.title == HtmlOracle.findTitle(root), s"title drift doc $id")
       assert(ex.abstractText == HtmlOracle.findAbstract(root), s"abstract drift doc $id")
@@ -69,14 +107,14 @@ class HtmlSpec extends AnyFunSuite {
       "non-ASCII markers" -> (s"""<section class="Résumé İABSTRACT"><p>Dotted abstract.</p></section>$body""" +
         """<span id="ΣREF-ref">Greek ref.</span><b class="ĐOI" id="dOİ">10.8888/dotted.marker</b>"""))
     pages.foreach { case (name, html) =>
-      val root = HtmlParser.parse(html)
+      val root = parse(html)
       val ex = Boilerplate.extract(root)
       assert(ex.title == HtmlOracle.findTitle(root), s"title drift: $name")
       assert(ex.abstractText == HtmlOracle.findAbstract(root), s"abstract drift: $name")
       assert(ex.doi == HtmlOracle.findDoi(root, ex.mainText), s"doi drift: $name")
       assert(ex.citationSpans == HtmlOracle.findCitations(root), s"citations drift: $name")
     }
-    def ex(name: String) = Boilerplate.extract(HtmlParser.parse(pages.toMap.apply(name)))
+    def ex(name: String) = Boilerplate.extract(parse(pages.toMap.apply(name)))
     assert(ex("form h1").title.contains("Form Title"))
     assert(ex("svg cite").citationSpans == List("Svg, A. (2001). Cited inside svg.", "Plain cite"))
     assert(ex("button doi").doi.contains("10.5555/button.1"))
@@ -93,30 +131,30 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("a repeated attribute keeps its first value") {
-    val d = HtmlParser.parse(
+    val d = parse(
       """<div class="x" class="abstract" id="a" id="b"><p>Not an abstract.</p></div>""" +
         """<p data-k=1 data-k='2' data-k>v</p>""")
     val div = Selectors.cssFirst(d, "div").get
-    assert(div.attrs == Map("class" -> "x", "id" -> "a"))
+    assert(HtmlOracle.attrs(d, div) == Seq("class" -> "x", "id" -> "a"))
     assert(Selectors.cssFirst(d, "div.x#a").isDefined)
     assert(Selectors.cssFirst(d, "div.abstract").isEmpty && Selectors.cssFirst(d, "#b").isEmpty)
-    assert(Selectors.css(d, "p").toList.last.attr("data-k").contains("1"))
+    assert(d.attr(Selectors.css(d, "p").toList.last, "data-k").contains("1"))
     // the field heuristics read the first class, so this is no abstract block
     assert(Boilerplate.extract(d).abstractText.isEmpty)
     assert(HtmlOracle.findAbstract(d).isEmpty)
   }
 
   test("full HTML4 named entity set decodes") {
-    val d = HtmlParser.parse(
+    val d = parse(
       "<body><p>caf&eacute; &Uuml;ber r&eacute;sum&eacute; &alpha;&beta; &euro;9 &frac12; &deg;C &Omega;</p></body>")
-    val t = Selectors.cssFirst(d, "p").get.normalizedText
+    val t = HtmlOracle.normalizedText(d, Selectors.cssFirst(d, "p").get)
     assert(t == "café Über résumé αβ €9 ½ °C Ω", t)
   }
 
   test("long/zero-padded numeric charrefs decode; out-of-range becomes U+FFFD (round-5 review)") {
-    val d = HtmlParser.parse(
+    val d = parse(
       "<body><p>&#x0001F600; &#128512; &#x12345678; &#99999999999999; &#x; &nosuchentity;</p></body>")
-    val t = Selectors.cssFirst(d, "p").get.normalizedText
+    val t = HtmlOracle.normalizedText(d, Selectors.cssFirst(d, "p").get)
     // zero-padded hex and plain decimal both hit U+1F600; digit strings
     // past 0x10FFFF (or past Long) are the HTML5 out-of-range error ->
     // U+FFFD; empty digits and unknown names stay literal text
@@ -124,19 +162,19 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("title is RCDATA: entities decode; script/style stay raw") {
-    val d = HtmlParser.parse(
+    val d = parse(
       "<html><head><title>Fish &amp; Chips &#8211; Review</title></head><body><p>x</p></body></html>")
     assert(HtmlOracle.findTitle(d).contains("Fish & Chips – Review"))
-    val s = HtmlParser.parse("<body><script>a &amp; b</script><p>t</p></body>")
-    assert(HtmlOracle.text(Selectors.cssFirst(s, "script").get) == "a &amp; b")
+    val s = parse("<body><script>a &amp; b</script><p>t</p></body>")
+    assert(HtmlOracle.subtreeText(s, Selectors.cssFirst(s, "script").get) == "a &amp; b")
   }
 
   test("rawtext close-tag must be a real closer (no prefix match)") {
-    val d = HtmlParser.parse(
+    val d = parse(
       """<body><script>var s="</scriptend>";</script><p>after</p></body>""")
     val ex = Boilerplate.extract(d)
     assert(!ex.mainText.contains("scriptend"))
-    val t = HtmlParser.parse("<head><title>a</titleX>b</title></head><body><p>c</p></body>")
+    val t = parse("<head><title>a</titleX>b</title></head><body><p>c</p></body>")
     assert(HtmlOracle.findTitle(t).contains("a</titleX>b"))
   }
 
@@ -145,12 +183,12 @@ class HtmlSpec extends AnyFunSuite {
     // engine): '/' on a non-void HTML start tag is IGNORED — '<title/>'
     // still enters RCDATA and owns the following text (round-6 review:
     // honoring it dropped XHTML-styled titles into body)
-    val d = HtmlParser.parse(
+    val d = parse(
       "<html><head><title/>Actual Title</title></head><body><p>x</p></body></html>")
     assert(HtmlOracle.findTitle(d).contains("Actual Title"))
     // '<script/>' is RAWTEXT until a real closer — markup after it must
     // not leak into extracted text
-    val s = HtmlParser.parse(
+    val s = parse(
       """<body><script src="x.js"/>var leaked = "<b>no</b>";</script>""" +
         "<p>kept paragraph with plenty of words so the boilerplate " +
         "classifier scores this block as the page's main content</p></body>")
@@ -159,27 +197,27 @@ class HtmlSpec extends AnyFunSuite {
     assert(ex.mainText.contains("kept"))
     // but in FOREIGN content (svg/math) self-closing is real: '<path/>'
     // closes, so the sibling text is NOT swallowed into the path element
-    val f = HtmlParser.parse(
+    val f = parse(
       "<body><svg><path d='M0 0'/></svg><p>after the svg a long enough " +
         "paragraph of real words that the classifier keeps as main text</p></body>")
-    assert(HtmlOracle.text(Selectors.cssFirst(f, "path").get) == "")
+    assert(HtmlOracle.subtreeText(f, Selectors.cssFirst(f, "path").get) == "")
     assert(Boilerplate.extract(f).mainText.contains("after the svg"))
     // HTML INTEGRATION POINTS: inside svg's foreignObject content is
     // HTML again, so '<p/>' there is ignored and owns the caption text
-    val ip = HtmlParser.parse(
+    val ip = parse(
       "<body><svg><foreignObject><p/>caption text here</p></foreignObject></svg></body>")
-    assert(HtmlOracle.text(Selectors.cssFirst(ip, "p").get) == "caption text here")
+    assert(HtmlOracle.subtreeText(ip, Selectors.cssFirst(ip, "p").get) == "caption text here")
     // MathML TEXT integration points (mi/mo/mn/ms/mtext, round-6 ADVICE):
     // content under <math><mi> is HTML again, so '<b/>' does NOT
     // self-close and owns the following text — lexbor parity
-    val mi = HtmlParser.parse(
+    val mi = parse(
       "<body><math><mi><b/>bold inside mi</b></mi></math></body>")
-    assert(HtmlOracle.text(Selectors.cssFirst(mi, "b").get) == "bold inside mi")
+    assert(HtmlOracle.subtreeText(mi, Selectors.cssFirst(mi, "b").get) == "bold inside mi")
     // ...while a non-integration-point MathML element stays foreign:
     // '<b/>' under <math><mrow> really closes and swallows nothing
-    val mrow = HtmlParser.parse(
+    val mrow = parse(
       "<body><math><mrow><b/>sibling text</mrow></math></body>")
-    assert(HtmlOracle.text(Selectors.cssFirst(mrow, "b").get) == "")
+    assert(HtmlOracle.subtreeText(mrow, Selectors.cssFirst(mrow, "b").get) == "")
   }
 
   test("pathologically deep nesting degrades gracefully, never kills the task") {
@@ -192,7 +230,7 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("DOI meta matches Dublin Core capitalization variants") {
-    val d = HtmlParser.parse(
+    val d = parse(
       """<head><meta name="DC.Identifier" content="10.1234/abc.1"></head><body><p>x</p></body>""")
     assert(Boilerplate.extract(d).doi.contains("10.1234/abc.1"))
   }
@@ -200,7 +238,7 @@ class HtmlSpec extends AnyFunSuite {
   test("parser builds the tree and decodes entities") {
     val p2 = Selectors.css(dom, "main p").toList
     assert(p2.length == 2)
-    assert(p2(1).normalizedText.contains("& entity-laden <ok>"))
+    assert(HtmlOracle.normalizedText(dom, p2(1)).contains("& entity-laden <ok>"))
   }
 
   test("script/style content is not treated as markup") {
@@ -208,57 +246,85 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("selector subset: tag, .class, #id, child, nth-child") {
-    assert(Selectors.cssFirst(dom, "h1.headline").map(_.normalizedText) ==
+    assert(Selectors.cssFirst(dom, "h1.headline").map(HtmlOracle.normalizedText(dom, _)) ==
       Some("A Study of Things"))
     assert(Selectors.cssFirst(dom, "#content > main > p").isDefined)
     assert(Selectors.cssFirst(dom, "ul.references > li:nth-child(2)")
-      .map(_.normalizedText) == Some("Doe, A. (2021). Prior work two."))
+      .map(HtmlOracle.normalizedText(dom, _)) == Some("Doe, A. (2021). Prior work two."))
     // reference-shaped selectors (webscrapers.py:408-417 uses deep descent)
     assert(Selectors.cssFirst(dom, "div#content main p").isDefined)
   }
 
   test("text(strip) concatenates stripped text nodes, selectolax-style") {
     val h1 = Selectors.cssFirst(dom, "h1").get
-    assert(HtmlOracle.text(h1, strip = true) == "A Study of Things")
+    assert(HtmlOracle.subtreeText(dom, h1, strip = true) == "A Study of Things")
     // Python's str.strip() also removes NBSP, NEL, U+2007 and U+202F,
     // which Java's String.strip() keeps
-    val d = HtmlParser.parse("<h1>\u00a0A Study\u0085<b>\u2007of\u202f</b> Things\u00a0</h1>")
-    assert(HtmlOracle.text(Selectors.cssFirst(d, "h1").get, strip = true) == "A StudyofThings")
+    val d = parse("<h1>\u00a0A Study\u0085<b>\u2007of\u202f</b> Things\u00a0</h1>")
+    assert(HtmlOracle.subtreeText(d, Selectors.cssFirst(d, "h1").get, strip = true) == "A StudyofThings")
   }
 
+  // text fragments over both whitespace definitions: regex \s (six ASCII
+  // chars, what emitted text collapses) and Character.isWhitespace (which
+  // adds U+001C-001F, U+2028 and U+3000 but not NBSP: the classifier length)
+  private val frags = Vector("a", "Bc", "d e", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\r\n",
+    "\u00a0", "\u0085", "\u2028", "\u3000", "x\ty", "", "z ", "\u001c", "\u001f")
+
   test("normalizedText equals the regex collapse of the space-joined text nodes (seeded property)") {
-    import graft.html.{HElem, HText}
     // the reference collapse: every text node followed by a space, then
     // runs of Java regex \s collapsed and the ends trimmed
     def collapse(nodes: Seq[String]): String =
       nodes.map(_ + " ").mkString.split("\\s+").filter(_.nonEmpty).mkString(" ")
-    val frags = Vector("a", "Bc", "d e", " ", "  ", "\t", "\n", "\u000B", "\f", "\r", "\r\n",
-      "\u00a0", "\u0085", "\u2028", "\u3000", "x\ty", "", "z ")
     val rnd = new scala.util.Random(10)
     (1 to 5000).foreach { _ =>
       val texts = Seq.newBuilder[String]
-      def build(depth: Int): HElem = {
-        val e = HElem("span")
+      // an empty comment after each run keeps adjacent runs two text nodes
+      def build(depth: Int): String = {
+        val sb = new StringBuilder("<span>")
         (0 until rnd.nextInt(4)).foreach { _ =>
-          if (depth < 3 && rnd.nextInt(3) == 0) e.append(build(depth + 1))
+          if (depth < 3 && rnd.nextInt(3) == 0) sb.append(build(depth + 1))
           else {
             val t = Vector.fill(rnd.nextInt(4))(frags(rnd.nextInt(frags.length))).mkString
             texts += t
-            e.append(new HText(t))
+            sb.append(t).append("<!---->")
           }
         }
-        e
+        sb.append("</span>").toString
       }
-      val root = build(0)
+      val dom = HtmlParser.parse(build(0))
       val nodes = texts.result()
-      assert(root.normalizedText == collapse(nodes), nodes.map(_.map(_.toInt)).toString)
+      assert(HtmlOracle.normalizedText(dom, 1) == collapse(nodes), nodes.map(_.map(_.toInt)).toString)
     }
+  }
+
+  test("the precomputed classifier length equals the pointer walk's normLen (seeded property)") {
+    // normLen counts Character.isWhitespace runs, not regex \s ones: a
+    // "fix" that made the two agree would move the container pick
+    val rnd = new scala.util.Random(11)
+    (1 to 5000).foreach { _ =>
+      val t = Vector.fill(1 + rnd.nextInt(6))(frags(rnd.nextInt(frags.length))).mkString
+      if (t.nonEmpty) {
+        val dom = HtmlParser.parse("<p>" + t + "</p>")
+        assert(dom.size == 3 && HtmlOracle.text(dom, 2) == t)
+        assert(HtmlOracle.textLen(dom, 2) == PointerBoilerplate.normLen(t), t.map(_.toInt).toString)
+      }
+    }
+  }
+
+  test("the arena tree and extraction equal the pointer-DOM oracle (seeded property)") {
+    val corpus = (0L until 5000L).filterNot(graft.corpus.CorpusGen.isPdfDoc).iterator.map(id =>
+      new String(graft.corpus.CorpusGen.genDoc(id)._1.html, java.nio.charset.StandardCharsets.UTF_8))
+    val stack = { val rng = new scala.util.Random(7); Iterator.fill(300)(TagSoup.stackSoup(rng)) }
+    val hostile = { val rng = new scala.util.Random(12); Iterator.fill(5000)(TagSoup.hostile(rng)) }
+    var pages = 0
+    (corpus ++ stack ++ hostile).foreach { html => parse(html); pages += 1 }
+    assert(pages == 3500 + 300 + 5000)
   }
 
   test("boilerplate classifier picks main over nav/footer/body") {
     val main = HtmlOracle.mainContainer(dom)
     assert(main.isDefined)
-    assert(main.get.tag == "main")
+    assert(HtmlOracle.tagName(dom, main.get) == "main")
   }
 
   test("extraction fields: title, abstract, doi, citations") {
@@ -276,50 +342,50 @@ class HtmlSpec extends AnyFunSuite {
   }
 
   test("void and self-closing tags do not break nesting") {
-    val d = HtmlParser.parse("<div><p>a<br>b</p><img src=x><p>c</p></div>")
+    val d = parse("<div><p>a<br>b</p><img src=x><p>c</p></div>")
     assert(Selectors.css(d, "div > p").length == 2)
   }
 
   test("unclosed and stray close tags are tolerated") {
-    val d = HtmlParser.parse("<div><p>one<p>two</span></div>")
+    val d = parse("<div><p>one<p>two</span></div>")
     assert(Selectors.css(d, "p").length == 2)
   }
 
   test("unclosed li/td/tr get implied end tags; no sibling text is lost") {
-    val d = HtmlParser.parse("<ul><li>one<li>two<li>three</ul>")
+    val d = parse("<ul><li>one<li>two<li>three</ul>")
     assert(Selectors.css(d, "ul > li").length == 3)
-    assert(Boilerplate.blockTexts(Selectors.cssFirst(d, "ul").get) ==
+    assert(Boilerplate.blockTexts(d, Selectors.cssFirst(d, "ul").get) ==
       List("one", "two", "three"))
-    val t = HtmlParser.parse(
+    val t = parse(
       "<table><tr><td>a<td>b<tr><td>c</table>")
     assert(Selectors.css(t, "tr").length == 2)
     assert(Selectors.css(t, "td").length == 3)
     // the boundary holds: a li inside a NESTED list never closes the outer li
-    val nested = HtmlParser.parse("<ul><li>outer<ul><li>inner</ul></li></ul>")
+    val nested = parse("<ul><li>outer<ul><li>inner</ul></li></ul>")
     assert(Selectors.css(nested, "ul > li > ul > li").length == 1)
   }
 
   test("close tags with attributes or trailing slash still close") {
-    val d = HtmlParser.parse("""<div><p>a</p></div class="x"><p>b</p>""")
+    val d = parse("""<div><p>a</p></div class="x"><p>b</p>""")
     // the decorated close ends the div, so the second p is its SIBLING
     assert(Selectors.css(d, "div > p").length == 1)
     assert(Selectors.css(d, "p").length == 2)
   }
 
   test("C1 numeric charrefs map through Windows-1252 (HTML5 table)") {
-    val d = HtmlParser.parse("<p>it&#146;s &#147;quoted&#148; &#151; ok</p>")
-    assert(Selectors.cssFirst(d, "p").get.normalizedText ==
+    val d = parse("<p>it&#146;s &#147;quoted&#148; &#151; ok</p>")
+    assert(HtmlOracle.normalizedText(d, Selectors.cssFirst(d, "p").get) ==
       "it’s “quoted” — ok")
     // unmapped C1 points pass through; normal refs unaffected
-    assert(HtmlParser.parse("<p>&#65;&#x42;</p>")
-      .descendants.next().normalizedText == "AB")
+    val ab = parse("<p>&#65;&#x42;</p>")
+    assert(HtmlOracle.normalizedText(ab, HtmlOracle.elements(ab).next()) == "AB")
   }
 
   test("mixed content: direct text around block children is emitted, in order") {
-    val d = HtmlParser.parse(
+    val d = parse(
       "<main>Intro sentence before the list.<p>para one</p>tail <b>note</b><p>para two</p></main>")
     val main = Selectors.cssFirst(d, "main").get
-    assert(Boilerplate.blockTexts(main) ==
+    assert(Boilerplate.blockTexts(d, main) ==
       List("Intro sentence before the list.", "para one", "tail note", "para two"))
   }
 

@@ -93,7 +93,7 @@ object PropertySpec extends Properties("graft") {
       (words, seed) =>
         val a = words.mkString(" ")
         val b = new scala.util.Random(seed).shuffle(words).mkString(" ")
-        graft.functions.SimHash64.compute(a) == graft.functions.SimHash64.compute(b)
+        graft.functions.SimHashText(a) == graft.functions.SimHashText(b)
     }
 
   property("DotI64.compute matches reference dot product") = {
