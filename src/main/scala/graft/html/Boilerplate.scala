@@ -27,8 +27,6 @@ object Boilerplate {
       doi: Option[String],
       citationSpans: List[String])
 
-  def extract(html: String): Extraction = extract(HtmlParser.parse(html))
-
   def extract(dom: HtmlDom): Extraction = {
     val w = new Walk(dom)
     val mainText = if (w.best < 0) "" else blockTexts(dom, w.best).mkString("\n")

@@ -28,23 +28,20 @@ object DoiCascade {
       .flatMap(k => metadata.get(k).filter(_.nonEmpty).map(v => DoiResult(v, k)))
       .nextOption()
 
-  /** Scan every Info-dict value — with TWO reference quirks kept
+  /** The Info-dict value scan — with TWO reference quirks kept
     * (doifrompdf.py:95-111): (a) the loop OVERWRITES its result every
     * iteration (`result = result` on a hit, `result = None` on a miss),
-    * so only the LAST value's outcome survives; (b) the exclusion of
-    * '/wps-journaldoi' is dead code there — pdfplumber metadata keys are
-    * slash-stripped, so the comparison never matches and the value IS
-    * scanned. Last-value-wins makes iteration order CONTRACTUAL, so the
-    * parameter type is SeqMap — a hash-ordered Map (which scrambles
+    * so only the LAST value's outcome survives, and only that value is
+    * scanned here (the earlier scans' answers are discarded, and the
+    * bank's backtracking DOI pattern stays off them); (b) the exclusion
+    * of '/wps-journaldoi' is dead code there — pdfplumber metadata keys
+    * are slash-stripped, so the comparison never matches and the value
+    * IS scanned. Last-value-wins makes iteration order CONTRACTUAL, so
+    * the parameter type is SeqMap — a hash-ordered Map (which scrambles
     * beyond 4 entries) cannot be passed by accident; PdfDoc.metadata
     * supplies document order, matching Python dict order. */
-  def fromInfoValues(metadata: SeqMap[String, String]): Option[DoiResult] = {
-    var result: Option[DoiResult] = None
-    metadata.foreach { case (_, v) =>
-      result = Identifiers.extract(v).map(id => DoiResult(id, "text"))
-    }
-    result
-  }
+  def fromInfoValues(metadata: SeqMap[String, String]): Option[DoiResult] =
+    metadata.lastOption.flatMap { case (_, v) => Identifiers.extract(v) }.map(DoiResult(_, "text"))
 
   def fromText(preprint: String): Option[DoiResult] =
     Identifiers.extract(preprint).map(id => DoiResult(id, "text"))

@@ -46,8 +46,9 @@ object Identifiers {
   private val ArxivPatterns: List[Pattern] = List(
     pyPattern("^(\\d{4}\\.\\d+)(?:v\\d+)?$"),
     pyPattern("arxiv[\\s]*:[\\s]*(\\d{4}\\.\\d+)(?:v\\d+)?(?:[\\s\\n\"<]|$)"),
-    pyPattern("(\\d{4}\\.\\d+)(?:v\\d+)?(?:\\.pdf)"),
-    pyPattern("^(\\d{4}\\.\\d+)(?:v\\d+)?$")
+    pyPattern("(\\d{4}\\.\\d+)(?:v\\d+)?(?:\\.pdf)")
+    // the reference lists the first pattern a second time, last; that
+    // copy can never be the first to match, so it is left out
   )
 
   // --- normalizers (doi_regex.py:21-45) -----------------------------------
@@ -93,43 +94,6 @@ object Identifiers {
     }
   }
 
-  /** Whether `hay` contains any of `needles` under
-    * `regionMatches(true, …)`, in one pass without folding the haystack.
-    * Each needle is non-empty and starts with an ASCII char, which an
-    * ASCII hay char case-matches only if the two are equal up to ASCII
-    * case; so regionMatches runs only there and at non-ASCII chars, where
-    * folds like 'ı'/'İ' → 'i' still apply. At an ASCII hay char the next
-    * hay char must also pass the same test against an ASCII second needle
-    * char: be non-ASCII, or equal to it up to ASCII case. */
-  private[graft] def containsIgnoreCase(hay: String, needles: Array[String]): Boolean = {
-    def asciiLower(c: Char): Int = if (c >= 'A' && c <= 'Z') c + 32 else c
-    val firsts = needles.map { nd =>
-      require(nd.nonEmpty && nd.charAt(0) < 0x80, s"needle must start with an ASCII char: '$nd'")
-      asciiLower(nd.charAt(0))
-    }
-    // -1: no second-char test (a one-char needle, or a non-ASCII second
-    // char, which an ASCII hay char can fold onto)
-    val seconds = needles.map(nd => if (nd.length > 1 && nd.charAt(1) < 0x80) asciiLower(nd.charAt(1)) else -1)
-    val n = hay.length
-    def mayMatchAt(j: Int, want: Int): Boolean =
-      want < 0 || (j < n && { val d = hay.charAt(j); d >= 0x80 || asciiLower(d) == want })
-    var i = 0
-    while (i < n) {
-      val c = hay.charAt(i)
-      val lc = asciiLower(c)
-      var k = 0
-      while (k < needles.length) {
-        if ((c >= 0x80 || (lc == firsts(k) && mayMatchAt(i + 1, seconds(k)))) &&
-            hay.regionMatches(true, i, needles(k), 0, needles(k).length)) return true
-        k += 1
-      }
-      i += 1
-    }
-    false
-  }
-
-  private val ArxivLiterals = Array("arxiv", ".pdf")
-
   /** Try each DOI pattern, then each arXiv pattern, over the casefolded
     * text; first hit is standardized (doi_regex.py:70-82). DOI patterns
     * standardize group(1); arXiv patterns standardize the WHOLE match
@@ -138,17 +102,24 @@ object Identifiers {
   def extract(text: String): Option[String] = {
     // necessary-condition prescans (semantics-preserving) run on the RAW
     // text: every DOI pattern contains the case-invariant literal `10.`,
-    // and every arXiv pattern needs "arxiv", ".pdf", or the WHOLE input
-    // shaped like an anchored id. The O(n) lowercase copy — this runs
-    // over the full main text of every page — is only paid when a
-    // prescan actually hits. NOTE: casefold ≈ toLowerCase here; they
-    // differ on ligatures/sharp-s (U+FB01 etc.), which do not occur in
-    // well-formed identifiers (divergence documented, accepted).
+    // and every arXiv pattern contains `\d{4}\.\d` (see arxivShape).
+    // The O(n) lowercase copy — this runs over the full main text of
+    // every page — is only paid when a prescan actually hits. NOTE:
+    // casefold ≈ toLowerCase here; they differ on ligatures/sharp-s
+    // (U+FB01 etc.), which do not occur in well-formed identifiers
+    // (divergence documented, accepted).
     val mightDoi = text.contains("10.")
-    val mightArxiv = containsIgnoreCase(text, ArxivLiterals) || anchoredIdShape(text)
-    if (!mightDoi && !mightArxiv) return None
-    val folded = text.toLowerCase(java.util.Locale.ROOT)
-    if (mightDoi) {
+    val mightArxiv = arxivShape(text)
+    if (!mightDoi && !mightArxiv) None
+    else firstHit(text.toLowerCase(java.util.Locale.ROOT), mightDoi, mightArxiv)
+  }
+
+  /** The bank itself over already-folded text: the DOI patterns when
+    * `doi`, then the arXiv patterns when `arxiv`; the first hit is
+    * standardized. With both flags set this is `extract` without its
+    * prescans. */
+  private[graft] def firstHit(folded: String, doi: Boolean, arxiv: Boolean): Option[String] = {
+    if (doi) {
       DoiPatterns.foreach { p =>
         val m = p.matcher(folded)
         if (m.find()) {
@@ -157,7 +128,7 @@ object Identifiers {
         }
       }
     }
-    if (mightArxiv) {
+    if (arxiv) {
       ArxivPatterns.foreach { p =>
         val m = p.matcher(folded)
         if (m.find()) {
@@ -169,25 +140,24 @@ object Identifiers {
     None
   }
 
-  /** Necessary condition for the two ANCHORED arXiv patterns
-    * (`^\d{4}\.\d+(v\d+)?$`): every char of the whole input is a digit
-    * (Character.isDigit — the patterns compile with
-    * UNICODE_CHARACTER_CLASS, so \d accepts Unicode digits and the
-    * prescan must too), '.', 'v'/'V' (raw text, pre-fold), or a final
-    * newline ($ matches before one). Body text has other letters and
-    * exits on the first char. */
-  private def anchoredIdShape(s: String): Boolean = {
-    if (s.isEmpty) return false
-    // code-point loop: UNICODE_CHARACTER_CLASS \d matches supplementary-
-    // plane Nd digits (surrogate pairs), so the prescan must test the code
-    // point, not the UTF-16 char — else prescan and regex disagree
+  /** Whether `s` holds four digits, a '.', then a digit: the shape every
+    * arXiv pattern contains (`\d{4}\.\d+`). Digits are tested by code
+    * point with Character.isDigit, which is what UNICODE_CHARACTER_CLASS
+    * `\d` matches (supplementary-plane digits included). Lowercasing
+    * neither creates nor removes a digit or a '.', and maps each to
+    * itself alone, so the shape in the raw text is necessary for any
+    * arXiv pattern to match the folded text. */
+  private def arxivShape(s: String): Boolean = {
+    var digits = 0 // length of the digit run that ends before cp
     var i = 0
     while (i < s.length) {
       val cp = s.codePointAt(i)
-      if (!(Character.isDigit(cp) || cp == '.' || cp == 'v' || cp == 'V' || cp == '\n')) return false
       i += Character.charCount(cp)
+      if (Character.isDigit(cp)) digits += 1
+      else if (cp == '.' && digits >= 4 && i < s.length && Character.isDigit(s.codePointAt(i))) return true
+      else digits = 0
     }
-    true
+    false
   }
 
   /** Search-field sniff: DOI-shaped queries search by doi, everything else

@@ -1,6 +1,6 @@
 package graft.pdf
 
-import scala.collection.mutable
+import scala.collection.{immutable, mutable}
 import graft.util.{Inflate, PngFilter}
 
 /** Document-level PDF reader: object table, page tree, metadata, stream
@@ -15,12 +15,13 @@ final class PdfDoc(data: Array[Byte]) {
   // (each was allocating its own 2x-size char[] per document)
   private val dataStr = new String(data, java.nio.charset.StandardCharsets.ISO_8859_1)
 
-  /** All objects in FILE ORDER (ObjStm contents interleaved at their
-    * container's position), unique ids. Two deliberate semantics here:
+  /** The object table, in FILE ORDER (ObjStm contents interleaved at
+    * their container's position), unique ids. Two deliberate semantics
+    * here:
     *   - fallback scans ("first/last object that looks like X") iterate
-    *     THIS vector — a plain Map.values iterates hash-ordered, which
-    *     made damaged-file page order and multi-revision trailer/info
-    *     picks nondeterministic;
+    *     this table in its order — a hash-ordered Map's values made
+    *     damaged-file page order and multi-revision trailer/info picks
+    *     nondeterministic;
     *   - an id conflict resolves to the LAST definition in file order,
     *     uniformly across top-level and ObjStm-contained copies (round-4
     *     ADVICE: a blanket top-level preference inverts for incremental
@@ -30,19 +31,20 @@ final class PdfDoc(data: Array[Byte]) {
     *     means newer for both storage forms). A redefined id also MOVES
     *     to its winning definition's position, so first/last fallback
     *     scans see the newest revision's order. */
-  val objectsOrdered: Vector[((Int, Int), PObj)] = {
+  val objects: immutable.SeqMap[(Int, Int), PObj] = {
     val top = scanObjects()
-    val topMap = top.toMap
-    val defs = top.flatMap {
-      case e @ (_, st @ PStream(dict, _)) if dict.get("Type").contains(PName("ObjStm")) =>
-        e +: objStmContents(st, topMap)
-      case e => Vector(e)
-    }
     val m = mutable.LinkedHashMap.empty[(Int, Int), PObj]
-    defs.foreach { case (id, o) => m.remove(id); m.update(id, o) }
-    m.toVector
+    def define(id: (Int, Int), o: PObj): Unit = { m.remove(id); m.update(id, o) }
+    top.foreach { case (id, o) =>
+      define(id, o)
+      o match {
+        case st @ PStream(dict, _) if dict.get("Type").contains(PName("ObjStm")) =>
+          objStmContents(st, top).foreach { case (cid, co) => define(cid, co) }
+        case _ => ()
+      }
+    }
+    immutable.SeqMap.from(m)
   }
-  val objects: Map[(Int, Int), PObj] = objectsOrdered.toMap
   private val trailerDict: Option[PDict] = findTrailer()
 
   /** Objects stored inside ONE /Type /ObjStm compressed stream (PDF
@@ -53,9 +55,9 @@ final class PdfDoc(data: Array[Byte]) {
     * position so id conflicts resolve by position uniformly. */
   private def objStmContents(
       st: PStream,
-      top: Map[(Int, Int), PObj]): Vector[((Int, Int), PObj)] = {
-    // this runs INSIDE the `objectsOrdered` initializer, so resolution
-    // must go through `top`, never this.objects (still null here) —
+      top: collection.Map[(Int, Int), PObj]): Vector[((Int, Int), PObj)] = {
+    // this runs INSIDE the `objects` initializer, so resolution must go
+    // through `top`, never this.objects (still null here) —
     // /Filter, /N and /First are all legal as indirect references
     def resolveTop(o: PObj): PObj = resolveIn(top, o)
     val dict = st.dict
@@ -84,7 +86,7 @@ final class PdfDoc(data: Array[Byte]) {
     out.result()
   }
 
-  private def scanObjects(): Vector[((Int, Int), PObj)] = {
+  private def scanObjects(): mutable.LinkedHashMap[(Int, Int), PObj] = {
     val out = mutable.LinkedHashMap.empty[(Int, Int), PObj]
     val s = dataStr
     val objPat = java.util.regex.Pattern.compile("(?m)(\\d+)\\s+(\\d+)\\s+obj\\b")
@@ -141,12 +143,12 @@ final class PdfDoc(data: Array[Byte]) {
           }
         // remove-then-update: a redefined id (incremental update) moves
         // to its LAST definition's position, keeping the whole-file
-        // last-wins ordering objectsOrdered builds on
+        // last-wins ordering `objects` builds on
         out.remove((num, gen))
         out.update((num, gen), obj)
       } catch { case _: Exception => () } // tolerate junk between objects
     }
-    out.toVector
+    out
   }
 
   private def findTrailer(): Option[PDict] = {
@@ -161,9 +163,9 @@ final class PdfDoc(data: Array[Byte]) {
     // PDF 1.5+ cross-reference STREAM doubles as the trailer dict; with
     // incremental updates several XRef streams exist and the LAST in file
     // order is the newest revision (its /Root //Info supersede earlier ones)
-    objectsOrdered.reverseIterator.map(_._2).collectFirst {
+    objects.values.collect {
       case PStream(d, _) if d.get("Type").contains(PName("XRef")) => d
-    }
+    }.lastOption
   }
 
   /** Bounded indirect-reference resolution: a circular ref chain (legal
@@ -173,7 +175,7 @@ final class PdfDoc(data: Array[Byte]) {
   def resolve(o: PObj): PObj = resolveIn(objects, o)
 
   /** [[resolve]] against the object table `objs`, at most 64 hops deep. */
-  private def resolveIn(objs: Map[(Int, Int), PObj], o: PObj, depth: Int = 0): PObj = o match {
+  private def resolveIn(objs: collection.Map[(Int, Int), PObj], o: PObj, depth: Int = 0): PObj = o match {
     case PRef(num, gen) =>
       if (depth >= 64) PNull
       else objs.get((num, gen)).map(resolveIn(objs, _, depth + 1)).getOrElse(PNull)
@@ -201,7 +203,7 @@ final class PdfDoc(data: Array[Byte]) {
     val infoDict = trailerDict.flatMap(_.get("Info")).flatMap(resolveDict)
       .orElse {
         // fallback: FIRST file-order object that looks like an info dict
-        objectsOrdered.iterator.map(_._2).collectFirst {
+        objects.valuesIterator.collectFirst {
           case d: PDict if (d.get("Producer").isDefined || d.get("Title").isDefined) &&
               !looksLikeOutline(d) => d
         }
@@ -229,7 +231,7 @@ final class PdfDoc(data: Array[Byte]) {
 
   def pages: List[Page] = {
     val catalog = trailerDict.flatMap(_.get("Root")).flatMap(resolveDict)
-      .orElse(objectsOrdered.iterator.map(_._2).collectFirst {
+      .orElse(objects.valuesIterator.collectFirst {
         case d: PDict if d.get("Type").contains(PName("Catalog")) => d
       })
     val rootPages = catalog.flatMap(_.get("Pages")).flatMap(resolveDict)
@@ -259,9 +261,9 @@ final class PdfDoc(data: Array[Byte]) {
     }
     rootPages.foreach(walk(_, None, None, 0))
     if (out.isEmpty) {
-      // fallback: collect raw Page objects in file order (objectsOrdered
-      // IS file order; a hash map's values are not)
-      objectsOrdered.iterator.map(_._2).foreach {
+      // fallback: collect raw Page objects in file order (`objects`
+      // keeps file order; a hash map's values do not)
+      objects.valuesIterator.foreach {
         case d: PDict if d.get("Type").contains(PName("Page")) =>
           walk(d, None, None, 0)
         case _ => ()

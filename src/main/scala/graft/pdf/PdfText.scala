@@ -257,8 +257,6 @@ object PdfText {
 
   /** Full-document text: pages joined with " "
     * (/root/reference/src/docscraper.py:205). */
-  def extractText(bytes: Array[Byte]): String = {
-    val doc = new PdfDoc(bytes)
+  def extractText(doc: PdfDoc): String =
     doc.pages.map(p => assemble(chars(doc)(p))).mkString(" ")
-  }
 }

@@ -132,9 +132,10 @@ object PdfWriter {
     out.toByteArray
   }
 
-  /** The text that `PdfText.extractText` must return for pages built by
-    * this writer: lines joined "\n" per page, pages joined " " — computed
-    * from the source, independent of the parser (golden by construction).
+  /** The text that `PdfText.extractText` must return for a `PdfDoc` of
+    * pages built by this writer: lines joined "\n" per page, pages joined
+    * " " — computed from the source, independent of the parser (golden by
+    * construction).
     */
   def expectedText(pages: Seq[PageSpec]): String =
     pages.map(_.lines.filter(_.trim.nonEmpty).map(collapse).mkString("\n")).mkString(" ")

@@ -38,7 +38,7 @@ object Extractor {
 
   private def extractPdf(page: PageRecord, nBytes: Long): ExtractedDoc = {
     val doc = new PdfDoc(page.html)
-    val text = doc.pages.map(p => PdfText.assemble(PdfText.chars(doc)(p))).mkString(" ")
+    val text = PdfText.extractText(doc)
     val metadata = doc.metadata
     val doi = DoiCascade(metadata, text).map(_.identifier).getOrElse("")
     ExtractedDoc(

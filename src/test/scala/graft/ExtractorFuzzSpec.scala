@@ -125,15 +125,21 @@ class ExtractorFuzzSpec extends AnyFunSuite {
     val target = graft.corpus.CorpusGen.TargetWords.toSet
     val bycatch = graft.corpus.CorpusGen.BycatchWords.toSet
     // "(=" x 32k: a backtracking \(.*=.*\) search is cubic in this line
-    // (4 KB already takes seconds); a 1 MB text of one token
+    // (4 KB already takes seconds); a 1 MB text of one token; three texts
+    // of the arXiv digit shape (four digits, '.', a digit), which reach
+    // the arXiv patterns through the DOI fallback on the main text
     val cases = Seq(
-      "(= paragraph" -> ("<html><body><p>" + "(=" * 32768 + "</p></body></html>"),
-      "1 MB token" -> ("<html><body><p>" + "x" * (1 << 20) + "</p></body></html>"))
-    cases.foreach { case (what, html) =>
+      ("(= paragraph", "(=" * 32768, 1),
+      ("1 MB token", "x" * (1 << 20), 1),
+      ("one long id", "1234." + "5" * 1000000, 1),
+      ("many short ids", "1234.5 " * 150000, 150000),
+      ("chained ids", "2024.1" * 170000 + "x", 1))
+    cases.foreach { case (what, text, words) =>
+      val html = "<html><body><p>" + text + "</p></body></html>"
       val doc = Await.result(Future(
         Extractor.score(Extractor.extract(page(html.getBytes("UTF-8"))), target, bycatch)), 10.seconds)
       assert(doc.ok, s"$what: ${doc.error}")
-      assert(doc.total_word_count == 1 && doc.paper_parentheticals.isEmpty, what)
+      assert(doc.total_word_count == words && doc.paper_parentheticals.isEmpty, what)
     }
   }
 

@@ -395,7 +395,7 @@ class HtmlSpec extends AnyFunSuite {
       <main><p>Body text long enough to be the main content of this page, clearly.</p></main>
       <div class="ref">Smith 2020 <script>clickRef(1);</script></div>
       </body></html>"""
-    val ex = Boilerplate.extract(page)
+    val ex = Boilerplate.extract(parse(page))
     assert(ex.title.contains("Real Title"))
     assert(ex.citationSpans == List("Smith 2020"))
   }

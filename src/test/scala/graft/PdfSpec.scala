@@ -46,7 +46,7 @@ class PdfSpec extends AnyFunSuite {
       s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
       "5 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Courier >> endobj\n" +
       "trailer << /Root 1 0 R >>\n%%EOF").getBytes("ISO-8859-1")
-    assert(graft.pdf.PdfText.extractText(bytes) == "hi")
+    assert(graft.pdf.PdfText.extractText(new PdfDoc(bytes)) == "hi")
   }
 
   test("FlateDecode with PNG predictor (DecodeParms) decodes content streams") {
@@ -101,7 +101,7 @@ class PdfSpec extends AnyFunSuite {
       s"/DecodeParms << /Predictor 12 /Columns $columns >> >> stream\n$payload\nendstream endobj\n" +
       "5 0 obj << /Type /Font /Subtype /Type1 /BaseFont /Courier >> endobj\n" +
       "trailer << /Root 1 0 R >>\n%%EOF").getBytes("ISO-8859-1")
-    assert(PdfText.extractText(bytes) == "pred")
+    assert(PdfText.extractText(new PdfDoc(bytes)) == "pred")
   }
 
   test("PNG predictor: a row with an unknown filter byte passes through unchanged") {
@@ -148,12 +148,12 @@ class PdfSpec extends AnyFunSuite {
   test("writer -> parser round trip is byte-identical (uncompressed)") {
     val bytes = PdfWriter.build(pages, Map("Title" -> "A Study", "doi" -> "10.4242/test.001"))
     assert(PdfDoc.isPdf(bytes))
-    assert(PdfText.extractText(bytes) == PdfWriter.expectedText(pages))
+    assert(PdfText.extractText(new PdfDoc(bytes)) == PdfWriter.expectedText(pages))
   }
 
   test("writer -> parser round trip is byte-identical (FlateDecode)") {
     val bytes = PdfWriter.build(pages, Map("Title" -> "A Study"), compress = true)
-    assert(PdfText.extractText(bytes) == PdfWriter.expectedText(pages))
+    assert(PdfText.extractText(new PdfDoc(bytes)) == PdfWriter.expectedText(pages))
   }
 
   test("metadata round trip, pdfplumber-shaped keys") {
@@ -166,18 +166,18 @@ class PdfSpec extends AnyFunSuite {
   test("multi-space runs collapse in word assembly") {
     val p = Seq(PdfWriter.PageSpec(Seq("alpha  beta   gamma")))
     val bytes = PdfWriter.build(p)
-    assert(PdfText.extractText(bytes) == "alpha beta gamma")
+    assert(PdfText.extractText(new PdfDoc(bytes)) == "alpha beta gamma")
   }
 
   test("empty page list and empty lines") {
-    assert(PdfText.extractText(PdfWriter.build(Seq(PdfWriter.PageSpec(Seq(""))))) == "")
+    assert(PdfText.extractText(new PdfDoc(PdfWriter.build(Seq(PdfWriter.PageSpec(Seq("")))))) == "")
   }
 
   test("many lines split across y positions stay in reading order") {
     val lines = (1 to 40).map(i => s"line number $i of the long page")
     val p = Seq(PdfWriter.PageSpec(lines))
     val bytes = PdfWriter.build(p, compress = true)
-    assert(PdfText.extractText(bytes) == lines.mkString("\n"))
+    assert(PdfText.extractText(new PdfDoc(bytes)) == lines.mkString("\n"))
   }
 
   test("assemble on hand-built chars: line chaining, stable ties, XTol gaps, spaces, NaN y") {
@@ -220,7 +220,7 @@ class PdfSpec extends AnyFunSuite {
       assert(doc.metadata.get("Title")
         .contains("Implicit Bias Is Behavior: A Functional-Cognitive Perspective on Implicit Bias"))
       assert(doc.metadata.get("Author").contains("Jan De Houwer"))
-      val text = PdfText.extractText(bytes)
+      val text = PdfText.extractText(doc)
       assert(text.length > 40000, s"only ${text.length} chars extracted")
       // body phrases survive word assembly (FlateDecode streams, embedded
       // subset fonts, multi-column layout)
