@@ -124,7 +124,8 @@ object Png {
     val rawLen = (height.toLong * (rowBytes + 1)).toInt
     // exactly rawLen bytes: a short, stalled or longer stream is None
     // (past the limit Inflate throws, and decode maps that to None)
-    val raw = Inflate(idat.toByteArray, limit = rawLen)
+    val z = idat.toByteArray
+    val raw = Inflate(z, 0, z.length, limit = rawLen)
     if (raw.length != rawLen) return None
     // a filter type above 4 is invalid in PNG; the shared unfilter would
     // pass its row through (the PDF rule), so reject it first

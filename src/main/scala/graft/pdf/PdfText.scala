@@ -1,7 +1,5 @@
 package graft.pdf
 
-import scala.collection.mutable
-
 /** Content-stream text interpreter + word/line assembly.
   *
   * Reproduces the extraction contract of the reference's
@@ -18,21 +16,46 @@ import scala.collection.mutable
   */
 object PdfText {
 
-  final case class PChar(c: Char, x0: Double, x1: Double, y: Double, size: Double)
+  /** One page's positioned glyphs in content-stream order, one primitive
+    * column per field: the char, its left and right x, and its top-down
+    * y. Growable; `size` glyphs are in use. */
+  final class Glyphs(capacity: Int) {
+    var size = 0
+    var c = new Array[Char](math.max(capacity, 16))
+    var x0 = new Array[Double](c.length)
+    var x1 = new Array[Double](c.length)
+    var y = new Array[Double](c.length)
+
+    def add(ch: Char, gx0: Double, gx1: Double, gy: Double): Unit = {
+      if (size == c.length) reserve(1)
+      c(size) = ch; x0(size) = gx0; x1(size) = gx1; y(size) = gy
+      size += 1
+    }
+
+    /** Make room for `more` glyphs past `size`. */
+    def reserve(more: Int): Unit = if (size + more > c.length) {
+      val cap = math.max(c.length * 2, size + more)
+      c = java.util.Arrays.copyOf(c, cap)
+      x0 = java.util.Arrays.copyOf(x0, cap)
+      x1 = java.util.Arrays.copyOf(x1, cap)
+      y = java.util.Arrays.copyOf(y, cap)
+    }
+  }
 
   /** Default glyph width (1/1000 em) when no /Widths present: Courier's
     * uniform 600. The synthetic corpus writes Courier, making positions
     * exact by construction. */
   private val DefaultWidth = 600.0
 
-  final class FontInfo(val widths: Option[(Int, Array[Double])], val defaultWidth: Double) {
-    def width(code: Int): Double = widths match {
-      case Some((first, arr)) if code >= first && code - first < arr.length =>
-        val w = arr(code - first)
-        if (w > 0) w else defaultWidth
-      case _ => defaultWidth
-    }
+  /** A font's /Widths from /FirstChar (`widths` null when it has none). */
+  final class FontInfo(first: Int, widths: Array[Double]) {
+    def width(code: Int): Double =
+      if (widths != null && code >= first && code - first < widths.length) {
+        val w = widths(code - first)
+        if (w > 0) w else DefaultWidth
+      } else DefaultWidth
   }
+  private val NoWidths = new FontInfo(0, null)
 
   def fontsFor(doc: PdfDoc)(page: doc.Page): Map[String, FontInfo] = {
     val fontDict = page.resources
@@ -46,31 +69,69 @@ object PdfText {
               case _             => 0
             }
             val widths = fd.get("Widths").map(doc.resolve) match {
-              case Some(PArr(xs)) =>
-                Some((first, xs.map { case PNum(v) => v; case _ => 0.0 }.toArray))
-              case _ => None
+              case Some(PArr(xs)) => xs.map { case PNum(v) => v; case _ => 0.0 }.toArray
+              case _ => null
             }
-            name -> new FontInfo(widths, DefaultWidth)
+            name -> new FontInfo(first, widths)
           }
         }
       case _ => Map.empty
     }
   }
 
+  // operand kinds; a reference, dict, name inside an array, boolean or
+  // null is Other: the text operators read none of them
+  private final val Num = 0
+  private final val Name = 1
+  private final val Str = 2
+  private final val Arr = 3
+  private final val Other = 4
+
+  /** An operand stack in parallel columns: kind, number value, and a
+    * [from, to) range — a string's bytes in the parser's buffer, an
+    * array's elements in a second stack, a name's '/' offset in `from`. */
+  private final class Operands {
+    var size = 0
+    var kind = new Array[Int](16)
+    var num = new Array[Double](16)
+    var from = new Array[Int](16)
+    var to = new Array[Int](16)
+
+    def push(k: Int, v: Double, a: Int, b: Int): Unit = {
+      if (size == kind.length) {
+        kind = java.util.Arrays.copyOf(kind, size * 2)
+        num = java.util.Arrays.copyOf(num, size * 2)
+        from = java.util.Arrays.copyOf(from, size * 2)
+        to = java.util.Arrays.copyOf(to, size * 2)
+      }
+      kind(size) = k; num(size) = v; from(size) = a; to(size) = b
+      size += 1
+    }
+
+    /** The number at `i`, 0 for any other operand. */
+    def numAt(i: Int): Double = if (kind(i) == Num) num(i) else 0.0
+  }
+
   /** Interpret a page's content stream into positioned chars.
-    * y is emitted top-down (distance from page top), pdfplumber-style. */
-  def chars(doc: PdfDoc)(page: doc.Page): List[PChar] = {
+    * y is emitted top-down (distance from page top), pdfplumber-style.
+    * Operands are read as the object parser reads them, without building
+    * objects for the ones the text operators use: a string decodes onto
+    * the parser's buffer and stays there until the next operator clears
+    * the stack. An operand that fails to parse is dropped, and reading
+    * resumes one byte past where its parse stopped. */
+  def chars(doc: PdfDoc)(page: doc.Page): Glyphs = {
     val content = doc.pageContent(page)
     val fonts = fontsFor(doc)(page)
     val pageHeight = page.height
 
-    val lexer = new PdfLexer(content, 0)
-    val stack = mutable.ArrayBuffer.empty[PObj] // operand stack
-    val out = mutable.ListBuffer.empty[PChar]
+    val lex = new PdfParser(content, 0)
+    val stack = new Operands
+    val elems = new Operands // the elements of the array operands
+    val out = new Glyphs(math.min(content.length, 4096))
 
     // text state
     var fontSize = 0.0
-    var font: FontInfo = new FontInfo(None, DefaultWidth)
+    var font = NoWidths
     var charSpacing = 0.0
     var wordSpacing = 0.0
     var hscale = 1.0
@@ -93,8 +154,6 @@ object PdfText {
       tm = tlm.clone()
     }
 
-    def num(o: PObj): Double = o match { case PNum(v) => v; case _ => 0.0 }
-
     // advance the text matrix by a pure translation T(adv,0)·tm: only the
     // e/f components change (e' = adv·a + e, f' = adv·b + f) — updated in
     // place instead of two array allocations PER CHARACTER (tm is always
@@ -104,97 +163,145 @@ object PdfText {
       tm(5) += adv * tm(1)
     }
 
-    def showString(str: PStr): Unit = {
-      var i = 0
-      while (i < str.bytes.length) {
-        val code = str.bytes(i) & 0xff
-        val ch = code.toChar
+    def showString(from: Int, to: Int): Unit = {
+      out.reserve(to - from)
+      var i = from
+      while (i < to) {
+        val code = lex.buf(i) & 0xff
         val w0 = font.width(code) / 1000.0
         val adv = (w0 * fontSize + charSpacing +
           (if (code == 0x20) wordSpacing else 0.0)) * hscale
         // glyph origin in text space -> device space via tm (assume CTM=I)
         val x = tm(4)
         val yUp = tm(5) + rise
-        out += PChar(ch, x, x + w0 * fontSize * hscale, pageHeight - yUp, fontSize)
+        out.add(code.toChar, x, x + w0 * fontSize * hscale, pageHeight - yUp)
         advance(adv)
         i += 1
       }
     }
 
-    def showTJ(arr: PArr): Unit = arr.v.foreach {
-      case s: PStr => showString(s)
-      case PNum(k) => advance(-k / 1000.0 * fontSize * hscale)
-      case _ => ()
+    // show the string operand at `i`, if it is one
+    def showAt(i: Int): Unit =
+      if (stack.kind(i) == Str) showString(stack.from(i), stack.to(i))
+
+    def showTJ(i: Int): Unit = {
+      var e = stack.from(i)
+      while (e < stack.to(i)) {
+        elems.kind(e) match {
+          case Str => showString(elems.from(e), elems.to(e))
+          case Num => advance(-elems.num(e) / 1000.0 * fontSize * hscale)
+          case _ => ()
+        }
+        e += 1
+      }
     }
 
-    while (!lexer.atEnd) {
-      lexer.skipWs()
-      if (!lexer.atEnd) {
-        val c = lexer.data(lexer.pos) & 0xff
+    // one operand, or one element of an array operand, onto `into`; a
+    // string's bytes go onto the parser's buffer
+    def operand(into: Operands): Unit = lex.cur match {
+      case '(' =>
+        val from = lex.bufLen
+        lex.scanLitString()
+        into.push(Str, 0, from, lex.bufLen)
+      case '<' if lex.peek(1) != '<' =>
+        val from = lex.bufLen
+        lex.scanHexString()
+        into.push(Str, 0, from, lex.bufLen)
+      case c if c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9') =>
+        if (lex.scanNumberOrRef()) into.push(Other, 0, 0, 0) else into.push(Num, lex.num, 0, 0)
+      case '/' if into eq stack =>
+        val at = lex.pos
+        lex.skipName()
+        stack.push(Name, 0, at, 0)
+      case '[' if into eq stack =>
+        lex.pos += 1
+        val from = elems.size
+        lex.skipWs()
+        while (lex.cur != ']') {
+          if (lex.atEnd) throw new PdfParseException("unterminated array")
+          operand(elems)
+          lex.skipWs()
+        }
+        lex.pos += 1
+        stack.push(Arr, 0, from, elems.size)
+      case _ =>
+        lex.parseObj()
+        into.push(Other, 0, 0, 0)
+    }
+
+    // an operator at [start, start + len) of the content
+    def operator(start: Int, len: Int): Unit = {
+      val n = stack.size
+      val a = content(start)
+      val b = if (len == 2) content(start + 1) else 0
+      if (len == 1 && a == '\'') {
+        translate(0, -leading)
+        if (n > 0) showAt(n - 1)
+      } else if (len == 1 && a == '"') {
+        if (n >= 3) {
+          wordSpacing = stack.numAt(n - 3)
+          charSpacing = stack.numAt(n - 2)
+          translate(0, -leading)
+          showAt(n - 1)
+        }
+      } else if (len == 2 && a == 'B' && b == 'T') {
+        tm = Array(1.0, 0, 0, 1, 0, 0); tlm = tm.clone()
+      } else if (len == 2 && a == 'T') b match {
+        case 'f' =>
+          if (n >= 2) {
+            fontSize = stack.numAt(n - 1)
+            if (stack.kind(n - 2) == Name)
+              font = fonts.getOrElse(lex.nameAt(stack.from(n - 2)), NoWidths)
+          }
+        case 'd' =>
+          if (n >= 2) translate(stack.numAt(n - 2), stack.numAt(n - 1))
+        case 'D' =>
+          if (n >= 2) {
+            leading = -stack.numAt(n - 1)
+            translate(stack.numAt(n - 2), stack.numAt(n - 1))
+          }
+        case 'm' =>
+          if (n >= 6) {
+            val s = Array.tabulate(6)(k => stack.numAt(n - 6 + k))
+            tlm = s; tm = s.clone()
+          }
+        case '*' => translate(0, -leading)
+        // a malformed operator with no operand (e.g. unsupported
+        // inline-image bytes tokenizing as keywords) must not throw and
+        // lose the whole document's text
+        case 'L' => if (n > 0) leading = stack.numAt(n - 1)
+        case 'c' => if (n > 0) charSpacing = stack.numAt(n - 1)
+        case 'w' => if (n > 0) wordSpacing = stack.numAt(n - 1)
+        case 'z' => if (n > 0) hscale = stack.numAt(n - 1) / 100.0
+        case 's' => if (n > 0) rise = stack.numAt(n - 1)
+        case 'j' => if (n > 0) showAt(n - 1)
+        case 'J' => if (n > 0 && stack.kind(n - 1) == Arr) showTJ(n - 1)
+        case _ => ()
+      }
+      // any other operator (ET included) just drops its operands
+    }
+
+    while (!lex.atEnd) {
+      lex.skipWs()
+      if (!lex.atEnd) {
+        val c = lex.cur
         if (c == '(' || c == '<' || c == '[' || c == '/' ||
             c == '+' || c == '-' || c == '.' || (c >= '0' && c <= '9')) {
-          try stack += lexer.parseObj()
-          catch { case _: Exception => lexer.pos += 1 }
+          val e = elems.size
+          val b = lex.bufLen
+          try operand(stack)
+          catch { case _: Exception => lex.pos += 1; elems.size = e; lex.bufLen = b }
         } else {
-          val op = lexer.keyword()
-          if (op.isEmpty) lexer.pos += 1
+          val start = lex.scanKeyword()
+          if (lex.pos == start) lex.pos += 1
           else {
-            op match {
-              case "BT" =>
-                tm = Array(1.0, 0, 0, 1, 0, 0); tlm = tm.clone()
-              case "ET" => ()
-              case "Tf" =>
-                if (stack.length >= 2) {
-                  fontSize = num(stack.last)
-                  stack(stack.length - 2) match {
-                    case PName(nm) => font = fonts.getOrElse(nm, new FontInfo(None, DefaultWidth))
-                    case _         => ()
-                  }
-                }
-              case "Td" =>
-                if (stack.length >= 2)
-                  translate(num(stack(stack.length - 2)), num(stack.last))
-              case "TD" =>
-                if (stack.length >= 2) {
-                  leading = -num(stack.last)
-                  translate(num(stack(stack.length - 2)), num(stack.last))
-                }
-              case "Tm" =>
-                if (stack.length >= 6) {
-                  val s = stack.takeRight(6).map(num).toArray
-                  tlm = s; tm = s.clone()
-                }
-              case "T*" => translate(0, -leading)
-              // lastOption: a malformed operator with no operand (e.g.
-              // unsupported inline-image bytes tokenizing as keywords)
-              // must not throw and lose the whole document's text
-              case "TL" => stack.lastOption.foreach(o => leading = num(o))
-              case "Tc" => stack.lastOption.foreach(o => charSpacing = num(o))
-              case "Tw" => stack.lastOption.foreach(o => wordSpacing = num(o))
-              case "Tz" => stack.lastOption.foreach(o => hscale = num(o) / 100.0)
-              case "Ts" => stack.lastOption.foreach(o => rise = num(o))
-              case "Tj" =>
-                stack.lastOption.foreach { case s: PStr => showString(s); case _ => () }
-              case "TJ" =>
-                stack.lastOption.foreach { case a: PArr => showTJ(a); case _ => () }
-              case "'" =>
-                translate(0, -leading)
-                stack.lastOption.foreach { case s: PStr => showString(s); case _ => () }
-              case "\"" =>
-                if (stack.length >= 3) {
-                  wordSpacing = num(stack(stack.length - 3))
-                  charSpacing = num(stack(stack.length - 2))
-                  translate(0, -leading)
-                  stack.last match { case s: PStr => showString(s); case _ => () }
-                }
-              case _ => () // non-text operator: operands just get dropped
-            }
-            stack.clear()
+            operator(start, lex.pos - start)
+            stack.size = 0; elems.size = 0; lex.bufLen = 0
           }
         }
       }
     }
-    out.toList
+    out
   }
 
   /** pdfplumber's default x/y tolerances: a char gap wider than XTol
@@ -203,56 +310,78 @@ object PdfText {
   private val YTol = 3.0
 
   /** Stable (y, x0) order of the line grouping, and the x0 order of a
-    * line: java.lang.Double.compare on the primitive fields, which is
+    * line: java.lang.Double.compare on the primitive columns, which is
     * what Ordering[Double] does, so NaN sorts after every number and
     * -0.0 before 0.0. */
-  private val ByYX: java.util.Comparator[PChar] = (a, b) => {
-    val c = java.lang.Double.compare(a.y, b.y)
-    if (c != 0) c else java.lang.Double.compare(a.x0, b.x0)
+  private def compare(g: Glyphs, byY: Boolean, a: Int, b: Int): Int = {
+    val c = if (byY) java.lang.Double.compare(g.y(a), g.y(b)) else 0
+    if (c != 0) c else java.lang.Double.compare(g.x0(a), g.x0(b))
   }
-  private val ByX: java.util.Comparator[PChar] = (a, b) => java.lang.Double.compare(a.x0, b.x0)
+
+  /** Stable sort of the glyph indices `ix[from, until)` — a check first,
+    * since content streams mostly draw in reading order and a stable sort
+    * of sorted input is the identity; otherwise the library's stable sort. */
+  private def sortIndices(g: Glyphs, ix: Array[Int], from: Int, until: Int, byY: Boolean): Unit = {
+    var k = from + 1
+    while (k < until && compare(g, byY, ix(k - 1), ix(k)) <= 0) k += 1
+    if (k < until) {
+      val boxed = Array.tabulate[Integer](until - from)(i => ix(from + i))
+      java.util.Arrays.sort(boxed, (a: Integer, b: Integer) => compare(g, byY, a, b))
+      k = 0
+      while (k < boxed.length) { ix(from + k) = boxed(k); k += 1 }
+    }
+  }
 
   /** pdfplumber-shaped extract_text over positioned chars. */
-  def assemble(chars: List[PChar]): String = {
+  def assemble(g: Glyphs): String = {
     // group into lines by top-down y with tolerance, CHAINED off the
     // previous char like pdfplumber's cluster_objects/cluster_list (a new
     // cluster starts when the gap from the PREVIOUS sorted value exceeds
     // the tolerance — anchoring at the line's first char instead would
     // split a drifting baseline, e.g. y = 100/102.5/105 with YTol 3, that
-    // pdfplumber chains into one line). Both sorts are TimSort, so stable.
-    val cs = chars.toArray
-    java.util.Arrays.sort(cs, ByYX)
-    val out = new java.lang.StringBuilder
+    // pdfplumber chains into one line). Both sorts are stable.
+    val n = g.size
+    val ix = Array.range(0, n)
+    sortIndices(g, ix, 0, n, byY = true)
+    val cs = g.c
+    val x0s = g.x0
+    val x1s = g.x1
+    val ys = g.y
+    // each glyph writes at most a separator and itself
+    val out = new Array[Char](2 * n)
+    var len = 0
     var start = 0
-    while (start < cs.length) {
+    while (start < n) {
       var end = start + 1
-      while (end < cs.length && !(cs(end).y - cs(end - 1).y > YTol)) end += 1
-      java.util.Arrays.sort(cs, start, end, ByX)
+      while (end < n && !(ys(ix(end)) - ys(ix(end - 1)) > YTol)) end += 1
+      sortIndices(g, ix, start, end, byY = false)
       // words are maximal runs of non-space chars with no gap over XTol;
       // they join with " ", and non-empty lines with "\n"
-      val lineStart = out.length
+      val lineStart = len
       var inWord = false
       var prevX1 = Double.NaN
       var k = start
       while (k < end) {
-        val ch = cs(k)
-        if (ch.c == ' ') inWord = false
+        val i = ix(k)
+        val ch = cs(i)
+        if (ch == ' ') inWord = false
         else {
           // a NaN x0 or x1 makes the gap NaN, which never splits
-          if (inWord && ch.x0 - prevX1 > XTol) inWord = false
+          if (inWord && x0s(i) - prevX1 > XTol) inWord = false
           if (!inWord) {
-            if (out.length > lineStart) out.append(' ')
-            else if (lineStart > 0) out.append('\n')
+            if (len > lineStart) { out(len) = ' '; len += 1 }
+            else if (lineStart > 0) { out(len) = '\n'; len += 1 }
             inWord = true
           }
-          out.append(ch.c)
+          out(len) = ch
+          len += 1
         }
-        prevX1 = ch.x1
+        prevX1 = x1s(i)
         k += 1
       }
       start = end
     }
-    out.toString
+    new String(out, 0, len)
   }
 
   /** Full-document text: pages joined with " "

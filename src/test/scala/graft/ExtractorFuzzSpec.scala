@@ -67,6 +67,31 @@ class ExtractorFuzzSpec extends AnyFunSuite {
       val doc = Await.result(Future(Extractor.extract(page(b))), 10.seconds)
       assert(!doc.ok || doc.kind == "pdf") // degraded or parsed, never thrown
     }
+    // byte runs that the object scan or the backward trailer search once
+    // read in quadratic time: a digit run under the header regex, and
+    // retried unterminated strings, hex strings, comments and keywords
+    // (VT separates a header but is no PDF white space). 1 MB of each
+    // gives, within the future, the row the regex-and-copy reader gives
+    // for 16 KB of it
+    def oracleRow(b: Array[Byte]): (Boolean, String, String) =
+      try (true, "", graft.pdf.oracle.PdfText.extractText(new graft.pdf.oracle.PdfDoc(b)))
+      catch { case e: Exception => (false, e.getClass.getSimpleName, "") }
+    def run(r: String, n: Int) = bytes("%PDF-1.4\n" + r * (n / r.length))
+    Seq("7", "1 0 obj(", "trailer(", "1 0 obj<", "trailer<", "1 0 obj%", "1\u000b0\u000bobj!").foreach { r =>
+      val want = oracleRow(run(r, 16 << 10))
+      val doc = Await.result(Future(Extractor.extract(page(run(r, 1000000)))), 10.seconds)
+      assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, s"run of '$r'")
+      assert(want == ((true, "", "")), s"run of '$r'")
+    }
+    // a string that reached the end leaves a mark; a later string with a
+    // long run of parens before that mark must still read in linear time,
+    // both on the object scan's resume and on the backward trailer search
+    Seq(("1 0 obj(1 0 obj(", ")("), ("trailer(", "trailer(")).foreach { case (pre, post) =>
+      def marked(n: Int) = bytes("%PDF-1.4\n" + pre + "()" * (n / 2) + post)
+      val want = oracleRow(marked(16 << 10))
+      val doc = Await.result(Future(Extractor.extract(page(marked(1000000)))), 10.seconds)
+      assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, s"parens after '$pre'")
+    }
   }
 
   test("a Flate bomb past the inflate cap becomes an ok=false row, not an OOM") {

@@ -132,13 +132,23 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
 
   test("src/main holds no test-only reference oracle (source lint)") {
     // the reference transcriptions that the fused kernels replaced live in
-    // src/test next to the specs that pin the kernels to them; so does the
-    // pointer DOM that the flat arena replaced
+    // src/test next to the specs that pin the kernels to them; so do the
+    // pointer DOM that the flat arena replaced and the regex-and-copy PDF
+    // reader that the byte-slice reader replaced
     val needles = Seq("tokenize(", "matchTerms(", "findTitle(", "findAbstract(",
-      "findDoi(", "findCitations(", "HElem", "HText", "HComment")
+      "findDoi(", "findCitations(", "HElem", "HText", "HComment",
+      "PdfLexer", "PChar", "pdf.oracle")
     val found = needles.map(n => n -> mainFilesContaining(n)).filter(_._2.nonEmpty)
     assert(found.isEmpty, found.map { case (n, fs) =>
       s"$n in ${fs.toSeq.sorted.mkString(", ")}" }.mkString("; "))
+  }
+
+  test("the PDF reader uses no regex (source lint)") {
+    // a backtracking object-header regex was quadratic on a digit run
+    // (64 KB of digits took 14.5 s); the reader scans its bytes by hand
+    val found = Seq("java.util.regex", "Pattern.compile")
+      .flatMap(n => mainFilesContaining(n).filter(_.startsWith("graft/pdf/")).map(n -> _))
+    assert(found.isEmpty, found.map { case (n, f) => s"$n in $f" }.mkString("; "))
   }
 
   test("repeated invocations of the persisting queries do not grow OR empty the cache") {

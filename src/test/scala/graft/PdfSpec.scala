@@ -49,6 +49,36 @@ class PdfSpec extends AnyFunSuite {
     assert(graft.pdf.PdfText.extractText(new PdfDoc(bytes)) == "hi")
   }
 
+  test("an object number past Int.MaxValue is junk, not a failed document") {
+    // the scan reads each header's numbers as Ints; one that does not fit
+    // is skipped like any header whose object fails to parse, wherever it
+    // sits (here inside a comment), and never wraps onto a real id (2^32 + 4
+    // after the content stream would redefine it)
+    val body = "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >> endobj\n" +
+      "4 0 obj << /Length 22 >> stream\nBT (hello) Tj ET      \nendstream endobj\n" +
+      "trailer << /Root 1 0 R >>\n%%EOF"
+    for (junk <- Seq("% 99999999999 0 obj\n", "1 2147483648 obj\n", "4294967300 0 obj << >> endobj\n", "")) {
+      val bytes = ("%PDF-1.4\n" + junk + body + "\n" + junk).getBytes("ISO-8859-1")
+      assert(PdfText.extractText(new PdfDoc(bytes)) == "hello", s"junk: $junk")
+    }
+  }
+
+  test("an unterminated string drops the rest of its content stream, not the text before it") {
+    // a failed operand resumes one byte past where its parse stopped; an
+    // unterminated '(' reads to the end of the stream, so what follows it
+    // (here a nested string and a whole text object) is lost
+    val content = "BT /F1 12 Tf 72 700 Td (kept) Tj 0 -14 Td (open Tj (lost) Tj ET BT (lost too) Tj ET"
+    val bytes = ("%PDF-1.4\n" +
+      "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >> endobj\n" +
+      s"4 0 obj << /Length ${content.length} >> stream\n$content\nendstream endobj\n" +
+      "trailer << /Root 1 0 R >>\n%%EOF").getBytes("ISO-8859-1")
+    assert(PdfText.extractText(new PdfDoc(bytes)) == "kept")
+  }
+
   test("FlateDecode with PNG predictor (DecodeParms) decodes content streams") {
     // real-world ObjStm/XRef/content streams are near-always
     // /FlateDecode + /Predictor 12; encode a content stream with all four
@@ -181,8 +211,13 @@ class PdfSpec extends AnyFunSuite {
   }
 
   test("assemble on hand-built chars: line chaining, stable ties, XTol gaps, spaces, NaN y") {
-    import PdfText.{PChar, assemble}
-    def ch(c: Char, x0: Double, y: Double, w: Double = 5.0) = PChar(c, x0, x0 + w, y, 10.0)
+    // (char, x0, x1, y) in content-stream order, filled into a glyph buffer
+    def ch(c: Char, x0: Double, y: Double, w: Double = 5.0) = (c, x0, x0 + w, y)
+    def assemble(cs: List[(Char, Double, Double, Double)]): String = {
+      val g = new PdfText.Glyphs(cs.length)
+      cs.foreach { case (c, x0, x1, y) => g.add(c, x0, x1, y) }
+      PdfText.assemble(g)
+    }
     assert(assemble(Nil) == "")
     // a drifting baseline chains off the PREVIOUS char's y: 100 / 102.5 /
     // 105 is one line, read left to right; 108.5 (3.5 below 105) starts
