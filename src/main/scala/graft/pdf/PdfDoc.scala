@@ -189,14 +189,21 @@ final class PdfDoc(data: Array[Byte]) {
     -1
   }
 
+  /** The dict after the last `trailer` keyword that is followed by one.
+    * Only a dict can be the trailer, so a candidate whose next token (past
+    * white space and comments) does not open with `<<` is skipped
+    * unparsed: parsing it could only fail, and a string that closes far
+    * away would make every retry read to its end. */
   private def findTrailer(): Option[PDict] = {
     val lex = new PdfParser(data, 0)
     var idx = lastIndexOf(Trailer, data.length)
     while (idx >= 0) {
-      try {
-        lex.pos = idx + Trailer.length
-        return Some(lex.parseObj().asInstanceOf[PDict])
-      } catch { case _: Exception => idx = lastIndexOf(Trailer, idx - 1) }
+      lex.pos = idx + Trailer.length
+      lex.skipWs()
+      if (lex.cur == '<' && lex.peek(1) == '<')
+        try return Some(lex.parseDict())
+        catch { case _: Exception => () }
+      idx = lastIndexOf(Trailer, idx - 1)
     }
     // PDF 1.5+ cross-reference STREAM doubles as the trailer dict; with
     // incremental updates several XRef streams exist and the LAST in file
@@ -272,11 +279,20 @@ final class PdfDoc(data: Array[Byte]) {
       .orElse(objects.valuesIterator.collectFirst {
         case d: PDict if d.get("Type").contains(PName("Catalog")) => d
       })
-    val rootPages = catalog.flatMap(_.get("Pages")).flatMap(resolveDict)
+    // each page-tree node is walked once, as pdfminer.six's
+    // PDFPage.create_pages does: a referenced node is marked by its
+    // (num, gen) before it is resolved, so a Kids entry naming an ancestor
+    // or a node already walked is skipped. Without the mark, a node whose
+    // Kids lists itself twice fans out exponentially; the depth bound
+    // still stops a chain of distinct nodes
+    val visited = mutable.HashSet.empty[PRef]
+    def unvisited(o: PObj): Option[PDict] = o match {
+      case r: PRef if !visited.add(r) => None
+      case _ => resolveDict(o)
+    }
+    val rootPages = catalog.flatMap(_.get("Pages")).flatMap(unvisited)
 
     val out = mutable.ListBuffer.empty[Page]
-    // depth-bounded: a Kids entry referencing itself or an ancestor (cyclic
-    // page tree in a corrupt file) must not recurse unboundedly
     def walk(node: PDict, inhRes: Option[PDict], inhBox: Option[Array[Double]], depth: Int): Unit = {
       if (depth >= 64) return
       val res = node.get("Resources").flatMap(resolveDict).orElse(inhRes)
@@ -289,7 +305,7 @@ final class PdfDoc(data: Array[Byte]) {
         case PName("Pages") =>
           node.get("Kids").map(resolve) match {
             case Some(PArr(kids)) =>
-              kids.foreach(k => resolveDict(k).foreach(walk(_, res, box, depth + 1)))
+              kids.foreach(k => unvisited(k).foreach(walk(_, res, box, depth + 1)))
             case _ => ()
           }
         case PName("Page") =>

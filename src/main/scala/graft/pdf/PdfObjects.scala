@@ -134,21 +134,39 @@ final class PdfParser(val data: Array[Byte], var pos: Int) {
     }
   }
 
+  // dicts and arrays open around pos
+  private var nesting = 0
+
+  /** Enter one more dict or array, failing past [[MaxNesting]]: every
+    * retried object header would otherwise descend through all the
+    * containers opened after it, so `1 0 obj<<` repeated costs quadratic
+    * time and, on a small stack, a StackOverflowError. Each caller leaves
+    * with [[close]] in a `finally` (a by-name wrapper allocated a closure
+    * per container and read the 1 MB run 1.5x slower). */
+  private[pdf] def open(): Unit = {
+    if (nesting >= MaxNesting) throw new PdfParseException(s"nesting deeper than $MaxNesting at $pos")
+    nesting += 1
+  }
+  private[pdf] def close(): Unit = nesting -= 1
+
   def parseDict(): PDict = {
-    pos += 2 // <<
-    val m = mutable.LinkedHashMap.empty[String, PObj]
-    skipWs()
-    while (!(cur == '>' && peek(1) == '>')) {
-      if (atEnd) throw new PdfParseException("unterminated dict")
-      val key = parseName().v
-      val value = parseObj()
-      m.update(key, value)
+    open()
+    try {
+      pos += 2 // <<
+      val m = mutable.LinkedHashMap.empty[String, PObj]
       skipWs()
-    }
-    pos += 2 // >>
-    // VectorMap keeps document order: plain toMap hash-scrambles beyond 4
-    // entries, making "first matching Info key" scans nondeterministic
-    PDict(scala.collection.immutable.VectorMap.from(m))
+      while (!(cur == '>' && peek(1) == '>')) {
+        if (atEnd) throw new PdfParseException("unterminated dict")
+        val key = parseName().v
+        val value = parseObj()
+        m.update(key, value)
+        skipWs()
+      }
+      pos += 2 // >>
+      // VectorMap keeps document order: plain toMap hash-scrambles beyond 4
+      // entries, making "first matching Info key" scans nondeterministic
+      PDict(scala.collection.immutable.VectorMap.from(m))
+    } finally close()
   }
 
   /** The name at pos (on its '/', or on any byte for a dict key: the
@@ -183,16 +201,19 @@ final class PdfParser(val data: Array[Byte], var pos: Int) {
   }
 
   def parseArray(): PArr = {
-    pos += 1 // [
-    val xs = Vector.newBuilder[PObj]
-    skipWs()
-    while (cur != ']') {
-      if (atEnd) throw new PdfParseException("unterminated array")
-      xs += parseObj()
+    open()
+    try {
+      pos += 1 // [
+      val xs = Vector.newBuilder[PObj]
       skipWs()
-    }
-    pos += 1
-    PArr(xs.result())
+      while (cur != ']') {
+        if (atEnd) throw new PdfParseException("unterminated array")
+        xs += parseObj()
+        skipWs()
+      }
+      pos += 1
+      PArr(xs.result())
+    } finally close()
   }
 
   private def parseString(hex: Boolean): PStr = {
@@ -388,6 +409,10 @@ object PdfParser {
     else if (c >= 'A' && c <= 'F') c - 'A' + 10
     else -1
   private val Pow10: Array[Double] = Array.iterate(1.0, 16)(_ * 10)
+  /** The deepest dict/array nesting a parse accepts. */
+  val MaxNesting = 256
 }
 
-final class PdfParseException(msg: String) extends RuntimeException(msg)
+/** Carries no stack trace: a hostile page can throw one per object header
+  * or nesting level, and every catch reads only the class and message. */
+final class PdfParseException(msg: String) extends RuntimeException(msg, null, false, false)

@@ -214,16 +214,19 @@ object PdfText {
         lex.skipName()
         stack.push(Name, 0, at, 0)
       case '[' if into eq stack =>
-        lex.pos += 1
-        val from = elems.size
-        lex.skipWs()
-        while (lex.cur != ']') {
-          if (lex.atEnd) throw new PdfParseException("unterminated array")
-          operand(elems)
+        lex.open()
+        try {
+          lex.pos += 1
+          val from = elems.size
           lex.skipWs()
-        }
-        lex.pos += 1
-        stack.push(Arr, 0, from, elems.size)
+          while (lex.cur != ']') {
+            if (lex.atEnd) throw new PdfParseException("unterminated array")
+            operand(elems)
+            lex.skipWs()
+          }
+          lex.pos += 1
+          stack.push(Arr, 0, from, elems.size)
+        } finally lex.close()
       case _ =>
         lex.parseObj()
         into.push(Other, 0, 0, 0)

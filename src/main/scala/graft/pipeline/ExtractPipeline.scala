@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import graft.model.{PageRecord, ExtractedDoc, ScoredDoc}
+import graft.model.{PageRecord, ScoredDoc}
 import graft.corpus.CorpusGen
 
 /** The flagship Dataset pipeline (SURVEY.md §3.1 Spark shape):
@@ -66,21 +66,10 @@ object ExtractPipeline {
       "citation_spans", "target_hits", "bycatch_hits", "total_words")
   }
 
-  /** `pages` as they are for `numPartitions = 0` (parse on the scan
-    * splits), else repartitioned on the salted url hash. */
-  private def routed(pages: Dataset[PageRecord], numPartitions: Int): Dataset[PageRecord] =
-    if (numPartitions > 0) pages.repartition(numPartitions, xxhash64(col("url"), lit(0L)))
-    else pages
-
-  /** Parse stage. `numPartitions = 0` parses on the scan splits (see
-    * extractAndScore); `> 0` forces the salted url-hash repartition. */
-  def extract(pages: Dataset[PageRecord], numPartitions: Int): Dataset[ExtractedDoc] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    routed(pages, numPartitions).mapPartitions(_.map(Extractor.extract))
-  }
-
-  /** Parse + score stage in ONE partition pass.
+  /** Parse + score stage in ONE partition pass, and the only place a
+    * Spark job turns pages into rows: the mains, the modes, the queries
+    * and the resumable table (graft.table.GraftTable) all call it. Only
+    * the traced benchmark recomposes the layers, to time each one.
     *
     * `numPartitions = 0` (preferred at scale) parses directly on the scan
     * splits — extraction cost is proportional to input bytes, and byte-
@@ -89,9 +78,9 @@ object ExtractPipeline {
     * whole corpus across the wire for nothing. Pass `numPartitions > 0`
     * to force the salted url-hash repartition — needed only when the
     * input layout itself is pathological (e.g. unsplittable files with
-    * wildly different row costs); the resumable table path
-    * (graft.table.GraftTable) keeps its bucketed shuffle because resume
-    * semantics need deterministic bucket -> task ownership. */
+    * wildly different row costs). The resumable table passes 0 over its
+    * own bucketed shuffle, because resume semantics need deterministic
+    * bucket -> task ownership. */
   def extractAndScore(
       pages: Dataset[PageRecord],
       numPartitions: Int,
@@ -101,7 +90,10 @@ object ExtractPipeline {
     import spark.implicits._
     val bcTarget = spark.sparkContext.broadcast(targetWords)
     val bcBycatch = spark.sparkContext.broadcast(bycatchWords)
-    routed(pages, numPartitions).mapPartitions { it =>
+    val routed =
+      if (numPartitions > 0) pages.repartition(numPartitions, xxhash64(col("url"), lit(0L)))
+      else pages
+    routed.mapPartitions { it =>
       val t = bcTarget.value
       val b = bcBycatch.value
       it.map(p => Extractor.score(Extractor.extract(p), t, b))

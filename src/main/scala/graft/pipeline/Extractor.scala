@@ -11,7 +11,7 @@ import graft.textops.{TextOps, Float16}
   * these from `mapPartitions`. The parsers are stateless; the one piece
   * of shared state is the scoring term table, built once per pair of
   * word sets and reused by every document, task and caller
-  * (ExtractPipeline, GraftTable, Modes, the traced benchmark).
+  * (ExtractPipeline, Modes, the traced benchmark).
   */
 object Extractor {
 

@@ -69,6 +69,13 @@ object Queries {
   private def auxDump(df: DataFrame, name: String): Unit =
     if (auxDumpEnabled) df.write.mode("overwrite").parquet(s"$AuxDir/$name")
 
+  /** `n` generated pages through the pipeline's parse stage on the
+    * generator splits, scored with CorpusGen's word sets (q17, q21, q22
+    * read their columns from it). */
+  private def scoredPages(s: SparkSession, n: Long): DataFrame =
+    ExtractPipeline.extractAndScore(ExtractPipeline.pages(s, n), numPartitions = 0,
+      CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet).toDF()
+
   // ---- shared token snippets (dialect pair) --------------------------
   // Python-semantics tokenizer (reference /root/reference/src/docscraper.py:176-186):
   // strip, lower, single-space split keeping empty tokens.
@@ -981,9 +988,8 @@ object Queries {
       // salted route's skew defense is exercised by the bench skew legs
       // and PipelineSpec, and extraction is per-row, so the verdict
       // rollup is identical either way.
-      val e = auxTable(s, ExtractPipeline
-        .extract(ExtractPipeline.pages(s, n), numPartitions = 0)
-        .toDF().select("url", "kind", "extracted_text"), "q17_extracted")
+      val e = auxTable(s, scoredPages(s, n)
+        .select("url", "kind", "extracted_text"), "q17_extracted")
       val g = auxTable(s, ExtractPipeline.goldens(s, n)
         .select("url", "extracted_text"), "q17_goldens")
       val verdicts = ExtractPipeline.verifyAgainstGoldens(e, g)
@@ -1266,11 +1272,8 @@ object Queries {
   private val q21 = Q(
     "q21_citation_edges",
     (s, _) => {
-      import s.implicits._
-      val extracted = ExtractPipeline.extract(
-        ExtractPipeline.pages(s, 400), numPartitions = 0)
       graft.pipeline.Stagers.explodeWithSource(
-        auxTable(s, extracted.toDF().select("url", "title", "citation_spans"),
+        auxTable(s, scoredPages(s, 400).select("url", "title", "citation_spans"),
           "q21_input"),
         "title", "citation_spans")
     },
@@ -1289,11 +1292,8 @@ object Queries {
   private val q22 = Q(
     "q22_enrich_join",
     (s, _) => {
-      import s.implicits._
-      val extracted = ExtractPipeline.extract(
-        ExtractPipeline.pages(s, 400), numPartitions = 0)
       graft.pipeline.Enrichment.enrich(
-        auxTable(s, extracted.toDF().select("url", "doi", "title"), "q22_extracted"),
+        auxTable(s, scoredPages(s, 400).select("url", "doi", "title"), "q22_extracted"),
         auxTable(s, graft.pipeline.Enrichment.dimensionsSnapshot(s, 400), "q22_snapshot"))
     },
     Some(s"""SELECT e.doi, e.url, e.title, sn.times_cited,

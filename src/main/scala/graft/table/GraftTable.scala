@@ -3,7 +3,7 @@ package graft.table
 import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ScoredDoc, LineageRow}
-import graft.pipeline.Extractor
+import graft.pipeline.ExtractPipeline
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 import scala.concurrent.Await
@@ -205,21 +205,15 @@ object GraftTable {
         writeUtf8(hfs, marker, stagedCount.toString)
       }
     }
-    def waveInput(wave: Seq[Int]): Dataset[PageRecordWithBucket] =
-      if (!stageInput)
-        pending.filter(col("bucket").isin(wave.map(Integer.valueOf): _*))
-          .as[PageRecordWithBucket]
+    def waveInput(wave: Seq[Int]): DataFrame =
+      if (!stageInput) pending.filter(col("bucket").isin(wave.map(Integer.valueOf): _*))
       else {
         val dirs = wave.map(b => s"$stagedRoot/bucket=$b")
           .filter(p => hfs.exists(new Path(p)))
-        if (dirs.isEmpty) spark.emptyDataset[PageRecordWithBucket]
+        if (dirs.isEmpty) spark.emptyDataset[PageRecord].withColumn("bucket", lit(0))
         else spark.read.option("basePath", stagedRoot).parquet(dirs: _*)
-          .select("bucket", "url", "warc_ts", "html", "text", "lang")
-          .as[PageRecordWithBucket]
       }
 
-    val bcTarget = spark.sparkContext.broadcast(targetWords)
-    val bcBycatch = spark.sparkContext.broadcast(bycatchWords)
     // live progress counters (the tqdm analog, SURVEY.md §2.8): updated by
     // executors as tasks run, readable on the driver mid-job — lineage
     // rows remain the durable record
@@ -244,20 +238,20 @@ object GraftTable {
         throw new RuntimeException(s"injected failure after $failAfterWaves waves")
       val waveT0 = System.currentTimeMillis()
 
-      val scored = waveInput(wave)
-        .repartition(tasksPerWave, col("bucket"), xxhash64(col("url"), lit(attempt.toLong)))
-        .mapPartitions { it =>
-          val t = bcTarget.value
-          val b = bcBycatch.value
-          it.map { r =>
-            val s = Extractor.score(
-              Extractor.extract(PageRecord(r.url, r.warc_ts, r.html, r.text, r.lang)), t, b)
-            if (s.ok) okAcc.add(1) else errAcc.add(1)
-            bytesAcc.add(s.n_bytes)
-            ScoredDocWithBucket(r.bucket, s)
-          }
+      // the pipeline's parse stage over the wave's own bucketed shuffle;
+      // the bucket column is re-derived from the url by the function that
+      // placed the page, so every row lands in the bucket it came from
+      val scored = ExtractPipeline.extractAndScore(
+          waveInput(wave)
+            .repartition(tasksPerWave, col("bucket"), xxhash64(col("url"), lit(attempt.toLong)))
+            .drop("bucket").as[PageRecord],
+          numPartitions = 0, targetWords, bycatchWords)
+        .map { s =>
+          if (s.ok) okAcc.add(1) else errAcc.add(1)
+          bytesAcc.add(s.n_bytes)
+          s
         }
-        .select(col("bucket"), col("doc.*"))
+        .withColumn("bucket", bucketOf(col("url"), nBuckets))
 
       // the lineage counts ride inside the write job as a CollectMetrics
       // observation (the q41 / DedupGroups.movedCount pattern): three
@@ -420,20 +414,10 @@ object GraftTable {
       // correct time-travel answer is an EMPTY table with the data schema
       // — file columns first, partition column last, same as a real read
       import spark.implicits._
-      spark.emptyDataset[ScoredDocWithBucket].toDF()
-        .select(col("doc.*"), col("bucket"))
+      spark.emptyDataset[ScoredDoc].withColumn("bucket", lit(0))
     } else
       spark.read.option("basePath", s"$root/data")
         .parquet(files.map(f => s"$root/data/$f"): _*)
   }
 }
 
-final case class PageRecordWithBucket(
-    bucket: Int,
-    url: String,
-    warc_ts: java.sql.Timestamp,
-    html: Array[Byte],
-    text: String,
-    lang: String)
-
-final case class ScoredDocWithBucket(bucket: Int, doc: ScoredDoc)

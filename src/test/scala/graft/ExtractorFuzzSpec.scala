@@ -77,7 +77,9 @@ class ExtractorFuzzSpec extends AnyFunSuite {
       try (true, "", graft.pdf.oracle.PdfText.extractText(new graft.pdf.oracle.PdfDoc(b)))
       catch { case e: Exception => (false, e.getClass.getSimpleName, "") }
     def run(r: String, n: Int) = bytes("%PDF-1.4\n" + r * (n / r.length))
-    Seq("7", "1 0 obj(", "trailer(", "1 0 obj<", "trailer<", "1 0 obj%", "1\u000b0\u000bobj!").foreach { r =>
+    // (a dict opened in every header is bounded by the nesting limit)
+    Seq("7", "1 0 obj(", "trailer(", "1 0 obj<", "trailer<", "1 0 obj%", "1\u000b0\u000bobj!",
+        "1 0 obj<<").foreach { r =>
       val want = oracleRow(run(r, 16 << 10))
       val doc = Await.result(Future(Extractor.extract(page(run(r, 1000000)))), 10.seconds)
       assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, s"run of '$r'")
@@ -91,6 +93,23 @@ class ExtractorFuzzSpec extends AnyFunSuite {
       val want = oracleRow(marked(16 << 10))
       val doc = Await.result(Future(Extractor.extract(page(marked(1000000)))), 10.seconds)
       assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, s"parens after '$pre'")
+    }
+    // a string after each `trailer` that closes only at the far end: the
+    // backward trailer search skips a candidate that does not open a dict
+    def farClosing(n: Int) = bytes("%PDF-1.4\n" + "trailer(" * (n / 9) + ")" * (n / 9))
+    val want = oracleRow(farClosing(16 << 10))
+    val doc = Await.result(Future(Extractor.extract(page(farClosing(1000000)))), 10.seconds)
+    assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, "far-closing trailer strings")
+    // a page-tree node whose Kids name it more than once: each node is
+    // walked once, so the tree is one page, not 2^63 or 30^63 walks
+    Seq("2 0 R 2 0 R 3 0 R", "2 0 R " * 30 + "3 0 R").foreach { kids =>
+      val pdf = bytes("%PDF-1.5\n1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n" +
+        s"2 0 obj\n<< /Type /Pages /Kids [$kids] >>\nendobj\n" +
+        "3 0 obj\n<< /Type /Page /MediaBox [0 0 612 792] /Contents 4 0 R >>\nendobj\n") ++
+        streamObj(4, "", bytes("BT (hello) Tj ET")) ++ trailer
+      val (doc, want) = Await.result(Future((Extractor.extract(page(pdf)), oracleRow(pdf))), 10.seconds)
+      assert((doc.ok, doc.error.takeWhile(_ != ':'), doc.extracted_text) == want, s"Kids [$kids]")
+      assert(want == ((true, "", "hello")), s"Kids [$kids]")
     }
   }
 

@@ -210,6 +210,10 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     assert(snap.columns.contains("url") && snap.columns.contains("bucket"))
     // file columns first, partition column last — same order as a real read
     assert(snap.columns.last == "bucket")
+    // the data schema: every ScoredDoc column, then the int bucket
+    val want = org.apache.spark.sql.Encoders.product[graft.model.ScoredDoc].schema
+      .map(f => f.name -> f.dataType) :+ ("bucket" -> org.apache.spark.sql.types.IntegerType)
+    assert(snap.schema.map(f => f.name -> f.dataType) == want)
   }
 
   test("resume with a different nBuckets fails loudly (bucket-id modulus pinned)") {

@@ -130,6 +130,19 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
       s"Deflater constructed outside graft/util/Deflate.scala: ${constructs.mkString(", ")}")
   }
 
+  test("pages become rows only in ExtractPipeline's parse stage (source lint)") {
+    // the resumable table once kept a private copy of the extract-then-
+    // score stage with its own word-set broadcasts and wrapper rows; every
+    // Spark job now goes through ExtractPipeline.extractAndScore, and the
+    // traced benchmark recomposes the layers for its timers
+    val callers = mainFilesContaining("Extractor.extract(")
+    val allowed = Set("graft/pipeline/ExtractPipeline.scala", "graft/perfbench/TracedExtract.scala")
+    assert(callers.contains("graft/pipeline/ExtractPipeline.scala"), "the lint lost its needle")
+    assert(callers.subsetOf(allowed),
+      s"Extractor.extract( called outside ${allowed.toSeq.sorted.mkString(", ")}: " +
+        (callers -- allowed).toSeq.sorted.mkString(", "))
+  }
+
   test("src/main holds no test-only reference oracle (source lint)") {
     // the reference transcriptions that the fused kernels replaced live in
     // src/test next to the specs that pin the kernels to them; so do the

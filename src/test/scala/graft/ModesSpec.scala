@@ -199,19 +199,23 @@ class ModesSpec extends AnyFunSuite with SparkTestBase {
     val target = Set("spark")
     val path = tmpFile("abstracts.csv",
       "title,abstract\nT0,spark table\nT1,plain words\n")
-    // start clean so the assertion below is about THIS mode run
+    // the assertions below are about THIS mode run's RDDs only: earlier
+    // suites leave persisted RDDs (e.g. localCheckpoint'ed labels) that
+    // stay registered until the ContextCleaner happens to collect them
     spark.catalog.clearCache()
     Modes.releaseCaches()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val out = Modes.fastscore(spark, path, target, Set.empty)
     assert(out.count() == 2) // the caller's action — cache is live for it
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "finish() should persist the probe input")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(persisted.nonEmpty, "finish() should persist the probe input")
     // the round-3 advice: finish persisted with no release handle, so a
     // service looping over modes accumulated MEMORY_AND_DISK copies until
     // the ContextCleaner happened to run. releaseCaches is the handle.
     Modes.releaseCaches()
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
-      "releaseCaches must unpersist every mode-owned cached frame")
+    val left = spark.sparkContext.getPersistentRDDs.keySet.intersect(persisted)
+    assert(left.isEmpty,
+      s"releaseCaches must unpersist every mode-owned cached frame; still persisted: $left")
   }
 
   test("download mode: a throwing page fetch is a failed receipt, not a dead task") {

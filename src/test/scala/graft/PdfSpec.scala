@@ -32,8 +32,19 @@ class PdfSpec extends AnyFunSuite {
       "3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] >> endobj\n" +
       "trailer << /Root 1 0 R >>\n%%EOF").getBytes("ISO-8859-1")
     val doc = new graft.pdf.PdfDoc(bytes)
-    assert(doc.pages.nonEmpty) // the real page still surfaces
-    assert(doc.pages.length <= 64 * 2)
+    assert(doc.pages.length == 1) // the real page surfaces once
+  }
+
+  test("a page listed twice in Kids extracts once") {
+    val bytes = ("%PDF-1.4\n" +
+      "1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n" +
+      "2 0 obj << /Type /Pages /Kids [3 0 R 3 0 R] /Count 2 >> endobj\n" +
+      "3 0 obj << /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] /Contents 4 0 R >> endobj\n" +
+      "4 0 obj << /Length 16 >> stream\nBT (hello) Tj ET\nendstream endobj\n" +
+      "trailer << /Root 1 0 R >>\n%%EOF").getBytes("ISO-8859-1")
+    val doc = new PdfDoc(bytes)
+    assert(doc.pages.length == 1)
+    assert(PdfText.extractText(doc) == "hello")
   }
 
   test("malformed text operator with no operand loses nothing but itself") {

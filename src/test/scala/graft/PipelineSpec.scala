@@ -16,7 +16,8 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("distributed extract: every url byte-identical to golden") {
     val pages = ExtractPipeline.pages(spark, N, 4)
-    val extracted = ExtractPipeline.extract(pages, numPartitions = 4)
+    val extracted = ExtractPipeline.extractAndScore(pages, numPartitions = 4,
+      CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet)
     val verdicts = ExtractPipeline.verifyAgainstGoldens(
       extracted, ExtractPipeline.goldens(spark, N, 4))
     val rows = verdicts.collect()
@@ -228,6 +229,15 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val data = spark.read.parquet(s"$root/data")
     assert(data.count() == 200)
     assert(data.select("url").distinct().count() == 200, "no url parsed twice")
+    // every committed row is the pipeline's row for its url over the same
+    // pages, in every ScoredDoc column, under the bucket its url hashes to
+    val want = ExtractPipeline.extractAndScore(pages, 0, target, bycatch)
+      .collect().map(d => d.url -> d).toMap
+    val got = data.as[graft.model.ScoredDoc].collect()
+    assert(got.map(_.url).toSet == want.keySet)
+    got.foreach(d => assert(d == want(d.url), s"table row diverged from the pipeline's for ${d.url}"))
+    assert(data.filter(col("bucket") =!= GraftTable.bucketOf(col("url"), 8)).isEmpty,
+      "a row sits outside the bucket its url hashes to")
     val lineage = spark.read.parquet(s"$root/lineage")
     assert(lineage.select("bucket").distinct().count() == 8)
     // attempts recorded: wave-1 buckets attempt=1, rest attempt=2

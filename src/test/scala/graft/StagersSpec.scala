@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.pipeline.{Stagers, Enrichment, ExtractPipeline}
+import graft.corpus.CorpusGen
 
 class StagersSpec extends AnyFunSuite with SparkTestBase {
 
@@ -84,8 +85,9 @@ class StagersSpec extends AnyFunSuite with SparkTestBase {
   test("enrichment left-join hits DOIs and fills misses with N/A") {
     import spark.implicits._
     val n = 120L
-    val extracted = ExtractPipeline.extract(
-      ExtractPipeline.pages(spark, n), numPartitions = 0)
+    val extracted = ExtractPipeline.extractAndScore(
+      ExtractPipeline.pages(spark, n), numPartitions = 0,
+      CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet)
       .toDF().select("url", "doi")
     val out = Enrichment.enrich(extracted, Enrichment.dimensionsSnapshot(spark, n))
     assert(out.count() == n)

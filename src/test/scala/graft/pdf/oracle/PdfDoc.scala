@@ -238,11 +238,20 @@ final class PdfDoc(data: Array[Byte]) {
       .orElse(objects.valuesIterator.collectFirst {
         case d: PDict if d.get("Type").contains(PName("Catalog")) => d
       })
-    val rootPages = catalog.flatMap(_.get("Pages")).flatMap(resolveDict)
+    // each page-tree node is walked once, as pdfminer.six's
+    // PDFPage.create_pages does: a referenced node is marked by its
+    // (num, gen) before it is resolved, so a Kids entry naming an ancestor
+    // or a node already walked is skipped. Without the mark, a node whose
+    // Kids lists itself twice fans out exponentially; the depth bound
+    // still stops a chain of distinct nodes
+    val visited = mutable.HashSet.empty[PRef]
+    def unvisited(o: PObj): Option[PDict] = o match {
+      case r: PRef if !visited.add(r) => None
+      case _ => resolveDict(o)
+    }
+    val rootPages = catalog.flatMap(_.get("Pages")).flatMap(unvisited)
 
     val out = mutable.ListBuffer.empty[Page]
-    // depth-bounded: a Kids entry referencing itself or an ancestor (cyclic
-    // page tree in a corrupt file) must not recurse unboundedly
     def walk(node: PDict, inhRes: Option[PDict], inhBox: Option[Array[Double]], depth: Int): Unit = {
       if (depth >= 64) return
       val res = node.get("Resources").flatMap(resolveDict).orElse(inhRes)
@@ -255,7 +264,7 @@ final class PdfDoc(data: Array[Byte]) {
         case PName("Pages") =>
           node.get("Kids").map(resolve) match {
             case Some(PArr(kids)) =>
-              kids.foreach(k => resolveDict(k).foreach(walk(_, res, box, depth + 1)))
+              kids.foreach(k => unvisited(k).foreach(walk(_, res, box, depth + 1)))
             case _ => ()
           }
         case PName("Page") =>

@@ -88,7 +88,15 @@ final class PdfLexer(val data: Array[Byte], var pos: Int) {
     }
   }
 
-  def parseDict(): PDict = {
+  // dicts and arrays open around pos: past 256 the parse fails
+  private var nesting = 0
+  private def nested[A](body: => A): A = {
+    if (nesting >= 256) throw new PdfParseException(s"nesting deeper than 256 at $pos")
+    nesting += 1
+    try body finally nesting -= 1
+  }
+
+  def parseDict(): PDict = nested {
     pos += 2 // <<
     val m = mutable.LinkedHashMap.empty[String, PObj]
     skipWs()
@@ -118,7 +126,7 @@ final class PdfLexer(val data: Array[Byte], var pos: Int) {
     PName(sb.toString)
   }
 
-  def parseArray(): PArr = {
+  def parseArray(): PArr = nested {
     pos += 1 // [
     val xs = Vector.newBuilder[PObj]
     skipWs()
