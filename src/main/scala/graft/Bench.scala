@@ -3,10 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import graft.pipeline.ExtractPipeline
 import graft.corpus.CorpusGen
+import graft.queries.{Queries, RunCtx}
 
 /** Benchmark main. Emits ONE JSON line:
-  *   - per-query wall seconds for every SparkEntry query at
-  *     SPARK_GRAFT_CPUS parallelism on SPARK_GRAFT_SF_DIR;
+  *   - per-query wall seconds for every query at
+  *     SPARK_GRAFT_CPUS parallelism on SPARK_GRAFT_SF_DIR, run as one
+  *     bench-mode pass (one RunCtx: no oracle aux dumps, and q25 composes
+  *     on q15's pairs);
   *   - the headline metric from BASELINE.json: end-to-end extraction
   *     docs/sec (HTML boilerplate strip + PDF content-stream parse +
   *     scoring, byte-identical-gated corpus) over a pre-materialized
@@ -84,9 +87,6 @@ object Bench {
     BenchCommon.countOk(spark, pagesPath, tasks)
 
   def main(args: Array[String]): Unit = {
-    // bench times the operators, not verification: skip the oracle
-    // aux-parquet dumps some queries write for the DuckDB compare
-    graft.queries.Queries.auxDumpEnabled = false
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val nDocs = sys.env.getOrElse("SPARK_GRAFT_BENCH_DOCS", "160000").toLong
@@ -100,9 +100,12 @@ object Bench {
 
     // ---- phase 1: query suite at `cpus` ------------------------------
     val spark = session(cpus)
+    // bench times the operators, not verification: a bench-mode run skips
+    // the oracle aux-parquet dumps some queries write for the DuckDB compare
+    val ctx = new RunCtx(spark, sfDir, verify = false)
     // untimed warmup: JIT the SQL/codegen/parquet stack so the first
     // timed query doesn't carry interpreter cost
-    try SparkEntry.queries("q01_pricing_agg")(spark, sfDir).count()
+    try Queries("q01_pricing_agg").run(ctx).count()
     catch { case _: Throwable => }
     val failedQueries = scala.collection.mutable.ListBuffer.empty[String]
     /** Per-query telemetry beside the wall time (round-5 verdict #1: the
@@ -110,10 +113,10 @@ object Bench {
       * published wall time ONLY, so the anomaly could not be classified
       * from the artifact — now gc/cpu deltas and the resident cache size
       * classify a slow query in place). cached_mb_peak samples BEFORE the
-      * SwapCache release (round-6 ADVICE: after-only sampling reads 0
+      * held-frame release (round-6 ADVICE: after-only sampling reads 0
       * whether the query ran cached or fully uncached — the number that
       * settles the failure mode is the cache state the query ran under);
-      * `candidates` is q41's in-action candidate-pair count (Queries
+      * `candidates` is q41's in-action candidate-pair count (RunCtx
       * .q41CandidateCount); retry_* describe the anomaly retry below. */
     final case class QueryStat(sec: Double, gcMs: Long, cpuMs: Long,
         cachedMbPeak: Long, cachedMbAfter: Long, candidates: Long,
@@ -121,11 +124,12 @@ object Bench {
         retryCandidates: Long, retryOk: Boolean)
     def cachedMb: Long =
       spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum >> 20
-    val queryStats = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val queryStats = Queries.all.map { q =>
+      val name = q.name
       val gc0 = GcClock.ms
       val cpu0 = CpuClock.ms
       val sec = timeSec {
-        try fn(spark, sfDir).count()
+        try q.run(ctx).count()
         catch { case e: Throwable =>
           // a failing query must be VISIBLE in the metric line — its
           // time-to-failure would otherwise read as a speedup
@@ -138,14 +142,14 @@ object Bench {
       // ran under (the post-release sample below reads ~0 by design)
       val cachedPeak = cachedMb
       val candidates =
-        if (name == "q41_jaccard_join") graft.queries.Queries.q41CandidateCount else -1L
+        if (name == "q41_jaccard_join") ctx.q41CandidateCount else -1L
       // ---- anomaly retry (round-6 verdict #1) ------------------------
       // A query > 3x its recorded canonical time re-runs ONCE in this
       // same JVM before its caches are released: a fast retry proves a
       // transient host window (labeled, not mysterious); a slow retry
       // proves engine/state and the candidate count bisects which. The
       // retry is a full fresh invocation (each query's release-first
-      // SwapCache discipline rebuilds its own generation).
+      // Held generation discipline rebuilds its own generation).
       // SPARK_GRAFT_ANOMALY_FORCE=<query name> fires the retry machinery
       // unconditionally for that query — an evidence knob, not a tuning
       // one: it lets a smoke run DEMONSTRATE the retry path in an
@@ -158,24 +162,26 @@ object Bench {
       val (retrySec, retryGcMs, retryCpuMs, retryCand, retryOk) =
         if (anomaly) {
           System.err.println(s"[bench] $name anomaly: ${fmt(sec)}s — retrying in-JVM")
-          // q15's timed run BUILT the Q15Result cache (which deliberately
-          // survives releaseSwapCaches — q25 composes on it), so its
+          // q15's timed run BUILT the run's q15 pairs (which deliberately
+          // survive releaseSwapCaches — q25 composes on them), so its
           // retry must invalidate or it reads the persisted pairs back in
           // milliseconds and a genuine engine regression is misclassified
-          // as a host window (round-7 review). q25 is the OPPOSITE case:
-          // its timed run legitimately read the cache, so its retry must
-          // run under the same cache conditions — invalidating there
-          // would make even a healthy retry rebuild the whole LSH
-          // pipeline and read as "engine/state", the inverse bias. (A
-          // q25 whose cache was silently unpersisted mid-suite rebuilds
-          // via Q15Result.get's storage-level recheck either way.)
-          if (name == "q15_lsh_near_dup")
-            graft.queries.Queries.invalidateResultCaches()
+          // as a host window (round-7 review). A fresh RunCtx would not
+          // do: Spark's CacheManager keeps one entry per plan, so a fresh
+          // run's q15 persist joins the held entry and reads it back.
+          // q25 is the OPPOSITE case: its timed run legitimately read the
+          // pairs, so its retry must run under the same cache conditions
+          // — invalidating there would make even a healthy retry rebuild
+          // the whole LSH pipeline and read as "engine/state", the
+          // inverse bias. (A q25 whose pairs were silently unpersisted
+          // mid-suite rebuilds via RunCtx.q15Pairs's storage-level
+          // recheck either way.)
+          if (name == "q15_lsh_near_dup") Queries.invalidateResultCaches()
           val g0 = GcClock.ms
           val c0 = CpuClock.ms
           var ok = true
           val rs = timeSec {
-            try fn(spark, sfDir).count()
+            try q.run(ctx).count()
             catch { case e: Throwable =>
               // a FAILED retry must be distinguishable from a fast one: a
               // 0.8s time-to-crash published as retry.sec would read as
@@ -184,10 +190,10 @@ object Bench {
               System.err.println(s"[bench] $name retry failed: ${e.getMessage}") }
           }
           val rc =
-            if (name == "q41_jaccard_join") graft.queries.Queries.q41CandidateCount else -1L
+            if (name == "q41_jaccard_join") ctx.q41CandidateCount else -1L
           (rs, GcClock.ms - g0, if (c0 < 0) -1L else CpuClock.ms - c0, rc, ok)
         } else (-1.0, -1L, -1L, -1L, true)
-      // release this query's SwapCache generation BEFORE the next query
+      // release this query's held generation BEFORE the next query
       // runs (round-5 verdict #1): by q41 the parent otherwise holds
       // q15's + q24's + q26's + q41's MEMORY_AND_DISK generations at
       // once, and the eviction/spill pressure on q41's multi-consumer
@@ -195,10 +201,11 @@ object Bench {
       // release sits OUTSIDE the timed window — each query is timed as
       // its first standalone invocation, generation rebuild included
       // (that is the swap contract's steady state anyway).
-      graft.queries.Queries.releaseSwapCaches()
+      Queries.releaseSwapCaches()
       name -> QueryStat(sec, gcMs, cpuMs, cachedPeak, cachedMb, candidates,
         retrySec, retryGcMs, retryCpuMs, retryCand, retryOk)
     }
+    ctx.close()
     val queryTimes = queryStats.map { case (n, st) => n -> st.sec }
     // drop phase-1's persisted LSH/ANN intermediates before timing the
     // headline: resident cache blocks and their GC pressure contaminate

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import java.nio.file.{Files, Paths}
+import graft.queries.{Queries, RunCtx}
 
 /** Plan evidence on sf0.001 (plan SHAPE is scale-independent). Two modes:
   *   sbt -batch "runMain graft.PlanDump"
@@ -13,6 +14,9 @@ import java.nio.file.{Files, Paths}
   *     output of each named query, so before/after plan-shape claims are
   *     checkable without running Spark. Eager queries (q19/q40) localize
   *     their results — their returned frame's plan is the localized scan.
+  * Both modes build the queries in one bench-mode run (a RunCtx with
+  * verify off): the plans are the operators', without the oracle's aux
+  * parquet round-trips.
   */
 object PlanDump {
 
@@ -35,8 +39,6 @@ object PlanDump {
     "q42_byte_weighted_route" -> "byte-weighted placement itself is ONE hash exchange on the precomputed __bw_route column (element_at over driver-side literal maps — no RDD partitioner); the stats pass is a persisted per-url groupBy (its own url-keyed exchange, shuffling only the distinct-url cost map, paid once across the stats head() and the heavy collect()); both extraction variants are independent mapPartitions pipelines meeting in the verify full-outer join.")
 
   def main(args: Array[String]): Unit = {
-    // plan dump inspects operator plans, not verification I/O
-    graft.queries.Queries.auxDumpEnabled = false
     val spark = SparkSession.builder()
       .master("local[8]")
       .config("spark.sql.shuffle.partitions", 8)
@@ -44,21 +46,23 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sf = "/root/testdata/sf0.001"
-    if (args.isEmpty) plansMd(spark, sf) else formatted(spark, sf, args.head, args.tail.toSeq)
+    scala.util.Using.resource(new RunCtx(spark, sf, verify = false)) { ctx =>
+      if (args.isEmpty) plansMd(ctx) else formatted(ctx, args.head, args.tail.toSeq)
+    }
     spark.stop()
   }
 
-  private def formatted(spark: SparkSession, sf: String, suffix: String, names: Seq[String]): Unit = {
+  private def formatted(ctx: RunCtx, suffix: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get("plans"))
     names.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sf)
+      val df = Queries(name).run(ctx)
       val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
       Files.writeString(Paths.get(s"plans/${name}_$suffix.txt"), txt)
       println(s"PLAN_OK $name ${txt.length}")
     }
   }
 
-  private def plansMd(spark: SparkSession, sf: String): Unit = {
+  private def plansMd(ctx: RunCtx): Unit = {
     val sb = new StringBuilder
     sb.append("# PLANS — physical plans of the load-bearing queries\n\n")
     sb.append("Generated by `graft.PlanDump` on sf0.001 (plan SHAPE is scale-\n")
@@ -68,15 +72,14 @@ object PlanDump {
     sb.append("before/after evidence: `graft.PlanDump <suffix> <query...>` writes\n")
     sb.append("`plans/<query>_<suffix>.txt`.\n")
     Notes.keys.toSeq.sorted.foreach { name =>
-      val q = graft.queries.Queries.all.find(_.name == name).get
-      val df = q.fn(spark, sf)
+      val df = Queries(name).run(ctx)
       sb.append(s"\n## $name\n\n${Notes(name)}\n\n```\n")
       sb.append(df.queryExecution.explainString(
         org.apache.spark.sql.execution.SimpleMode).take(4000))
       sb.append("\n```\n")
     }
     // the flagship extraction pipeline
-    val entry = SparkEntry.entry(spark)
+    val entry = SparkEntry.entry(ctx.spark)
     sb.append("\n## entry (extraction + scoring pipeline)\n\n")
     sb.append("scan -> (no exchange) -> mapPartitions parse+score: extraction\n")
     sb.append("runs on byte-balanced scan splits; the only shuffle in the whole\n")

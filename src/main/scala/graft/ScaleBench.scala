@@ -1,7 +1,8 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import graft.queries.Queries
+import scala.util.Using
+import graft.queries.{Queries, RunCtx}
 
 /** 10x data-scale evidence for the dedup/ANN suite (round-2 verdict next
   * item #2): the 100 TB claims for q13-q16/q24-q27/q34/q35 rested on
@@ -15,7 +16,9 @@ import graft.queries.Queries
   * fixture-scale plans do not automatically survive).
   *
   * Outputs under target/scale/{x1,x10}; tables are regenerated
-  * deterministically on every run (no external data).
+  * deterministically on every run (no external data). Each tier is one
+  * bench-mode pass: one RunCtx per dir, so no tier's timed legs carry
+  * oracle aux dumps and q25 composes on that tier's q15 pairs.
   */
 object ScaleBench {
 
@@ -113,9 +116,6 @@ object ScaleBench {
   private val SuiteDeep = Seq("q15_lsh_near_dup", "q25_dedup_groups", "q26_embed_near_dup")
 
   def main(args: Array[String]): Unit = {
-    // timing harness: no verification aux dumps in the timed legs (none
-    // of the Suite queries dump today, but the gate keeps that true)
-    Queries.auxDumpEnabled = false
     val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
       .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
@@ -137,17 +137,19 @@ object ScaleBench {
       (if (deep) Seq(("x100", 500000L, 200000L, SuiteDeep)) else Seq.empty)
     scales.foreach { case (tag, d, v, _) => writeTables(spark, s"$root/$tag", d, v) }
 
-    // JIT warmup on a SEPARATE tiny dir — warming on x1 itself would
-    // leave q15's result cache (Q15Result is keyed by dir) hot and the
-    // timed x1 leg would measure a cache read, inflating every ratio
+    // JIT warmup on a SEPARATE tiny dir in its own run — warming on x1
+    // itself would leave that run's q15 pairs hot and the timed x1 leg
+    // would measure a cache read, inflating every ratio
     writeTables(spark, s"$root/warm", 1000L, 500L)
     // warmup shares the timed loop's failure isolation: a deterministically
     // failing query must surface as a failed_queries entry from the timed
     // tiers below, not abort the harness before any tier is measured
-    Suite.foreach { n =>
-      try Queries.all.find(_.name == n).get.fn(spark, s"$root/warm").count()
-      catch { case e: Throwable =>
-        System.err.println(s"[scale] warmup $n failed: ${e.getMessage}") }
+    Using.resource(new RunCtx(spark, s"$root/warm", verify = false)) { ctx =>
+      Suite.foreach { n =>
+        try Queries(n).run(ctx).count()
+        catch { case e: Throwable =>
+          System.err.println(s"[scale] warmup $n failed: ${e.getMessage}") }
+      }
     }
 
     def f(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
@@ -157,25 +159,26 @@ object ScaleBench {
     // every already-measured tier (Bench's failed_queries discipline)
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     val times = scales.map { case (tag, _, _, suite) =>
-      tag -> suite.map { name =>
-        val fn = Queries.all.find(_.name == name).get.fn
-        val t0 = System.nanoTime()
-        val rows =
-          try fn(spark, s"$root/$tag").count()
-          catch { case e: Throwable =>
-            failed += s"$tag:$name"
-            System.err.println(s"[scale] $tag $name failed: ${e.getMessage}")
-            -1L
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        // drop this query's held frames before the next query
-        // is timed (Bench's suite-loop discipline): at x100 q15's
-        // persisted aug+sigs tables are GBs, and holding them under
-        // q25/q26 measures eviction pressure, not the next query.
-        // q15's pairs result (the table q25 consumes) survives — releasing
-        // it would re-run the whole LSH pipeline inside q25's CC hops.
-        Queries.releaseSwapCaches()
-        (name, sec, rows)
+      tag -> Using.resource(new RunCtx(spark, s"$root/$tag", verify = false)) { ctx =>
+        suite.map { name =>
+          val t0 = System.nanoTime()
+          val rows =
+            try Queries(name).run(ctx).count()
+            catch { case e: Throwable =>
+              failed += s"$tag:$name"
+              System.err.println(s"[scale] $tag $name failed: ${e.getMessage}")
+              -1L
+            }
+          val sec = (System.nanoTime() - t0) / 1e9
+          // drop this query's held frames before the next query
+          // is timed (Bench's suite-loop discipline): at x100 q15's
+          // persisted aug+sigs tables are GBs, and holding them under
+          // q25/q26 measures eviction pressure, not the next query.
+          // q15's pairs result (the table q25 consumes) survives — releasing
+          // it would re-run the whole LSH pipeline inside q25's CC hops.
+          Queries.releaseSwapCaches()
+          (name, sec, rows)
+        }
       }
     }.toMap
     // ---- composed dedup pipeline (round-6 verdict #6) -------------------
@@ -193,22 +196,23 @@ object ScaleBench {
       writeTables(spark, dir, 1000000L, 200000L)
       val suite = Seq("q13_dedup_exact", "q15_lsh_near_dup",
         "q25_dedup_groups", "q35_training_set")
-      Some(suite.map { name =>
-        val fn = Queries.all.find(_.name == name).get.fn
-        val gc0 = GcClock.ms
-        val cpu0 = CpuClock.ms
-        val t0 = System.nanoTime()
-        val rows =
-          try fn(spark, dir).count()
-          catch { case e: Throwable =>
-            failed += s"x200:$name"
-            System.err.println(s"[scale] x200 $name failed: ${e.getMessage}")
-            -1L
-          }
-        val sec = (System.nanoTime() - t0) / 1e9
-        Queries.releaseSwapCaches()
-        (name, sec, rows, GcClock.ms - gc0,
-          if (cpu0 < 0) -1L else CpuClock.ms - cpu0)
+      Some(Using.resource(new RunCtx(spark, dir, verify = false)) { ctx =>
+        suite.map { name =>
+          val gc0 = GcClock.ms
+          val cpu0 = CpuClock.ms
+          val t0 = System.nanoTime()
+          val rows =
+            try Queries(name).run(ctx).count()
+            catch { case e: Throwable =>
+              failed += s"x200:$name"
+              System.err.println(s"[scale] x200 $name failed: ${e.getMessage}")
+              -1L
+            }
+          val sec = (System.nanoTime() - t0) / 1e9
+          Queries.releaseSwapCaches()
+          (name, sec, rows, GcClock.ms - gc0,
+            if (cpu0 < 0) -1L else CpuClock.ms - cpu0)
+        }
       })
     } else None
 

@@ -18,9 +18,10 @@ object SparkEntry {
       .selectExpr("url", "kind", "title", "doi", "matching_terms",
         "bycatch_terms", "total_word_count", "wordscore", "ok")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** One entry per implemented operator from SURVEY.md §2. Each call
+    * runs the query in verify mode, in a fresh run context of its own. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Queries.all.map(q => q.name -> q.fn).toMap
+    Queries.all.map(q => q.name -> q.once(verify = true)).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for the non-SQL-expressible

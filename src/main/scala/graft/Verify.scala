@@ -1,8 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.queries.{Queries, RunCtx}
+/** Driver-run correctness dump: every query's result → parquet, plus
+  * oracle_sql.json, for the driver's DuckDB compare. The suite runs as one
+  * verify-mode pass (one RunCtx), so q25 composes on q15's pairs. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -19,16 +21,18 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     var failed = List.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failed ::= name
-        // a failed query must not leave a STALE dump from a previous run
-        // in place — the driver would compare old results and mask the
-        // regression as a pass
-        graft.util.Fs.deleteRecursively(new java.io.File(s"$outDir/$name"))
+    scala.util.Using.resource(new RunCtx(spark, sfDir, verify = true)) { ctx =>
+      Queries.all.foreach { q =>
+        try q.run(ctx).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/${q.name}")
+        catch { case e: Throwable =>
+          System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
+          failed ::= q.name
+          // a failed query must not leave a STALE dump from a previous run
+          // in place — the driver would compare old results and mask the
+          // regression as a pass
+          graft.util.Fs.deleteRecursively(new java.io.File(s"$outDir/${q.name}"))
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -1,8 +1,5 @@
 package graft.queries
 
-import scala.concurrent.Await
-import scala.concurrent.duration.DurationInt
-import scala.util.Try
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -34,10 +31,20 @@ object Queries {
 
   type QueryFn = (SparkSession, String) => DataFrame
 
-  final case class Q(name: String, fn: QueryFn, oracle: Option[String])
+  /** One query: `run` builds its frame in a run's [[RunCtx]]. */
+  final case class Q(name: String, run: RunCtx => DataFrame, oracle: Option[String]) {
+    /** `run` in a fresh context of its own, closed once the frame is
+      * built: the shape for callers that hold a (session, dir) function.
+      * Such a call holds no q15 pairs past itself, so q25 rebuilds them. */
+    def once(verify: Boolean): QueryFn =
+      (s, dir) => scala.util.Using.resource(new RunCtx(s, dir, verify))(run)
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    /** [[once]] in bench mode. */
+    def fn: QueryFn = once(verify = false)
+  }
+
+  private def t(c: RunCtx, name: String): DataFrame =
+    c.spark.read.parquet(s"${c.dir}/$name.parquet")
 
   /** Fixed aux-dump dir (declared FIRST: oracle SQL strings interpolate
     * it eagerly at object init, and Scala initializes object vals in
@@ -48,26 +55,27 @@ object Queries {
   private val AuxDir =
     new java.io.File("target/verify_aux").getAbsolutePath
 
-  /** Oracle aux-dump gate. Verify needs every non-SQL-derivable input
-    * materialized under AuxDir so the DuckDB oracle reads the SAME bytes;
-    * Bench and PlanDump time the operator, not verification I/O, and
-    * switch this off. Default ON so ad-hoc `queries(...)` calls stay
-    * oracle-compatible. */
-  @volatile private[graft] var auxDumpEnabled: Boolean = true
+  /** For callers that switch verify mode off process-wide (perfbench):
+    * verify mode belongs to a [[RunCtx]], and [[Q.fn]] runs bench mode.
+    * Reads false; setting it stores nothing, and setting it true is
+    * refused. */
+  private[graft] def auxDumpEnabled: Boolean = false
+  private[graft] def auxDumpEnabled_=(on: Boolean): Unit =
+    require(!on, "verify mode belongs to a run: build the run's RunCtx with verify = true")
 
   /** Verify mode: write `df` under AuxDir and return the read-back, so
     * query and oracle consume byte-identical parquet. Bench mode: skip
     * the round-trip, return `df` unchanged. */
-  private def auxTable(s: SparkSession, df: DataFrame, name: String): DataFrame =
-    if (auxDumpEnabled) {
+  private def auxTable(c: RunCtx, df: DataFrame, name: String): DataFrame =
+    if (c.verify) {
       df.write.mode("overwrite").parquet(s"$AuxDir/$name")
-      s.read.parquet(s"$AuxDir/$name")
+      c.spark.read.parquet(s"$AuxDir/$name")
     } else df
 
   /** Verify-mode-only side dump (for oracles that re-derive the result
     * from the dumped input rather than feeding the query itself). */
-  private def auxDump(df: DataFrame, name: String): Unit =
-    if (auxDumpEnabled) df.write.mode("overwrite").parquet(s"$AuxDir/$name")
+  private def auxDump(c: RunCtx, df: DataFrame, name: String): Unit =
+    if (c.verify) df.write.mode("overwrite").parquet(s"$AuxDir/$name")
 
   /** `n` generated pages through the pipeline's parse stage on the
     * generator splits, scored with CorpusGen's word sets (q17, q21, q22
@@ -183,9 +191,9 @@ object Queries {
     * fails LOUDLY (the oracle would make the SAME collision mistake, so
     * verification could not catch it); bench/scale corpora get the
     * collision-free offset instead of a refused run. */
-  private def checkedOffset(query: String, floor: Long, maxId: Long): Long = {
+  private def checkedOffset(c: RunCtx, query: String, floor: Long, maxId: Long): Long = {
     val off = mutantOffset(floor, maxId)
-    if (auxDumpEnabled)
+    if (c.verify)
       require(off == floor, s"$query oracle domain exceeded: offset=$off (static " +
         s"oracle SQL assumes +$floor; verify runs need ids < $floor)")
     off
@@ -196,9 +204,9 @@ object Queries {
   /** Tokenized documents plus one planted mutant per doc (first token
     * dropped, id + the checked offset above max doc_id): the q15/q41
     * near-dup input, so true pairs exist by construction. */
-  private def docsWithMutants(s: SparkSession, dir: String, query: String): DataFrame = {
-    val docs = t(s, dir, "documents")
-    val off = checkedOffset(query, 1000000L, docs.agg(max("doc_id")).head().getLong(0))
+  private def docsWithMutants(c: RunCtx, query: String): DataFrame = {
+    val docs = t(c, "documents")
+    val off = checkedOffset(c, query, 1000000L, docs.agg(max("doc_id")).head().getLong(0))
     val base = docs.selectExpr("doc_id AS id", s"$SparkToks AS toks")
     base.unionByName(base.selectExpr(s"id + $off AS id", "slice(toks, 2, size(toks)) AS toks"))
   }
@@ -209,10 +217,10 @@ object Queries {
     * its perturbed copies there, so one norm pass covers both). Not
     * persisted and not zero-norm guarded: each caller places its own
     * persist and `nrm > 0` guard (q16 and q24 comments say where). */
-  private def quantized(s: SparkSession, dir: String, idAs: String,
+  private def quantized(c: RunCtx, idAs: String,
       augment: DataFrame => DataFrame = identity): DataFrame = {
-    GraftFunctions.registerAll(s)
-    augment(t(s, dir, "embeddings").selectExpr(s"vec_id AS $idAs", QuantSpark))
+    GraftFunctions.registerAll(c.spark)
+    augment(t(c, "embeddings").selectExpr(s"vec_id AS $idAs", QuantSpark))
       .withColumn("nrm", GraftFunctions.dot_i64(col("qv"), col("qv")))
   }
 
@@ -268,38 +276,6 @@ object Queries {
     pairs.repartition(col(a)).distinct()
   }
 
-  /** (row count, max(vec_id)) of the embeddings table, one job per
-    * (session, dir): q16's brute-force guard reads the count, q26's
-    * collision guard and SRP sizing read both (max is -1 on an empty
-    * table). A bench sweep must not pay a metadata job per repetition.
-    * WEAK-keyed on the session itself (round-4 ADVICE: an
-    * identityHashCode key can collide with a retained entry from a dead
-    * session, silently extending the 'immutable within a session'
-    * assumption across sessions, and the size-triggered clear() raced
-    * computeIfAbsent): a weak key never pins a stopped SparkSession,
-    * dies with it, and needs no bound or clear. The dir's embeddings
-    * table is assumed immutable within a session: rewriting it
-    * mid-session would reuse the stale stats (documented trade-off — the
-    * guards catch FIXTURE properties of the written table, not of time). */
-  private val EmbStats =
-    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, (Long, Long)]]()
-  private def embStats(s: SparkSession, dir: String): (Long, Long) = {
-    // two-level locking: the global map lock is held only for the inner-
-    // map lookup; the Spark job runs under the SESSION's lock, so
-    // concurrent sessions compute their stats in parallel (only same-
-    // session calls serialize, which is the memo contract)
-    val m = EmbStats.synchronized {
-      EmbStats.computeIfAbsent(s, _ => scala.collection.mutable.Map.empty)
-    }
-    m.synchronized {
-      m.getOrElseUpdate(dir, {
-        val r = t(s, dir, "embeddings")
-          .agg(count(lit(1)), coalesce(max("vec_id"), lit(-1L))).head()
-        (r.getLong(0), r.getLong(1))
-      })
-    }
-  }
-
   /** Drop every frame held in `Held.frames`: the persisted
     * intermediates of the near-dup/ANN queries (one generation per query
     * key: a re-invocation releases its previous generation first, so at
@@ -318,80 +294,10 @@ object Queries {
     * 46%-of-wall pathology). */
   private[graft] def releaseSwapCaches(): Unit = Held.frames.releaseAll()
 
-  /** Observation handle of the LATEST q41 invocation: the candidate-pair
-    * count (post-distinct, pre-confirm) flows through a CollectMetrics
-    * node inside the query's own action, so the harness can read the one
-    * number that classifies a q41 blowup — candidate explosion (engine)
-    * vs slow host — WITHOUT a second action recomputing the join
-    * (round-6 verdict #1: two driver rounds burned on exactly this
-    * ambiguity; expected ~716k at sf0.1 per BASELINE.md r5). A fresh
-    * Observation per invocation: one Observation accepts observe() once. */
-  private val q41LastObs =
-    new java.util.concurrent.atomic.AtomicReference[org.apache.spark.sql.Observation]()
-
-  /** Candidate-pair count observed by the latest COMPLETED q41 action;
-    * -1 when q41 never ran or the async metric has not been delivered
-    * within 2 s (observation results ride the listener bus). */
-  private[graft] def q41CandidateCount: Long =
-    Option(q41LastObs.get)
-      .flatMap(obs => Try(Await.result(obs.future, 2.seconds)).toOption)
-      .flatMap(row => Try(row.getLong(row.fieldIndex("n"))).toOption)
-      .getOrElse(-1L)
-
-  /** Hit rule for q15's CONFIRMED-PAIR result, keyed by (session, sf
-    * dir); the frame itself is held in `Held.results`. q25's connected
-    * components consume exactly these edges, so a bench / verify sweep
-    * that runs q15 then q25 must not pay the whole LSH pipeline twice
-    * (round-1 finding: q25 recomputed q15 inside itself and alone was 46%
-    * of suite wall time). At 100 TB this is the materialized
-    * `near_dup_pairs` table a dedup job writes once and every downstream
-    * pass re-reads. */
-  private object Q15Result {
-    private val Key = "q15"
-    private var owner: Option[(SparkSession, String)] = None
-    def get(s: SparkSession, dir: String)(build: => DataFrame): DataFrame = synchronized {
-      // drop an entry whose session is STOPPED before matching: the held
-      // frame strongly pins the dead session's plan graph (a weak key
-      // cannot help here — the DataFrame itself references its session),
-      // so the bound is "one entry, evicted at the next q15/q25 call from
-      // anywhere" and this check enforces it even when the next caller is
-      // a different session + different dir
-      if (owner.exists(_._1.sparkContext.isStopped)) {
-        Held.results.release(Key)
-        owner = None
-      }
-      peek(s, dir) match {
-        // storageLevel re-check (round-3 verdict "what's wrong" #2): a
-        // `spark.catalog.clearCache()` between q15 and q25 unpersists the
-        // pairs but leaves this hit valid, and q25 would then silently
-        // recompute the whole LSH pipeline inside every CC hop join (the
-        // round-1 46%-of-wall pathology). A hit only counts if the plan
-        // is still actually persisted.
-        case Some(df) if df.storageLevel != org.apache.spark.storage.StorageLevel.NONE => df
-        case _ =>
-          val df = Held.results.renew(Key).keep(build)
-          owner = Some((s, dir))
-          df
-      }
-    }
-    /** The held frame for (s, dir) WITHOUT the storage-level re-check, so
-      * specs can assert persistence state. */
-    def peek(s: SparkSession, dir: String): Option[DataFrame] = synchronized {
-      owner.filter { case (ss, d) => (ss eq s) && d == dir }
-        .flatMap(_ => Held.results(Key).headOption)
-    }
-  }
-
-  private[graft] def q15CachedPairs(s: SparkSession, dir: String): Option[DataFrame] =
-    Q15Result.peek(s, dir)
-
-  /** Drop RESULT caches that deliberately survive [[releaseSwapCaches]]
-    * (q15's confirmed pairs, the near-dup-pairs table q25 composes on).
-    * The anomaly-retry harness must call this before re-running q15/q25:
-    * without it the "fresh invocation" reads the cached pairs back in
-    * milliseconds and a genuine engine regression gets misclassified as a
-    * transient host window (round-7 review; the memory rule is "a timing
-    * harness must warm on a DIFFERENT dir or it measures a cache read"). */
+  /** Drop every run's q15 pairs, the results that survive
+    * [[releaseSwapCaches]]: a drain for harnesses whose every pass must
+    * do the full work. A harness that wants one fresh q15/q25 build runs
+    * it in a fresh [[RunCtx]] instead. */
   private[graft] def invalidateResultCaches(): Unit = Held.results.releaseAll()
 
   // =====================================================================
@@ -403,8 +309,8 @@ object Queries {
     * fixed point so the distributed sum is exact integer arithmetic. */
   private val q01 = Q(
     "q01_pricing_agg",
-    (s, dir) =>
-      t(s, dir, "lineitem")
+    c =>
+      t(c, "lineitem")
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
           sum(expr("FLOOR(l_quantity*100.0 + 0.5)")).as("sum_qty_e2"),
@@ -422,8 +328,8 @@ object Queries {
     * reader as PushedFilters (verified in QueriesPlanSpec). */
   private val q02 = Q(
     "q02_filter_monthly",
-    (s, dir) =>
-      t(s, dir, "lineitem")
+    c =>
+      t(c, "lineitem")
         .filter("l_shipdate >= TIMESTAMP'1996-01-01 00:00:00' AND l_shipdate < TIMESTAMP'1998-01-01 00:00:00'")
         .groupBy(expr("CAST(date_trunc('month', l_shipdate) AS DATE)").as("ship_month"), col("l_returnflag"))
         .agg(
@@ -441,7 +347,7 @@ object Queries {
     * the two facts co-partitioned by orderkey + BHJ for the dim. */
   private val q03 = Q(
     "q03_join_revenue",
-    (s, dir) => {
+    c => {
       // aggregate BEFORE the fact-fact shuffle (guide §2.3): lineitem
       // collapses to one (orderkey, revenue, count) row per order ahead
       // of the join, so the exchange carries ~4x fewer rows (map-side
@@ -450,14 +356,14 @@ object Queries {
       // integer sums re-associate exactly, so revenue_e2/n_rows are the
       // same BIGINTs as the row-level join the oracle runs. The groupBy's
       // orderkey exchange doubles as the join's — no exchange added.
-      val perOrder = t(s, dir, "lineitem")
+      val perOrder = t(c, "lineitem")
         .groupBy("l_orderkey")
         .agg(
           sum(expr("FLOOR(l_extendedprice*(1.0-l_discount)*100.0 + 0.5)")).as("rev"),
           count(lit(1)).as("n"))
       perOrder
-        .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(t(s, dir, "customer")), col("o_custkey") === col("c_custkey"))
+        .join(t(c, "orders"), col("l_orderkey") === col("o_orderkey"))
+        .join(broadcast(t(c, "customer")), col("o_custkey") === col("c_custkey"))
         .groupBy("c_mktsegment", "o_orderpriority")
         .agg(
           sum("rev").as("revenue_e2"),
@@ -474,10 +380,10 @@ object Queries {
     * the final small agg. */
   private val q04 = Q(
     "q04_dim_bcast",
-    (s, dir) =>
-      t(s, dir, "customer")
-        .join(broadcast(t(s, dir, "nation")), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(t(s, dir, "region")), col("n_regionkey") === col("r_regionkey"))
+    c =>
+      t(c, "customer")
+        .join(broadcast(t(c, "nation")), col("c_nationkey") === col("n_nationkey"))
+        .join(broadcast(t(c, "region")), col("n_regionkey") === col("r_regionkey"))
         .groupBy("r_name", "n_name")
         .agg(
           count(lit(1)).as("n_cust"),
@@ -493,8 +399,8 @@ object Queries {
     * impossible to observe: orderkey is the deterministic tiebreaker. */
   private val q05 = Q(
     "q05_window_topk",
-    (s, dir) =>
-      t(s, dir, "orders")
+    c =>
+      t(c, "orders")
         .withColumn("rn", row_number().over(
           Window.partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))))
         .filter(col("rn") <= 3)
@@ -508,8 +414,8 @@ object Queries {
     * agg; values pre-quantized so the sum is exact). */
   private val q06 = Q(
     "q06_events_hourly",
-    (s, dir) =>
-      t(s, dir, "events")
+    c =>
+      t(c, "events")
         .groupBy(expr("date_format(date_trunc('hour', ts), 'yyyy-MM-dd HH')").as("ts_hour"), col("event_type"))
         .agg(
           count(lit(1)).as("n_events"),
@@ -527,8 +433,8 @@ object Queries {
     * not fail the query. */
   private val q07 = Q(
     "q07_events_props",
-    (s, dir) =>
-      t(s, dir, "events")
+    c =>
+      t(c, "events")
         .selectExpr("try_cast(nullif(regexp_extract(props, '([0-9]+)', 1), '') AS BIGINT) AS k")
         .groupBy("k")
         .agg(count(lit(1)).as("n")),
@@ -543,8 +449,8 @@ object Queries {
   /** Token counting (whitespace tokenizer; SURVEY.md §2.7 row 31). */
   private val q08 = Q(
     "q08_token_stats",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr(
           "doc_id",
           s"CAST(size($SparkToks) AS BIGINT) AS n_tokens",
@@ -565,8 +471,8 @@ object Queries {
     * /root/reference/src/docscraper.py:55-94 and :208-244. */
   private val q09 = Q(
     "q09_wordscore",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr("doc_id", s"$SparkToks AS toks")
         .selectExpr(
           "doc_id",
@@ -593,8 +499,8 @@ object Queries {
     * class; deterministic, broadcast-free column arithmetic). */
   private val q10 = Q(
     "q10_langid",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr("doc_id", s"$SparkToks AS toks")
         .selectExpr(
           "doc_id",
@@ -618,8 +524,8 @@ object Queries {
     * saturating quality score — all exact fixed-point. */
   private val q11 = Q(
     "q11_quality",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr("doc_id", s"$SparkToks AS toks")
         .selectExpr(
           "doc_id",
@@ -648,8 +554,8 @@ object Queries {
   /** Document fingerprinting: content hash + whitespace-normalized hash. */
   private val q12 = Q(
     "q12_fingerprint",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr(
           "doc_id",
           "md5(CAST(text AS BINARY)) AS fp",
@@ -669,8 +575,8 @@ object Queries {
     * document body). */
   private val q13 = Q(
     "q13_dedup_exact",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .groupBy(expr("md5(CAST(text AS BINARY))").as("fp"))
         .agg(count(lit(1)).as("n_dups"), min("doc_id").as("keep_id")),
     Some("""SELECT md5(text) AS fp,
@@ -692,8 +598,8 @@ object Queries {
       s"list_min(list_transform(hs, h -> substr(h, ${8 * j + 1}, 8))) AS band$j"
     Q(
       "q14_minhash_sig",
-      (s, dir) =>
-        t(s, dir, "documents")
+      c =>
+        t(c, "documents")
           .selectExpr("doc_id", s"transform(array_distinct($SparkToks), w -> md5(CAST(w AS BINARY))) AS hs")
           .selectExpr("doc_id" +: (0 until 4).map(sparkBand): _*),
       Some(s"""WITH w AS (SELECT doc_id,
@@ -818,8 +724,8 @@ object Queries {
   private val q15 = {
     Q(
       "q15_lsh_near_dup",
-      (s, dir) => Q15Result.get(s, dir) {
-        val docs = docsWithMutants(s, dir, "q15")
+      c => c.q15Pairs {
+        val docs = docsWithMutants(c, "q15")
         val held = Held.frames.renew("q15")
         // the shingle+hash pipeline feeds the band explode AND both sides
         // of the jaccard join — persist it once instead of recomputing the
@@ -920,8 +826,8 @@ object Queries {
 
   private val q16 = Q(
     "q16_ann_topk",
-    (s, dir) => {
-      q16Guard(embStats(s, dir)._1)
+    c => {
+      q16Guard(c.embStats._1)
       // zero-norm rows (all-zero / sub-quantization embeddings — a
       // padding or failed-encode row in a real dump) have no cosine to
       // anything: 0/0 = NaN and the ANSI cast to cos_e6 would abort
@@ -931,7 +837,7 @@ object Queries {
       // (evaluates twice per row) — q16 is capped at 100k index rows
       // and the BNLJ dominates, so a pushdown barrier would buy nothing
       // here; q24/q26 place the same gate above a persist instead.
-      val qq = quantized(s, dir, "vec_id").filter("nrm > 0")
+      val qq = quantized(c, "vec_id").filter("nrm > 0")
       val pairs = embSide(qq.filter(col("vec_id") < 100), "vec_id")("vec_id", "a")
         .join(broadcast(embSide(qq, "vec_id")("neighbor_id", "b")),
           col("vec_id") =!= col("neighbor_id"))
@@ -979,7 +885,7 @@ object Queries {
     * GATE's arithmetic driver-checkable. */
   private val q17 = Q(
     "q17_extract_verify",
-    (s, _) => {
+    c => {
       val n = 1200L
       // numPartitions = 0: parse on the generator splits (guide §2.4 —
       // remove shuffles outright). The old 32-way url-hash repartition
@@ -988,9 +894,9 @@ object Queries {
       // salted route's skew defense is exercised by the bench skew legs
       // and PipelineSpec, and extraction is per-row, so the verdict
       // rollup is identical either way.
-      val e = auxTable(s, scoredPages(s, n)
+      val e = auxTable(c, scoredPages(c.spark, n)
         .select("url", "kind", "extracted_text"), "q17_extracted")
-      val g = auxTable(s, ExtractPipeline.goldens(s, n)
+      val g = auxTable(c, ExtractPipeline.goldens(c.spark, n)
         .select("url", "extracted_text"), "q17_goldens")
       val verdicts = ExtractPipeline.verifyAgainstGoldens(e, g)
       verdicts.groupBy("kind").agg(
@@ -1016,9 +922,9 @@ object Queries {
     * 16-bit mask equals Java's unsigned >>> 48 for every sign. */
   private val q18 = Q(
     "q18_simhash",
-    (s, dir) => {
-      auxTable(s,
-        t(s, dir, "documents")
+    c => {
+      auxTable(c,
+        t(c, "documents")
           .select(col("doc_id"), GraftFunctions.simhash64(col("text")).as("simhash")),
         "q18_simhash")
         .select(col("doc_id"), col("simhash"),
@@ -1044,31 +950,31 @@ object Queries {
     * pinned in GraftTableSpec — they are genuinely non-SQL. */
   private val q19 = Q(
     "q19_resume_lineage",
-    (s, _) => {
+    c => {
       val root = java.nio.file.Files.createTempDirectory("graft_q19").toString
       try {
         GraftTable.runResumable(
-          s, ExtractPipeline.pages(s, 160), root,
+          c.spark, ExtractPipeline.pages(c.spark, 160), root,
           nBuckets = 8, bucketsPerWave = 4,
           CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
           tasksPerWave = 8)
         // the dump must happen before the finally-block deletes root; it
         // reads the same committed files the lineage metrics were computed
         // from, but the AGGREGATION is re-done from scratch in DuckDB
-        auxDump(
-          s.read.parquet(s"$root/data").selectExpr(
+        auxDump(c,
+          c.spark.read.parquet(s"$root/data").selectExpr(
             "CAST(bucket AS BIGINT) AS bucket", "ok", "n_bytes"),
           "q19_docs")
         // lineage is one row per bucket — pull it local so the temp table
         // can be deleted eagerly (repeated bench/verify runs must not leak
         // disk); this is bounded metadata, not a data collect
-        val lineage = s.read.parquet(s"$root/lineage")
+        val lineage = c.spark.read.parquet(s"$root/lineage")
           .selectExpr("CAST(bucket AS BIGINT) AS bucket", "n_docs", "n_ok",
             "n_err", "bytes_in", "CAST(attempt AS BIGINT) AS attempt")
         val schema = lineage.schema
         val rows = lineage.collect().toSeq
         import scala.jdk.CollectionConverters._
-        s.createDataFrame(rows.asJava, schema)
+        c.spark.createDataFrame(rows.asJava, schema)
       } finally {
         // cleanup must also run when the pipeline or the read throws
         graft.util.Fs.deleteRecursively(new java.io.File(root))
@@ -1107,13 +1013,13 @@ object Queries {
     * remain sniff-only (no container parser; honestly labeled). */
   private val q20 = Q(
     "q20_binary_features",
-    (s, _) => {
-      import s.implicits._
-      val pages = ExtractPipeline.pages(s, 800)
-      val pngs = s.range(0, 200, 1, 8).map(i => CorpusGen.genPngPage(i))
+    c => {
+      import c.spark.implicits._
+      val pages = ExtractPipeline.pages(c.spark, 800)
+      val pngs = c.spark.range(0, 200, 1, 8).map(i => CorpusGen.genPngPage(i))
       val all = pages.unionByName(pngs)
-      auxDump(all.toDF().select("url", "html"), "q20_pages")
-      auxDump(pngs.map(p => (p.url,
+      auxDump(c, all.toDF().select("url", "html"), "q20_pages")
+      auxDump(c, pngs.map(p => (p.url,
           graft.multimodal.Png.decode(p.html).map(_.pixels)
             .getOrElse(Array.empty[Byte])))
         .toDF("url", "pixels"), "q20_pixels")
@@ -1205,11 +1111,11 @@ object Queries {
     val dUnion = SrpAnn.dUnion("vec_id")
     Q(
       "q24_ann_lsh",
-      (s, dir) => {
+      c => {
         // persisted: the 32 hyperplane dot products per vector feed the
         // bucket self-join (both sides) AND the two re-rank joins — four
         // recomputes without the persist
-        val qqCached = Held.frames.renew("q24").keep(quantized(s, dir, "vec_id")
+        val qqCached = Held.frames.renew("q24").keep(quantized(c, "vec_id")
           .selectExpr(Seq("vec_id", "qv", "nrm") ++ sTabs: _*))
         // zero-norm guard (q16 comment) ABOVE the persist: below it,
         // pushdown would re-evaluate the quantize+dot into the scan
@@ -1271,9 +1177,9 @@ object Queries {
     * that with the UNION ALL branch). */
   private val q21 = Q(
     "q21_citation_edges",
-    (s, _) => {
+    c => {
       graft.pipeline.Stagers.explodeWithSource(
-        auxTable(s, scoredPages(s, 400).select("url", "title", "citation_spans"),
+        auxTable(c, scoredPages(c.spark, 400).select("url", "title", "citation_spans"),
           "q21_input"),
         "title", "citation_spans")
     },
@@ -1291,10 +1197,10 @@ object Queries {
     * fillna independently. */
   private val q22 = Q(
     "q22_enrich_join",
-    (s, _) => {
+    c => {
       graft.pipeline.Enrichment.enrich(
-        auxTable(s, scoredPages(s, 400).select("url", "doi", "title"), "q22_extracted"),
-        auxTable(s, graft.pipeline.Enrichment.dimensionsSnapshot(s, 400), "q22_snapshot"))
+        auxTable(c, scoredPages(c.spark, 400).select("url", "doi", "title"), "q22_extracted"),
+        auxTable(c, graft.pipeline.Enrichment.dimensionsSnapshot(c.spark, 400), "q22_snapshot"))
     },
     Some(s"""SELECT e.doi, e.url, e.title, sn.times_cited,
         coalesce(sn.journal_title, 'N/A') AS journal_title,
@@ -1311,9 +1217,9 @@ object Queries {
     * PyDictParserSpec). */
   private val q23 = Q(
     "q23_dict_cells",
-    (s, _) => {
-      import s.implicits._
-      val cells = s.range(0, 300, 1, 4).map { i =>
+    c => {
+      import c.spark.implicits._
+      val cells = c.spark.range(0, 300, 1, 4).map { i =>
         val cell =
           if (i % 3 == 0) s"{'doi': '10.5555/x$i', 'title': 'T$i', 'year': ${2000 + (i % 25)}}"
           else if (i % 3 == 1) s"10.5555/y$i"
@@ -1346,8 +1252,8 @@ object Queries {
     * the distributed-scale formulation). */
   private val q25 = Q(
     "q25_dedup_groups",
-    (s, dir) => {
-      val pairs = q15.fn(s, dir).select("id_a", "id_b")
+    c => {
+      val pairs = q15.run(c).select("id_a", "id_b")
       graft.pipeline.DedupGroups.groups(pairs)
         .selectExpr("rep", "n_members",
           "concat_ws(',', transform(members, x -> CAST(x AS STRING))) AS members_csv")
@@ -1384,7 +1290,7 @@ object Queries {
       "list_transform(generate_series(1, 64), i -> CASE WHEN i = 1 THEN qv[i] + 10 ELSE qv[i] END)"
     Q(
       "q26_embed_near_dup",
-      (s, dir) => {
+      c => {
         // perturbed-copy ids live at +offset, where offset is the
         // smallest power of ten above max vec_id (min 100000), and the
         // SRP code length scales with the corpus (srpNearDupFor
@@ -1396,15 +1302,15 @@ object Queries {
         // corpora (ScaleBench x100 runs 200k vectors) execute only the
         // Spark side and get collision-free scale parameters instead of
         // a refused run. Both guards read one memoized embStats job.
-        val (rows, maxVecId) = embStats(s, dir)
-        val offset = checkedOffset("q26", 100000L, maxVecId)
+        val (rows, maxVecId) = c.embStats
+        val offset = checkedOffset(c, "q26", 100000L, maxVecId)
         val lsh = srpNearDupFor(2L * rows)
-        if (auxDumpEnabled)
+        if (c.verify)
           require(lsh.bitsPerTable == 16,
             s"q26 oracle domain exceeded: bits=${lsh.bitsPerTable} — the static " +
               "oracle SQL assumes 16-bit codes; verify runs need <= 16k vectors")
         // persisted for the same reason as q24's qq (4 consumers)
-        val qqCached = Held.frames.renew("q26").keep(quantized(s, dir, "id", base =>
+        val qqCached = Held.frames.renew("q26").keep(quantized(c, "id", base =>
             base.unionByName(base.selectExpr(s"id + $offset AS id", s"$perturbSpark AS qv")))
           .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*))
         // zero-norm guard above the persist (q24 comment)
@@ -1444,9 +1350,9 @@ object Queries {
     * WinnowingSpec. */
   private val q27 = Q(
     "q27_winnow_fingerprints",
-    (s, dir) => {
-      import s.implicits._
-      val fps = t(s, dir, "documents")
+    c => {
+      import c.spark.implicits._
+      val fps = t(c, "documents")
         .select(col("doc_id"), col("text")).as[(Long, String)]
         .mapPartitions(_.map { case (id, text) =>
           (id, graft.textops.Winnowing.fingerprintSet(text).toSeq.sorted)
@@ -1457,7 +1363,7 @@ object Queries {
       // from the same bytes (round-4 verdict #2 — the q21 unnest
       // pattern); the rolling-hash core itself stays law-pinned in
       // WinnowingSpec, this green row covers the distributed plumbing
-      auxTable(s, fps, "q27_fps")
+      auxTable(c, fps, "q27_fps")
         .selectExpr("doc_id", "CAST(size(fps) AS BIGINT) AS n_fps",
           "explode(fps) AS fp")
     },
@@ -1471,8 +1377,8 @@ object Queries {
     * shuffle, and top-k never materializes a full global sort. */
   private val q28 = Q(
     "q28_top_terms",
-    (s, dir) =>
-      t(s, dir, "documents")
+    c =>
+      t(c, "documents")
         .selectExpr(s"explode($SparkToks) AS term")
         .groupBy("term")
         .agg(count(lit(1)).as("n"))
@@ -1492,11 +1398,11 @@ object Queries {
     * payload size from the dumped page metadata. */
   private val q29 = Q(
     "q29_download_receipts",
-    (s, _) => {
-      import s.implicits._
-      val pages = ExtractPipeline.pages(s, 400)
+    c => {
+      import c.spark.implicits._
+      val pages = ExtractPipeline.pages(c.spark, 400)
       val today = java.time.LocalDate.of(2026, 8, 16)
-      auxDump(pages.map { p =>
+      auxDump(c, pages.map { p =>
         val kind = if (graft.pdf.PdfDoc.isPdf(p.html)) "pdf" else "html"
         (p.url, kind, if (p.html == null) 0L else p.html.length.toLong)
       }.toDF("url", "kind", "n_bytes"), "q29_pages")
@@ -1532,9 +1438,9 @@ object Queries {
     import graft.pipeline.Scholar
     Q(
       "q30_scholar_search",
-      (s, _) => {
-        val qs = s.range(0, 5).selectExpr("concat('topic ', id) AS search_text")
-        Scholar.search(qs, Scholar.snapshot(s), publicationType = "all", numArticles = 12)
+      c => {
+        val qs = c.spark.range(0, 5).selectExpr("concat('topic ', id) AS search_text")
+        Scholar.search(qs, Scholar.snapshot(c.spark), publicationType = "all", numArticles = 12)
       },
       Some("""WITH snap AS (
         SELECT concat('topic ', qid) AS q, idx,
@@ -1567,7 +1473,7 @@ object Queries {
     * /root/reference/src/fetch.py:229-234). */
   private val q31 = Q(
     "q31_enrich_full",
-    (s, dir) => {
+    c => {
       // single-source the snapshot spec (round-2 verdict "what's wrong"
       // #3): the Scala synthesis in graft.pipeline.Enrichment is dumped
       // to aux parquet and the oracle reads the SAME tables — the join
@@ -1575,12 +1481,12 @@ object Queries {
       // re-derived by DuckDB, while the snapshot CONTENT is defined in
       // exactly one place (a future edit cannot silently fork the spec).
       import graft.pipeline.Enrichment
-      auxDump(Enrichment.docsFrame(s, dir), "q31_docs")
-      auxDump(Enrichment.dimSnap(s, dir), "q31_dim")
-      auxDump(Enrichment.biblioSnap(s, dir), "q31_bib")
-      auxDump(Enrichment.abstractSnap(s, dir), "q31_abst")
-      auxDump(Enrichment.figuresSnap(s, dir), "q31_figs")
-      Enrichment.enrichFull(s, dir)
+      auxDump(c, Enrichment.docsFrame(c.spark, c.dir), "q31_docs")
+      auxDump(c, Enrichment.dimSnap(c.spark, c.dir), "q31_dim")
+      auxDump(c, Enrichment.biblioSnap(c.spark, c.dir), "q31_bib")
+      auxDump(c, Enrichment.abstractSnap(c.spark, c.dir), "q31_abst")
+      auxDump(c, Enrichment.figuresSnap(c.spark, c.dir), "q31_figs")
+      Enrichment.enrichFull(c.spark, c.dir)
     },
     Some(s"""SELECT d.doc_id, coalesce(d.doi, 'N/A') AS doi, d.title,
         m.times_cited,
@@ -1606,8 +1512,8 @@ object Queries {
     * half type to mirror it). */
   private val q32 = Q(
     "q32_export_cast",
-    (s, dir) => {
-      val counts = t(s, dir, "documents")
+    c => {
+      val counts = t(c, "documents")
         .selectExpr("doc_id", s"$SparkToks AS toks")
         .selectExpr("doc_id",
           s"size(filter(toks, w -> w IN $TargetList)) AS matching_terms",
@@ -1615,11 +1521,11 @@ object Queries {
           "size(toks) AS total_word_count")
       // snapshot + docs frame dumped for the oracle — same
       // single-sourcing as q31 (the Scala synthesis is the only spec)
-      val dim = graft.pipeline.Enrichment.dimSnap(s, dir)
+      val dim = graft.pipeline.Enrichment.dimSnap(c.spark, c.dir)
         .selectExpr("doi", "times_cited", "pub_date_raw AS pub_date")
-      val docs = graft.pipeline.Enrichment.docsFrame(s, dir).select("doc_id", "doi")
-      auxDump(dim, "q32_dim")
-      auxDump(docs, "q32_docs")
+      val docs = graft.pipeline.Enrichment.docsFrame(c.spark, c.dir).select("doc_id", "doi")
+      auxDump(c, dim, "q32_dim")
+      auxDump(c, docs, "q32_docs")
       val frame = counts.join(docs, Seq("doc_id")).join(broadcast(dim), Seq("doi"), "left")
       graft.pipeline.Casting.dataframeCasting(frame)
         .selectExpr("doc_id", "doi", "times_cited", "matching_terms",
@@ -1645,17 +1551,16 @@ object Queries {
     * test_example_file_1.csv (quoted dict-literal cells, missing values,
     * plain DOIs — /root/reference/tests/test_dirs/). Written to a FIXED
     * absolute path so the static oracle SQL can read_csv the same file;
-    * the query fn (re)writes it on every invocation, so it exists before
-    * the driver's DuckDB compare runs. */
+    * the query (re)writes it on every invocation, so it exists before
+    * the driver's DuckDB compare runs, and replaces it atomically, so a
+    * concurrent call's pending scan never reads a truncated file. */
   private object CsvFixture {
     val path = s"$AuxDir/wordscore_input.csv"
     private val pool = Vector(
       "spark", "table", "query", "join", "agg", "scan", "hash", "merge",
       "sort", "stream", "slow", "big", "small", "data", "row", "file",
       "code", "test", "line", "word", "page")
-    def ensure(): String = synchronized {
-      val f = new java.io.File(path)
-      f.getParentFile.mkdirs()
+    private val csv = {
       val sb = new StringBuilder("row_id,doi,abstract\n")
       for (i <- 0 until 60) {
         val doi =
@@ -1665,9 +1570,9 @@ object Queries {
         val words = (0 until 10 + i % 13).map(j => pool((i * 7 + j * 5) % pool.length))
         sb.append(s"$i,$doi,${words.mkString(" ")}\n")
       }
-      java.nio.file.Files.writeString(f.toPath, sb.toString)
-      path
+      sb.toString.getBytes("UTF-8")
     }
+    def ensure(): String = graft.util.Fs.writeAtomically(path, csv)
   }
 
   /** The wordscore-mode FRONT HALF end-to-end over a real CSV (SURVEY.md
@@ -1677,9 +1582,9 @@ object Queries {
     * fixed path so the oracle reads the SAME file with read_csv. */
   private val q33 = Q(
     "q33_csv_wordscore",
-    (s, _) => {
+    c => {
       val path = CsvFixture.ensure()
-      val raw = s.read.option("header", "true").csv(path)
+      val raw = c.spark.read.option("header", "true").csv(path)
         .select("row_id", "doi", "abstract") // pruning: usecols analog
       val cleaned = graft.pipeline.Stagers.fillNA(
         graft.pipeline.Stagers.cleanDictColumn(raw, "doi", "doi"), Seq("doi"))
@@ -1728,11 +1633,11 @@ object Queries {
     * each carrying the full qv, through a full-corpus exchange. */
   private val q34 = Q(
     "q34_ann_ivf",
-    (s, dir) => {
+    c => {
       val k = 16
       // zero-norm guard (q16 comment) — a zero CENTROID would NaN every
       // row's assignment expression
-      val qq = quantized(s, dir, "vec_id").filter("nrm > 0")
+      val qq = quantized(c, "vec_id").filter("nrm > 0")
       // bounded driver collect: exactly k centroid rows
       val centroids = qq.filter(col("vec_id") < k)
         .selectExpr("vec_id", "qv", "nrm").collect()
@@ -1809,8 +1714,8 @@ object Queries {
     * is materialized. */
   private val q35 = Q(
     "q35_training_set",
-    (s, dir) => {
-      val stats = t(s, dir, "documents")
+    c => {
+      val stats = t(c, "documents")
         .selectExpr("doc_id", "md5(CAST(text AS BINARY)) AS fp", s"$SparkToks AS toks")
         .selectExpr(
           "doc_id", "fp",
@@ -1858,15 +1763,15 @@ object Queries {
     * the SAME attribute values. */
   private val q36 = Q(
     "q36_download_links",
-    (s, _) => {
-      import s.implicits._
+    c => {
+      import c.spark.implicits._
       val baseUrl = "https://sci-hub.example.org/"
-      val rows = s.range(0, 300, 1, 4).map { i =>
+      val rows = c.spark.range(0, 300, 1, 4).map { i =>
         val (onclick, link) =
           graft.pipeline.Downloads.resolveButton(CorpusGen.buttonPage(i), baseUrl)
         (i, onclick, link)
       }.toDF("row_id", "onclick", "link")
-      auxDump(rows.selectExpr("row_id", "onclick"), "q36_onclick")
+      auxDump(c, rows.selectExpr("row_id", "onclick"), "q36_onclick")
       rows
     },
     Some(s"""SELECT row_id, onclick,
@@ -1887,25 +1792,21 @@ object Queries {
     * returns what the SCAN saw — write-time truth vs scan truth. */
   private val q37 = Q(
     "q37_pdf_dir_scan",
-    (s, _) => {
-      import s.implicits._
-      val root = new java.io.File(s"$AuxDir/q37_pdfs")
-      // the ONE shared recursive delete — its symlink guard matters here
-      // especially, since this fixed reused path is cleared on every
-      // invocation (round-6 review: a drifted local copy recursed
-      // THROUGH dir symlinks, deleting target files outside the tree)
-      graft.util.Fs.deleteRecursively(root)
+    c => {
+      import c.spark.implicits._
+      val root = s"$AuxDir/q37_pdfs"
+      // the fixed tree is rewritten file by file, each atomically, and
+      // never cleared: a concurrent call's pending scan lists and stats
+      // these same files at action time
       val manifest = (0 until 40).map { i =>
-        val sub = new java.io.File(root, s"d${i % 4}")
-        sub.mkdirs()
         val (page, _) = CorpusGen.genDoc(i * 10L + 7L) // docId % 10 >= 7 => PDF bytes
-        java.nio.file.Files.write(new java.io.File(sub, s"doc$i.pdf").toPath, page.html)
-        (s"d${i % 4}/doc$i.pdf", page.html.length.toLong)
+        val rel = s"d${i % 4}/doc$i.pdf"
+        graft.util.Fs.writeAtomically(s"$root/$rel", page.html)
+        (rel, page.html.length.toLong)
       }
-      java.nio.file.Files.writeString(
-        new java.io.File(root, "notes.txt").toPath, "not a pdf")
-      auxDump(manifest.toDF("rel_path", "n_bytes"), "q37_manifest")
-      graft.sources.Sources.pdfDirectory(s, root.toString)
+      graft.util.Fs.writeAtomically(s"$root/notes.txt", "not a pdf".getBytes("UTF-8"))
+      auxDump(c, manifest.toDF("rel_path", "n_bytes"), "q37_manifest")
+      graft.sources.Sources.pdfDirectory(c.spark, root)
         .selectExpr(
           "regexp_extract(path, 'q37_pdfs/(.*)$', 1) AS rel_path",
           "length AS n_bytes")
@@ -1923,10 +1824,10 @@ object Queries {
     * row_number over the same deterministic order. */
   private val q38 = Q(
     "q38_export_cleanup",
-    (s, dir) => {
-      val a = t(s, dir, "documents").orderBy("doc_id")
+    c => {
+      val a = t(c, "documents").orderBy("doc_id")
         .selectExpr("doc_id", "concat('Paper ', doc_id) AS title", "'' AS notes")
-      val b = t(s, dir, "documents").filter("doc_id % 5 != 4").orderBy("doc_id")
+      val b = t(c, "documents").filter("doc_id % 5 != 4").orderBy("doc_id")
         .selectExpr(
           "CASE WHEN doc_id % 4 = 0 THEN concat('B', doc_id) ELSE '' END AS biblio",
           "doc_id % 7 AS aux_id")
@@ -1949,14 +1850,13 @@ object Queries {
     * occurrence count equals the mode's Counter-based count — the
     * constraint makes the top-3 quirk oracle-checkable without emulating
     * Counter.most_common tie-breaks in SQL (those are pinned by the
-    * TextOpsSpec docstring goldens instead). */
+    * TextOpsSpec docstring goldens instead). Written like q33's
+    * [[CsvFixture]]. */
   private object FastscoreFixture {
     val path = s"$AuxDir/fastscore_input.csv"
     private val targets = Vector("spark", "table", "query", "join", "agg",
       "scan", "hash", "merge", "sort", "stream")
-    def ensure(): String = synchronized {
-      val f = new java.io.File(path)
-      f.getParentFile.mkdirs()
+    private val csv = {
       val sb = new StringBuilder("title,abstract\n")
       for (i <- 0 until 60) {
         val abs =
@@ -1978,9 +1878,9 @@ object Queries {
           }
         sb.append(s"T$i,$abs\n")
       }
-      java.nio.file.Files.writeString(f.toPath, sb.toString)
-      path
+      sb.toString.getBytes("UTF-8")
     }
+    def ensure(): String = graft.util.Fs.writeAtomically(path, csv)
   }
 
   /** The fastscore CLI mode END-TO-END as a driver query (round-3 verdict
@@ -1995,12 +1895,12 @@ object Queries {
     * goldens (float16 is not SQL-expressible). */
   private val q39 = Q(
     "q39_mode_fastscore",
-    (s, _) => {
+    c => {
       val path = FastscoreFixture.ensure()
       val target = Set("spark", "table", "query", "join", "agg", "scan",
         "hash", "merge", "sort", "stream")
       val bycatch = Set("slow", "big", "small")
-      graft.pipeline.Modes.fastscore(s, path, target, bycatch)
+      graft.pipeline.Modes.fastscore(c.spark, path, target, bycatch)
         .selectExpr(
           "title", "abstract_text",
           "CAST(matching_terms AS BIGINT) AS m",
@@ -2025,6 +1925,9 @@ object Queries {
       SELECT title, abstract_text, m AS matching_terms, b AS bycatch_terms,
         t AS total_word_count, $ScoreExpr AS wordscore_e4 FROM c"""))
 
+  /** Pages q40 writes (each twice); RunCtx.q40Drain sizes its shards by it. */
+  private[queries] val Q40Docs = 200L
+
   /** Streaming layer driver-visible coverage (round-3 verdict missing
     * #2): one availableNow drain of a pages directory through the
     * streaming pipeline — file source with checkpointed exactly-once
@@ -2042,36 +1945,22 @@ object Queries {
     * total_word_count stay gated by q17 + the golden suite. */
   private val q40 = Q(
     "q40_stream_extract",
-    (s, _) => {
+    c => {
       val base = java.nio.file.Files.createTempDirectory("graft_q40")
       try {
         val inDir = base.resolve("in").toString
-        val nDocs = 200L
-        val pages = ExtractPipeline.pages(s, nDocs, 8)
+        val pages = ExtractPipeline.pages(c.spark, Q40Docs, 8)
         pages.write.mode("append").parquet(inDir)
         pages.write.mode("append").parquet(inDir) // planted exact duplicates
-        // state-store shard count sized to the stream, not to the session
-        // core count: the dedup state holds one entry per in-watermark
-        // url, and each shard is a per-batch commit whose fixed cost
-        // dominates when shards hold a few rows (32 shards for a 400-row
-        // drain measured 2.4 s vs 1.3-1.5 s at the derived count).
-        // Streaming has no AQE and latches the count into the checkpoint
-        // at the first batch, so it is set on a child session (same
-        // SparkContext and SparkConf defaults) and the shared session's
-        // conf is never written. Spark never unregisters a session's
-        // stream listener, so each drain leaves two idle listeners on the
-        // shared bus (one is the started stream's, as for any stream).
-        val drain = s.newSession()
-        drain.conf.set("spark.sql.shuffle.partitions", math.max(2L, math.min(
-          s.sparkContext.defaultParallelism.toLong, 2L * nDocs / 100000L + 1L)))
-        graft.streaming.StreamingExtract.run(drain, inDir,
+        // drained on the run's child session (RunCtx.q40Drain scaladoc)
+        graft.streaming.StreamingExtract.run(c.q40Drain, inDir,
           base.resolve("out").toString, base.resolve("ck").toString,
           CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, dedup = true)
           .awaitTermination()
-        auxDump(s.read.parquet(inDir).select("url"), "q40_in")
-        val sinkRows = s.read.parquet(base.resolve("out").toString)
+        auxDump(c, c.spark.read.parquet(inDir).select("url"), "q40_in")
+        val sinkRows = c.spark.read.parquet(base.resolve("out").toString)
           .select("url", "kind", "total_word_count", "ok")
-        val rollup = auxTable(s, sinkRows, "q40_sink")
+        val rollup = auxTable(c, sinkRows, "q40_sink")
           .groupBy("kind")
           .agg(
             count(lit(1)).as("n_docs"),
@@ -2083,7 +1972,7 @@ object Queries {
         // repeated-sweeps-must-not-leak-disk discipline)
         val schema = rollup.schema
         import scala.jdk.CollectionConverters._
-        s.createDataFrame(rollup.collect().toSeq.asJava, schema)
+        c.spark.createDataFrame(rollup.collect().toSeq.asJava, schema)
       } finally {
         graft.util.Fs.deleteRecursively(base.toFile)
       }
@@ -2137,8 +2026,8 @@ object Queries {
     val duckBigrams = duckNGrams(2)
     Q(
       "q41_jaccard_join",
-      (s, dir) => {
-        val docs = docsWithMutants(s, dir, "q41")
+      c => {
+        val docs = docsWithMutants(c, "q41")
         val held = Held.frames.renew("q41")
         // grams feeds the posting explode (freq, prefix, gram-id table);
         // prefix feeds both sides of the candidate self-join; gsi feeds
@@ -2178,15 +2067,13 @@ object Queries {
               " AND 9 * sz_a <= 10 * sz_b AND 9 * sz_b <= 10 * sz_a" +
               " AND 1 + least(sz_a - rn_a, sz_b - rn_b) >= (9 * (sz_a + sz_b) + 18) DIV 19"))
           .select("id_a", "id_b").distinct()
-        // candidate-count probe (q41CandidateCount scaladoc): CollectMetrics
+        // candidate-count probe (RunCtx.q41CandidateCount scaladoc): CollectMetrics
         // counts the rows flowing into the confirm stage inside the same
         // action — no second job, no extra shuffle; it observes the
         // post-distinct candidates, i.e. the confirm-join fan-in, the
         // number that decides "candidate explosion" vs "slow host" for a
         // wall-time anomaly
-        val obs = org.apache.spark.sql.Observation()
-        q41LastObs.set(obs)
-        val candObserved = cand.observe(obs, count(lit(1)).as("n"))
+        val candObserved = cand.observe(c.q41Observation(), count(lit(1)).as("n"))
         // ONE merge walk per candidate (SortedOverlapI64 scaladoc): the
         // former array_intersect + array_union string double pass (two
         // hash-set builds + two materialized arrays per candidate — the
@@ -2252,7 +2139,7 @@ object Queries {
     * placement is not SQL-expressible, result identity is. */
   private val q42 = Q(
     "q42_byte_weighted_route",
-    (s, _) => {
+    c => {
       val n = 1200L
       val target = CorpusGen.TargetWords.toSet
       val bycatch = CorpusGen.BycatchWords.toSet
@@ -2270,11 +2157,11 @@ object Queries {
       // persist only when reused AND recompute is expensive; both hold
       // here). ~25-40 MB at the fixture size; at scale this is the
       // pre-existing pages table both variants would read anyway.
-      val pages = Held.frames.renew("q42").keep(ExtractPipeline.heavyTailPages(s, n, 32))
-      val plain = auxTable(s, dumpCols(
+      val pages = Held.frames.renew("q42").keep(ExtractPipeline.heavyTailPages(c.spark, n, 32))
+      val plain = auxTable(c, dumpCols(
         ExtractPipeline.extractAndScore(pages, 32, target, bycatch).toDF()),
         "q42_plain")
-      val routed = auxTable(s, dumpCols(
+      val routed = auxTable(c, dumpCols(
         ExtractPipeline.extractAndScore(ExtractPipeline.byteWeightedRoute(pages, 32), 0,
           target, bycatch).toDF()),
         "q42_routed")
@@ -2312,4 +2199,7 @@ object Queries {
     q21, q22, q23, q24, q25, q26, q27, q28, q29, q30,
     q31, q32, q33, q34, q35, q36, q37, q38, q39, q40,
     q41, q42)
+
+  /** The query named `name`. */
+  def apply(name: String): Q = all.find(_.name == name).get
 }

@@ -32,4 +32,26 @@ class FsSpec extends AnyFunSuite {
       graft.util.Fs.deleteRecursively(outside.toFile)
     }
   }
+
+  test("writeAtomically: readers never see a partial file while it is replaced") {
+    // the q33/q39 fixture CSVs and the q37 tree are rewritten on every
+    // call while an earlier call's scan may be reading them; a truncate-
+    // and-write exposes an empty or partial file to that reader
+    val dir = Files.createTempDirectory("fs_atomic")
+    val path = dir.resolve("f.csv").toString
+    val body = Array.fill[Byte](1 << 16)('x')
+    graft.util.Fs.writeAtomically(path, body)
+    val writing = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val writer = new Thread(() =>
+      try (1 to 300).foreach(_ => graft.util.Fs.writeAtomically(path, body))
+      finally writing.set(false))
+    val sizes = scala.collection.mutable.Set.empty[Long]
+    writer.start()
+    while (writing.get) sizes += Files.size(Paths.get(path))
+    writer.join()
+    assert(sizes.forall(_ == body.length), s"a reader saw sizes ${sizes.toSeq.sorted}")
+    // the temp files are renamed into place, none left behind
+    assert(Files.list(dir).count() == 1)
+    graft.util.Fs.deleteRecursively(dir.toFile)
+  }
 }

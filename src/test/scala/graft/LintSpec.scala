@@ -1,13 +1,14 @@
 package graft
 
 import scala.collection.immutable.ListMap
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.EqualTo
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import graft.queries.Queries
+import graft.queries.{Queries, RunCtx}
 
 /** Regression armor for the two bug classes this project actually hit
   * (round-3 verdict next-round #10):
@@ -18,9 +19,12 @@ import graft.queries.Queries
   *     q25 pathology's cousin): every bench sweep leaks a generation of
   *     cache blocks.
   */
-class LintSpec extends AnyFunSuite with SparkTestBase {
+class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
+  // one verify-mode run builds every frame below, as a suite pass would
+  private lazy val ctx = new RunCtx(spark, sf, verify = true)
+  override def afterAll(): Unit = ctx.close()
 
   // q19 is oracled (round 5) but its fn executes the whole resumable
   // pipeline EAGERLY and returns a localized lineage frame — there is no
@@ -36,7 +40,7 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
   private lazy val frames: ListMap[String, DataFrame] =
     Queries.all.filter(_.oracle.isDefined)
       .filterNot(q => eagerlyLocalized.contains(q.name))
-      .map(q => q.name -> q.fn(spark, sf)).to(ListMap)
+      .map(q => q.name -> q.run(ctx)).to(ListMap)
 
   test("no analyzed plan contains a trivially-true self-equality (join aliasing lint)") {
     frames.foreach { case (name, df) =>
@@ -86,18 +90,83 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
-  /** Files under src/main/scala whose source contains `needle`. */
-  private def mainFilesContaining(needle: String): Set[String] = {
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"lint source root not found at ${root.getAbsolutePath} — " +
+  private val mainRoot = new java.io.File("src/main/scala")
+
+  /** The .scala files under `d` (a directory of src/main/scala), with
+    * their source. */
+  private def mainSources(d: java.io.File = mainRoot): Seq[(java.io.File, String)] = {
+    assert(d.isDirectory, s"lint source root not found at ${d.getAbsolutePath} — " +
       "the forked test JVM's working directory moved off the repo root")
     def scalaFiles(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) scalaFiles(f) else Seq(f).filter(_.getName.endsWith(".scala")))
-    scalaFiles(root).filter { f =>
-      scala.util.Using.resource(scala.io.Source.fromFile(f, "UTF-8"))(
-        _.getLines().exists(_.contains(needle)))
-    }.map(f => root.toPath.relativize(f.toPath).toString).toSet
+    scalaFiles(d).map(f => f -> java.nio.file.Files.readString(f.toPath))
+  }
+
+  /** Files under src/main/scala whose source contains `needle`. */
+  private def mainFilesContaining(needle: String): Set[String] =
+    mainSources().collect { case (f, src) if src.linesIterator.exists(_.contains(needle)) =>
+      mainRoot.toPath.relativize(f.toPath).toString
+    }.toSet
+
+  /** The declarations in `src` that keep mutable state at object level:
+    * a `var`, or a val holding a `mutable.` collection, an
+    * AtomicReference or a WeakHashMap. An object's members are the lines
+    * indented two spaces past the object's own line, up to its closing
+    * brace; a val's type is read from its declaration line and, when that
+    * ends in `=`, from the line after it. */
+  private def objectLevelState(src: String): Seq[String] = {
+    val lines = src.linesIterator.toVector
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val Obj = """(\s*)(?:(?:private|protected|final|case)\S*\s+)*object\s.*\{\s*""".r
+    val Decl = """(?:@\w+\s+)*(?:(?:private|protected|final|override|implicit|lazy)\S*\s+)*(val|var)\s.*""".r
+    lines.indices.flatMap { i =>
+      lines(i) match {
+        case Obj(ind) =>
+          val body = lines.drop(i + 1).takeWhile(l => l.trim.isEmpty || indent(l) > ind.length)
+          body.indices.filter(j => indent(body(j)) == ind.length + 2)
+            .map(j => (body(j).trim, body.lift(j + 1).getOrElse("")))
+            .collect {
+              case (l @ Decl("var"), _) => l
+              case (l @ Decl("val"), next)
+                  if Seq("mutable.", "AtomicReference", "WeakHashMap")
+                    .exists((if (l.endsWith("=")) l + next else l).contains) => l
+            }
+        case _ => Nil
+      }
+    }
+  }
+
+  test("graft/queries keeps no object-level mutable state (source lint)") {
+    // a run's state lives in its RunCtx: process-global query state made
+    // runs on one session see each other (a verify flag flipped by one
+    // harness, one q15 result slot shared by every caller)
+    val shapes = """object Queries {
+      |  @volatile private[graft] var auxDumpEnabled: Boolean = true
+      |  private val EmbStats =
+      |    new java.util.WeakHashMap[SparkSession, scala.collection.mutable.Map[String, Long]]()
+      |  private val q41LastObs =
+      |    new java.util.concurrent.atomic.AtomicReference[Observation]()
+      |  private def mutantOffset(floor: Long): Long = {
+      |    var off = floor
+      |    off
+      |  }
+      |  private object Q15Result {
+      |    private var owner: Option[String] = None
+      |  }
+      |  private val SrpAnn = new SrpLsh(8, 4)
+      |}
+      |final class RunCtx {
+      |  @volatile private var q41Obs: Option[Observation] = None
+      |}""".stripMargin
+    assert(objectLevelState(shapes).map(_.takeWhile(_ != '=').trim) == Seq(
+      "@volatile private[graft] var auxDumpEnabled: Boolean", "private val EmbStats",
+      "private val q41LastObs", "private var owner: Option[String]"),
+      "the lint misses a shape of object-level state, or flags a local or class member")
+    val found = mainSources(new java.io.File(mainRoot, "graft/queries")).flatMap {
+      case (f, src) => objectLevelState(src).map(l => s"${f.getName}: $l")
+    }
+    assert(found.isEmpty, s"object-level mutable state: ${found.mkString("; ")}")
   }
 
   test("every persist in Queries.scala has a registered cache owner (source lint)") {
@@ -168,14 +237,13 @@ class LintSpec extends AnyFunSuite with SparkTestBase {
     spark.catalog.clearCache()
     val persisting = Seq("q15_lsh_near_dup", "q24_ann_lsh",
       "q26_embed_near_dup", "q41_jaccard_join")
-    def runAll(): Unit = persisting.foreach(n =>
-      Queries.all.find(_.name == n).get.fn(spark, sf).count())
+    def runAll(): Unit = persisting.foreach(n => Queries(n).run(ctx).count())
     runAll()
     val n1 = spark.sparkContext.getPersistentRDDs.size
     runAll()
     val n2 = spark.sparkContext.getPersistentRDDs.size
-    // Held.renew swaps generations and Q15Result reuses its hit, so a
-    // second sweep must not add blocks; growth means a persist lost its
+    // Held.renew swaps generations and the run reuses its q15 pairs, so
+    // a second sweep must not add blocks; growth means a persist lost its
     // owner (each unowned persist leaks one generation per sweep)
     assert(n2 <= n1, s"persisted RDDs grew $n1 -> $n2 across a repeat sweep")
     // ...and must not silently UNcache either: a rebuilt generation whose

@@ -1,11 +1,14 @@
 package graft
 
+import scala.util.Using
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
-import graft.queries.Queries
+import org.apache.spark.storage.StorageLevel
+import graft.queries.{Queries, RunCtx}
 import graft.textops.TextOpsOracle
 
 /** Executes every SparkEntry query against the smallest fixture and pins
@@ -14,11 +17,17 @@ import graft.textops.TextOpsOracle
   * filter pushdown into the parquet scan, broadcast joins for dims,
   * whole-stage codegen on the scoring arithmetic.
   */
-class QueriesSpec extends AnyFunSuite with SparkTestBase {
+class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
-  private def run(name: String) =
-    Queries.all.find(_.name == name).get.fn(spark, sf)
+  // one verify-mode run on sf0.001 for the tests below, as a harness runs
+  // one suite pass
+  private lazy val ctx = new RunCtx(spark, sf, verify = true)
+  override def afterAll(): Unit = ctx.close()
+  private def run(name: String) = Queries(name).run(ctx)
+  /** `name` in a run of its own on `dir`. */
+  private def runOn(dir: String, name: String, verify: Boolean = true) =
+    Using.resource(new RunCtx(spark, dir, verify))(Queries(name).run(_).collect())
 
   // q16 is the brute-force O(n^2) baseline and the most expensive query
   // here; three tests consume its exact top-1 map — compute once
@@ -37,65 +46,81 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     dot.toDouble / (math.sqrt(a.map(x => x * x).sum.toDouble) * math.sqrt(b.map(x => x * x).sum.toDouble))
   }
 
-  test("every query executes and returns rows on sf0.001") {
-    Queries.all.foreach { q =>
-      val n = q.fn(spark, sf).count()
-      assert(n > 0, s"${q.name} returned 0 rows")
-    }
-  }
-
-  test("bench mode (auxDumpEnabled=false) yields identical results to verify mode") {
+  test("a bench-mode run yields identical results to a verify-mode run") {
     // queries that round-trip their input through an aux-parquet dump for
     // the oracle must return the SAME rows when bench mode skips the dump
-    def rows(name: String) =
-      run(name).collect().map(_.toSeq).toSet
-    val verifyMode = rows("q18_simhash")
-    // restore the SAVED value, not a literal (round-6 test review: a
-    // harness that set the global flag false would be silently flipped
-    // back to dumping by this finally)
-    val saved = Queries.auxDumpEnabled
+    val verifyMode = run("q18_simhash").collect().map(_.toSeq).toSet
+    assert(runOn(sf, "q18_simhash", verify = false).map(_.toSeq).toSet == verifyMode)
+    assert(runOn(sf, "q21_citation_edges", verify = false).nonEmpty)
+    // the former process-wide flag stores nothing and refuses verify mode
     Queries.auxDumpEnabled = false
-    try {
-      assert(rows("q18_simhash") == verifyMode)
-      assert(run("q21_citation_edges").count() > 0)
-    } finally Queries.auxDumpEnabled = saved
+    assert(!Queries.auxDumpEnabled)
+    intercept[IllegalArgumentException](Queries.auxDumpEnabled = true)
   }
 
-  test("Q15Result rebuilds after spark.catalog.clearCache (no stale unpersisted hit)") {
-    import org.apache.spark.storage.StorageLevel
+  test("within one run q25 reuses q15's held pairs, and close releases them") {
+    val c = new RunCtx(spark, sf, verify = true)
+    assert(Queries("q15_lsh_near_dup").run(c).count() > 0)
+    val pairs = c.q15CachedPairs.get
+    assert(Queries("q25_dedup_groups").run(c).count() > 0)
+    assert(c.q15CachedPairs.exists(_ eq pairs), "q25 rebuilt the pairs its run held")
+    c.close()
+    assert(c.q15CachedPairs.isEmpty, "close kept the run's q15 pairs")
+    assert(pairs.storageLevel == StorageLevel.NONE, "close must unpersist the pairs")
+  }
+
+  test("two runs share q15's cached pairs by plan; the run left unpersisted rebuilds") {
+    // Spark's CacheManager keeps one entry per plan, so two runs' q15
+    // pairs on one dir are one cached entry, and closing either run
+    // unpersists both. Hence Bench's q15 retry releases the held pairs
+    // instead of running in a fresh run, which would read them back.
+    val a = new RunCtx(spark, sf, verify = false)
+    val b = new RunCtx(spark, sf, verify = false)
+    try {
+      Queries("q15_lsh_near_dup").run(a).count()
+      Queries("q15_lsh_near_dup").run(b).count()
+      val pb = b.q15CachedPairs.get
+      a.close()
+      assert(pb.storageLevel == StorageLevel.NONE)
+      assert(Queries("q25_dedup_groups").run(b).count() > 0)
+      assert(b.q15CachedPairs.exists(p => (p ne pb) && p.storageLevel != StorageLevel.NONE),
+        "q25 composed on pairs another run had unpersisted")
+    } finally b.close()
+  }
+
+  test("a run's q15 pairs rebuild after spark.catalog.clearCache (no stale hit)") {
     val before = run("q25_dedup_groups").collect().map(_.toSeq).toSet
-    val pairs0 = Queries.q15CachedPairs(spark, sf).get
+    val pairs0 = ctx.q15CachedPairs.get
     assert(pairs0.storageLevel != StorageLevel.NONE)
     // a session-wide cache drop (any embedding app may do this between
-    // jobs) unpersists the pairs but leaves the (session, dir) hit live
+    // jobs) unpersists the pairs but leaves the run's hit live
     spark.catalog.clearCache()
     assert(pairs0.storageLevel == StorageLevel.NONE)
     // the round-3 footgun: a stale hit here would hand q25 an UNPERSISTED
     // pairs plan and the whole LSH pipeline would re-run inside every CC
     // hop join. The fix re-checks storageLevel and rebuilds.
     val after = run("q25_dedup_groups").collect().map(_.toSeq).toSet
-    val pairs1 = Queries.q15CachedPairs(spark, sf).get
+    val pairs1 = ctx.q15CachedPairs.get
     assert(pairs1.storageLevel != StorageLevel.NONE,
       "q25 consumed an unpersisted q15 pairs plan after clearCache")
     assert(after == before)
   }
 
   test("invalidateResultCaches forces a genuinely fresh q15/q25 build") {
-    import org.apache.spark.storage.StorageLevel
     // the anomaly-retry harness calls this before re-running q15/q25;
-    // if the hook ever stops dropping the Q15Result entry the retry
+    // if the hook ever stops dropping a run's q15 pairs the retry
     // silently measures a cache read again (round-7 review finding)
     val before = run("q25_dedup_groups").collect().map(_.toSeq).toSet
-    val pairs0 = Queries.q15CachedPairs(spark, sf).get
+    val pairs0 = ctx.q15CachedPairs.get
     assert(pairs0.storageLevel != StorageLevel.NONE)
     Queries.invalidateResultCaches()
-    assert(Queries.q15CachedPairs(spark, sf).isEmpty,
-      "Q15Result entry survived invalidateResultCaches")
+    assert(ctx.q15CachedPairs.isEmpty,
+      "the run's q15 pairs survived invalidateResultCaches")
     assert(pairs0.storageLevel == StorageLevel.NONE,
       "invalidate must unpersist the dropped pairs frame")
     // and the rebuild reproduces the same groups
     assert(run("q25_dedup_groups").collect().map(_.toSeq).toSet == before)
-    assert(Queries.q15CachedPairs(spark, sf).isDefined)
+    assert(ctx.q15CachedPairs.isDefined)
   }
 
   test("releaseSwapCaches drops every frame a query persisted, q39's mode frame included") {
@@ -123,16 +148,41 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     assert(rows.map(_.getAs[String]("kind")).toSet == Set("html", "pdf"))
   }
 
-  test("q19/q25/q40 on parallel threads never write the session conf and match serial runs") {
-    // the three queries that once saved/overwrote/restored
-    // spark.sql.shuffle.partitions: two overlapping restores could leave
-    // the shared session at a stale width. A sampler watches the conf
-    // through the serial runs and the parallel ones.
+  test("q40 runs of one context share one drain session's bus listener") {
+    // Spark never unregisters a session's stream listener, so a drain
+    // session per q40 call left one more idle listener on the shared bus
+    // per call. Every started stream still adds one of its own, so a run
+    // of a fresh context adds one listener more than a second run of a
+    // context that drained before.
+    def listeners = org.apache.spark.ListenerBusCount(spark.sparkContext)
+    def q40(c: RunCtx) = assert(Queries("q40_stream_extract").run(c).count() > 0)
+    Using.resource(new RunCtx(spark, sf, verify = false)) { c =>
+      q40(c)
+      val once = listeners
+      q40(c)
+      val twice = listeners
+      Using.resource(new RunCtx(spark, sf, verify = false))(q40)
+      assert(listeners - twice == twice - once + 1,
+        s"listeners: $once after one run, $twice after a second run of the same " +
+          s"context, $listeners after a run of a fresh one")
+    }
+  }
+
+  test("the whole suite on parallel threads matches serial runs, conf untouched") {
+    // one serial verify-mode pass over every query, then two passes at
+    // once on this session: a verify-mode run and a bench-mode run, in
+    // opposite query orders. A sampler watches the shared session's
+    // shuffle width throughout: q19, q25 and q40 once saved, overwrote
+    // and restored it, and two overlapping restores could leave the
+    // session at a stale width.
     import scala.jdk.CollectionConverters._
     val key = "spark.sql.shuffle.partitions"
     val own = spark.conf.get(key)
-    val names = Seq("q19_resume_lineage", "q25_dedup_groups", "q40_stream_extract")
-    def rows(name: String) = run(name).collect().map(_.toSeq).toSeq.sortBy(_.toString)
+    val names = Queries.all.map(_.name)
+    def pass(order: Seq[String], verify: Boolean) =
+      Using.resource(new RunCtx(spark, sf, verify)) { c =>
+        order.map(n => n -> Queries(n).run(c).collect().map(_.toSeq).toSeq.sortBy(_.toString)).toMap
+      }
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val sampling = new java.util.concurrent.atomic.AtomicBoolean(true)
     val sampler = new Thread(() =>
@@ -140,20 +190,22 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
         seen.add(spark.conf.get(key))
         java.util.concurrent.locks.LockSupport.parkNanos(200000L)
       })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(names.size)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
     val (serial, parallel) = try {
       sampler.start()
-      val serial = names.map(n => n -> rows(n)).toMap
-      val futures = names.map(n => n -> pool.submit(() => rows(n)))
-      (serial, futures.map { case (n, f) =>
-        n -> f.get(10, java.util.concurrent.TimeUnit.MINUTES) }.toMap)
+      val serial = pass(names, verify = true)
+      val futures = Seq(pool.submit(() => pass(names, verify = true)),
+        pool.submit(() => pass(names.reverse, verify = false)))
+      (serial, futures.map(_.get(15, java.util.concurrent.TimeUnit.MINUTES)))
     } finally {
       sampling.set(false)
       sampler.join()
       pool.shutdownNow()
     }
+    names.foreach(n => assert(serial(n).nonEmpty, s"$n returned 0 rows"))
     assert(seen.asScala.toSet == Set(own), s"saw ${seen.asScala.toSeq.sorted}, want $own")
-    names.foreach(n => assert(parallel(n) == serial(n), s"$n differs from its serial run"))
+    for ((run, mode) <- parallel.zip(Seq("verify", "bench")); n <- names)
+      assert(run(n) == serial(n), s"$n in the parallel $mode run differs from its serial run")
   }
 
   test("q42 byte-weighted routing is result-invisible on the heavy-tail corpus") {
@@ -288,8 +340,11 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       (40L until 50L).map(id => (id, s"unique text number $id with filler tokens ${id * 7} ${id * 13} ${id * 31}"))
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    val pairs = Queries.all.find(_.name == "q15_lsh_near_dup").get
-      .fn(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1)))
+    // one run, so q25 groups the pairs q15 confirmed
+    val (pairs, groups) = Using.resource(new RunCtx(spark, dir, verify = true)) { c =>
+      (Queries("q15_lsh_near_dup").run(c).collect().map(r => (r.getLong(0), r.getLong(1))),
+        Queries("q25_dedup_groups").run(c).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    }
     val cluster = (0L until 40L).toSet ++ (1000000L until 1000040L)
     val inCluster = pairs.filter(p => cluster(p._1) && cluster(p._2))
     // all-pairs over the 80-member cluster would be C(80,2) = 3160;
@@ -298,9 +353,6 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
       s"hot bucket emitted ${inCluster.length} pairs — cap not applied?")
     // connectivity: every cluster member reachable from the rest via the
     // confirmed edges (one group, nothing stranded by the cap)
-    val groups = Queries.all.find(_.name == "q25_dedup_groups").get
-      .fn(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val hotGroup = groups.filter { case (_, n) => n >= 80 }
     assert(hotGroup.size == 1 && hotGroup.head._2 == 80,
       s"hot cluster fragmented: groups >= 80 members: $hotGroup")
@@ -322,18 +374,14 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     // this corpus deliberately leaves the oracle's static domain
     // (offset jumps to 1e6) — verify mode would fail LOUDLY on it by
     // design, so run the query as a bench/scale caller would
-    val saved = Queries.auxDumpEnabled
-    Queries.auxDumpEnabled = false
-    val out =
-      try Queries.all.find(_.name == "q26_embed_near_dup").get
-        .fn(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1)))
-      finally Queries.auxDumpEnabled = saved
+    val out = runOn(dir, "q26_embed_near_dup", verify = false)
+      .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.length >= 45, s"perturbed pairs lost: ${out.length}/50")
     assert(out.forall { case (a, b) => b == a + 1000000L },
       s"expected (id, id+1e6) pairs, got: ${out.take(5).mkString(",")}")
     // and the guard itself: verify mode on this dir must refuse loudly
     val e = intercept[IllegalArgumentException] {
-      Queries.all.find(_.name == "q26_embed_near_dup").get.fn(spark, dir)
+      runOn(dir, "q26_embed_near_dup")
     }
     assert(e.getMessage.contains("oracle domain exceeded"))
   }
@@ -532,8 +580,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
         (id, "shared body text for the near dup gate with enough tokens"))
     docs.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
-    val pairs = Queries.all.find(_.name == "q15_lsh_near_dup").get
-      .fn(spark, dir).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = runOn(dir, "q15_lsh_near_dup").map(r => (r.getLong(0), r.getLong(1)))
     // the 5 identical full docs (and their mutants) still pair up...
     assert(pairs.nonEmpty, "normal near-dups lost")
     // ...but no pair touches a shingle-less doc (ids 0-39 or their
@@ -561,7 +608,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase {
     }.toDF("vec_id", "embedding").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     for (q <- Seq("q16_ann_topk", "q24_ann_lsh", "q34_ann_ivf", "q26_embed_near_dup")) {
-      val out = Queries.all.find(_.name == q).get.fn(spark, dir).collect()
+      val out = runOn(dir, q)
         .map(r => (r.getLong(0), r.getLong(1)))
       assert(out.nonEmpty, s"$q returned nothing")
       // vec 3 has no cosine to anything — it must be absent, not NaN.
