@@ -168,21 +168,11 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     }
   }
 
-  test("the whole suite on parallel threads matches serial runs, conf untouched") {
-    // one serial verify-mode pass over every query, then two passes at
-    // once on this session: a verify-mode run and a bench-mode run, in
-    // opposite query orders. A sampler watches the shared session's
-    // shuffle width throughout: q19, q25 and q40 once saved, overwrote
-    // and restored it, and two overlapping restores could leave the
-    // session at a stale width.
+  /** Runs `body` while a sampler thread watches the shared session's
+    * shuffle width; returns the body's result and every width seen. */
+  private def sampleShuffleWidth[T](body: => T): (T, Set[String]) = {
     import scala.jdk.CollectionConverters._
     val key = "spark.sql.shuffle.partitions"
-    val own = spark.conf.get(key)
-    val names = Queries.all.map(_.name)
-    def pass(order: Seq[String], verify: Boolean) =
-      Using.resource(new RunCtx(spark, sf, verify)) { c =>
-        order.map(n => n -> Queries(n).run(c).collect().map(_.toSeq).toSeq.sortBy(_.toString)).toMap
-      }
     val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     val sampling = new java.util.concurrent.atomic.AtomicBoolean(true)
     val sampler = new Thread(() =>
@@ -190,20 +180,66 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
         seen.add(spark.conf.get(key))
         java.util.concurrent.locks.LockSupport.parkNanos(200000L)
       })
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val (serial, parallel) = try {
-      sampler.start()
-      val serial = pass(names, verify = true)
-      val futures = Seq(pool.submit(() => pass(names, verify = true)),
-        pool.submit(() => pass(names.reverse, verify = false)))
-      (serial, futures.map(_.get(15, java.util.concurrent.TimeUnit.MINUTES)))
-    } finally {
+    val out = try { sampler.start(); body } finally {
       sampling.set(false)
       sampler.join()
-      pool.shutdownNow()
     }
-    names.foreach(n => assert(serial(n).nonEmpty, s"$n returned 0 rows"))
-    assert(seen.asScala.toSet == Set(own), s"saw ${seen.asScala.toSeq.sorted}, want $own")
+    (out, seen.asScala.toSet)
+  }
+  private def ownShuffleWidth = spark.conf.get("spark.sql.shuffle.partitions")
+  private def sortedRows(rows: Array[org.apache.spark.sql.Row]) =
+    rows.map(_.toSeq).toSeq.sortBy(_.toString)
+  private def pass(order: Seq[String], verify: Boolean) =
+    Using.resource(new RunCtx(spark, sf, verify)) { c =>
+      order.map(n => n -> sortedRows(Queries(n).run(c).collect())).toMap
+    }
+  private def onThreads[T](tasks: Seq[() => T]): Seq[T] = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+    try {
+      val futures = tasks.map(t => pool.submit(() => t()))
+      futures.map(_.get(15, java.util.concurrent.TimeUnit.MINUTES))
+    } finally pool.shutdownNow()
+  }
+
+  // one serial verify-mode pass over every query, run once for the
+  // tests below, with the shuffle widths the session showed meanwhile
+  private lazy val serialPass = sampleShuffleWidth(pass(Queries.all.map(_.name), verify = true))
+
+  test("every query executes and returns rows on sf0.001") {
+    val (serial, _) = serialPass
+    Queries.all.foreach(q => assert(serial(q.name).nonEmpty, s"${q.name} returned 0 rows"))
+  }
+
+  test("q19/q25/q40 on parallel threads never write the session conf and match serial runs") {
+    // the three queries that once saved/overwrote/restored
+    // spark.sql.shuffle.partitions: two overlapping restores could leave
+    // the shared session at a stale width. A sampler watches the conf
+    // through the serial runs and the parallel ones, each in a run of
+    // its own.
+    val names = Seq("q19_resume_lineage", "q25_dedup_groups", "q40_stream_extract")
+    val (serial, seenSerial) = serialPass
+    val (parallel, seen) = sampleShuffleWidth(
+      onThreads(names.map(n => () => sortedRows(runOn(sf, n)))))
+    val own = ownShuffleWidth
+    assert((seenSerial ++ seen) == Set(own), s"saw ${(seenSerial ++ seen).toSeq.sorted}, want $own")
+    names.zip(parallel).foreach { case (n, rows) =>
+      assert(rows == serial(n), s"$n differs from its serial run")
+    }
+  }
+
+  test("the whole suite on parallel threads matches serial runs, conf untouched") {
+    // the serial verify-mode pass over every query, then two passes at
+    // once on this session: a verify-mode run and a bench-mode run, in
+    // opposite query orders. A sampler watches the shared session's
+    // shuffle width throughout: q19, q25 and q40 once saved, overwrote
+    // and restored it, and two overlapping restores could leave the
+    // session at a stale width.
+    val names = Queries.all.map(_.name)
+    val (serial, seenSerial) = serialPass
+    val (parallel, seen) = sampleShuffleWidth(onThreads(Seq(
+      () => pass(names, verify = true), () => pass(names.reverse, verify = false))))
+    val own = ownShuffleWidth
+    assert((seenSerial ++ seen) == Set(own), s"saw ${(seenSerial ++ seen).toSeq.sorted}, want $own")
     for ((run, mode) <- parallel.zip(Seq("verify", "bench")); n <- names)
       assert(run(n) == serial(n), s"$n in the parallel $mode run differs from its serial run")
   }
