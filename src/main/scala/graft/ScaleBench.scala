@@ -155,30 +155,31 @@ object ScaleBench {
     def f(x: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, x)
     // per-query failure isolation: a query blowing up at a scale tier is
     // the exact event this harness exists to CATCH — it must surface as
-    // a failed entry in the JSON evidence, not abort the run and discard
-    // every already-measured tier (Bench's failed_queries discipline)
+    // a failed entry in the JSON evidence (rows -1), not abort the run and
+    // discard every already-measured tier (Bench's failed_queries
+    // discipline)
     val failed = scala.collection.mutable.ListBuffer.empty[String]
+    def timed(ctx: RunCtx, tag: String, name: String): Measured[Long] = {
+      val m = Measured.time {
+        try Queries(name).run(ctx).count()
+        catch { case e: Throwable =>
+          failed += s"$tag:$name"
+          System.err.println(s"[scale] $tag $name failed: ${e.getMessage}")
+          -1L
+        }
+      }
+      // drop this query's held frames before the next query is timed
+      // (Bench's suite-loop discipline): at x100 q15's persisted
+      // aug+sigs tables are GBs, and holding them under q25/q26 measures
+      // eviction pressure, not the next query. q15's pairs result (the
+      // table q25 consumes) survives — releasing it would re-run the
+      // whole LSH pipeline inside q25's CC hops.
+      Queries.releaseSwapCaches()
+      m
+    }
     val times = scales.map { case (tag, _, _, suite) =>
       tag -> Using.resource(new RunCtx(spark, s"$root/$tag", verify = false)) { ctx =>
-        suite.map { name =>
-          val t0 = System.nanoTime()
-          val rows =
-            try Queries(name).run(ctx).count()
-            catch { case e: Throwable =>
-              failed += s"$tag:$name"
-              System.err.println(s"[scale] $tag $name failed: ${e.getMessage}")
-              -1L
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          // drop this query's held frames before the next query
-          // is timed (Bench's suite-loop discipline): at x100 q15's
-          // persisted aug+sigs tables are GBs, and holding them under
-          // q25/q26 measures eviction pressure, not the next query.
-          // q15's pairs result (the table q25 consumes) survives — releasing
-          // it would re-run the whole LSH pipeline inside q25's CC hops.
-          Queries.releaseSwapCaches()
-          (name, sec, rows)
-        }
+        suite.map(name => name -> timed(ctx, tag, name))
       }
     }.toMap
     // ---- composed dedup pipeline (round-6 verdict #6) -------------------
@@ -191,41 +192,26 @@ object ScaleBench {
     // in the evidence. Per-stage wall/gc/cpu/rows published; between
     // stages the held frames release as in the suite loop (q15's pairs
     // deliberately survives into q25 — that IS the composition).
-    val composed: Option[Seq[(String, Double, Long, Long, Long)]] = if (deep) {
+    val composed: Option[Seq[(String, Measured[Long])]] = Option.when(deep) {
       val dir = s"$root/x200"
       writeTables(spark, dir, 1000000L, 200000L)
       val suite = Seq("q13_dedup_exact", "q15_lsh_near_dup",
         "q25_dedup_groups", "q35_training_set")
-      Some(Using.resource(new RunCtx(spark, dir, verify = false)) { ctx =>
-        suite.map { name =>
-          val gc0 = GcClock.ms
-          val cpu0 = CpuClock.ms
-          val t0 = System.nanoTime()
-          val rows =
-            try Queries(name).run(ctx).count()
-            catch { case e: Throwable =>
-              failed += s"x200:$name"
-              System.err.println(s"[scale] x200 $name failed: ${e.getMessage}")
-              -1L
-            }
-          val sec = (System.nanoTime() - t0) / 1e9
-          Queries.releaseSwapCaches()
-          (name, sec, rows, GcClock.ms - gc0,
-            if (cpu0 < 0) -1L else CpuClock.ms - cpu0)
-        }
-      })
-    } else None
+      Using.resource(new RunCtx(spark, dir, verify = false)) { ctx =>
+        suite.map(name => name -> timed(ctx, "x200", name))
+      }
+    }
 
     val line = {
       // ordered to match `scales` so the JSON reads x1 -> x100
       val per = scales.map { case (tag, _, _, _) =>
-        s""""$tag":{${times(tag).map(t => s""""${t._1}":${f(t._2)}""").mkString(",")}}"""
+        s""""$tag":{${times(tag).map(t => s""""${t._1}":${f(t._2.sec)}""").mkString(",")}}"""
       }.mkString(",")
       val rows = scales.map { case (tag, _, _, _) =>
-        s""""rows_$tag":{${times(tag).map(t => s""""${t._1}":${t._3}""").mkString(",")}}"""
+        s""""rows_$tag":{${times(tag).map(t => s""""${t._1}":${t._2.value}""").mkString(",")}}"""
       }.mkString(",")
       def secs(tag: String): Map[String, Double] =
-        times(tag).map(t => (t._1, t._2)).toMap
+        times(tag).map(t => (t._1, t._2.sec)).toMap
       // per-tier growth checks: each adjacent step is 3.0-10x data, so
       // wall growth well under the data factor (≤ ~2x per 3x step) means
       // the n·log-ish claim holds at the next scale; x*/x1 gives the
@@ -234,7 +220,7 @@ object ScaleBench {
         val lo = secs(loTag)
         s""""ratio_${hiTag}_over_$loTag":{${times(hiTag)
           .filter(t => lo.contains(t._1))
-          .map(t => s""""${t._1}":${f(t._2 / math.max(lo(t._1), 1e-9))}""").mkString(",")}}"""
+          .map(t => s""""${t._1}":${f(t._2.sec / math.max(lo(t._1), 1e-9))}""").mkString(",")}}"""
       }
       val tags = scales.map(_._1)
       val ratioBlocks = (
@@ -247,10 +233,10 @@ object ScaleBench {
       val vecsArr = scales.map(_._3).mkString("[", ",", "]")
       val failedArr = failed.map(n => s""""$n"""").mkString("[", ",", "]")
       val composedBlock = composed.map { stages =>
-        val st = stages.map { case (n, sec, rws, gc, cpu) =>
-          s""""$n":{"sec":${f(sec)},"rows":$rws,"gc_ms":$gc,"cpu_ms":$cpu}"""
+        val st = stages.map { case (n, m) =>
+          s""""$n":{"sec":${f(m.sec)},"rows":${m.value},"gc_ms":${m.gcMs},"cpu_ms":${m.cpuMs}}"""
         }.mkString(",")
-        s""","composed":{"docs":1000000,"vecs":200000,"total_sec":${f(stages.map(_._2).sum)},"stages":{$st}}"""
+        s""","composed":{"docs":1000000,"vecs":200000,"total_sec":${f(stages.map(_._2.sec).sum)},"stages":{$st}}"""
       }.getOrElse("")
       s"""{"metric":"scale_evidence_10x","docs":$docsArr,"vecs":$vecsArr,"failed_queries":$failedArr,$per,$rows,$ratioBlocks$composedBlock}"""
     }

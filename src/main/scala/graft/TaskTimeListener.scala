@@ -3,9 +3,8 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 
 /** Collects task wall times so the skew of the parse stage is measurable
-  * (max-task vs median-task — SURVEY.md §7.6). Shared by Bench (skew
-  * evidence legs) and BenchLeg (per-run skew inside the pinned headline
-  * child JVM). */
+  * (max-task vs median-task — SURVEY.md §7.6). BenchLeg.measure
+  * publishes it per timed run of every Bench leg. */
 private[graft] final class TaskTimeListener extends SparkListener {
   val times = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Long)]()
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
@@ -42,14 +41,45 @@ private[graft] object GcClock {
   }
 }
 
+/** One timed run of `body`: its value, wall seconds, and the JVM-wide GC
+  * and process-CPU ms it cost (cpuMs -1 when the CPU bean is absent).
+  * The one wall/GC/CPU capture of every harness main. */
+private[graft] final case class Measured[A](value: A, sec: Double, gcMs: Long, cpuMs: Long)
+
+private[graft] object Measured {
+  def time[A](body: => A): Measured[A] = {
+    val gc0 = GcClock.ms
+    val cpu0 = CpuClock.ms
+    val t0 = System.nanoTime()
+    val v = body
+    val sec = (System.nanoTime() - t0) / 1e9
+    Measured(v, sec, GcClock.ms - gc0, if (cpu0 < 0) -1L else CpuClock.ms - cpu0)
+  }
+}
+
 /** THE timed leg computation, shared by every harness JVM — the parent
-  * diagnostic run, the pinned BenchLeg children, and the skew legs all
-  * call this ONE body, so parent-vs-child and skew-vs-headline numbers
-  * are comparisons of the identical computation by construction (three
-  * hand-copied versions invited silent methodology drift). */
+  * diagnostic runs and every BenchLeg leg (pinned child or in-process
+  * fallback) call this ONE body, so parent-vs-child and skew-vs-headline
+  * numbers are comparisons of the identical computation by construction
+  * (hand-copied versions invited silent methodology drift). */
 private[graft] object BenchCommon {
   import org.apache.spark.sql.{Dataset, SparkSession}
   import graft.model.PageRecord
+
+  /** The harness session at `cpus` cores. The bench corpora are split
+    * finely enough that the scan stage can occupy every core; the 128 MB
+    * default is tuned for TB-scale inputs, not a 150 MB fixture. */
+  def session(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 
   /** Parse+score `pages` and count ok docs (the headline unit of work). */
   def countOk(pages: Dataset[PageRecord], numPartitions: Int): Long = {
@@ -69,9 +99,7 @@ private[graft] object BenchCommon {
 
   /** The skew-evidence CONTROL leg: same pages, but partitioned by raw
     * domain (the pathological layout — one task owns the hot domain)
-    * instead of the pipeline's salted url-hash routing. One shared body
-    * so the parent fallback and the pinned BenchLeg child measure the
-    * identical computation. */
+    * instead of the pipeline's salted url-hash routing. */
   def countOkDomainPartitioned(spark: SparkSession, path: String, parts: Int): Long = {
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
@@ -92,13 +120,12 @@ private[graft] object BenchCommon {
       spark.read.parquet(path).as[PageRecord], parts), 0)
   }
 
-  /** THE route-string dispatch, shared by the pinned BenchLeg child and
-    * Bench's in-process parent fallback. Round-7 review: the 5-case match
-    * was hand-duplicated across the two files, and a route added to one
-    * copy but not the other makes the fallback silently run a DIFFERENT
-    * computation than the child it substitutes for — a methodology
-    * mismatch inside a published comparative claim (the r6 parentParseLeg
-    * incident class). One body, one invariant. */
+  /** THE route-string dispatch of BenchLeg.measure, which both the
+    * pinned child and Bench's in-process fallback run. Round-7 review: a
+    * route added to one of two hand-kept copies makes the fallback
+    * silently run a DIFFERENT computation than the child it substitutes
+    * for — a methodology mismatch inside a published comparative claim.
+    * One body, one invariant. */
   def countOkRoute(spark: SparkSession, path: String, cpus: Int, route: String): Long =
     route match {
       case "domain"       => countOkDomainPartitioned(spark, path, cpus)

@@ -23,8 +23,13 @@ gc/cpu) so the "driver runs are always sick at the tail" pattern is a
 diffable fact instead of verdict archaeology. Always exits 0: the driver
 artifact is evidence to be classified, not a gate to fail.
 
+Runs at different scaling core counts are not comparable: when
+`scaling.cpus_lo` or `scaling.cpus_hi` differ between CANONICAL and a NEW
+file, both values are printed and the gate exits 2 (--driver prints the
+mismatch and carries on).
+
 Exit codes: 0 = no consistent regression (or --driver mode); 1 =
-regression(s); 2 = usage / missing keys.
+regression(s); 2 = usage / missing keys / different core counts.
 """
 import json
 import sys
@@ -35,9 +40,23 @@ def load(path):
         return json.load(f)
 
 
+def core_mismatches(canon_path, canon, others):
+    """One line per (path, artifact) whose scaling core pair differs from
+    CANONICAL's."""
+    def cores(art):
+        sc = art.get("scaling", {})
+        return sc.get("cpus_lo"), sc.get("cpus_hi")
+    base = cores(canon)
+    return [f"scaling cores differ: {canon_path} cpus_lo={base[0]} cpus_hi={base[1]}, "
+            f"{path} cpus_lo={c[0]} cpus_hi={c[1]}"
+            for path, c in ((p, cores(a)) for p, a in others) if c != base]
+
+
 def driver_mode(canon_path, driver_path, factor):
     """Per-query driver-vs-canonical divergence report (never a gate)."""
     canon, drv = load(canon_path), load(driver_path)
+    for line in core_mismatches(canon_path, canon, [(driver_path, drv)]):
+        print(line)
     cq, dq = canon.get("queries", {}), drv.get("queries", {})
     if not cq or not dq:
         print("both files need a 'queries' block")
@@ -107,6 +126,10 @@ def main(argv):
 
     canon = load(args[0])
     news = [load(p) for p in args[1:]]
+    mismatches = core_mismatches(args[0], canon, list(zip(args[1:], news)))
+    if mismatches:
+        print("\n".join(mismatches))
+        return 2
     cq = canon.get("queries", {})
     if not cq:
         print(f"no 'queries' block in {args[0]}")
