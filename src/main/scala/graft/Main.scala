@@ -135,7 +135,7 @@ object Main {
         "(the offline stand-in for the reference's network lookup; see README)")
     val p = new java.io.File(args.snapshots, s"$name.parquet")
     usageRequire(p.exists, s"snapshot table not found: $p")
-    spark.read.parquet(p.toString)
+    graft.util.Parquet.read(spark, p.toString)
   }
 
   private def words(spark: SparkSession, path: String, fallback: Seq[String]): Set[String] =

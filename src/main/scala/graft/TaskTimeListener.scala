@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import graft.util.Parquet
 
 /** Collects task wall times so the skew of the parse stage is measurable
   * (max-task vs median-task — SURVEY.md §7.6). BenchLeg.measure
@@ -94,7 +95,7 @@ private[graft] object BenchCommon {
 
   def countOk(spark: SparkSession, path: String, numPartitions: Int): Long = {
     import spark.implicits._
-    countOk(spark.read.parquet(path).as[PageRecord], numPartitions)
+    countOk(Parquet.read(spark, path).as[PageRecord], numPartitions)
   }
 
   /** The skew-evidence CONTROL leg: same pages, but partitioned by raw
@@ -103,7 +104,7 @@ private[graft] object BenchCommon {
   def countOkDomainPartitioned(spark: SparkSession, path: String, parts: Int): Long = {
     import spark.implicits._
     import org.apache.spark.sql.functions.expr
-    val byDomain = spark.read.parquet(path).as[PageRecord]
+    val byDomain = Parquet.read(spark, path).as[PageRecord]
       .repartition(parts, expr("regexp_extract(url, 'd([0-9]+)', 1)"))
       .as[PageRecord]
     countOk(byDomain, 0)
@@ -117,7 +118,7 @@ private[graft] object BenchCommon {
   def countOkByteWeighted(spark: SparkSession, path: String, parts: Int): Long = {
     import spark.implicits._
     countOk(graft.pipeline.ExtractPipeline.byteWeightedRoute(
-      spark.read.parquet(path).as[PageRecord], parts), 0)
+      Parquet.read(spark, path).as[PageRecord], parts), 0)
   }
 
   /** THE route-string dispatch of BenchLeg.measure, which both the

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.corpus.CorpusGen
+import graft.util.Parquet
 
 /** Offline replacements for the reference's network enrichment lookups
   * (Dimensions/crosscite/abstract/SemanticScholar — SURVEY.md §2.1 rows
@@ -63,7 +64,7 @@ object Enrichment {
 
   /** Docs frame: doc_id, doi (1 in 3 docs carry one), title. */
   def docsFrame(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       .selectExpr(
         "doc_id",
         "CASE WHEN doc_id % 3 = 0 THEN concat('10.5555/d', doc_id) END AS doi",
@@ -75,7 +76,7 @@ object Enrichment {
     * parseable ISO dates and garbage, for the errors="coerce" path
     * (/root/reference/src/fetch.py:229-234). */
   def dimSnap(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       .filter("doc_id % 6 = 0")
       .selectExpr(
         "concat('10.5555/d', doc_id) AS doi",
@@ -89,7 +90,7 @@ object Enrichment {
     * docs, doc_id % 6 = 3) — the CitationScraper analog
     * (/root/reference/src/webscrapers.py:294-329). */
   def biblioSnap(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       .filter("doc_id % 6 = 3")
       .selectExpr(
         "concat('10.5555/d', doc_id) AS doi",
@@ -101,7 +102,7 @@ object Enrichment {
     * path, exactly the reference's access pattern
     * (/root/reference/src/webscrapers.py:332-358 via :73-80). */
   def abstractSnap(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       // %12 != 6 excludes every other dim-covered doc, so the abstract
       // join has key-present MISSES (internal_id exists, abstract absent)
       .filter("doc_id % 6 = 0 AND doc_id % 12 != 6")
@@ -113,7 +114,7 @@ object Enrichment {
     * searches by query text, /root/reference/src/webscrapers.py:363-417);
     * figure urls flattened to a CSV scalar. */
   def figuresSnap(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"$dir/documents.parquet")
+    Parquet.read(s, s"$dir/documents.parquet")
       .filter("doc_id % 2 = 0")
       .selectExpr(
         "concat('Paper ', doc_id) AS title",

@@ -7,7 +7,7 @@ import graft.pipeline.ExtractPipeline
 import graft.corpus.CorpusGen
 import graft.functions.GraftFunctions
 import graft.table.GraftTable
-import graft.util.Held
+import graft.util.{Held, Parquet}
 
 /** The engine's query suite — one entry per operator family from
   * SURVEY.md §2 plus the large-scale training-data-pipeline operations
@@ -44,7 +44,7 @@ object Queries {
   }
 
   private def t(c: RunCtx, name: String): DataFrame =
-    c.spark.read.parquet(s"${c.dir}/$name.parquet")
+    Parquet.read(c.spark, s"${c.dir}/$name.parquet")
 
   /** Fixed aux-dump dir (declared FIRST: oracle SQL strings interpolate
     * it eagerly at object init, and Scala initializes object vals in
@@ -69,7 +69,7 @@ object Queries {
   private def auxTable(c: RunCtx, df: DataFrame, name: String): DataFrame =
     if (c.verify) {
       df.write.mode("overwrite").parquet(s"$AuxDir/$name")
-      c.spark.read.parquet(s"$AuxDir/$name")
+      Parquet.read(c.spark, s"$AuxDir/$name")
     } else df
 
   /** Verify-mode-only side dump (for oracles that re-derive the result
@@ -962,13 +962,13 @@ object Queries {
         // reads the same committed files the lineage metrics were computed
         // from, but the AGGREGATION is re-done from scratch in DuckDB
         auxDump(c,
-          c.spark.read.parquet(s"$root/data").selectExpr(
+          Parquet.read(c.spark, s"$root/data").selectExpr(
             "CAST(bucket AS BIGINT) AS bucket", "ok", "n_bytes"),
           "q19_docs")
         // lineage is one row per bucket — pull it local so the temp table
         // can be deleted eagerly (repeated bench/verify runs must not leak
         // disk); this is bounded metadata, not a data collect
-        val lineage = c.spark.read.parquet(s"$root/lineage")
+        val lineage = Parquet.read(c.spark, s"$root/lineage")
           .selectExpr("CAST(bucket AS BIGINT) AS bucket", "n_docs", "n_ok",
             "n_err", "bytes_in", "CAST(attempt AS BIGINT) AS attempt")
         val schema = lineage.schema
@@ -1957,8 +1957,8 @@ object Queries {
           base.resolve("out").toString, base.resolve("ck").toString,
           CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, dedup = true)
           .awaitTermination()
-        auxDump(c, c.spark.read.parquet(inDir).select("url"), "q40_in")
-        val sinkRows = c.spark.read.parquet(base.resolve("out").toString)
+        auxDump(c, Parquet.read(c.spark, inDir).select("url"), "q40_in")
+        val sinkRows = Parquet.read(c.spark, base.resolve("out").toString)
           .select("url", "kind", "total_word_count", "ok")
         val rollup = auxTable(c, sinkRows, "q40_sink")
           .groupBy("kind")

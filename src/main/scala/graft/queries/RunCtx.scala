@@ -6,7 +6,7 @@ import scala.util.Try
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, count, lit, max}
 import org.apache.spark.storage.StorageLevel
-import graft.util.Held
+import graft.util.{Held, Parquet}
 
 /** One run of the query suite over the tables in `dir`: the state that
   * outlives a single query of the run lives here, not in `Queries`, so
@@ -28,7 +28,7 @@ final class RunCtx(val spark: SparkSession, val dir: String, val verify: Boolean
     * SRP sizing read both (max is -1 on an empty table). The table is
     * assumed not to change during the run. */
   lazy val embStats: (Long, Long) = {
-    val r = spark.read.parquet(s"$dir/embeddings.parquet")
+    val r = Parquet.read(spark, s"$dir/embeddings.parquet")
       .agg(count(lit(1)), coalesce(max("vec_id"), lit(-1L))).head()
     (r.getLong(0), r.getLong(1))
   }

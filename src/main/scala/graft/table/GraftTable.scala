@@ -1,11 +1,18 @@
 package graft.table
 
-import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Observation, SaveMode}
+import org.apache.spark.sql.{SparkSession, DataFrame, Dataset, Encoders, Observation, SaveMode}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ScoredDoc, LineageRow}
 import graft.pipeline.ExtractPipeline
+import graft.util.Parquet
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.example.data.simple.SimpleGroup
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
+import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
@@ -16,7 +23,8 @@ import scala.concurrent.duration._
   *
   * Layout under `root/`:
   *   data/bucket=[k]/...parquet    results, partitioned by url-hash bucket
-  *   lineage/...parquet            LineageRow appended per completed wave
+  *   lineage/part-[uuid].parquet   one file of LineageRows per completed
+  *                                 wave, written by the driver
   *   manifest/snapshot-[n].json    wave commit records (files + buckets)
   *
   * A killed job resumes by re-reading lineage: completed buckets are
@@ -26,8 +34,14 @@ import scala.concurrent.duration._
   * append, and the lineage row IS the commit — on resume, bucket data
   * with no lineage row is an uncommitted orphan and is deleted before
   * the wave re-runs, so a crash mid-wave re-processes only that wave
-  * and never duplicates rows. All path probes go through the root's
-  * Hadoop FileSystem (works on HDFS/S3, not just local disk).
+  * and never duplicates rows. The append is a hidden temp file renamed
+  * to its visible name, so the rename commits the rows. Like Iceberg's,
+  * the table's metadata I/O stays on the driver: lineage is written and
+  * read without a Spark job, and every parquet read takes its schema
+  * from a footer read on the driver ([[graft.util.Parquet]]). Spark
+  * reads `lineage/` as one table, files written by an older Spark-side
+  * append included. All path probes go through the root's Hadoop
+  * FileSystem (works on HDFS/S3, not just local disk).
   */
 object GraftTable {
 
@@ -71,29 +85,81 @@ object GraftTable {
       .split(",").toSeq.map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty))
 
   def completedBuckets(spark: SparkSession, root: String): Set[Int] =
-    completedLineage(fs(spark, root), spark, root).keySet
+    completedLineage(fs(spark, root), root).keySet
 
   /** (bucket -> committed n_docs) from the durable lineage rows — the
     * resume gate AND the cumulative-doc base the snapshot manifests
     * record (a snapshot claiming committed docs but listing zero files is
     * data loss, and the claim must survive resumes whose earlier waves
-    * this run never saw). */
-  private def completedLineage(
-      hfs: FileSystem, spark: SparkSession, root: String): Map[Int, Long] = {
-    val lineagePath = s"$root/lineage"
-    val p = new Path(lineagePath)
-    // a crash during the very FIRST lineage write can leave the directory
-    // existing with only committer droppings (_temporary) and no data
-    // file; that is "nothing committed", not a wedged table — reading it
-    // would throw schema-inference errors on every subsequent resume
-    val hasData = hfs.exists(p) &&
-      hfs.listStatus(p).exists(_.getPath.getName.endsWith(".parquet"))
-    if (!hasData) Map.empty
-    else {
-      import spark.implicits._
-      spark.read.parquet(lineagePath).select("bucket", "n_docs")
-        .as[(Int, Long)].collect().toMap
-    }
+    * this run never saw). Read on the driver, one footer and a few rows
+    * per committed wave: hidden names are skipped as Spark's reader skips
+    * them, so committer droppings (`_temporary`, `_SUCCESS`) and the
+    * hidden temp file of an append that died before its rename read as
+    * nothing committed. */
+  private def completedLineage(hfs: FileSystem, root: String): Map[Int, Long] = {
+    val dir = new Path(s"$root/lineage")
+    if (!hfs.exists(dir)) Map.empty
+    else hfs.listStatus(dir).iterator
+      .filter(st => st.isFile && !Parquet.hidden(st.getPath.getName))
+      .flatMap { st =>
+        val in = ParquetReader.builder(new GroupReadSupport, st.getPath)
+          .withConf(hfs.getConf).build()
+        try Iterator.continually(in.read()).takeWhile(_ != null)
+          .map(g => g.getInteger("bucket", 0) -> g.getLong("n_docs", 0)).toVector
+        finally in.close()
+      }.toMap
+  }
+
+  /** LineageRow's parquet type as Spark writes it (the non-null fields
+    * required), except that `ts` is always INT64 TIMESTAMP(MICROS, UTC). */
+  private val LineageType: MessageType = {
+    import PrimitiveType.PrimitiveTypeName.{INT32, INT64}
+    Types.buildMessage()
+      .required(INT32).named("bucket")
+      .required(INT64).named("n_docs")
+      .required(INT64).named("n_ok")
+      .required(INT64).named("n_err")
+      .required(INT64).named("bytes_in")
+      .required(INT64).named("wall_ms")
+      .required(INT32).named("attempt")
+      .optional(INT64).as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS)).named("ts")
+      .named("spark_schema")
+  }
+
+  /** LineageRow's Spark schema, for the footer key Spark reads. */
+  private val LineageSparkSchema = Encoders.product[LineageRow].schema.json
+
+  /** Commit one wave's lineage rows: one parquet file written by the
+    * driver to a hidden temp name under `lineage/`, then renamed to its
+    * visible name (the `Fs.writeAtomically` rule, through the root's
+    * FileSystem). The rename is the commit. The footer carries
+    * LineageRow's Spark schema under Spark's key, so
+    * `spark.read.parquet(root/lineage)` reads the same StructType as from
+    * a file Spark wrote. */
+  private[graft] def appendLineage(hfs: FileSystem, root: String, rows: Seq[LineageRow]): Unit = {
+    val dir = new Path(s"$root/lineage")
+    val name = s"part-${java.util.UUID.randomUUID}.parquet"
+    val tmp = new Path(dir, s".$name.tmp")
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, hfs.getConf))
+      .withConf(hfs.getConf)
+      .withType(LineageType)
+      .withExtraMetaData(java.util.Map.of(Parquet.SparkSchemaKey, LineageSparkSchema))
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(LineageType)
+      g.add("bucket", r.bucket)
+      g.add("n_docs", r.n_docs)
+      g.add("n_ok", r.n_ok)
+      g.add("n_err", r.n_err)
+      g.add("bytes_in", r.bytes_in)
+      g.add("wall_ms", r.wall_ms)
+      g.add("attempt", r.attempt)
+      // Spark's Timestamp -> micros, sub-millisecond digits from the nanos
+      if (r.ts != null) g.add("ts", r.ts.getTime * 1000L + (r.ts.getNanos / 1000) % 1000)
+      out.write(g)
+    } finally out.close()
+    if (!hfs.rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"lineage commit: rename $tmp -> $name failed")
   }
 
   /** Run the extract+score pipeline over `pages`, bucketed by url hash,
@@ -133,7 +199,7 @@ object GraftTable {
       writeUtf8(hfs, metaPath, s"""{"n_buckets": $nBuckets}""")
     }
 
-    val doneLineage = completedLineage(hfs, spark, root)
+    val doneLineage = completedLineage(hfs, root)
     val done = doneLineage.keySet
     // docs already committed by EARLIER runs: the snapshot manifests
     // record the cumulative total so time travel can tell "legally empty"
@@ -200,7 +266,7 @@ object GraftTable {
         // input writes no data files and the read-back cannot infer a
         // schema (round-6 review) — fall back to counting the input,
         // which for the empty case is the cheap job it looks like.
-        val stagedCount = scala.util.Try(spark.read.parquet(stagedRoot).count())
+        val stagedCount = scala.util.Try(Parquet.read(spark, stagedRoot).count())
           .getOrElse(pages.count())
         writeUtf8(hfs, marker, stagedCount.toString)
       }
@@ -211,7 +277,7 @@ object GraftTable {
         val dirs = wave.map(b => s"$stagedRoot/bucket=$b")
           .filter(p => hfs.exists(new Path(p)))
         if (dirs.isEmpty) spark.emptyDataset[PageRecord].withColumn("bucket", lit(0))
-        else spark.read.option("basePath", stagedRoot).parquet(dirs: _*)
+        else Parquet.reader(spark, dirs.head).option("basePath", stagedRoot).parquet(dirs: _*)
       }
 
     // live progress counters (the tqdm analog, SURVEY.md §2.8): updated by
@@ -280,7 +346,7 @@ object GraftTable {
         val ok = m.getAs[Long](s"n_ok_$k")
         LineageRow(k, n, ok, n - ok, m.getAs[Long](s"bytes_in_$k"), waveMs, attempt, ts)
       }
-      lineage.toDS().coalesce(1).write.mode(SaveMode.Append).parquet(s"$root/lineage")
+      appendLineage(hfs, root, lineage)
 
       runLineage ++= lineage
       manifestFiles = manifestFiles ++ listBucketFiles(hfs, root, wave)
@@ -415,9 +481,10 @@ object GraftTable {
       // — file columns first, partition column last, same as a real read
       import spark.implicits._
       spark.emptyDataset[ScoredDoc].withColumn("bucket", lit(0))
-    } else
-      spark.read.option("basePath", s"$root/data")
-        .parquet(files.map(f => s"$root/data/$f"): _*)
+    } else {
+      val paths = files.map(f => s"$root/data/$f")
+      Parquet.reader(spark, paths.head).option("basePath", s"$root/data").parquet(paths: _*)
+    }
   }
 }
 

@@ -4,6 +4,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.ExtractPipeline
 import graft.corpus.CorpusGen
 import graft.table.GraftTable
+import graft.model.LineageRow
 import org.apache.spark.sql.functions.{col, count, lit, sum, when}
 
 /** Snapshot (time-travel) semantics of the Iceberg-emulation layer
@@ -240,6 +241,79 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     val root = java.nio.file.Files.createTempDirectory("graft_tbl_tmp").toString
     new java.io.File(s"$root/lineage/_temporary").mkdirs()
     assert(GraftTable.completedBuckets(spark, root) == Set.empty)
+    // a driver append that died before its rename leaves its hidden temp
+    // file, rows and all: still nothing committed
+    val hfs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    GraftTable.appendLineage(hfs, root,
+      Seq(LineageRow(3, 10L, 10L, 0L, 100L, 5L, 1, new java.sql.Timestamp(0L))))
+    val lineage = new java.io.File(s"$root/lineage")
+    val committed = lineage.listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(committed.length == 1)
+    assert(committed.head.renameTo(new java.io.File(lineage, s".${committed.head.getName}.tmp")))
+    assert(GraftTable.completedBuckets(spark, root) == Set.empty)
+    val report = GraftTable.runResumable(spark, ExtractPipeline.pages(spark, 40, 2), root,
+      nBuckets = 4, bucketsPerWave = 4,
+      CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, tasksPerWave = 2)
+    assert(report.skipped == 0 && report.processed == 4 && report.docs == 40L)
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
+  }
+
+  test("lineage written by Spark and by the driver reads as one table") {
+    // a table begun by an older build holds lineage files that Spark's
+    // writer committed (INT96 ts, _SUCCESS); later waves add the driver's
+    // files. The resume gate and a Spark read must both see every row.
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_tbl_mixed").toString
+    val pages = ExtractPipeline.pages(spark, 160, 4)
+    val target = CorpusGen.TargetWords.toSet
+    val bycatch = CorpusGen.BycatchWords.toSet
+    intercept[RuntimeException] {
+      GraftTable.runResumable(spark, pages, root, nBuckets = 8, bucketsPerWave = 2,
+        target, bycatch, tasksPerWave = 4, failAfterWaves = 2)
+    }
+    // rewrite both waves' files with timestamps that carry microseconds:
+    // the first by the driver, the second the old way, by Spark's writer
+    val lineageDir = new java.io.File(s"$root/lineage")
+    val byFile = lineageDir.listFiles().filter(_.getName.endsWith(".parquet"))
+      .map(f => f -> spark.read.parquet(f.getPath).as[LineageRow].collect().toSeq)
+    assert(byFile.length == 2)
+    byFile.foreach { case (f, _) => assert(f.delete()) }
+    def at(ts: String)(rows: Seq[LineageRow]) =
+      rows.map(_.copy(ts = java.sql.Timestamp.valueOf(ts)))
+    val Seq(wave1, wave2) = byFile.map(_._2).sortBy(_.map(_.bucket).min).toSeq
+    val driverRows = at("2026-01-02 03:04:05.654321")(wave1)
+    val sparkRows = at("2026-01-02 03:04:05.123456")(wave2)
+    val hfs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    GraftTable.appendLineage(hfs, root, driverRows)
+    val driverFile = lineageDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val tsKey = "spark.sql.parquet.outputTimestampType"
+    val savedTs = spark.conf.getOption(tsKey)
+    spark.conf.set(tsKey, "INT96")
+    try sparkRows.toDS().coalesce(1).write.mode("append").parquet(lineageDir.getPath)
+    finally savedTs.fold(spark.conf.unset(tsKey))(spark.conf.set(tsKey, _))
+    assert(new java.io.File(lineageDir, "_SUCCESS").exists)
+    val sparkFile = lineageDir.listFiles()
+      .filter(f => f.getName.endsWith(".parquet") && f != driverFile).head
+    assert(GraftTable.completedBuckets(spark, root) == Set(0, 1, 2, 3))
+
+    // Spark reads either file, and both together, with one schema and
+    // every row, ts to the microsecond
+    val read = spark.read.parquet(lineageDir.getPath)
+    assert(spark.read.parquet(driverFile.getPath).schema == spark.read.parquet(sparkFile.getPath).schema)
+    assert(read.schema == spark.read.parquet(sparkFile.getPath).schema)
+    assert(read.as[LineageRow].collect().toSet == (driverRows ++ sparkRows).toSet)
+
+    // the resume skips exactly the committed buckets
+    val report = GraftTable.runResumable(spark, pages, root, nBuckets = 8, bucketsPerWave = 2,
+      target, bycatch, tasksPerWave = 4, attempt = 2)
+    assert(report.skipped == 4 && report.processed == 4)
+    assert(report.docs == 160L - (wave1 ++ wave2).map(_.n_docs).sum)
+    val data = spark.read.parquet(s"$root/data").select("url").as[String].collect()
+    assert(data.length == 160 && data.toSet.size == 160)
+    val all = spark.read.parquet(lineageDir.getPath).as[LineageRow].collect()
+    assert(all.map(_.bucket).sorted.toSeq == (0 until 8))
+    assert(all.filter(_.bucket >= 4).forall(_.attempt == 2))
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 
   test("snapshot read: zero files with non-zero recorded docs is loud data loss") {
@@ -363,33 +437,48 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 
-  test("a wave runs three jobs: the shuffle, the data write, the lineage append") {
-    // the lineage counts are observed inside the data write, so a wave
-    // has no read-back job. A fresh table has no lineage to read at entry
+  test("a wave runs two jobs: the shuffle and the data write") {
+    // the lineage counts are observed inside the data write and the driver
+    // writes the lineage file, so a wave has no read-back job and no
+    // lineage write job. A fresh table has no lineage to read at entry
     // and its empty completed-bucket set broadcasts without a job, so a
-    // run of 4 waves is exactly 12 jobs (24 when every wave read its
-    // buckets back: footer schema, shuffle, collect)
-    val group = s"graft-table-jobs-${System.nanoTime}"
-    // each job's stage names, for the failure message
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(e.stageInfos.map(_.name).mkString(" + "))
-    }
+    // run of 4 waves is exactly 8 jobs
     val root = java.nio.file.Files.createTempDirectory("graft_tbl_jobs").toString
     val pages = ExtractPipeline.pages(spark, 80, 2)
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "runResumable job pin")
-      try GraftTable.runResumable(spark, pages, root, nBuckets = 8, bucketsPerWave = 2,
-        CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet, tasksPerWave = 2)
-      finally sc.clearJobGroup()
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.size == 12,
-      s"runResumable ran ${jobs.size} jobs for 4 waves:\n${jobs.toArray.mkString("\n")}")
+    val jobs = jobsOf(GraftTable.runResumable(spark, pages, root, nBuckets = 8,
+      bucketsPerWave = 2, CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
+      tasksPerWave = 2))
+    assert(jobs.size == 8, s"runResumable ran ${jobs.size} jobs for 4 waves:\n${jobs.mkString("\n")}")
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
+  }
+
+  test("table metadata reads start no Spark job") {
+    // completedBuckets and a resume's entry read the lineage on the
+    // driver, and a parquet read takes its schema from a footer
+    val root = java.nio.file.Files.createTempDirectory("graft_tbl_meta").toString
+    val pages = ExtractPipeline.pages(spark, 80, 2)
+    def run(attempt: Int, failAfter: Int) = GraftTable.runResumable(spark, pages, root,
+      nBuckets = 8, bucketsPerWave = 2, CorpusGen.TargetWords.toSet,
+      CorpusGen.BycatchWords.toSet, tasksPerWave = 2, attempt = attempt,
+      failAfterWaves = failAfter)
+    intercept[RuntimeException](run(1, 2))
+    var done = Set.empty[Int]
+    assert(jobsOf { done = GraftTable.completedBuckets(spark, root) }.isEmpty)
+    assert(done.size == 4)
+    // a resume that fails at its first wave runs only its entry
+    val entry = jobsOf {
+      val e = intercept[RuntimeException](run(2, 0))
+      assert(e.getMessage.startsWith("injected failure"))
+    }
+    assert(entry.isEmpty, s"resume entry ran jobs:\n${entry.mkString("\n")}")
+    var schemas = Seq.empty[org.apache.spark.sql.types.StructType]
+    val reads = jobsOf {
+      schemas = Seq(s"$root/data", s"$root/lineage").map(p => graft.util.Parquet.read(spark, p).schema)
+    }
+    assert(reads.isEmpty, s"Parquet.read ran jobs:\n${reads.mkString("\n")}")
+    assert(schemas.head.last.name == "bucket")
+    run(3, Int.MaxValue)
+    assert(GraftTable.completedBuckets(spark, root) == (0 until 8).toSet)
     graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 }

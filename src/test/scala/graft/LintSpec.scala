@@ -225,6 +225,32 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
       s"$n in ${fs.toSeq.sorted.mkString(", ")}" }.mkString("; "))
   }
 
+  test("parquet is read only through graft/util/Parquet.scala (source lint)") {
+    // a parquet read without a schema starts a Spark job to infer one from
+    // a footer; the helper reads that footer on the driver. The lint reads
+    // code lines only (scaladoc and comment lines may name the call), and
+    // leaves out graft/perfbench/, the benchmark's own code
+    val read = """\.read\s*(\.\s*\w+\s*\([^()]*\)\s*)*\.\s*parquet\s*\(""".r
+    def code(src: String) = src.linesIterator.filterNot { l =>
+      val t = l.trim
+      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+    }.mkString("\n")
+    // controls: the pattern sees a plain read, one with options, and one
+    // split over lines, and not the helper's own calls
+    Seq("spark.read.parquet(p)", "s.read.option(\"basePath\", b)\n  .parquet(p: _*)",
+      "spark.read\n  .schema(s).parquet(p)")
+      .foreach(c => assert(read.findFirstIn(code(c)).nonEmpty, c))
+    Seq("Parquet.read(spark, p)", "Parquet.reader(spark, p).option(\"basePath\", b).parquet(p)",
+      "spark.readStream.schema(s).parquet(p)", "* `spark.read.parquet(p)` in a doc line")
+      .foreach(c => assert(read.findFirstIn(code(c)).isEmpty, c))
+    val readers = mainSources().collect {
+      case (f, src) if read.findFirstIn(code(src)).nonEmpty => mainRoot.toPath.relativize(f.toPath).toString
+    }.toSet
+    assert(readers.exists(_.startsWith("graft/perfbench/")), "the lint lost its needle")
+    val outside = readers.filterNot(_.startsWith("graft/perfbench/")) - "graft/util/Parquet.scala"
+    assert(outside.isEmpty, s"parquet read outside graft/util/Parquet.scala: ${outside.toSeq.sorted.mkString(", ")}")
+  }
+
   test("the PDF reader uses no regex (source lint)") {
     // a backtracking object-header regex was quadratic on a digit run
     // (64 KB of digits took 14.5 s); the reader scans its bytes by hand

@@ -3,7 +3,9 @@ package graft
 import scala.util.Using
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.Exchange
@@ -500,6 +502,38 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
       assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"),
         s"$name has no broadcast join:\n${plan.take(1500)}")
     }
+  }
+
+  test("q03 under sort-merge join: no Exchange between lineitem's pre-aggregation and the join") {
+    // q03 aggregates lineitem per order ahead of the fact-fact join, and
+    // the aggregate's l_orderkey exchange doubles as the join's. With
+    // broadcasts off the join is a sort-merge join, and the pre-AQE plan
+    // must show no second shuffle of the aggregated side
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val plan = try run("q03_join_revenue").queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    def reads(p: SparkPlan, table: String): Boolean = p.collect {
+      case f: FileSourceScanExec if f.relation.location.rootPaths.exists(_.getName == s"$table.parquet") => f
+    }.nonEmpty
+    val joins = plan.collect { case j: SortMergeJoinExec => j }
+    assert(joins.size == 1, s"want one sort-merge join:\n${plan.treeString}")
+    val Seq(lineitem) = joins.head.children.filter(reads(_, "lineitem"))
+    assert(joins.head.children.exists(reads(_, "orders")))
+    // the nodes from the join's lineitem child down to the first aggregate
+    def toAgg(p: SparkPlan): List[SparkPlan] = p match {
+      case a: HashAggregateExec => List(a)
+      case other => other :: other.children.find(reads(_, "lineitem")).map(toAgg).getOrElse(Nil)
+    }
+    val path = toAgg(lineitem)
+    assert(path.last.isInstanceOf[HashAggregateExec], s"no aggregate on lineitem's side:\n${plan.treeString}")
+    assert(!path.exists(_.isInstanceOf[Exchange]),
+      s"an Exchange between the pre-aggregation and the join:\n${plan.treeString}")
+    // the one shuffle of that side sits below the final aggregate
+    assert(exchangeCount(lineitem) == 1, plan.treeString)
   }
 
   test("q34 assigns cells map-side: no BNLJ, no assignment window, no persist") {
