@@ -36,9 +36,9 @@ object Parquet {
   def reader(spark: SparkSession, path: String): DataFrameReader =
     footerSchema(spark, path).fold(spark.read)(s => spark.read.schema(s))
 
-  /** The parquet data under `paths`; the schema comes from the first. */
-  def read(spark: SparkSession, paths: String*): DataFrame =
-    reader(spark, paths.head).parquet(paths: _*)
+  /** The parquet data under `path`. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    reader(spark, path).parquet(path)
 
   /** Hidden names, which Spark's file index skips: committer droppings
     * (`_SUCCESS`, `_temporary`), checksums and hidden temp files. */
