@@ -250,8 +250,7 @@ object Bench {
     // corpora also have power-law page SIZES, and one 50-100x-median page
     // can straggle a salted task just like a hot domain. 1% of docs get
     // their body tiled 50-100x; the leg runs the pipeline's own routing
-    // and publishes the parse-stage max/median under byte skew — the
-    // straggler bound a byte-weighted scheduler would have to beat.
+    // and publishes the parse-stage max/median under byte skew.
     val heavyDocs = 20000L
     // constants passed explicitly AND interpolated into the metric line
     // from the same vals — a hardcoded JSON copy would silently lie about
@@ -260,15 +259,15 @@ object Bench {
     val heavyPath = materialize("heavy", ExtractPipeline.heavyTailPages(spark, heavyDocs,
       cpus * 4, heavyShare, heavyMultLo, heavyMultHi))
 
-    // ---- byte-weighted salting vs the DEFEAT case (round-6 verdict #3) --
+    // ---- the DEFEAT case of count salting (round-6 verdict #3) ----------
     // BASELINE.md r5 documented the one input count salting cannot
     // balance: a single page whose parse cost is >= a whole task's doc
     // quota. This corpus makes it real — quota here is
     // defeatDocs/(cpus*4) docs per task and the tiled multiplier range
-    // sits ABOVE it — and parses it through both routings. Expectation
-    // the artifact shows: salted (count-balanced) task max/med > ~3;
-    // byteWeightedRoute bounds it at ~1.5 by construction (byteBudget
-    // scaladoc).
+    // sits ABOVE it — and parses it through cpus*4 salted partitions.
+    // The artifact shows the straggler as task max/med (> ~3). A
+    // byte-weighted router balanced those tasks but finished later than
+    // this plain route, so it was deleted (CHANGES.md).
     // docs sized so the per-task quota (docs / (cpus*4) tasks) sits WELL
     // BELOW the multiplier range at ANY harness cpu count — a fixed doc
     // count at smoke-scale cpus raises the quota above the multipliers
@@ -362,12 +361,7 @@ object Bench {
     val skewPairs = Seq.fill(3)((skewLeg(skewPath, "domain"), skewLeg(skewPath, "salted")))
     val (domainLeg, saltedLeg) = pickPair(skewPairs)
     val heavyLeg = skewLeg(heavyPath, "salted")
-    // the defeat-pair routes (salted_fine vs byteweighted) both use
-    // cpus*4 partitions — the comparison is routing POLICY at identical
-    // granularity
-    val defeatPairs = Seq.fill(3)(
-      (skewLeg(defeatPath, "salted_fine"), skewLeg(defeatPath, "byteweighted")))
-    val (defeatSalted, defeatBw) = pickPair(defeatPairs)
+    val defeatLeg = skewLeg(defeatPath, "salted_fine")
 
     // ---- scaling legs ----------------------------------------------------
     // Identical input + plan at two parallelism levels, each leg its OWN
@@ -446,7 +440,7 @@ object Bench {
       s""","domain_partitioned":${domainLeg.json},"salted":${saltedLeg.json},${poolJson(skewPairs, "domain", "salted")}""" +
       s""","heavy_tail":{"docs":$heavyDocs,"heavy_share":${fmt(1.0 / heavyShare)},"mult_range":[$heavyMultLo,$heavyMultHi],"leg":${heavyLeg.json}}""" +
       s""","byte_weighted_defeat":{"docs":$defeatDocs,"heavy_share":${fmt(1.0 / defeatShare)},"mult_range":[$defeatMultLo,$defeatMultHi]""" +
-      s""","docs_per_task_quota":${defeatDocs / (cpus * 4)},"salted":${defeatSalted.json},"byteweighted":${defeatBw.json},${poolJson(defeatPairs, "salted", "byteweighted")}}}""" +
+      s""","docs_per_task_quota":${defeatDocs / (cpus * 4)},"leg":${defeatLeg.json}}}""" +
       s""","scaling":$scaling}"""
     println(line)
     // belt-and-braces: also land the metric line in a file so the bench

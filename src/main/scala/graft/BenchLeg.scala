@@ -39,8 +39,9 @@ private[graft] final case class Leg(runs: Seq[LegRun], canaryMs: Seq[Long], ok: 
   *   graft.BenchLeg <pages> <warm> <cpus> <iters> <route>
   *
   * `route` selects the routing under measurement (BenchCommon
-  * .countOkRoute): `none` (the headline's as-stored layout), `salted`,
-  * `salted_fine`, `domain` or `byteweighted`.
+  * .countOkRoute): `none` (the headline's as-stored layout), `salted`
+  * (cpus hash partitions), `salted_fine` (cpus × 4) or `domain`; any
+  * other route fails the leg.
   *
   * Prints per-run telemetry on stdout so a sick run self-diagnoses:
   * `LEG_RUNS=` (wall sec per run), `LEG_GC=` (GC-time delta ms),
@@ -53,8 +54,8 @@ object BenchLeg {
     val Array(path, warmPath, cpus, iters, route) = args
     val spark = BenchCommon.session(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
-    println(encode(measure(spark, path, warmPath, cpus.toInt, iters.toInt, route)))
-    spark.stop()
+    try println(encode(measure(spark, path, warmPath, cpus.toInt, iters.toInt, route)))
+    finally spark.stop()
   }
 
   /** THE leg body, shared by the pinned child and Bench's in-process

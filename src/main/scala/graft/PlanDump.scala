@@ -36,7 +36,7 @@ object PlanDump {
     "q35_training_set" -> "one token-stats pass feeds dedup + language + quality gates; keep-list is a digest groupBy joined back left-semi — bodies never shuffle.",
     "q39_mode_fastscore" -> "the fastscore CLI mode: one typed map over the pruned header-CSV scan (title attach + scoring in the same row pass); no exchange anywhere.",
     "q41_jaccard_join" -> "exact AllPairs/PPJoin: df groupBy -> dense gram-id dictionary (bijective, (df,g)-ordered) -> per-doc rank window -> prefix-posting equi-join on INT gram ids carrying the length+positional filters as join residuals -> confirm joins touch candidates only, via sorted long gram-id sets and a merge-walk overlap (r8); grams, prefix postings and the gram-id sets are the three InMemoryRelations.",
-    "q42_byte_weighted_route" -> "byte-weighted placement itself is ONE hash exchange on the precomputed __bw_route column (element_at over driver-side literal maps — no RDD partitioner); the stats pass is a persisted per-url groupBy (its own url-keyed exchange, shuffling only the distinct-url cost map, paid once across the stats head() and the heavy collect()); both extraction variants are independent mapPartitions pipelines meeting in the verify full-outer join.")
+    "q42_byte_weighted_route" -> "the salted route is ONE url-hash exchange before its mapPartitions parse; the scan-split route parses the held pages in place with no exchange; the two extraction variants meet in the verify full-outer join.")
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()

@@ -110,30 +110,20 @@ private[graft] object BenchCommon {
     countOk(byDomain, 0)
   }
 
-  /** The byte-weighted routing leg (round-6 verdict #3): same parse, but
-    * placement comes from ExtractPipeline.byteWeightedRoute — giant pages
-    * get dedicated bins, light partition count sized by bytes. The leg's
-    * timed window INCLUDES the routing's stats pass (honest cost: that is
-    * what the pipeline would pay on a table without length metadata). */
-  def countOkByteWeighted(spark: SparkSession, path: String, parts: Int): Long = {
-    import spark.implicits._
-    countOk(graft.pipeline.ExtractPipeline.byteWeightedRoute(
-      Parquet.read(spark, path).as[PageRecord], parts), 0)
-  }
-
   /** THE route-string dispatch of BenchLeg.measure, which both the
     * pinned child and Bench's in-process fallback run. Round-7 review: a
     * route added to one of two hand-kept copies makes the fallback
     * silently run a DIFFERENT computation than the child it substitutes
     * for — a methodology mismatch inside a published comparative claim.
-    * One body, one invariant. */
+    * One body, one invariant. An unknown route throws: run as `none`, it
+    * would be timed and labelled as a route it is not. */
   def countOkRoute(spark: SparkSession, path: String, cpus: Int, route: String): Long =
     route match {
-      case "domain"       => countOkDomainPartitioned(spark, path, cpus)
-      case "salted"       => countOk(spark, path, cpus)
-      case "salted_fine"  => countOk(spark, path, cpus * 4)
-      case "byteweighted" => countOkByteWeighted(spark, path, cpus * 4)
-      case _              => countOk(spark, path, 0)
+      case "none"        => countOk(spark, path, 0)
+      case "domain"      => countOkDomainPartitioned(spark, path, cpus)
+      case "salted"      => countOk(spark, path, cpus)
+      case "salted_fine" => countOk(spark, path, cpus * 4)
+      case other         => throw new IllegalArgumentException(s"unknown bench route: $other")
     }
 }
 

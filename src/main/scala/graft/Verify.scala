@@ -4,11 +4,12 @@ import java.nio.file.{Files, Paths}
 import graft.queries.{Queries, RunCtx}
 /** Driver-run correctness dump: every query's result → parquet, plus
   * oracle_sql.json, for the driver's DuckDB compare. The suite runs as one
-  * verify-mode pass (one RunCtx), so q25 composes on q15's pairs. */
+  * verify-mode pass (one RunCtx), so q25 composes on q15's pairs, at
+  * SPARK_GRAFT_CPUS cores (default: the host's CPU count, as in Bench). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -2115,17 +2115,17 @@ object Queries {
         FROM j WHERE 10 * ni >= 9 * nu"""))
   }
 
-  /** Byte-weighted (parse-cost-balanced) routing on the correctness
-    * surface: the round-7 straggler-bound placement
-    * (ExtractPipeline.byteWeightedRoute — giant pages get dedicated
-    * murmur3-preimage bins, light pages hash-salt over a cost-sized
-    * partition count) must be RESULT-INVISIBLE — identical per-document
-    * extraction+scoring output to the plain salted path, per the north
-    * rule's byte-identical-text-per-url invariant. Both variants run over
-    * the same deterministic heavy-tail corpus (the page-size tail is what
-    * makes the heavy-bin path non-empty), both full outputs are dumped,
-    * and the rollup counts docs whose every dumped field matches across a
-    * full-outer join on url.
+  /** The pipeline's two routes on the correctness surface: the 32-way
+    * salted url-hash repartition and parsing on the scan splits
+    * (ExtractPipeline.extractAndScore with `numPartitions` 32 and 0) must
+    * be RESULT-INVISIBLE — identical per-document extraction+scoring
+    * output, per the north rule's byte-identical-text-per-url invariant.
+    * Both routes run over the same deterministic heavy-tail corpus (the
+    * page-size tail puts giant pages in some tasks), both full outputs
+    * are dumped (`q42_plain` salted, `q42_routed` scan splits), and the
+    * rollup counts docs whose every dumped field matches across a
+    * full-outer join on url. The name is kept from the byte-weighted
+    * router this query used to check, which was deleted.
     *
     * The oracle re-derives the join+rollup from the dumps AND asserts the
     * invariant in a WHERE guard (the q40 pattern): a kind whose docs are
@@ -2134,8 +2134,6 @@ object Queries {
     * not a silently-agreed-upon smaller count. Floats cross the compare
     * as Spark-rendered strings (both dumps come from the same renderer,
     * so equality is bit-equality without any cross-engine float hazard);
-    * placement itself is pinned by PipelineSpec (murmur3 preimages vs
-    * spark_partition_id) and bounded by the bench defeat-pair legs —
     * placement is not SQL-expressible, result identity is. */
   private val q42 = Q(
     "q42_byte_weighted_route",
@@ -2150,21 +2148,17 @@ object Queries {
           // chr(1) separator: spans are human text, so the control char
           // cannot occur and concatenation stays boundary-unambiguous
           "array_join(citation_spans, chr(1)) AS spans_str", "n_bytes")
-      // the synthesized heavy-tail corpus feeds THREE actions (the plain
-      // extract, byteWeightedRoute's per-url cost stats pass, and the
-      // routed extract) — unpersisted, each one re-runs the full
-      // generation including the ~12 giant tiled pages (guide §5:
-      // persist only when reused AND recompute is expensive; both hold
-      // here). ~25-40 MB at the fixture size; at scale this is the
-      // pre-existing pages table both variants would read anyway.
+      // the synthesized heavy-tail corpus feeds both routes' extracts —
+      // unpersisted, each one re-runs the full generation including the
+      // ~12 giant tiled pages (guide §5: persist only when reused AND
+      // recompute is expensive; both hold here). ~25-40 MB at the
+      // fixture size; at scale this is the pre-existing pages table both
+      // routes would read anyway.
       val pages = Held.frames.renew("q42").keep(ExtractPipeline.heavyTailPages(c.spark, n, 32))
-      val plain = auxTable(c, dumpCols(
-        ExtractPipeline.extractAndScore(pages, 32, target, bycatch).toDF()),
-        "q42_plain")
-      val routed = auxTable(c, dumpCols(
-        ExtractPipeline.extractAndScore(ExtractPipeline.byteWeightedRoute(pages, 32), 0,
-          target, bycatch).toDF()),
-        "q42_routed")
+      def route(numPartitions: Int, dump: String): DataFrame = auxTable(c, dumpCols(
+        ExtractPipeline.extractAndScore(pages, numPartitions, target, bycatch).toDF()), dump)
+      val plain = route(32, "q42_plain")
+      val routed = route(0, "q42_routed")
       val same = Seq("extracted_text", "title", "doi", "matching_terms",
         "bycatch_terms", "total_word_count", "wordscore_str", "spans_str",
         "n_bytes")

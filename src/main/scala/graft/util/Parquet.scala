@@ -4,10 +4,11 @@ import scala.util.Try
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter
-import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
 /** The one parquet read of the engine. `spark.read.parquet` without a
   * schema starts a one-task Spark job to read a footer before the read
@@ -16,13 +17,15 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * the footer of one data file, read on the driver, and hands Spark a
   * reader with that schema set, so no job runs until the frame is used.
   *
-  * The schema is the Spark schema that Spark's own writer stores in the
-  * footer under [[SparkSchemaKey]]. Spark's inference (with
-  * `mergeSchema` off) reads the same key from one footer, so the frame's
-  * schema is the same. Partition columns are not in the footer: Spark
-  * still derives them from the directory names. A footer without the key
-  * (a file from another writer) and a path without a data file go to
-  * Spark's own inference, with its result or its error.
+  * The schema comes from the footer as Spark's inference (with
+  * `mergeSchema` off) takes it from one footer, through the same Spark
+  * call: the Spark schema that Spark's own writer stores under
+  * [[SparkSchemaKey]], or for another writer's file (pyarrow's sf
+  * tables) the parquet schema converted under the session's conf. So the
+  * frame's schema is the same. Partition columns are not in the footer:
+  * Spark still derives them from the directory names. A path without a
+  * data file, and a footer the converter refuses, go to Spark's own
+  * inference, with its result or its error.
   */
 object Parquet {
 
@@ -44,18 +47,19 @@ object Parquet {
     * (`_SUCCESS`, `_temporary`), checksums and hidden temp files. */
   def hidden(name: String): Boolean = name.startsWith("_") || name.startsWith(".")
 
-  /** The Spark schema in the footer of the first data file under `path`. */
+  /** The Spark schema of the footer of the first data file under `path`. */
   private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
     Try {
       val p = new Path(path)
-      firstDataFile(p.getFileSystem(conf), p).flatMap { f =>
+      firstDataFile(p.getFileSystem(conf), p).map { f =>
         val in = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
           HadoopReadOptions.builder(conf)
             .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
-        try Option(in.getFooter.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
-        finally in.close()
-      }.map(DataType.fromJson(_).asInstanceOf[StructType])
+        val footer = try in.getFooter finally in.close()
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
     }.toOption.flatten
   }
 

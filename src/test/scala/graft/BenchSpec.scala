@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Bench's pure pieces, without Spark: the BenchLeg stdout decoder, the
-  * interleaved-pair pick and the N -> 4N core rule. */
+  * interleaved-pair pick, the N -> 4N core rule and the route dispatch's
+  * refusal of an unknown route. */
 class BenchSpec extends AnyFunSuite {
 
   private def leg(sec: Double, fallback: Boolean = false): Leg =
@@ -83,5 +84,15 @@ class BenchSpec extends AnyFunSuite {
     assert(Bench.scalingPair(32) == Some((8, 32)))
     assert(Bench.scalingPair(6) == Some((1, 4)))
     assert(Bench.scalingPair(2).isEmpty)
+  }
+
+  test("an unknown route throws before any Spark work, instead of timing the headline route") {
+    // a stale, empty or misspelled route; no session is needed: the
+    // dispatch refuses the route itself
+    Seq("weighted", "", "Salted").foreach { r =>
+      val e = intercept[IllegalArgumentException](
+        BenchCommon.countOkRoute(null, "/nonexistent", 4, r))
+      assert(e.getMessage.contains(s"unknown bench route: $r"))
+    }
   }
 }

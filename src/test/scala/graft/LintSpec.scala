@@ -171,10 +171,9 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   test("every persist in Queries.scala has a registered cache owner (source lint)") {
     // a frame that outlives the call that built it is persisted only by
-    // graft.util.Held, which unpersists it on release; the two other
-    // files persist and unpersist within one method
-    val owners = Set("graft/util/Held.scala", "graft/pipeline/DedupGroups.scala",
-      "graft/pipeline/ExtractPipeline.scala")
+    // graft.util.Held, which unpersists it on release; the one other
+    // file persists and unpersists within one method
+    val owners = Set("graft/util/Held.scala", "graft/pipeline/DedupGroups.scala")
     val persisting = mainFilesContaining(".persist(")
     assert(persisting == owners,
       s"files calling .persist( are ${persisting.toSeq.sorted.mkString(", ")}; " +

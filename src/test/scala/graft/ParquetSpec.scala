@@ -10,7 +10,7 @@ import graft.util.Parquet
 
 /** `Parquet.read` takes its schema from one footer on the driver; the
   * frame must have the schema Spark's own inference gives, and the
-  * inference job must be gone wherever the footer has Spark's key. */
+  * inference job must be gone, whichever writer wrote the footer. */
 class ParquetSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -26,26 +26,26 @@ class ParquetSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
   }
   override def afterAll(): Unit = graft.util.Fs.deleteRecursively(copyDir.toFile)
 
-  test("every table of a Spark-written sf dir: the inferred schema, no job") {
+  /** Every table under `dir`: `Parquet.read` gives Spark's inferred
+    * schema and starts no job. */
+  private def inferredSchemaNoJob(dir: String): Unit =
     tables.foreach { t =>
-      val p = s"$sparkCopy/$t.parquet"
+      val p = s"$dir/$t.parquet"
       var got: org.apache.spark.sql.types.StructType = null
       val jobs = jobsOf { got = Parquet.read(spark, p).schema }
       assert(jobs.isEmpty, s"$t: Parquet.read ran jobs: ${jobs.mkString("; ")}")
       assert(got == spark.read.parquet(p).schema, t)
     }
+
+  test("every table of a Spark-written sf dir: the inferred schema, no job") {
+    inferredSchemaNoJob(sparkCopy)
   }
 
-  test("a footer without Spark's key goes to Spark's inference") {
-    // the sf dirs are written by pyarrow: no Spark key, so the read is
-    // Spark's own, footer job included
-    tables.foreach { t =>
-      val p = s"$sf/$t.parquet"
-      var got: org.apache.spark.sql.types.StructType = null
-      val jobs = jobsOf { got = Parquet.read(spark, p).schema }
-      assert(jobs.nonEmpty, s"$t: the footer has no Spark key, yet no inference job ran")
-      assert(got == spark.read.parquet(p).schema, t)
-    }
+  test("every table of a pyarrow-written sf dir: the inferred schema, no job") {
+    // the sf dirs are written by pyarrow: no Spark key, so the footer's
+    // parquet schema is converted on the driver, as Spark's inference
+    // converts it
+    inferredSchemaNoJob(sf)
   }
 
   test("a table's data with its bucket column, and a snapshot's file list with basePath") {

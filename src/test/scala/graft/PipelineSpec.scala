@@ -65,113 +65,23 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     assert(byDomain.max.toDouble / avg > 2.0, "domain partitioning should be skewed")
   }
 
-  test("route preimages place rows in exactly the intended hash partition") {
-    import spark.implicits._
-    // pins the HashPartitioning assumption byteWeightedRoute stands on:
-    // repartition(n, col) places route value routePreimages(n)(p) in
-    // partition p — if Spark's murmur3 seed or pmod semantics ever
-    // change, this fails loudly instead of silently mis-packing
-    Seq(1, 2, 7, 32, 101).foreach { n =>
-      val pre = ExtractPipeline.routePreimages(n)
-      assert(pre.distinct.length == n)
-      val placed = (0 until n).map(p => (p, pre(p))).toDF("p", "route")
-        .repartition(n, col("route"))
-        .withColumn("pid", spark_partition_id())
-        .collect()
-      placed.foreach { r =>
-        assert(r.getInt(0) == r.getInt(2),
-          s"n=$n: intended partition ${r.getInt(0)} landed in ${r.getInt(2)}")
-      }
-    }
-  }
-
-  test("packHeavy pairs under budget and isolates oversized docs") {
-    val bins = ExtractPipeline.packHeavy(
-      Seq(("a", 120L), ("b", 60L), ("c", 55L), ("d", 50L), ("e", 50L)), budget = 100L)
-    val byBin = bins.groupBy(_._2).view.mapValues(_.keys.toSeq.sorted).toMap
-    // every bin holds at most two docs (each heavy doc is >= budget/2)
-    byBin.values.foreach(urls => assert(urls.size <= 2, byBin.toString))
-    // a pair's sum never exceeds the budget; the oversized doc is alone
-    val sizes = Map("a" -> 120L, "b" -> 60L, "c" -> 55L, "d" -> 50L, "e" -> 50L)
-    byBin.values.filter(_.size == 2).foreach(urls =>
-      assert(urls.map(sizes).sum <= 100L, byBin.toString))
-    assert(byBin(bins("a")) == Seq("a"), s"oversized doc must be solo: $byBin")
-    // d+e is the only fitting pair, so the packing is 4 bins total
-    assert(byBin.size == 4, byBin.toString)
-  }
-
-  test("byte-weighted routing: per-url results identical to the salted path") {
-    val pages = ExtractPipeline.heavyTailPages(spark, 600, 8, 97, 30, 60)
-    val t = CorpusGen.TargetWords.toSet
-    val b = CorpusGen.BycatchWords.toSet
-    val base = ExtractPipeline.extractAndScore(pages, 8, t, b)
-      .collect().map(s => s.url -> s).toMap
-    val bw = ExtractPipeline.extractAndScore(ExtractPipeline.byteWeightedRoute(pages, 8), 0, t, b)
-      .collect().map(s => s.url -> s).toMap
-    assert(bw.keySet == base.keySet)
-    base.foreach { case (url, s) =>
-      assert(bw(url) == s, s"byte-weighted result diverged for $url")
-    }
-  }
-
-  test("byte-weighted routing bounds the defeat-case byte skew count salting cannot") {
+  test("the defeat corpus defeats count salting: one task carries > 2x the median load") {
     import spark.implicits._
     // the BASELINE.md r5 defeat case: tiled multiplier (200-300) >= the
     // per-task doc quota (2000 docs / 16 tasks = 125), so a count-salted
-    // task that draws a heavy page carries ~3x the median byte load
+    // task that draws a heavy page carries ~3x the median byte load —
+    // the straggler Bench's defeat leg publishes
     val pages = ExtractPipeline.heavyTailPages(spark, 2000, 16, 499, 200, 300)
-    // per-partition estimated parse COST (the routing's own weight:
-    // bytes x 16 for PDF payloads — see ExtractPipeline.parseCostCol)
-    def loads(ds: org.apache.spark.sql.Dataset[graft.model.PageRecord]): Array[Long] =
-      ds.mapPartitions(it => Iterator(it.map { p =>
+    // per-partition estimated parse cost: bytes x 16 for PDF payloads
+    // (PDF parses 6-19x slower per byte than HTML)
+    val loads = pages
+      .repartition(16, xxhash64(col("url"), lit(0L))).as[graft.model.PageRecord]
+      .mapPartitions(it => Iterator(it.map { p =>
         val c = p.html.length.toLong
         if (p.html.length >= 4 && p.html(0) == '%' && p.html(1) == 'P') c * 16 else c
-      }.sum)).collect().filter(_ > 0)
-    def maxOverMed(xs: Array[Long]): Double = {
-      val s = xs.sorted
-      s.last.toDouble / s(s.length / 2)
-    }
-    val salted = loads(pages
-      .repartition(16, xxhash64(col("url"), lit(0L))).as[graft.model.PageRecord])
-    val bw = loads(ExtractPipeline.byteWeightedRoute(pages, 16))
-    assert(maxOverMed(salted) > 2.0,
-      s"defeat corpus did not defeat count salting: ${salted.sorted.mkString(",")}")
-    assert(maxOverMed(bw) <= 1.85,
-      s"byte-weighted routing left a straggler: ${bw.sorted.mkString(",")}")
-  }
-
-  test("byte-weighted routing budgets duplicate-url fetches as one unit") {
-    import spark.implicits._
-    // a crawl table holds the same url fetched twice (two warc_ts). url
-    // is the routing key, so both rows are ONE irreducible placement
-    // unit and must be budgeted as the SUM of their costs. The round-7
-    // review found row-keyed packing collapsed the duplicates in
-    // packHeavy's url-keyed Map: the bin reserved space for one row,
-    // received both, and pLight was sized from an undercounted
-    // heavyCost. This corpus discriminates: 400 light urls x 1k bytes +
-    // one giant url duplicated at 300k bytes each; per-url accounting
-    // gives budget=400k (giant solo bin 600k, one light bin ~400k,
-    // max/med 1.5); row-keyed accounting gave budget=250k, a phantom
-    // empty bin, and a 3.0 max/med.
-    def rec(url: String, tsMs: Long, n: Int) = graft.model.PageRecord(
-      url, new java.sql.Timestamp(tsMs), Array.fill(n)('a'.toByte), "", "en")
-    val light = (0 until 400).map(i => rec(s"http://l/$i", 0L, 1000))
-    val giants = Seq(rec("http://g/0", 0L, 300000), rec("http://g/0", 1L, 300000))
-    val pages = spark.createDataset(light ++ giants).repartition(8)
-    val routed = ExtractPipeline.byteWeightedRoute(pages, 4)
-    // both fetches of the giant land in one partition (url routing)...
-    val giantParts = routed.filter(_.url == "http://g/0")
-      .mapPartitions(it => Iterator.single(
-        (org.apache.spark.TaskContext.getPartitionId(), it.size)))
-      .collect().filter(_._2 > 0)
-    assert(giantParts.length == 1, giantParts.mkString(","))
-    // ...and the load is balanced in per-URL terms: the giant unit is
-    // irreducible at 600k, the light partitions sit near the 400k budget
-    val loads = routed.mapPartitions(it =>
-      Iterator(it.map(_.html.length.toLong).sum)).collect().filter(_ > 0)
-    val s = loads.sorted
-    assert(s.last.toDouble / s(s.length / 2) <= 1.6,
-      s"duplicate-url giant broke the bound: ${s.mkString(",")}")
+      }.sum)).collect().filter(_ > 0).sorted
+    assert(loads.last.toDouble / loads(loads.length / 2) > 2.0,
+      s"defeat corpus did not defeat count salting: ${loads.mkString(",")}")
   }
 
   test("half_float expression quantizes like the pure function (codegen path)") {

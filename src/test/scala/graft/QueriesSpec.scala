@@ -246,7 +246,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
       assert(run(n) == serial(n), s"$n in the parallel $mode run differs from its serial run")
   }
 
-  test("q42 byte-weighted routing is result-invisible on the heavy-tail corpus") {
+  test("q42: salted and scan-split routes give identical results on the heavy-tail corpus") {
     // the invariant the oracle's WHERE guard asserts, pinned here too so
     // a violation fails fast in sbt (not only as a driver row mismatch)
     val rows = run("q42_byte_weighted_route").collect()
@@ -254,7 +254,7 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     rows.foreach { r =>
       assert(r.getAs[Long]("n_docs") == r.getAs[Long]("n_identical"),
         s"${r.getAs[String]("kind")}: only ${r.getAs[Long]("n_identical")} " +
-          s"of ${r.getAs[Long]("n_docs")} docs identical under byte-weighted routing")
+          s"of ${r.getAs[Long]("n_docs")} docs identical across the two routes")
     }
     assert(rows.map(_.getAs[Long]("n_docs")).sum == 1200)
   }
@@ -266,8 +266,8 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     // dumped verbatim, DuckDB re-derives the full-outer join and the
     // per-kind byte-identical rollup); the extraction ALGORITHMS stay
     // pinned by the sbt golden byte-equality suite. q27/q40/q19 gained
-    // their dump-re-derive oracles in round 5; q42 (byte-weighted-route
-    // result identity, invariant-asserting oracle) arrived in round 7.
+    // their dump-re-derive oracles in round 5; q42 (route result
+    // identity, invariant-asserting oracle) arrived in round 7.
     assert(withOracle == 42)
     // no duplicate query names (the Map would silently collapse them and
     // the driver would lose a query)
