@@ -4,23 +4,47 @@ import org.apache.spark.sql.{SparkSession, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.model.{PageRecord, ScoredDoc}
 import graft.corpus.CorpusGen
+import org.apache.spark.util.LongAccumulator
 
 /** The flagship Dataset pipeline (SURVEY.md §3.1 Spark shape):
   *
-  *   pages -> salt-repartition on url-hash -> mapPartitions(parse) ->
+  *   pages (scan splits) -> mapPartitions(parse) ->
   *   score vs broadcast word sets -> (write | join goldens)
   *
   * Scale notes (100 TB / 1000 executors):
-  *  - the repartition key is `xxhash64(url, 0)` — urls are unique, so
-  *    the parse stage is uniformly balanced even when one domain holds
-  *    30% of rows (the skew lives in the *input partitioning*, not the
-  *    key space we shuffle on).
+  *  - pages parse on their scan splits by default; the optional salted
+  *    repartition's key is `xxhash64(url, 0)` — urls are unique, so the
+  *    parse stage is uniformly balanced even when one domain holds 30%
+  *    of rows (the skew lives in the *input partitioning*, not the key
+  *    space we shuffle on).
   *  - word sets are broadcast once (the reference re-reads them from disk
   *    per document, /root/reference/src/docscraper.py:146-147).
-  *  - parsing is per-row pure; no shuffle after the single repartition,
-  *    so the stage pipeline is scan -> exchange -> parse+score -> sink.
+  *  - parsing is per-row pure, so the stage pipeline is
+  *    scan -> parse+score -> sink, with one exchange ahead of the parse
+  *    only when the salted repartition is asked for.
   */
 object ExtractPipeline {
+
+  /** Live progress counters of a parse stage (the tqdm analog, SURVEY.md
+    * §2.8): executors add to them as rows leave the parse, and the driver
+    * can read them mid-job. */
+  final case class Progress(docsOk: LongAccumulator, docsErr: LongAccumulator,
+      bytesIn: LongAccumulator) {
+    def add(s: ScoredDoc): Unit = {
+      if (s.ok) docsOk.add(1) else docsErr.add(1)
+      bytesIn.add(s.n_bytes)
+    }
+  }
+
+  object Progress {
+    /** Fresh `graft.docs_ok`, `graft.docs_err` and `graft.bytes_in`
+      * accumulators on `spark`'s context. */
+    def apply(spark: SparkSession): Progress = {
+      val sc = spark.sparkContext
+      Progress(sc.longAccumulator("graft.docs_ok"), sc.longAccumulator("graft.docs_err"),
+        sc.longAccumulator("graft.bytes_in"))
+    }
+  }
 
   /** Deterministic synthetic corpus as a distributed Dataset — generated
     * per-partition, never collected on the driver. */
@@ -78,14 +102,19 @@ object ExtractPipeline {
     * whole corpus across the wire for nothing. Pass `numPartitions > 0`
     * to force the salted url-hash repartition — needed only when the
     * input layout itself is pathological (e.g. unsplittable files with
-    * wildly different row costs). The resumable table passes 0 over its
-    * own bucketed shuffle, because resume semantics need deterministic
-    * bucket -> task ownership. */
+    * wildly different row costs). The resumable table passes 0 over a
+    * coalesce of its wave's scan splits: a wave commits through its one
+    * write job and the lineage rename, so no task needs to own a bucket.
+    *
+    * `progress`, when given, counts each row as it leaves the parse: ok
+    * and failed docs and input bytes. The counts are live (a retried task
+    * counts twice); durable counts come from the rows themselves. */
   def extractAndScore(
       pages: Dataset[PageRecord],
       numPartitions: Int,
       targetWords: Set[String],
-      bycatchWords: Set[String]): Dataset[ScoredDoc] = {
+      bycatchWords: Set[String],
+      progress: Option[Progress] = None): Dataset[ScoredDoc] = {
     val spark = pages.sparkSession
     import spark.implicits._
     val bcTarget = spark.sparkContext.broadcast(targetWords)
@@ -96,7 +125,11 @@ object ExtractPipeline {
     routed.mapPartitions { it =>
       val t = bcTarget.value
       val b = bcBycatch.value
-      it.map(p => Extractor.score(Extractor.extract(p), t, b))
+      it.map { p =>
+        val s = Extractor.score(Extractor.extract(p), t, b)
+        progress.foreach(_.add(s))
+        s
+      }
     }
   }
 

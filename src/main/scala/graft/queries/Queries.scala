@@ -1704,39 +1704,38 @@ object Queries {
             FROM scored)
       WHERE rnk <= 5"""))
 
+  /** q35's per-document token stats: the exact-dedup digest `fp` and the
+    * three gate inputs, from one tokenize of `text`. */
+  private[graft] def trainingStats(docs: DataFrame): DataFrame =
+    docs.selectExpr("doc_id", "md5(CAST(text AS BINARY)) AS fp", s"$SparkToks AS toks")
+      .selectExpr(
+        "doc_id", "fp",
+        s"CAST(size(filter(toks, w -> w IN $EnMarkers)) AS BIGINT) AS h",
+        "CAST(size(toks) AS BIGINT) AS t",
+        "CAST(size(array_distinct(toks)) AS BIGINT) AS nd")
+      .selectExpr(
+        "doc_id", "fp", "t AS n_tokens",
+        "CAST(FLOOR(10000.0*h/t + 0.5) AS BIGINT) AS ratio_e4",
+        "CAST(FLOOR(10000.0 * LEAST(1.0, t/200.0) * (nd*1.0/t) + 0.5) AS BIGINT) AS quality_e4")
+
   /** Training-set materialization: the operator COMPOSITION a real
     * pipeline runs end-to-end — exact dedup keep-list (q13) ∩ language
     * gate (q10) ∩ quality gate (q11) in ONE pass over the corpus. Token
-    * stats are computed once and feed every gate; the dedup keep-list is
-    * a self-aggregation joined back on (fp, doc_id), so at 100 TB the
-    * only shuffle of note is the groupBy on the 128-bit digest — document
-    * bodies never shuffle, and the filters prune before any wide output
-    * is materialized. */
+    * stats are computed once and feed every gate. The keep-list is a
+    * window, `min(doc_id)` over each digest: one scan and one shuffle on
+    * the 128-bit digest, so `documents` is read once. The gates apply
+    * after the window, as the oracle SQL applies them after its join; a
+    * null digest (null text) keeps no row. */
+  private[graft] def trainingSet(docs: DataFrame): DataFrame =
+    trainingStats(docs)
+      .withColumn("keep_id", min("doc_id").over(Window.partitionBy("fp")))
+      .filter("fp IS NOT NULL AND doc_id = keep_id")
+      .filter("ratio_e4 >= 300 AND quality_e4 >= 1000")
+      .select("doc_id", "n_tokens", "ratio_e4", "quality_e4")
+
   private val q35 = Q(
     "q35_training_set",
-    c => {
-      val stats = t(c, "documents")
-        .selectExpr("doc_id", "md5(CAST(text AS BINARY)) AS fp", s"$SparkToks AS toks")
-        .selectExpr(
-          "doc_id", "fp",
-          s"CAST(size(filter(toks, w -> w IN $EnMarkers)) AS BIGINT) AS h",
-          "CAST(size(toks) AS BIGINT) AS t",
-          "CAST(size(array_distinct(toks)) AS BIGINT) AS nd")
-        .selectExpr(
-          "doc_id", "fp", "t AS n_tokens",
-          "CAST(FLOOR(10000.0*h/t + 0.5) AS BIGINT) AS ratio_e4",
-          "CAST(FLOOR(10000.0 * LEAST(1.0, t/200.0) * (nd*1.0/t) + 0.5) AS BIGINT) AS quality_e4")
-      // the aggregated side's fp is RENAMED before the join: a
-      // stats("fp") === keep("fp") condition resolves both sides to the
-      // same attribute (Spark folds it to a trivially-true predicate and
-      // the fp equality silently stops being enforced — round-2 ADVICE)
-      val keep = stats.groupBy("fp").agg(min("doc_id").as("keep_id"))
-        .withColumnRenamed("fp", "keep_fp")
-      stats
-        .join(keep, col("fp") === col("keep_fp") && col("doc_id") === col("keep_id"), "left_semi")
-        .filter("ratio_e4 >= 300 AND quality_e4 >= 1000")
-        .select("doc_id", "n_tokens", "ratio_e4", "quality_e4")
-    },
+    c => trainingSet(t(c, "documents")),
     Some(s"""WITH stats0 AS (SELECT doc_id, md5(text) AS fp, $DuckToks AS toks FROM documents),
       stats AS (SELECT doc_id, fp,
           CAST(len(list_filter(toks, w -> w IN $EnMarkers)) AS BIGINT) AS h,

@@ -165,6 +165,13 @@ object GraftTable {
   /** Run the extract+score pipeline over `pages`, bucketed by url hash,
     * committing `bucketsPerWave` buckets at a time. Returns the report;
     * the data lands partitioned by bucket under root/data.
+    *
+    * A wave is one Spark job: its pages parse on their scan splits,
+    * coalesced to at most `tasksPerWave` tasks, so the wave writes at
+    * most `tasksPerWave` files per bucket and no shuffle. No task owns a
+    * bucket: the wave commits through its write job and the lineage
+    * rename, and orphan cleanup works per bucket directory. `attempt` is
+    * recorded in the lineage rows only.
     */
   def runResumable(
       spark: SparkSession,
@@ -280,12 +287,9 @@ object GraftTable {
         else Parquet.reader(spark, dirs.head).option("basePath", stagedRoot).parquet(dirs: _*)
       }
 
-    // live progress counters (the tqdm analog, SURVEY.md §2.8): updated by
-    // executors as tasks run, readable on the driver mid-job — lineage
+    // live progress counters, added to by the parse stage itself; lineage
     // rows remain the durable record
-    val okAcc = spark.sparkContext.longAccumulator("graft.docs_ok")
-    val errAcc = spark.sparkContext.longAccumulator("graft.docs_err")
-    val bytesAcc = spark.sparkContext.longAccumulator("graft.bytes_in")
+    val progress = ExtractPipeline.Progress(spark)
 
     // this run's lineage rows, one per processed bucket: the report and
     // the snapshots' cumulative doc count are summed from them
@@ -304,19 +308,14 @@ object GraftTable {
         throw new RuntimeException(s"injected failure after $failAfterWaves waves")
       val waveT0 = System.currentTimeMillis()
 
-      // the pipeline's parse stage over the wave's own bucketed shuffle;
-      // the bucket column is re-derived from the url by the function that
+      // the pipeline's parse stage on the wave's scan splits, coalesced to
+      // tasksPerWave tasks: the wave is one job that never shuffles page
+      // bytes, and each task writes at most one file per wave bucket. The
+      // bucket column is re-derived from the url by the function that
       // placed the page, so every row lands in the bucket it came from
       val scored = ExtractPipeline.extractAndScore(
-          waveInput(wave)
-            .repartition(tasksPerWave, col("bucket"), xxhash64(col("url"), lit(attempt.toLong)))
-            .drop("bucket").as[PageRecord],
-          numPartitions = 0, targetWords, bycatchWords)
-        .map { s =>
-          if (s.ok) okAcc.add(1) else errAcc.add(1)
-          bytesAcc.add(s.n_bytes)
-          s
-        }
+          waveInput(wave).coalesce(tasksPerWave).drop("bucket").as[PageRecord],
+          numPartitions = 0, targetWords, bycatchWords, Some(progress))
         .withColumn("bucket", bucketOf(col("url"), nBuckets))
 
       // the lineage counts ride inside the write job as a CollectMetrics

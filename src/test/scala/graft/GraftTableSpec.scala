@@ -437,18 +437,51 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 
-  test("a wave runs two jobs: the shuffle and the data write") {
-    // the lineage counts are observed inside the data write and the driver
-    // writes the lineage file, so a wave has no read-back job and no
-    // lineage write job. A fresh table has no lineage to read at entry
-    // and its empty completed-bucket set broadcasts without a job, so a
-    // run of 4 waves is exactly 8 jobs
+  test("a wave runs one job: the data write") {
+    // a wave parses on its coalesced scan splits, the lineage counts are
+    // observed inside the data write and the driver writes the lineage
+    // file, so a wave has no shuffle job, no read-back job and no lineage
+    // write job. A fresh table has no lineage to read at entry and its
+    // empty completed-bucket set broadcasts without a job, so a run of 4
+    // waves is exactly 4 jobs
     val root = java.nio.file.Files.createTempDirectory("graft_tbl_jobs").toString
     val pages = ExtractPipeline.pages(spark, 80, 2)
     val jobs = jobsOf(GraftTable.runResumable(spark, pages, root, nBuckets = 8,
       bucketsPerWave = 2, CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
       tasksPerWave = 2))
-    assert(jobs.size == 8, s"runResumable ran ${jobs.size} jobs for 4 waves:\n${jobs.mkString("\n")}")
+    assert(jobs.size == 4, s"runResumable ran ${jobs.size} jobs for 4 waves:\n${jobs.mkString("\n")}")
+    graft.util.Fs.deleteRecursively(new java.io.File(root))
+  }
+
+  test("a wave shuffles no bytes, writes at most tasksPerWave files per bucket, and counts progress") {
+    // control: the task-end events carry a shuffle's bytes
+    assert(taskEndsOf(spark.range(100).repartition(4).count())
+      .map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum > 0)
+    // 8 input splits against 2 tasks per wave: uncoalesced, each bucket
+    // would get up to 8 files
+    val root = java.nio.file.Files.createTempDirectory("graft_tbl_splits").toString
+    val pages = ExtractPipeline.pages(spark, 160, 8)
+    val tasks = taskEndsOf(GraftTable.runResumable(spark, pages, root, nBuckets = 4,
+      bucketsPerWave = 2, CorpusGen.TargetWords.toSet, CorpusGen.BycatchWords.toSet,
+      tasksPerWave = 2))
+    assert(tasks.nonEmpty)
+    val shuffled = tasks.map(_.taskMetrics.shuffleWriteMetrics.bytesWritten).sum
+    assert(shuffled == 0L, s"the table run wrote $shuffled shuffle bytes")
+    val files = (0 until 4).map { b =>
+      b -> Option(new java.io.File(s"$root/data/bucket=$b").list()).toSeq.flatten
+        .count(_.endsWith(".parquet"))
+    }.toMap
+    assert(files.values.forall(n => n >= 1 && n <= 2), s"data files per bucket: $files")
+    // on a clean run the live counters equal the durable lineage sums
+    val live = tasks.flatMap(_.taskInfo.accumulables).collect {
+      case a if a.name.exists(_.startsWith("graft.")) && a.update.isDefined =>
+        a.name.get -> a.update.get.asInstanceOf[Long]
+    }.groupMapReduce(_._1)(_._2)(_ + _)
+    val lineage = spark.read.parquet(s"$root/lineage")
+      .selectExpr("sum(n_ok)", "sum(n_err)", "sum(bytes_in)").head()
+    assert(lineage.getLong(0) + lineage.getLong(1) == 160L)
+    assert(Seq("graft.docs_ok", "graft.docs_err", "graft.bytes_in").map(live.getOrElse(_, 0L)) ==
+      (0 to 2).map(lineage.getLong), s"live counters $live")
     graft.util.Fs.deleteRecursively(new java.io.File(root))
   }
 

@@ -211,6 +211,15 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
         (callers -- allowed).toSeq.sorted.mkString(", "))
   }
 
+  test("graft/table/ never repartitions, so a table wave never shuffles page bytes (source lint)") {
+    // a wave parses on its coalesced scan splits; a salted repartition
+    // ahead of the parse shuffled every page's html once per wave
+    val found = mainFilesContaining("repartition(")
+    assert(found.contains("graft/pipeline/ExtractPipeline.scala"), "the lint lost its needle")
+    val inTable = found.filter(_.startsWith("graft/table/"))
+    assert(inTable.isEmpty, s"repartition( in ${inTable.toSeq.sorted.mkString(", ")}")
+  }
+
   test("src/main holds no test-only reference oracle (source lint)") {
     // the reference transcriptions that the fused kernels replaced live in
     // src/test next to the specs that pin the kernels to them; so do the

@@ -5,12 +5,12 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
-import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, SortMergeJoinExec}
 import org.apache.spark.storage.StorageLevel
-import graft.queries.{Queries, RunCtx}
+import graft.queries.{Queries, RunCtx, TrainingSetOracle}
 import graft.textops.TextOpsOracle
 
 /** Executes every SparkEntry query against the smallest fixture and pins
@@ -582,6 +582,43 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
       "q26_embed_near_dup" -> 4, "q34_ann_ivf" -> 2, "q41_jaccard_join" -> 20)
     val got = want.keys.map(n => n -> exchangeCount(run(n).queryExecution.executedPlan)).toMap
     assert(got == want)
+  }
+
+  test("q35 reads documents once: one scan, one Exchange, no broadcast, no join") {
+    // the keep-list is a window over the digest, so documents is scanned
+    // and tokenized once and nothing is broadcast back
+    val plan = run("q35_training_set").queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case other => other
+    }
+    val scans = plan.collect { case f: FileSourceScanExec => f.relation.location.rootPaths.map(_.getName) }
+    assert(scans == Seq(Seq("documents.parquet")), plan.treeString)
+    assert(exchangeCount(plan) == 1, plan.treeString)
+    assert(plan.collect { case b: BroadcastExchangeLike => b }.isEmpty, plan.treeString)
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan.treeString)
+  }
+
+  test("q35's window keep-list gives the semi-join oracle's rows") {
+    // seeded documents with exact duplicates, null texts, and null or
+    // repeated doc_ids; texts from a small pool so duplicates are common,
+    // and lengths either side of the quality gate so some texts fail it
+    import spark.implicits._
+    (1L to 3L).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      def word = if (rnd.nextInt(10) == 0) Seq("the", "a")(rnd.nextInt(2)) else s"w${rnd.nextInt(80)}"
+      val pool = Vector.fill(40)(Vector.fill(5 + rnd.nextInt(100))(word).mkString(" "))
+      val docs = Seq.fill(300) {
+        val id = if (rnd.nextInt(20) == 0) None else Some(rnd.nextInt(250).toLong)
+        val text = if (rnd.nextInt(25) == 0) None else Some(pool(rnd.nextInt(pool.size)))
+        (id, text)
+      }.toDF("doc_id", "text")
+      assert(docs.filter("doc_id IS NULL").count() > 0 && docs.filter("text IS NULL").count() > 0)
+      assert(docs.groupBy("doc_id").count().filter("count > 1").count() > 0)
+      val got = sortedRows(Queries.trainingSet(docs).collect())
+      val want = sortedRows(TrainingSetOracle.semiJoin(docs).collect())
+      assert(got.size >= 10, s"seed $seed: ${got.size} rows pass the gates")
+      assert(got == want, s"seed $seed: window and semi-join keep-lists differ")
+    }
   }
 
   test("q16 guard refuses a corpus-scale brute-force broadcast") {
