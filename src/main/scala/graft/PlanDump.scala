@@ -33,7 +33,7 @@ object PlanDump {
     "q32_export_cast" -> "int16/float16 downcasts are pure projections (no exchange added by the cast stage); the dim join broadcasts.",
     "q34_ann_ivf" -> "IVF: cell assignment is a MAP-SIDE projection over folded centroid literals (no join, no window, no persist — the r2 blow-up is gone); probes join candidates by cell, exact re-rank touches candidates only. r8: dedup + re-rank share ONE vec_id exchange.",
     "q36_download_links" -> "selector descent + link cleaning run inside one typed map over the synthesized button pages; no exchange (the oracle aux dump only runs in verify mode).",
-    "q35_training_set" -> "one token-stats pass feeds dedup + language + quality gates; keep-list is a min(doc_id) window over the digest, so documents is scanned once with one exchange and no join; the gates filter after the window.",
+    "q35_training_set" -> "one token-stats pass feeds dedup + language + quality gates; keep-list is a min(doc_id) window over the digest, so documents is scanned once with one exchange and no join; the gates filter before the window, so only passing rows cross its exchange.",
     "q39_mode_fastscore" -> "the fastscore CLI mode: one typed map over the pruned header-CSV scan (title attach + scoring in the same row pass); no exchange anywhere.",
     "q41_jaccard_join" -> "exact AllPairs/PPJoin: df groupBy -> dense gram-id dictionary (bijective, (df,g)-ordered) -> per-doc rank window -> prefix-posting equi-join on INT gram ids carrying the length+positional filters as join residuals -> confirm joins touch candidates only, via sorted long gram-id sets and a merge-walk overlap (r8); grams, prefix postings and the gram-id sets are the three InMemoryRelations.",
     "q42_byte_weighted_route" -> "the salted route is ONE url-hash exchange before its mapPartitions parse; the scan-split route parses the held pages in place with no exchange; the two extraction variants meet in the verify full-outer join.")

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.{SparkSession, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.pipeline.ExtractPipeline
@@ -153,7 +153,7 @@ object Queries {
     * length is a SCALE parameter (BASELINE.md r3: 4-bit tables passed
     * every fixture test and went quadratic at 40k vectors). With FIXED
     * bits the chance-candidate count grows as tables*n^2/2^bits — the
-    * x100 ScaleBench tier puts that near 10M pairs for 16-bit codes at
+    * x100 scale tier puts that near 10M pairs for 16-bit codes at
     * 400k rows. Growing bits with log2(n) (2^bits >= 2n) bounds expected
     * chance candidates per row at ~tables/2, restoring ~linear growth;
     * recall for the cos>=0.995 near-dup band stays high because target
@@ -643,7 +643,7 @@ object Queries {
     * the SRP code lengths). With a bounded shingle space the per-lane
     * minhash minima concentrate on the globally-smallest shingle hashes,
     * so hot buckets grow LINEARLY with the corpus and all-pairs inside
-    * them grows QUADRATICALLY — measured at the x100 ScaleBench tier:
+    * them grows QUADRATICALLY — measured at the x100 scale tier:
     * 8.4M candidate pairs of which 93% were chance collisions from
     * ~600-member buckets, 8x wall for 3.3x data. Real web corpora hit
     * the same degeneracy through Zipfian shingles (boilerplate
@@ -1299,7 +1299,7 @@ object Queries {
         // every oracle-checked sf dir (<= 2k vectors) — so verify mode
         // fails LOUDLY if a dir ever leaves that domain, instead of
         // producing an unexplained wholesale hash mismatch; larger
-        // corpora (ScaleBench x100 runs 200k vectors) execute only the
+        // corpora (the x100 scale tier runs 200k vectors) execute only the
         // Spark side and get collision-free scale parameters instead of
         // a refused run. Both guards read one memoized embStats job.
         val (rows, maxVecId) = c.embStats
@@ -1724,14 +1724,23 @@ object Queries {
     * stats are computed once and feed every gate. The keep-list is a
     * window, `min(doc_id)` over each digest: one scan and one shuffle on
     * the 128-bit digest, so `documents` is read once. The gates apply
-    * after the window, as the oracle SQL applies them after its join; a
-    * null digest (null text) keeps no row. */
-  private[graft] def trainingSet(docs: DataFrame): DataFrame =
-    trainingStats(docs)
+    * before the window, so only passing rows cross its exchange: they
+    * read only `text`, and exact duplicates share their text, so a
+    * digest's rows pass or fail together and the window keeps the rows
+    * the oracle SQL keeps by gating after its join. The gates are a typed
+    * filter: Spark pushes a SQL filter through the stats projections and
+    * tokenizes every row again to evaluate it. A null digest (null text)
+    * keeps no row. */
+  private[graft] def trainingSet(docs: DataFrame): DataFrame = {
+    val stats = trainingStats(docs)
+    val (ratio, quality) = (stats.schema.fieldIndex("ratio_e4"), stats.schema.fieldIndex("quality_e4"))
+    stats.filter("fp IS NOT NULL")
+      .filter((r: Row) => !r.isNullAt(ratio) && r.getLong(ratio) >= 300 &&
+        !r.isNullAt(quality) && r.getLong(quality) >= 1000)
       .withColumn("keep_id", min("doc_id").over(Window.partitionBy("fp")))
-      .filter("fp IS NOT NULL AND doc_id = keep_id")
-      .filter("ratio_e4 >= 300 AND quality_e4 >= 1000")
+      .filter("doc_id = keep_id")
       .select("doc_id", "n_tokens", "ratio_e4", "quality_e4")
+  }
 
   private val q35 = Q(
     "q35_training_set",

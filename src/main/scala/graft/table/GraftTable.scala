@@ -11,8 +11,9 @@ import org.apache.parquet.example.data.simple.SimpleGroup
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Types}
-import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
+import org.apache.parquet.schema.MessageType
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
+import org.apache.spark.sql.internal.SQLConf
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
@@ -110,24 +111,15 @@ object GraftTable {
       }.toMap
   }
 
-  /** LineageRow's parquet type as Spark writes it (the non-null fields
-    * required), except that `ts` is always INT64 TIMESTAMP(MICROS, UTC). */
-  private val LineageType: MessageType = {
-    import PrimitiveType.PrimitiveTypeName.{INT32, INT64}
-    Types.buildMessage()
-      .required(INT32).named("bucket")
-      .required(INT64).named("n_docs")
-      .required(INT64).named("n_ok")
-      .required(INT64).named("n_err")
-      .required(INT64).named("bytes_in")
-      .required(INT64).named("wall_ms")
-      .required(INT32).named("attempt")
-      .optional(INT64).as(LogicalTypeAnnotation.timestampType(true, TimeUnit.MICROS)).named("ts")
-      .named("spark_schema")
-  }
-
   /** LineageRow's Spark schema, for the footer key Spark reads. */
-  private val LineageSparkSchema = Encoders.product[LineageRow].schema.json
+  private val LineageSchema = Encoders.product[LineageRow].schema
+  private val LineageSparkSchema = LineageSchema.json
+
+  /** LineageRow's parquet type, converted from its Spark schema as Spark's
+    * own writer converts it (the non-null fields required), with `ts`
+    * always INT64 TIMESTAMP(MICROS, UTC). */
+  private val LineageType: MessageType = new SparkToParquetSchemaConverter(
+    outputTimestampType = SQLConf.ParquetOutputTimestampType.TIMESTAMP_MICROS).convert(LineageSchema)
 
   /** Commit one wave's lineage rows: one parquet file written by the
     * driver to a hidden temp name under `lineage/`, then renamed to its

@@ -2,10 +2,10 @@ package graft.util
 
 /** splitmix64 finalizer — the SINGLE definition of the mixing constant
   * set (the public constants of java.util.SplittableRandom). CorpusGen,
-  * ScaleBench, and SimHash64 all derive their deterministic streams from
-  * this exact function; a drifted private copy would silently fork the
-  * synthetic corpora and break the "same shape as the driver fixture"
-  * premise, so every caller delegates here.
+  * QueryLedger's scale tables, and SimHash64 all derive their
+  * deterministic streams from this exact function; a drifted private
+  * copy would silently fork the synthetic corpora and break the "same
+  * shape as the driver fixture" premise, so every caller delegates here.
   */
 object SplitMix {
 

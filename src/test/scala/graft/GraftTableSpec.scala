@@ -286,6 +286,24 @@ class GraftTableSpec extends AnyFunSuite with SparkTestBase {
     val hfs = new org.apache.hadoop.fs.Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     GraftTable.appendLineage(hfs, root, driverRows)
     val driverFile = lineageDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    // the driver's footer holds LineageRow's parquet type as Spark's
+    // writer derives it: non-null fields required, ts INT64 micros in UTC
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(driverFile.getPath), hfs.getConf))
+    val footerSchema = try footer.getFileMetaData.getSchema.toString finally footer.close()
+    assert(footerSchema ==
+      """message spark_schema {
+        |  required int32 bucket;
+        |  required int64 n_docs;
+        |  required int64 n_ok;
+        |  required int64 n_err;
+        |  required int64 bytes_in;
+        |  required int64 wall_ms;
+        |  required int32 attempt;
+        |  optional int64 ts (TIMESTAMP(MICROS,true));
+        |}
+        |""".stripMargin)
     val tsKey = "spark.sql.parquet.outputTimestampType"
     val savedTs = spark.conf.getOption(tsKey)
     spark.conf.set(tsKey, "INT96")

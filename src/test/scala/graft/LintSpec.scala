@@ -103,6 +103,12 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
     scalaFiles(d).map(f => f -> java.nio.file.Files.readString(f.toPath))
   }
 
+  /** `src` without its scaladoc and comment lines. */
+  private def code(src: String): String = src.linesIterator.filterNot { l =>
+    val t = l.trim
+    t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
+  }.mkString("\n")
+
   /** Files under src/main/scala whose source contains `needle`. */
   private def mainFilesContaining(needle: String): Set[String] =
     mainSources().collect { case (f, src) if src.linesIterator.exists(_.contains(needle)) =>
@@ -239,10 +245,6 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
     // code lines only (scaladoc and comment lines may name the call), and
     // leaves out graft/perfbench/, the benchmark's own code
     val read = """\.read\s*(\.\s*\w+\s*\([^()]*\)\s*)*\.\s*parquet\s*\(""".r
-    def code(src: String) = src.linesIterator.filterNot { l =>
-      val t = l.trim
-      t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")
-    }.mkString("\n")
     // controls: the pattern sees a plain read, one with options, and one
     // split over lines, and not the helper's own calls
     Seq("spark.read.parquet(p)", "s.read.option(\"basePath\", b)\n  .parquet(p: _*)",
@@ -257,6 +259,23 @@ class LintSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
     assert(readers.exists(_.startsWith("graft/perfbench/")), "the lint lost its needle")
     val outside = readers.filterNot(_.startsWith("graft/perfbench/")) - "graft/util/Parquet.scala"
     assert(outside.isEmpty, s"parquet read outside graft/util/Parquet.scala: ${outside.toSeq.sorted.mkString(", ")}")
+  }
+
+  test("only Bench, QueryLedger and perfbench release the suite's caches (source lint)") {
+    // a suite-timing loop releases held frames between queries; Bench's
+    // grading loop and QueryLedger's are the two, beside the benchmark's
+    // own code, so a third loop fails here instead of growing beside them
+    val call = """\b(releaseSwapCaches|invalidateResultCaches)\s*\(""".r
+    def calls(src: String) = code(src).linesIterator.exists(l => !l.contains("def ") && call.findFirstIn(l).nonEmpty)
+    assert(calls("    Queries.releaseSwapCaches()") && calls("Queries.invalidateResultCaches ()"))
+    assert(!calls("  private[graft] def releaseSwapCaches(): Unit =") && !calls("  // releaseSwapCaches() here"))
+    val callers = mainSources().collect {
+      case (f, src) if calls(src) => mainRoot.toPath.relativize(f.toPath).toString
+    }.toSet
+    val allowed = Set("graft/Bench.scala", "graft/QueryLedger.scala")
+    assert(allowed.subsetOf(callers), "the lint lost its needle")
+    val outside = callers.filterNot(_.startsWith("graft/perfbench/")) -- allowed
+    assert(outside.isEmpty, s"suite caches released in ${outside.toSeq.sorted.mkString(", ")}")
   }
 
   test("the PDF reader uses no regex (source lint)") {

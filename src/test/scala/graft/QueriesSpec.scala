@@ -3,7 +3,7 @@ package graft
 import scala.util.Using
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.aggregate.HashAggregateExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -586,7 +586,8 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
 
   test("q35 reads documents once: one scan, one Exchange, no broadcast, no join") {
     // the keep-list is a window over the digest, so documents is scanned
-    // and tokenized once and nothing is broadcast back
+    // and tokenized once and nothing is broadcast back; the gates filter
+    // the computed stats below the exchange, so only passing rows cross it
     val plan = run("q35_training_set").queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case other => other
@@ -596,6 +597,9 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     assert(exchangeCount(plan) == 1, plan.treeString)
     assert(plan.collect { case b: BroadcastExchangeLike => b }.isEmpty, plan.treeString)
     assert(plan.collect { case j: BaseJoinExec => j }.isEmpty, plan.treeString)
+    val belowExchange = plan.collect { case e: Exchange => e.child.collect { case f: FilterExec => f } }.flatten
+    assert(belowExchange.exists(f => Set("ratio_e4", "quality_e4").subsetOf(f.references.map(_.name).toSet)),
+      plan.treeString)
   }
 
   test("q35's window keep-list gives the semi-join oracle's rows") {
