@@ -263,17 +263,15 @@ object Queries {
     sides.foldLeft(cand) { case (df, (key, x)) => df.join(side(key, x), Seq(key)) }
 
   /** SRP-LSH candidate pairs (q24/q26): every (`a`, `b`) pair sharing a
-    * bucket in any table of `stack` and passing `keep`, deduplicated.
-    * The distinct runs on an `a`-only repartition, which also satisfies
-    * a downstream window or join keyed by `a`. */
+    * bucket in any table of `stack` and passing `keep`, once per shared
+    * bucket. The caller deduplicates, in the shape that suits its plan. */
   private def srpCandidates(qq: DataFrame, stack: String, id: String, a: String, b: String,
       keep: String): DataFrame = {
     val sigs = qq.selectExpr(id, stack)
-    val pairs = sigs.selectExpr(s"$id AS $a", "tbl", "bucket")
+    sigs.selectExpr(s"$id AS $a", "tbl", "bucket")
       .join(sigs.selectExpr(s"$id AS $b", "tbl AS tbl2", "bucket AS bucket2"),
         expr(s"tbl = tbl2 AND bucket = bucket2 AND $keep"))
       .select(a, b)
-    pairs.repartition(col(a)).distinct()
   }
 
   /** Drop every frame held in `Held.frames`: the persisted
@@ -1128,7 +1126,7 @@ object Queries {
         // re-rank window adds no exchange of its own. The probe bound
         // vec_id < 100 is pushed below the join onto the probe side.
         val cand = srpCandidates(qq, sStack, "vec_id", "vec_id", "neighbor_id",
-          "vec_id < 100 AND vec_id <> neighbor_id")
+          "vec_id < 100 AND vec_id <> neighbor_id").repartition(col("vec_id")).distinct()
         // re-rank sides join WITHOUT a broadcast hint: the embedding table
         // is the corpus — at 100x it is a multi-GB build side, so the
         // correct shape is a plain shuffle equi-join on vec_id/neighbor_id
@@ -1315,7 +1313,10 @@ object Queries {
           .selectExpr(Seq("id", "qv", "nrm") ++ lsh.sTabs: _*))
         // zero-norm guard above the persist (q24 comment)
         val qq = qqCached.filter("nrm > 0")
-        val cand = srpCandidates(qq, lsh.sStack, "id", "id_a", "id_b", "id_a < id_b")
+        // a plain distinct: its partial aggregate dedups each map task's
+        // pairs before the exchange, so a pair does not cross it once per
+        // shared bucket (an id_a repartition would save q26 no exchange)
+        val cand = srpCandidates(qq, lsh.sStack, "id", "id_a", "id_b", "id_a < id_b").distinct()
         scored(bothSides(cand, "id_a" -> "a", "id_b" -> "b")(embSide(qq, "id")), "id_a", "id_b")
           .selectExpr("id_a", "id_b", CosE6)
           .filter("cos_e6 >= 995000")

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, lit, raise_error, when}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.DedupGroups
 
@@ -40,11 +41,11 @@ class DedupGroupsSpec extends AnyFunSuite with SparkTestBase {
     assert(labels == Set(0L), s"chain did not contract: $labels")
   }
 
-  // round-8 pin: the hop loop carries the convergence probe inside the
+  // round-8 pin: the round loop carries the convergence probe inside the
   // checkpoint job as a CollectMetrics observation and runs at the
   // session's width. Under an odd session width the labels stay exact
   // and the session conf is left untouched.
-  test("r8: derived hop partitioning restores session conf, labels exact") {
+  test("odd shuffle width: labels exact, session conf untouched") {
     import spark.implicits._
     val key = "spark.sql.shuffle.partitions"
     val saved = spark.conf.get(key)
@@ -86,5 +87,48 @@ class DedupGroupsSpec extends AnyFunSuite with SparkTestBase {
       }
     val want = parent.keys.map(v => v -> find(v)).toMap
     assert(got == want)
+  }
+
+  /** A path 0 - 1 - ... - edges, numbered from one end. */
+  private def chain(edges: Int) = {
+    import spark.implicits._
+    (0 until edges).map(i => (i.toLong, (i + 1).toLong)).toDF("a", "b")
+  }
+
+  test("round budget: the longest covered chain converges, one vertex more throws") {
+    // round k starts from labels 2^(k-1) vertices back (DedupGroups.MaxIters)
+    val covered = 1 << (DedupGroups.MaxIters - 1)
+    val labels = DedupGroups.connectedComponents(chain(covered))
+      .collect().map(r => r.getLong(0) -> r.getLong(1))
+    assert(labels.length == covered + 1 && labels.forall(_._2 == 0L))
+    val e = intercept[IllegalArgumentException](
+      DedupGroups.connectedComponents(chain(covered + 1)))
+    assert(e.getMessage.contains(s"fixed budget of ${DedupGroups.MaxIters} rounds"), e.getMessage)
+  }
+
+  test("a failed round leaves nothing in the session's cache") {
+    spark.catalog.clearCache()
+    val pairs = spark.range(10).select(col("id").as("a"),
+      when(col("id") === 5, raise_error(lit("planted round failure")))
+        .otherwise(col("id") + 1).as("b"))
+    val e = intercept[Exception](DedupGroups.connectedComponents(pairs))
+    assert(e.getMessage.contains("planted round failure"), e.getMessage)
+    assert(org.apache.spark.sql.CachedPlans.isEmpty(spark), "the persisted edges outlived the failure")
+  }
+
+  test("Spark jobs per call: chains and diamonds, and a graph of 2-vertex components") {
+    import spark.implicits._
+    // one checkpoint job per round, and the first labels settle every
+    // star, so 2-vertex components take a single round
+    val mixed = Seq(
+      (1L, 2L), (2L, 3L), (3L, 4L),
+      (10L, 11L), (11L, 12L), (10L, 12L),
+      (20L, 21L)).toDF("id_a", "id_b")
+    // q15's doc-plus-mutant shape: each doc paired with its planted copy
+    val docMutant = (0L until 50L).map(i => (i, i + 100000L)).toDF("id_a", "id_b")
+    for ((pairs, want) <- Seq(mixed -> 15, docMutant -> 9)) {
+      val jobs = jobsOf(DedupGroups.connectedComponents(pairs))
+      assert(jobs.size == want, s"${jobs.size} jobs, want $want:\n${jobs.mkString("\n")}")
+    }
   }
 }

@@ -156,7 +156,11 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     // per call. Every started stream still adds one of its own, so a run
     // of a fresh context adds one listener more than a second run of a
     // context that drained before.
-    def listeners = org.apache.spark.ListenerBusCount(spark.sparkContext)
+    // Only stream-listener buses are counted: the bus also holds other
+    // sessions' listeners (an ExecutionListenerBus per session), which
+    // Spark's ContextCleaner removes whenever a GC collects the session.
+    def listeners = org.apache.spark.ListenerBusCount(spark.sparkContext,
+      classOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryListenerBus])
     def q40(c: RunCtx) = assert(Queries("q40_stream_extract").run(c).count() > 0)
     Using.resource(new RunCtx(spark, sf, verify = false)) { c =>
       q40(c)
