@@ -7,6 +7,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -26,6 +27,22 @@ import org.apache.spark.sql.types.StructType
   * Spark still derives them from the directory names. A path without a
   * data file, and a footer the converter refuses, go to Spark's own
   * inference, with its result or its error.
+  *
+  * [[read]] also sizes its scan to the input. A read of more files than
+  * `defaultParallelism` whose bytes total at most `defaultParallelism ×
+  * spark.sql.files.maxPartitionBytes` comes back as
+  * `coalesce(defaultParallelism)`: one partition per core. Spark's split
+  * packing charges each file `spark.sql.files.openCostInBytes` (4 MB by
+  * default), so with `maxPartitionBytes` at or below it (the 4 MB that
+  * extraction's sessions set for byte-balanced splits) every small file
+  * fills a split by itself, and a 16-file, 264 KB table would scan in 16
+  * tasks and feed 16 map outputs to each shuffle. The coalesce is narrow:
+  * it starts no job, lists nothing again (the file count and size come
+  * from the relation's own file index), and keeps filter pushdown and
+  * column pruning. Large tables and single-file tables keep Spark's
+  * splits, and so do the callers of [[reader]] that call
+  * `.parquet(paths: _*)` themselves (GraftTable's snapshot and staged
+  * reads; a table wave coalesces to its own `tasksPerWave`).
   */
 object Parquet {
 
@@ -39,9 +56,17 @@ object Parquet {
   def reader(spark: SparkSession, path: String): DataFrameReader =
     footerSchema(spark, path).fold(spark.read)(s => spark.read.schema(s))
 
-  /** The parquet data under `path`. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    reader(spark, path).parquet(path)
+  /** The parquet data under `path`, one partition per core when it is
+    * more files than cores but no more bytes than one split per core. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val df = reader(spark, path).parquet(path)
+    val cores = spark.sparkContext.defaultParallelism
+    val budget = cores.toLong * spark.sessionState.conf.filesMaxPartitionBytes
+    val small = df.queryExecution.analyzed.collectFirst {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location
+    }.exists(ix => ix.inputFiles.length > cores && ix.sizeInBytes <= budget)
+    if (small) df.coalesce(cores) else df
+  }
 
   /** Hidden names, which Spark's file index skips: committer droppings
     * (`_SUCCESS`, `_temporary`), checksums and hidden temp files. */

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.AnalysisException
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec}
 import graft.corpus.CorpusGen
 import graft.pipeline.ExtractPipeline
 import graft.table.GraftTable
@@ -10,7 +11,8 @@ import graft.util.Parquet
 
 /** `Parquet.read` takes its schema from one footer on the driver; the
   * frame must have the schema Spark's own inference gives, and the
-  * inference job must be gone, whichever writer wrote the footer. */
+  * inference job must be gone, whichever writer wrote the footer. A read
+  * of many small files comes back with one partition per core. */
 class ParquetSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
@@ -24,18 +26,41 @@ class ParquetSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     tables.foreach(t => spark.read.parquet(s"$sf/$t.parquet").write.parquet(s"$dir/$t.parquet"))
     dir
   }
+  /** `sf`'s tables written again by Spark's writer as up to 16 files
+    * each (a table of fewer rows has one file per row). */
+  private lazy val multiFileCopy: String = {
+    val dir = s"$copyDir/multi"
+    tables.foreach(t => spark.read.parquet(s"$sf/$t.parquet").repartition(16)
+      .write.parquet(s"$dir/$t.parquet"))
+    dir
+  }
   override def afterAll(): Unit = graft.util.Fs.deleteRecursively(copyDir.toFile)
+
+  /** A session of the shared context whose scan splits are at most
+    * `maxPartitionBytes`; the shared session's conf is not written. */
+  private def splitSession(maxPartitionBytes: Long): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", maxPartitionBytes.toString)
+    s
+  }
+  private lazy val split4m = splitSession(4L << 20)
+  private def cores = spark.sparkContext.defaultParallelism
 
   /** Every table under `dir`: `Parquet.read` gives Spark's inferred
     * schema and starts no job. */
-  private def inferredSchemaNoJob(dir: String): Unit =
+  private def inferredSchemaNoJob(dir: String, s: SparkSession = spark): Unit =
     tables.foreach { t =>
       val p = s"$dir/$t.parquet"
       var got: org.apache.spark.sql.types.StructType = null
-      val jobs = jobsOf { got = Parquet.read(spark, p).schema }
+      val jobs = jobsOf { got = Parquet.read(s, p).schema }
       assert(jobs.isEmpty, s"$t: Parquet.read ran jobs: ${jobs.mkString("; ")}")
-      assert(got == spark.read.parquet(p).schema, t)
+      assert(got == s.read.parquet(p).schema, t)
     }
+
+  private def dataFiles(p: String): Seq[java.io.File] =
+    new java.io.File(p).listFiles().toSeq.filterNot(f => Parquet.hidden(f.getName))
+  private def bytesOf(p: String): Long = dataFiles(p).map(_.length).sum
+  private def splits(df: DataFrame): Int = df.rdd.getNumPartitions
 
   test("every table of a Spark-written sf dir: the inferred schema, no job") {
     inferredSchemaNoJob(sparkCopy)
@@ -46,6 +71,42 @@ class ParquetSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
     // parquet schema is converted on the driver, as Spark's inference
     // converts it
     inferredSchemaNoJob(sf)
+  }
+
+  test("every table of a multi-file Spark-written sf dir: the inferred schema, no job") {
+    inferredSchemaNoJob(multiFileCopy, split4m)
+  }
+
+  test("more files than cores within one split per core: one partition per core") {
+    val p = s"$multiFileCopy/documents.parquet"
+    assert(dataFiles(p).size == 16)
+    assert(bytesOf(p) <= cores * (4L << 20))
+    // at 4 MB splits Spark charges each file its 4 MB open cost, so every
+    // file is a split of its own
+    assert(splits(split4m.read.parquet(p)) == 16)
+    assert(splits(Parquet.read(split4m, p)) == cores)
+    // under the coalesce the scan still takes the filter and one column
+    val plan = Parquet.read(split4m, p).filter("doc_id > 10").select("doc_id")
+      .queryExecution.sparkPlan
+    assert(plan.collectFirst { case c: CoalesceExec => c.numPartitions }.contains(cores), plan)
+    val scan = plan.collectFirst { case s: FileSourceScanExec => s }.get
+    assert(scan.dataFilters.nonEmpty, plan)
+    assert(scan.requiredSchema.fieldNames.toSeq == Seq("doc_id"), plan)
+    // the rows are the table's rows
+    assert(Parquet.read(split4m, p).collect().map(_.toString).sorted sameElements
+      split4m.read.parquet(s"$sf/documents.parquet").collect().map(_.toString).sorted)
+  }
+
+  test("a single-file table and a table above one split per core keep Spark's splits") {
+    val one = s"$sf/documents.parquet"
+    assert(splits(Parquet.read(split4m, one)) == splits(split4m.read.parquet(one)))
+    // the 16-file copy is more bytes than `cores` splits of 4 KB each
+    val p = s"$multiFileCopy/documents.parquet"
+    val split4k = splitSession(4L << 10)
+    assert(bytesOf(p) > cores * (4L << 10))
+    val want = splits(split4k.read.parquet(p))
+    assert(want > cores)
+    assert(splits(Parquet.read(split4k, p)) == want)
   }
 
   test("a table's data with its bucket column, and a snapshot's file list with basePath") {

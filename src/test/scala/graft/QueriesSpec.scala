@@ -250,6 +250,33 @@ class QueriesSpec extends AnyFunSuite with SparkTestBase with BeforeAndAfterAll 
       assert(run(n) == serial(n), s"$n in the parallel $mode run differs from its serial run")
   }
 
+  test("a 16-file documents table at 4 MB splits: the same rows, one scan task per core") {
+    // at 4 MB splits Spark charges each file its 4 MB open cost, so every
+    // small file is a split of its own; Parquet.read coalesces such a read
+    // to one partition per core. q28 (orderBy + limit) and q38 (the
+    // positional join) are the queries whose rows could follow partition
+    // order.
+    val split4m = spark.newSession()
+    split4m.conf.set("spark.sql.files.maxPartitionBytes", (4L << 20).toString)
+    val dir = java.nio.file.Files.createTempDirectory("graft_docs16")
+    spark.read.parquet(s"$sf/documents.parquet").repartition(16)
+      .write.parquet(s"$dir/documents.parquet")
+    def runIn(d: String, n: String) =
+      Using.resource(new RunCtx(split4m, d, verify = false))(Queries(n).run(_).collect())
+    try {
+      for (n <- Seq("q08_token_stats", "q13_dedup_exact", "q14_minhash_sig", "q18_simhash",
+          "q35_training_set", "q28_top_terms", "q38_export_cleanup"))
+        assert(sortedRows(runIn(dir.toString, n)) == sortedRows(runIn(sf, n)),
+          s"$n differs on the 16-file table")
+      // the scan stage: the stage whose tasks read the table's rows
+      val scan = taskEndsOf(runIn(dir.toString, "q13_dedup_exact")).groupBy(_.stageId)
+        .filter(_._2.exists(_.taskMetrics.inputMetrics.recordsRead > 0))
+      assert(scan.size == 1, s"scan stages: ${scan.keys}")
+      val cores = spark.sparkContext.defaultParallelism
+      assert(scan.head._2.size <= cores, s"q13 scanned 16 files in ${scan.head._2.size} tasks")
+    } finally graft.util.Fs.deleteRecursively(dir.toFile)
+  }
+
   test("q42: salted and scan-split routes give identical results on the heavy-tail corpus") {
     // the invariant the oracle's WHERE guard asserts, pinned here too so
     // a violation fails fast in sbt (not only as a driver row mismatch)
